@@ -799,9 +799,10 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (CC-MR, O(log n) rounds) — same labels as dedup_clusters, so it
-    shares that entry's oracle verbatim."""
+    """Connected components via dedup_clusters_star (one Arrow-batch
+    union-find under its edge budget, large-star/small-star rounds
+    above it) — same labels as dedup_clusters, so it shares that
+    entry's oracle verbatim."""
     return dedup.dedup_clusters_star(
         _jaccard_pairs(spark, sf_dir),
         load_table(spark, sf_dir, "documents"),
@@ -3093,24 +3094,31 @@ SEMANTIC_CC_THRESHOLD = 0.4
 
 
 def _semantic_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic duplicate components: connected components (CC-MR
-    large/small-star, O(log n) rounds) over the embedding near-dup
-    pair graph at cosine ≥ 0.4 — cluster-id every vector by its
-    transitive semantic-duplicate group, with the component size. The
-    embedding analog of dedup_clusters_cc; composes two existing
-    primitives (embedding_near_dupes × dedup_clusters_star)."""
+    """Semantic duplicate components: connected components over the
+    embedding near-dup pair graph at cosine ≥ 0.4 — cluster-id every
+    vector by its transitive semantic-duplicate group, with the
+    component size. The embedding analog of dedup_clusters_cc;
+    composes two existing primitives (embedding_near_dupes ×
+    dedup_clusters_star). The pair graph is small (59 edges over the
+    sf0.01 fixture's 500 vectors, 920 over sf0.1's 2,000), far under
+    ``dedup_clusters_star``'s ``CC_LOCAL_MAX_EDGES`` budget, so the labels
+    come from one lazy Arrow-batch union-find after the edge
+    checkpoint and its count probe; a graph above the budget runs the
+    large/small-star rounds (O(log n) of them). The edge checkpoint
+    keeps the entry out of ``_PREPARED``: it rebuilds per call."""
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = similarity.embedding_near_dupes(
         emb, SEMANTIC_CC_THRESHOLD, id_col="vec_id", vec_col="embedding"
     ).select("id_a", "id_b")
-    labels = dedup.dedup_clusters_star(
-        pairs, emb, id_col="vec_id"
-    ).withColumnRenamed("doc_id", "vec_id")
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return labels.join(sizes, "cluster_id").select(
-        "vec_id", "cluster_id", "cluster_size"
+    labels = dedup.dedup_clusters_star(pairs, emb, id_col="vec_id")
+    # a window, not a groupBy joined back: the labels subtree (and its
+    # Arrow batch) runs once
+    return labels.select(
+        F.col("doc_id").alias("vec_id"),
+        "cluster_id",
+        F.count(F.lit(1))
+        .over(Window.partitionBy("cluster_id"))
+        .alias("cluster_size"),
     )
 
 
@@ -3249,9 +3257,9 @@ _PURE_LAZY = frozenset({
     # mmr_rerank/rag_context_pack qualify because diversify.mmr_rerank
     # defaults to impl='local' (one applyInPandas batch per query —
     # pure lazy); the unrolled impl='loop' localCheckpoints per round
-    # and would NOT qualify. soft_dedup stays OUT: it runs the
-    # connected-components rounds (localCheckpoint per round) inside
-    # the builder — exactly what the prepared-plan contract excludes.
+    # and would NOT qualify. soft_dedup stays OUT: its connected-
+    # components pass checkpoints the edge set while the entry is
+    # built — exactly what the prepared-plan contract excludes.
     "mmr_rerank", "rag_context_pack", "ir_metrics", "eval_delta",
     "matryoshka_topk", "flagged_words", "shuffle_export",
     "cluster_quota_sample",

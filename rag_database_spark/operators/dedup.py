@@ -23,7 +23,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.text import raw_tokens, shingles
@@ -461,8 +461,6 @@ def shingle_jaccard_pairs(
         prefix_filter = _estimate_direct_pairs(ex) > direct_pair_budget
 
     if prefix_filter:
-        from pyspark.sql import Window
-
         dfreq = ex.groupBy("s").agg(F.count("*").alias("df"))
         ordered = ex.join(dfreq, "s").withColumn(
             "pos",
@@ -1184,19 +1182,17 @@ def soft_dedup(
     column unconditionally.
 
     Plan: connected components over the pair graph
-    (``dedup_clusters`` — its scale contract carries over verbatim),
-    then ONE groupBy on cluster_id (uniform small keys, map-side
-    partials) and one keyed join back: no step beyond the pair
+    (``dedup_clusters_star`` — the same component-min labels as
+    ``dedup_clusters``, one Arrow batch for small graphs), then ONE
+    count window on cluster_id — the labels subtree runs once, where a
+    groupBy joined back would run it twice: no step beyond the pair
     generation itself touches document text."""
-    cl = dedup_clusters(pairs, docs, id_col, src_col, dst_col)
-    sizes = cl.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("group_size")
-    )
-    return cl.join(sizes, "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        F.col("group_size").cast("long").alias("group_size"),
-        F.round(F.lit(1.0) / F.col("group_size"), 6).alias("weight"),
+    cl = dedup_clusters_star(pairs, docs, id_col, src_col, dst_col)
+    return cl.withColumn(
+        "group_size",
+        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")),
+    ).withColumn(
+        "weight", F.round(F.lit(1.0) / F.col("group_size"), 6)
     )
 
 
@@ -1553,6 +1549,47 @@ def _write_slice(df: DataFrame, path: str, batch_id: int | None) -> None:
         )
 
 
+# edge-count ceiling under which dedup_clusters_star finishes the
+# components in one Arrow batch on one worker instead of running
+# distributed star rounds: 2^20 (u, v) long pairs ≈ 16 MiB of edges
+CC_LOCAL_MAX_EDGES = 1 << 20
+
+
+def _union_find_labels(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: connected components of the whole (u, v) edge
+    set (one partition) → one (u, label) row per node, label = the
+    component-min node id. Vectorized union-find: every round hooks
+    each edge's higher root under its lower root (``minimum.at``), then
+    pointer jumping flattens the forest to stars. Every root with a
+    neighbouring root takes part in a merge, so the root count of a
+    component at least halves per round: O(log n) numpy passes."""
+    import numpy as np
+
+    parts = [p for p in batches if not p.empty]
+    if not parts:
+        return
+    u = np.concatenate([p["u"].to_numpy(np.int64) for p in parts])
+    v = np.concatenate([p["v"].to_numpy(np.int64) for p in parts])
+    # nodes are sorted, so the smallest index in a component is also
+    # its smallest id
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        if np.array_equal(ra, rb):
+            break
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    yield pd.DataFrame({"u": nodes, "label": nodes[parent]})
+
+
 def dedup_clusters_star(
     pairs: DataFrame,
     docs: DataFrame,
@@ -1561,22 +1598,27 @@ def dedup_clusters_star(
     dst_col: str = "id_b",
     max_rounds: int = 30,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    rounds (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond" — public paper): converges in O(log n) rounds on ANY
-    component topology, where ``dedup_clusters``'s min-label
-    propagation needs O(diameter) rounds. Same contract: one row per
-    corpus document, cluster_id = component-min doc_id.
+    """Connected components, one row per corpus document, cluster_id =
+    component-min doc_id (the ``dedup_clusters`` contract).
 
-    Use this form when components can be long chains or giant
-    (pathological near-dup graphs — boilerplate-heavy web crawls);
-    min-label stays the default because near-dup components are
-    typically tiny and its per-round plan is cheaper.
+    The distinct edge set is checkpointed once and its (count,
+    hash) signature taken. Two paths follow:
 
-    Each round is one groupBy + one join per star op, with
-    ``localCheckpoint`` truncating lineage; the fixpoint test compares
-    an order-insensitive (count, hash-sum) signature of the edge set —
-    two scans, no subtract join.
+    - up to ``CC_LOCAL_MAX_EDGES`` edges (near-dup graphs are sparse:
+      the sf0.01 fixture's 500 vectors give 59 semantic-duplicate
+      edges), the labels come from one lazy Arrow batch on one worker
+      (``_union_find_labels``) — no further eager job, where the star
+      loop spends two per round;
+    - above it, alternating large-star/small-star rounds (Kiveris et
+      al. 2014, "Connected Components in MapReduce and Beyond" —
+      public paper), which converge in O(log n) rounds on ANY
+      component topology, where min-label propagation needs
+      O(diameter). Each round is one groupBy + one join per star op,
+      with ``localCheckpoint`` truncating lineage; the fixpoint test
+      compares the edge-set signature — two scans, no subtract join.
+
+    Both paths end in the same left join to ``docs``: a document with
+    no edge is its own cluster.
     """
     edges = pairs.select(
         F.col(src_col).cast("long").alias("u"),
@@ -1627,27 +1669,32 @@ def dedup_clusters_star(
         return out.filter(F.col("u") != F.col("v")).distinct()
 
     sig = _signature(edges)
-    for _ in range(max_rounds):
-        # (r17 note: checkpointing between the stars was measured
-        # SLOWER at sf0.1 — the duplicated _large_star subtree runs as
-        # parallel stages inside one job, while an inter-star
-        # materialization adds a serial job per round)
-        edges = _small_star(_large_star(edges)).localCheckpoint()
-        new_sig = _signature(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        import warnings
-
-        warnings.warn(
-            f"dedup_clusters_star: no fixpoint within {max_rounds} "
-            "rounds; labels may be unsettled",
-            RuntimeWarning,
-            stacklevel=2,
+    if sig[0] <= CC_LOCAL_MAX_EDGES:
+        labels = edges.coalesce(1).mapInPandas(
+            _union_find_labels, schema="u long, label long"
         )
-    # at the fixpoint every node points directly at its component min
-    labels = edges.groupBy("u").agg(F.min("v").alias("label"))
+    else:
+        for _ in range(max_rounds):
+            # (r17 note: checkpointing between the stars was measured
+            # SLOWER at sf0.1 — the duplicated _large_star subtree runs
+            # as parallel stages inside one job, while an inter-star
+            # materialization adds a serial job per round)
+            edges = _small_star(_large_star(edges)).localCheckpoint()
+            new_sig = _signature(edges)
+            if new_sig == sig:
+                break
+            sig = new_sig
+        else:
+            import warnings
+
+            warnings.warn(
+                f"dedup_clusters_star: no fixpoint within {max_rounds} "
+                "rounds; labels may be unsettled",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        # at the fixpoint every node points directly at its component min
+        labels = edges.groupBy("u").agg(F.min("v").alias("label"))
     return (
         docs.select(F.col(id_col).alias("doc_id"))
         .join(

@@ -252,11 +252,13 @@ def embedding_near_dupes(
     the self-join into a per-block JVM join."""
     if block_col is None and impl in ("auto", "gemm"):
         if impl == "auto":
-            first = corpus.select(
-                F.size(to_double_array(F.col(vec_col))).alias("d")
+            # one routing job: row count and vector dimension together
+            # (an empty corpus gives a null dimension → 0)
+            probe = corpus.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max(F.size(to_double_array(F.col(vec_col)))).alias("d"),
             ).first()
-            dim = int(first["d"]) if first is not None else 0
-            n = corpus.count()
+            n, dim = int(probe["n"]), int(probe["d"] or 0)
             if dim and (
                 n * dim > GEMM_MAX_CELLS
                 or n * n * dim > GEMM_MAX_COMPARE

@@ -312,7 +312,17 @@ def test_fuzzy_decontam_index_mode_matches_tokenize(spark, tmp_path):
     assert base == via_index
 
 
-def test_star_cc_matches_min_label_hand_case(spark):
+@pytest.fixture(params=["batch", "star"])
+def cc_path(request, monkeypatch):
+    """Both dedup_clusters_star paths: the default edge budget finishes
+    in one Arrow batch; a zero budget sends every non-empty graph
+    through the large-star/small-star rounds."""
+    if request.param == "star":
+        monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", 0)
+    return request.param
+
+
+def test_star_cc_matches_min_label_hand_case(spark, cc_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
@@ -326,7 +336,7 @@ def test_star_cc_matches_min_label_hand_case(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
-def test_star_cc_matches_min_label_on_random_graph(spark):
+def test_star_cc_matches_min_label_on_random_graph(spark, cc_path):
     import random
 
     rng = random.Random(7)
@@ -349,25 +359,31 @@ def test_star_cc_matches_min_label_on_random_graph(spark):
 def test_star_cc_long_chain_converges_logarithmically(spark, monkeypatch):
     # a 64-node path: min-label needs ~63 rounds, star must settle in
     # O(log n) — assert it fixpoints well under the propagation bound
+    monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    docs = spark.createDataFrame([(i,) for i in range(64)], "doc_id long")
+    # patch the class the frames really are (PySpark's classic
+    # DataFrame overrides localCheckpoint, so patching the public base
+    # class would count nothing)
     calls = {"rounds": 0}
-    orig = dedup.DataFrame.localCheckpoint
+    frame_cls = type(pairs)
+    orig = frame_cls.localCheckpoint
 
     def counting(self, *a, **kw):
         calls["rounds"] += 1
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(dedup.DataFrame, "localCheckpoint", counting)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
-    )
-    docs = spark.createDataFrame([(i,) for i in range(64)], "doc_id long")
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
     rows = dedup.dedup_clusters_star(pairs, docs).collect()
     assert {r["cluster_id"] for r in rows} == {0}
-    # one checkpoint per round plus the initial edge checkpoint
-    assert calls["rounds"] <= 12, calls["rounds"]
+    # the initial edge checkpoint plus one per round: at least one
+    # round ran, and far fewer than min-label's 63
+    assert 2 <= calls["rounds"] <= 12, calls["rounds"]
 
 
-def test_keep_representatives_agrees_across_cc_algorithms(spark):
+def test_keep_representatives_agrees_across_cc_algorithms(spark, cc_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
@@ -380,6 +396,58 @@ def test_keep_representatives_agrees_across_cc_algorithms(spark):
     b = sorted(tuple(r) for r in dedup.keep_representatives(
         docs, dedup.dedup_clusters_star(pairs, docs)).collect())
     assert a == b
+
+
+# jobs building dedup_clusters_star on a small graph may launch: the
+# edge checkpoint and the signature probe, each with its shuffle stage
+STAR_CC_SMALL_GRAPH_MAX_JOBS = 4
+
+
+def _build_jobs(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_star_cc_small_graph_job_ceiling(spark, monkeypatch):
+    """Under the edge budget, building the components launches a fixed
+    handful of jobs whatever the graph's depth; the star rounds the
+    budget replaces launch more on the same graph."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(31)], "id_a long, id_b long"
+    )
+    docs = spark.createDataFrame([(i,) for i in range(32)], "doc_id long")
+    n_batch = _build_jobs(
+        spark, "star-cc-batch",
+        lambda: dedup.dedup_clusters_star(pairs, docs),
+    )
+    assert 1 <= n_batch <= STAR_CC_SMALL_GRAPH_MAX_JOBS, n_batch
+    monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", 0)
+    n_star = _build_jobs(
+        spark, "star-cc-rounds",
+        lambda: dedup.dedup_clusters_star(pairs, docs),
+    )
+    assert n_star > STAR_CC_SMALL_GRAPH_MAX_JOBS, n_star
+
+
+def test_union_find_labels_hand_case():
+    import pandas as pd
+
+    # two batches: chain 9-5-7 spans them, pair 2-3 in one
+    batches = [
+        pd.DataFrame({"u": [9, 2], "v": [5, 3]}),
+        pd.DataFrame({"u": [7], "v": [5]}),
+    ]
+    (out,) = list(dedup._union_find_labels(iter(batches)))
+    assert dict(zip(out["u"], out["label"])) == {
+        2: 2, 3: 2, 5: 5, 7: 5, 9: 5,
+    }
+    assert list(dedup._union_find_labels(iter([]))) == []
 
 
 # ---------------------------------------------------------------------------
