@@ -43,12 +43,8 @@ from rag_database_spark.operators import relational
 from rag_database_spark.operators import similarity
 from rag_database_spark.operators import classifier
 from rag_database_spark.operators import text_analytics
-from rag_database_spark.operators.fusion import FETCH_MULTIPLIER
-from rag_database_spark.operators.hybrid import (
-    hybrid_search,
-    hybrid_search3,
-    hybrid_search3_adaptive,
-)
+from rag_database_spark.operators.fusion import FETCH_MULTIPLIER, rrf_fuse
+from rag_database_spark.operators.hybrid import bm25_leg, colpali_leg, dense_leg
 from rag_database_spark.functions.exact import exact_avg, exact_sum
 from rag_database_spark.sources.tables import fan_out, load_table, load_tables
 
@@ -280,10 +276,7 @@ def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J11/T3: exact batch cosine top-k over embeddings."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     return similarity.cosine_topk(
         qvecs, emb, workload.HYBRID_LIMIT, id_col="vec_id", vec_col="embedding"
     ).select(
@@ -335,10 +328,7 @@ def _ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracles.ann_ivf_topk_sql) — hash-certified since r13; recall vs
     brute force additionally pinned in tests/test_similarity."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     centroids, lists = _ivf_index(spark, sf_dir)
     return similarity.ivf_topk_indexed(
         qvecs, centroids, lists, workload.HYBRID_LIMIT,
@@ -387,10 +377,7 @@ def _pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-replayable (oracles.pq_topk_sql); distance recall vs the
     float brute force is unit-pinned in tests/test_pq.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     codebooks, codes = _pq_index(spark, sf_dir)
     return pq_ops.pq_topk_indexed(
         qvecs, codebooks, codes, workload.HYBRID_LIMIT, dim=EMBEDDING_DIM
@@ -428,10 +415,7 @@ def _mmr_results(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     fetch = workload.HYBRID_LIMIT * FETCH_MULTIPLIER
     cands = (
         similarity.cosine_topk(
@@ -506,10 +490,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order ADC, rank (adc ASC, id). Oracle composes the two
     proven chains (oracles.ivfpq_topk_sql) — hash-certified."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     centroids, codebooks, lists = _ivfpq_index(spark, sf_dir)
     return pq_ops.ivfpq_topk(
         qvecs, centroids, codebooks, lists, workload.HYBRID_LIMIT,
@@ -523,10 +504,7 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine rescore. Seed-deterministic planes make the DuckDB oracle
     an exact equality check, unlike k-means-based ann_ivf_topk."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     return similarity.lsh_topk(
         qvecs, emb, workload.HYBRID_LIMIT, dim=64,
         id_col="vec_id", vec_col="embedding",
@@ -538,16 +516,42 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _text_legs(
+    spark: SparkSession, sf_dir: str, queries: DataFrame, emb: DataFrame
+) -> dict[str, DataFrame]:
+    """The BM25 (persisted index) and dense legs of the hybrid entries."""
+    postings, doclens = _bm25_index(spark, sf_dir)
+    fetch = FETCH_MULTIPLIER * workload.HYBRID_LIMIT
+    return {
+        "bm25": bm25_leg(queries, postings, doclens, fetch),
+        "dense": dense_leg(queries, emb, fetch),
+    }
+
+
+def _three_legs(
+    spark: SparkSession, sf_dir: str, queries: DataFrame
+) -> dict[str, DataFrame]:
+    """BM25 + dense + ColPali legs; the ColPali leg's J2/J3 page→chunk
+    propagation runs over the multi-vector fixtures."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    legs = _text_legs(spark, sf_dir, queries, emb)
+    legs["colpali"] = colpali_leg(
+        workload.query_patches_df(spark, emb),
+        workload.multivector_pages(emb),
+        workload.chunk_page_map(emb),
+        FETCH_MULTIPLIER * workload.HYBRID_LIMIT,
+        workload.DOC_PAGES,
+    )
+    return legs
+
+
 def _hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1: BM25 + dense legs fused with weighted RRF (k=60, .3/.5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    postings, doclens = _bm25_index(spark, sf_dir)
-    return hybrid_search(
-        queries, docs, emb, limit=workload.HYBRID_LIMIT,
-        postings=postings, doclens=doclens,
+    legs = _text_legs(
+        spark, sf_dir, workload.queries_df(spark),
+        load_table(spark, sf_dir, "embeddings"),
     )
+    return rrf_fuse(legs, workload.HYBRID_LIMIT)
 
 
 def _db_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,10 +1106,7 @@ def _dense_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune at the parquet scan, and the top-k is always full (post-
     filtering would under-fill it)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     eligible = emb.filter(F.col("label").isin(*DENSE_FILTER_LABELS))
     return similarity.cosine_topk(
         qvecs, eligible, workload.HYBRID_LIMIT,
@@ -1964,21 +1965,21 @@ def _colpali_lite_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hybrid_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 + F8: three-leg hybrid with per-query modality-adaptive
-    weights (visual queries boost colpali, text queries boost dense)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    postings, doclens = _bm25_index(spark, sf_dir)
-    return hybrid_search3_adaptive(
-        workload.queries_df(spark),
-        load_table(spark, sf_dir, "documents"),
-        emb,
-        workload.query_patches_df(spark, emb),
-        workload.multivector_pages(emb),
-        workload.chunk_page_map(emb),
-        workload.DOC_PAGES,
-        limit=workload.HYBRID_LIMIT,
-        postings=postings,
-        doclens=doclens,
-    )
+    weights (visual queries boost colpali, text queries boost dense)
+    instead of the static .3/.5/.2 (hybrid_search.py:191-217 +
+    query_analyzer.py:123-186)."""
+    queries = workload.queries_df(spark)
+    # eager localCheckpoint (r17): the F8 signal expression bank is a
+    # very large tree (keyword-count chains); materializing the tiny
+    # per-query weight frame keeps it out of the fusion plan that AQE
+    # re-optimizes at every stage boundary. Recomputed per invocation.
+    # A plain projected frame measured slower per call (sf0.01, 4 cores).
+    weights = queries.select(
+        "query_id", qa.suggested_weights(F.col("query_text")).alias("w")
+    ).select("query_id", "w.*").localCheckpoint()
+    return rrf_fuse(
+        _three_legs(spark, sf_dir, queries), workload.HYBRID_LIMIT, weights
+    ).select("query_id", "id", "rrf_score", "rank")
 
 
 def _chunking_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2059,20 +2060,8 @@ def _maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hybrid_rrf3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 full: three-leg hybrid (bm25/dense/colpali) with J2/J3 page→
     chunk propagation feeding the colpali leg."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    postings, doclens = _bm25_index(spark, sf_dir)
-    return hybrid_search3(
-        workload.queries_df(spark),
-        load_table(spark, sf_dir, "documents"),
-        emb,
-        workload.query_patches_df(spark, emb),
-        workload.multivector_pages(emb),
-        workload.chunk_page_map(emb),
-        workload.DOC_PAGES,
-        limit=workload.HYBRID_LIMIT,
-        postings=postings,
-        doclens=doclens,
-    )
+    legs = _three_legs(spark, sf_dir, workload.queries_df(spark))
+    return rrf_fuse(legs, workload.HYBRID_LIMIT)
 
 
 GRAPH_SEED_MAX = 10
@@ -2467,10 +2456,7 @@ def _quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dot products in codegen): the compute path paired with
     quantize_embeddings storage."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     return similarity.quantized_topk(
         qvecs, emb, workload.HYBRID_LIMIT
     ).select(
@@ -2598,10 +2584,7 @@ def _hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rag_database_spark.operators import evaluation
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     fetch = workload.HYBRID_LIMIT * FETCH_MULTIPLIER
     results = similarity.cosine_topk(
         qvecs, emb, fetch, id_col="vec_id", vec_col="embedding"
@@ -2635,10 +2618,7 @@ def _matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (12dp prefetch quantization) -> full-dim exact rescore of the 3x
     over-fetch — the column-pruned cheap-scan ANN path."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = workload.queries_df(spark)
-    qvecs = queries.join(
-        emb, queries["query_vec_id"] == emb["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
+    qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     return similarity.matryoshka_topk(
         qvecs, emb, workload.HYBRID_LIMIT,
         id_col="vec_id", vec_col="embedding",

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from rag_database_spark.functions.text import tokenize
 
 EMBED_DIM = 8
-_SCALE = float(1 << 59)  # hash60 range midpoint
 
 # M1 real-model default (dense_embedder.py:27-35)
 DEFAULT_MODEL = "BAAI/bge-small-en-v1.5"
@@ -35,11 +34,6 @@ DEFAULT_MODEL = "BAAI/bge-small-en-v1.5"
 BGE_QUERY_PREFIX = (
     "Represent this sentence for searching relevant passages: "
 )
-
-
-def _unit(h: Column) -> Column:
-    """60-bit unsigned hash → [-1, 1)."""
-    return h / F.lit(_SCALE) - 1.0
 
 
 DIMS_PER_DIGEST = 8  # 32 hex chars / 4 per dimension

@@ -46,18 +46,6 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def l2_normalize(a: Column) -> Column:
-    """Mirror of dense_embedder.py:59-65 (normalize_embeddings=True).
-
-    The norm is let-bound so each element divides by a cached value —
-    inlining it into the lambda would re-fold the whole array per
-    element (O(d²) per row)."""
-    return let(
-        l2_norm(a),
-        lambda n: F.when(n > 0, F.transform(a, lambda v: v / n)).otherwise(a),
-    )
-
-
 def cosine(a: Column, b: Column) -> Column:
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))

@@ -1,5 +1,7 @@
 """Rank fusion — the heart of the reference's hybrid search
-(src/retrieval/hybrid_search.py).
+(src/retrieval/hybrid_search.py). ``rrf_fuse`` is the engine's one RRF
+fusion: the static and the modality-adaptive hybrid entries and the
+enhanced-search base all call it over legs built in ``hybrid.py``.
 
 Reference semantics preserved exactly:
 - Weighted Reciprocal Rank Fusion, k = 60:
@@ -16,6 +18,8 @@ Reference semantics preserved exactly:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -25,84 +29,47 @@ FETCH_MULTIPLIER = 3  # hybrid_search.py:256
 DOC_BOOST = 0.8  # hybrid_search.py:383-384
 
 
-def rank_per_method(
-    scored: DataFrame,
-    partition_cols: tuple[str, ...] = ("query_id", "method"),
-    score_col: str = "score",
-    id_col: str = "id",
-) -> DataFrame:
-    """W1 (hybrid_search.py:274-329): dense ranks per (query, method),
-    deterministic tie-break on id."""
-    w = Window.partitionBy(*partition_cols).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w))
-
-
 def rrf_fuse(
-    ranked: DataFrame,
-    weights: dict[str, float] | None = None,
+    legs: dict[str, DataFrame],
+    limit: int,
+    weights: dict[str, float] | DataFrame | None = None,
     k: int = RRF_K,
-    limit: int | None = None,
-    query_id_col: str = "query_id",
-    id_col: str = "id",
 ) -> DataFrame:
-    """A1/J1: input (query_id, id, method, rank) — union of per-method
-    ranked lists. Output (query_id, id, rrf_score[, rank]).
+    """J1 + A1 + T2: weighted RRF over ranked legs, top-``limit`` per
+    query (ties broken by id ascending).
 
-    The weight map is tiny → a literal CASE expression (no join at all);
-    the single shuffle is the groupBy, with map-side partial aggregation.
-    """
-    weights = weights or DEFAULT_WEIGHTS
-    wexpr = F.lit(0.0)
-    for m, wt in weights.items():
-        wexpr = F.when(F.col("method") == m, F.lit(float(wt))).otherwise(wexpr)
-    contrib = wexpr / (F.lit(float(k)) + F.col("rank"))
-    fused = ranked.groupBy(query_id_col, id_col).agg(
-        F.sum(contrib).alias("rrf_score")
+    ``legs`` maps a method name to its (query_id, id, rank) frame.
+    ``weights`` is either the static {method: weight} map (default
+    .3/.5/.2), inlined as a literal CASE expression with no join, or a
+    per-query (query_id, w_<method>...) frame (F8 modality-adaptive
+    weights, hybrid_search.py:191-217), broadcast-joined onto the
+    tagged union before the single groupBy shuffle.
+
+    Output: query_id, id, rrf_score (rounded 6), <method>_rank per leg
+    (null when the leg did not return the id), rank."""
+    weights = DEFAULT_WEIGHTS if weights is None else weights
+    tagged = reduce(DataFrame.unionByName, [
+        df.select("query_id", "id", F.lit(m).alias("method"), "rank")
+        for m, df in legs.items()
+    ])
+    if isinstance(weights, DataFrame):
+        tagged = tagged.join(F.broadcast(weights), "query_id")
+        per_method = {m: F.col(f"w_{m}") for m in legs}
+    else:
+        per_method = {m: F.lit(float(w)) for m, w in weights.items()}
+    wexpr = F.lit(None).cast("double")
+    for m, w in per_method.items():
+        wexpr = F.when(F.col("method") == m, w).otherwise(wexpr)
+    fused = tagged.groupBy("query_id", "id").agg(
+        F.round(F.sum(wexpr / (F.lit(float(k)) + F.col("rank"))), 6).alias(
+            "rrf_score"
+        ),
+        *[F.max(F.when(F.col("method") == m, F.col("rank"))).alias(f"{m}_rank")
+          for m in legs],
     )
-    if limit is not None:
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("rrf_score"), F.asc(id_col)
-        )
-        fused = fused.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= limit
-        )
-    return fused
-
-
-def propagate_page_scores(
-    chunks: DataFrame,
-    page_scores: DataFrame,
-    boost: float = DOC_BOOST,
-) -> DataFrame:
-    """J2 + J3 (hybrid_search.py:307-394): chunks inherit the matching
-    page's score on (document_id, page_number); chunks of a matched
-    document with no page overlap get ``max(page score) × boost``.
-
-    ``page_scores``: (document_id, page_number, score). Both join sides
-    derived from top-k lists → broadcast."""
-    page_side = F.broadcast(
-        page_scores.select(
-            "document_id", "page_number", F.col("score").alias("page_score")
-        )
-    )
-    doc_side = F.broadcast(
-        page_scores.groupBy("document_id").agg(
-            F.max("score").alias("doc_max_score")
-        )
-    )
-    return (
-        chunks.join(page_side, ["document_id", "page_number"], "left")
-        .join(doc_side, ["document_id"], "left")
-        .withColumn(
-            "propagated_score",
-            F.coalesce(
-                F.col("page_score"),
-                F.col("doc_max_score") * F.lit(boost),
-            ),
-        )
-        .drop("doc_max_score")
+    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), F.asc("id"))
+    return fused.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= limit
     )
 
 
@@ -111,23 +78,20 @@ def propagate_page_scores_batch(
     page_scores: DataFrame,
     boost: float = DOC_BOOST,
 ) -> DataFrame:
-    """Batch-query form of J2+J3: ``page_scores`` carries
+    """J2 + J3, batch-query form: ``page_scores`` carries
     (query_id, document_id, page_number, score); chunks of a matched
     document join in per query — exact page match inherits the page
     score, the document's other pages get ``max(page score) × boost``
     (hybrid_search.py:307-394).
 
-    Single-consumption shape (r18): ONE doc-grain aggregate carries
-    both the doc-max score and a page→score map (pages per (query,
-    doc) are top-k-bounded, so the map is tiny), replacing the r17
-    two-consumer shape (doc-max rollup + page-grain left join) that
-    evaluated the ``page_scores`` lineage twice — for the colpali leg
-    that lineage is the MaxSim ArrowEvalPython GEMM, the single most
-    expensive subtree in the three-leg entries. The map lookup
-    (null when the chunk's page is absent) is exactly the old LEFT
-    join's semantics. The inner doc-grain join both scopes the
-    expansion to matched documents and attaches query_id; the join
-    side is top-k-bounded → broadcast-sized."""
+    Single consumption (r18): ONE doc-grain aggregate carries both the
+    doc-max score and a page→score map (pages per (query, doc) are
+    top-k-bounded, so the map is tiny), so the ``page_scores`` lineage
+    — for the colpali leg the MaxSim ArrowEvalPython GEMM — is
+    evaluated once. The map lookup is null when the chunk's page is
+    absent (LEFT-join semantics). The inner doc-grain join scopes the
+    expansion to matched documents and attaches query_id; its side is
+    top-k-bounded → broadcast."""
     doc_side = page_scores.groupBy("query_id", "document_id").agg(
         F.max("score").alias("doc_max_score"),
         F.map_from_entries(
@@ -144,23 +108,4 @@ def propagate_page_scores_batch(
             ),
         )
         .drop("doc_max_score", "__page_scores")
-    )
-
-
-def priority_merge(
-    priority: DataFrame,
-    base: DataFrame,
-    id_col: str = "id",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """J4 (enhanced_hybrid_search.py:475-496): priority ∪ base, first-seen
-    id wins (priority side preferred). unionByName + window dedup."""
-    p = priority.withColumn("__prio", F.lit(0))
-    b = base.withColumn("__prio", F.lit(1))
-    w = Window.partitionBy(query_id_col, id_col).orderBy("__prio")
-    return (
-        p.unionByName(b, allowMissingColumns=True)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__prio", "__rn")
     )

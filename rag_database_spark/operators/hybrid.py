@@ -1,18 +1,17 @@
-"""Q1 — hybrid search, the flagship composite
+"""Q1 — hybrid search legs, the flagship composite's inputs
 (reference: HybridSearcher.search, src/retrieval/hybrid_search.py:219-430).
 
 Pipeline (SURVEY §3.1 Spark re-expression):
 
-    BM25 leg   : documents → tokenize → postings/stats → score → rank (W1)
-    dense leg  : embeddings → exact cosine top-k (J11) → rank
-    fusion     : union(legs) → weighted RRF k=60 (A1) → top-k (T2)
+    BM25 leg    : query terms → persisted postings/stats → score → rank (W1)
+    dense leg   : query vectors → exact cosine top-k (J11) → rank
+    colpali leg : MaxSim page top-k → page→chunk propagation (J2/J3) → rank
+    fusion      : ``fusion.rrf_fuse`` — weighted RRF k=60 (A1) → top-k (T2)
 
-Per-method over-fetch is 3 × limit before fusion (hybrid_search.py:256);
-default weights bm25 .3 / dense .5 (colpali .2 when a multi-vector leg is
-present; absent legs contribute 0 — hybrid_search.py:185-189).
-
-Output columns (aliased identically in the DuckDB oracle):
-    query_id, id, rrf_score (rounded 6), bm25_rank, dense_rank, rank
+Each leg returns (query_id, id, rank) over-fetched to ``fetch`` =
+3 × limit (hybrid_search.py:256); the caller names the legs in the
+dict it hands to ``rrf_fuse``. Ids unify across legs (the workload's
+doc_id and vec_id are aligned).
 """
 
 from __future__ import annotations
@@ -22,79 +21,33 @@ from pyspark.sql import functions as F
 
 from rag_database_spark.operators import bm25 as bm25_ops
 from rag_database_spark.operators import similarity
-from rag_database_spark.operators.fusion import (
-    DEFAULT_WEIGHTS,
-    FETCH_MULTIPLIER,
-    RRF_K,
-    propagate_page_scores_batch,
-)
+from rag_database_spark.operators.fusion import propagate_page_scores_batch
 
 
-def hybrid_search(
-    queries: DataFrame,
-    documents: DataFrame,
-    embeddings: DataFrame,
-    limit: int = 10,
-    weights: dict[str, float] | None = None,
-    rrf_k: int = RRF_K,
-    postings: DataFrame | None = None,
-    doclens: DataFrame | None = None,
+def bm25_leg(
+    queries: DataFrame, postings: DataFrame, doclens: DataFrame, fetch: int
 ) -> DataFrame:
-    """queries(query_id, query_text, query_vec_id) — the dense query
-    vector is looked up from ``embeddings`` by query_vec_id (broadcast
-    join; at serving scale this would be an embedder Pandas UDF, M1/M2).
-
-    Pass a persisted index (``bm25.read_index``) via postings/doclens
-    so the corpus is not re-tokenized per query batch (S7)."""
-    weights = weights or DEFAULT_WEIGHTS
-    fetch = FETCH_MULTIPLIER * limit
-
-    # --- BM25 leg (A3 + W1 + T4) ---
-    if postings is None:
-        postings = bm25_ops.build_postings(documents)
-    if doclens is None:
-        doclens = bm25_ops.build_doclens(documents)
+    """A3 + W1 + T4: top-``fetch`` BM25 documents per query over a
+    persisted index (``bm25.read_index``), so the corpus is not
+    re-tokenized per query batch (S7)."""
     scored = bm25_ops.score_queries(queries, postings, doclens)
-    bm25_ranked = (
-        bm25_ops.topk(scored, fetch)
-        .select(
-            "query_id",
-            F.col("doc_id").alias("id"),
-            F.lit("bm25").alias("method"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-    # --- dense leg (J11 + W1 + T4) ---
-    qvecs = queries.join(
-        embeddings, queries["query_vec_id"] == embeddings["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
-    dense_ranked = similarity.cosine_topk(
-        qvecs, embeddings, fetch, id_col="vec_id", vec_col="embedding"
-    ).select(
+    return bm25_ops.topk(scored, fetch).select(
         "query_id",
-        "id",
-        F.lit("dense").alias("method"),
+        F.col("doc_id").alias("id"),
         F.col("rank").cast("long").alias("rank"),
     )
 
-    # --- weighted RRF fusion (J1 + A1 + T2) ---
-    legs = bm25_ranked.unionByName(dense_ranked)
-    wexpr = F.lit(None).cast("double")
-    for m, wt in weights.items():
-        wexpr = F.when(F.col("method") == m, F.lit(float(wt))).otherwise(wexpr)
-    fused = legs.groupBy("query_id", "id").agg(
-        F.round(F.sum(wexpr / (F.lit(float(rrf_k)) + F.col("rank"))), 6).alias(
-            "rrf_score"
-        ),
-        F.max(F.when(F.col("method") == "bm25", F.col("rank"))).alias("bm25_rank"),
-        F.max(F.when(F.col("method") == "dense", F.col("rank"))).alias("dense_rank"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), F.asc("id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= limit)
-    )
+
+def dense_leg(queries: DataFrame, embeddings: DataFrame, fetch: int) -> DataFrame:
+    """J11 + W1 + T4: exact cosine top-``fetch`` per query; the query
+    vector is looked up from ``embeddings`` by query_vec_id."""
+    return similarity.cosine_topk(
+        similarity.query_vectors(queries, embeddings),
+        embeddings,
+        fetch,
+        id_col="vec_id",
+        vec_col="embedding",
+    ).select("query_id", "id", F.col("rank").cast("long").alias("rank"))
 
 
 def colpali_leg(
@@ -108,15 +61,12 @@ def colpali_leg(
     hybrid_search.py:307-394): MaxSim page scores → top-fetch pages →
     propagate to chunks (page match, else doc-max × 0.8) → re-rank.
 
-    ``chunk_pages``: (id, document_id, page_number). Returns
-    (query_id, id, method='colpali', rank)."""
-    from rag_database_spark.operators.similarity import maxsim_scores_pruned
-
-    pages_scored = maxsim_scores_pruned(query_patches, page_patches, fetch)
-    # single consumption (r18): propagate_page_scores_batch now reads
-    # page_topk exactly once (doc-grain map aggregate), so the MaxSim
-    # scoring subtree (ArrowEvalPython GEMM) appears once in the plan —
-    # no eager fold needed, the leg stays pure-lazy.
+    ``chunk_pages``: (id, document_id, page_number)."""
+    pages_scored = similarity.maxsim_scores_pruned(
+        query_patches, page_patches, fetch
+    )
+    # propagate_page_scores_batch reads page_topk once (r18), so the
+    # MaxSim GEMM subtree appears once in the plan: no eager fold.
     page_topk = bm25_ops.topk(
         pages_scored, fetch, id_col="page_id"
     ).select(
@@ -132,142 +82,5 @@ def colpali_leg(
     return (
         prop.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= fetch)
-        .select("query_id", "id", F.lit("colpali").alias("method"), "rank")
+        .select("query_id", "id", "rank")
     )
-
-
-def hybrid_search3(
-    queries: DataFrame,
-    documents: DataFrame,
-    embeddings: DataFrame,
-    query_patches: DataFrame,
-    page_patches: DataFrame,
-    chunk_pages: DataFrame,
-    doc_pages: int,
-    limit: int = 10,
-    weights: dict[str, float] | None = None,
-    rrf_k: int = RRF_K,
-    postings: DataFrame | None = None,
-    doclens: DataFrame | None = None,
-) -> DataFrame:
-    """Q1 with all three legs (bm25 .3 / dense .5 / colpali .2 —
-    hybrid_search.py:185-189). Ids unify across legs (the driver's
-    doc_id and vec_id are aligned). Output adds colpali_rank."""
-    weights = weights or DEFAULT_WEIGHTS
-    fetch = FETCH_MULTIPLIER * limit
-
-    scored = bm25_ops.score_queries(
-        queries,
-        postings if postings is not None else bm25_ops.build_postings(documents),
-        doclens if doclens is not None else bm25_ops.build_doclens(documents),
-    )
-    bm25_ranked = bm25_ops.topk(scored, fetch).select(
-        "query_id",
-        F.col("doc_id").alias("id"),
-        F.lit("bm25").alias("method"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-    qvecs = queries.join(
-        embeddings, queries["query_vec_id"] == embeddings["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
-    dense_ranked = similarity.cosine_topk(
-        qvecs, embeddings, fetch, id_col="vec_id", vec_col="embedding"
-    ).select(
-        "query_id", "id", F.lit("dense").alias("method"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-    colpali_ranked = colpali_leg(
-        query_patches, page_patches, chunk_pages, fetch, doc_pages
-    )
-
-    legs = bm25_ranked.unionByName(dense_ranked).unionByName(colpali_ranked)
-    wexpr = F.lit(None).cast("double")
-    for m, wt in weights.items():
-        wexpr = F.when(F.col("method") == m, F.lit(float(wt))).otherwise(wexpr)
-    fused = legs.groupBy("query_id", "id").agg(
-        F.round(
-            F.sum(wexpr / (F.lit(float(rrf_k)) + F.col("rank"))), 6
-        ).alias("rrf_score"),
-        F.max(F.when(F.col("method") == "bm25", F.col("rank"))).alias("bm25_rank"),
-        F.max(F.when(F.col("method") == "dense", F.col("rank"))).alias("dense_rank"),
-        F.max(F.when(F.col("method") == "colpali", F.col("rank"))).alias(
-            "colpali_rank"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), F.asc("id"))
-    return fused.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= limit)
-
-
-def hybrid_search3_adaptive(
-    queries: DataFrame,
-    documents: DataFrame,
-    embeddings: DataFrame,
-    query_patches: DataFrame,
-    page_patches: DataFrame,
-    chunk_pages: DataFrame,
-    doc_pages: int,
-    limit: int = 10,
-    rrf_k: int = RRF_K,
-    postings: DataFrame | None = None,
-    doclens: DataFrame | None = None,
-) -> DataFrame:
-    """Q1 with F8 modality-adaptive weights
-    (hybrid_search.py:191-217 + query_analyzer.py:123-186): each query
-    carries its own (bm25, dense, colpali) weights — visual queries
-    boost the colpali leg, text queries the dense leg — instead of the
-    static .3/.5/.2. The per-query weight frame is tiny → broadcast
-    into the fusion; everything else matches ``hybrid_search3``."""
-    from rag_database_spark.operators.query_analysis import suggested_weights
-
-    fetch = FETCH_MULTIPLIER * limit
-    scored = bm25_ops.score_queries(
-        queries,
-        postings if postings is not None else bm25_ops.build_postings(documents),
-        doclens if doclens is not None else bm25_ops.build_doclens(documents),
-    )
-    bm25_ranked = bm25_ops.topk(scored, fetch).select(
-        "query_id", F.col("doc_id").alias("id"),
-        F.lit("bm25").alias("method"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-    qvecs = queries.join(
-        embeddings, queries["query_vec_id"] == embeddings["vec_id"]
-    ).select("query_id", F.col("embedding").alias("qvec"))
-    dense_ranked = similarity.cosine_topk(
-        qvecs, embeddings, fetch, id_col="vec_id", vec_col="embedding"
-    ).select(
-        "query_id", "id", F.lit("dense").alias("method"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-    colpali_ranked = colpali_leg(
-        query_patches, page_patches, chunk_pages, fetch, doc_pages
-    )
-
-    # eager localCheckpoint (r17): the F8 signal expression bank is a
-    # very large tree (keyword-count chains); materializing the tiny
-    # per-query weight frame keeps it out of the fusion plan that AQE
-    # re-optimizes at every stage boundary. Recomputed per invocation.
-    qw = queries.select(
-        "query_id", suggested_weights(F.col("query_text")).alias("w")
-    ).localCheckpoint()
-    legs = (
-        bm25_ranked.unionByName(dense_ranked)
-        .unionByName(colpali_ranked)
-        .join(F.broadcast(qw), "query_id")
-    )
-    weight = (
-        F.when(F.col("method") == "bm25", F.col("w.w_bm25"))
-        .when(F.col("method") == "dense", F.col("w.w_dense"))
-        .otherwise(F.col("w.w_colpali"))
-    )
-    fused = legs.groupBy("query_id", "id").agg(
-        F.round(
-            F.sum(weight / (F.lit(float(rrf_k)) + F.col("rank"))), 6
-        ).alias("rrf_score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), F.asc("id"))
-    return fused.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= limit)

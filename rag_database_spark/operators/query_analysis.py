@@ -15,6 +15,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rag_database_spark.operators import bm25 as bm25_ops
+from rag_database_spark.operators.fusion import FETCH_MULTIPLIER, rrf_fuse
+from rag_database_spark.operators.hybrid import bm25_leg, dense_leg
+
 # --- F5 precision detection (enhanced_hybrid_search.py:73-121) -------------
 PRECISION_PATTERNS: tuple[tuple[str, str], ...] = (
     (r"(?i)(?:in[ ]+)?table[ ]+(\d+|[A-Z])", "table_reference"),
@@ -426,16 +430,17 @@ def enhanced_search(
     id wins) → top-k.
 
     Output: (query_id, id, final_score, source, rank)."""
-    from rag_database_spark.operators import bm25 as bm25_ops
-    from rag_database_spark.operators.hybrid import hybrid_search
-
     if postings is None:
         postings = bm25_ops.build_postings(documents)
     if doclens is None:
         doclens = bm25_ops.build_doclens(documents)
-    base = hybrid_search(
-        queries, documents, embeddings, limit=2 * limit,
-        postings=postings, doclens=doclens,
+    fetch = FETCH_MULTIPLIER * 2 * limit
+    base = rrf_fuse(
+        {
+            "bm25": bm25_leg(queries, postings, doclens, fetch),
+            "dense": dense_leg(queries, embeddings, fetch),
+        },
+        2 * limit,
     )
     base_rows = base.select(
         "query_id",

@@ -13,9 +13,8 @@ at 100 TB both sides would be bucketed on the key to make these
 shuffle-free; the dimension side (nation/region) is broadcast. The
 stats rollup is a union of independent small aggregates — one job, no
 wide shuffle. Paging with a global row_number serializes on one
-partition after the per-partition sort; for deep paging at scale use
-keyset continuation (WHERE (sort_key, id) > last_seen) instead — both
-forms are provided.
+partition after the per-partition sort; for deep paging at scale a
+keyset continuation (WHERE (sort_key, id) > last_seen) avoids it.
 """
 
 from __future__ import annotations
@@ -194,22 +193,6 @@ def list_documents(docs: DataFrame, lang: str | None = None,
         out.withColumn("rn", F.row_number().over(w).cast("long"))
         .filter((F.col("rn") > offset) & (F.col("rn") <= offset + limit))
         .select("doc_id", "lang", "source", "n_chars", "rn")
-    )
-
-
-def list_documents_keyset(docs: DataFrame, last_n_chars: int,
-                          last_doc_id: int, limit: int = 20) -> DataFrame:
-    """Keyset-continuation form of ``list_documents`` — the 100 TB-safe
-    paging pattern: no global row_number, the composite-key predicate
-    pushes into the scan and only ``limit`` rows survive."""
-    pred = (F.col("n_chars") < last_n_chars) | (
-        (F.col("n_chars") == last_n_chars) & (F.col("doc_id") > last_doc_id)
-    )
-    return (
-        docs.filter(pred)
-        .orderBy(F.desc("n_chars"), F.asc("doc_id"))
-        .limit(limit)
-        .select("doc_id", "lang", "source", "n_chars")
     )
 
 

@@ -50,6 +50,15 @@ from rag_database_spark.functions.vector import (
 PREFETCH_ROUND_DP = 12
 
 
+def query_vectors(queries: DataFrame, embeddings: DataFrame) -> DataFrame:
+    """(query_id, qvec): each query's dense vector, looked up from
+    ``embeddings`` by query_vec_id (at serving scale this would be an
+    embedder Pandas UDF, M1/M2)."""
+    return queries.join(
+        embeddings, queries["query_vec_id"] == embeddings["vec_id"]
+    ).select("query_id", F.col("embedding").alias("qvec"))
+
+
 def _ranked(scored: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("id")

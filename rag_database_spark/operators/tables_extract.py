@@ -342,30 +342,10 @@ def dedup_overlapping_regions(regions: DataFrame) -> DataFrame:
     return sorted_regions.mapInPandas(keep_batches, schema=regions.schema)
 
 
-# fixture regions for the W5 rows-only driver entry: overlaps that
-# exercise both keep rules (replace-on-higher-confidence, drop-on-lower)
-REGION_FIXTURES: tuple[tuple[int, int, int, float], ...] = (
-    (1, 0, 100, 0.90),
-    (1, 50, 150, 0.95),   # overlaps + higher conf → replaces
-    (1, 140, 200, 0.50),  # overlaps kept + lower conf → dropped
-    (1, 300, 400, 0.80),  # disjoint → kept
-    (2, 0, 50, 0.70),
-    (2, 10, 60, 0.60),    # overlaps + lower conf → dropped
-    (2, 60, 90, 0.99),    # disjoint → kept
-)
-
-
-def region_fixtures_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(REGION_FIXTURES),
-        "document_id long, start long, end long, confidence double",
-    )
-
-
 def synthetic_regions(documents: DataFrame) -> DataFrame:
     """Derive a deterministic per-document region set from the
     ``documents`` table so W5 can be oracle-checked at data scale
-    (the 7-row fixture only pins the keep rules in unit tests).
+    (unit tests pin the keep rules on hand-built regions).
 
     Four regions per doc, starts strictly increasing by 200 (so the
     sort inside the keep-walk has no ties and is engine-independent);

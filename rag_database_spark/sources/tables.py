@@ -127,12 +127,6 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view for spark.sql access."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

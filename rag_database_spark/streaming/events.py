@@ -71,17 +71,6 @@ def hourly_event_agg(events: DataFrame, exact_users: bool = True) -> DataFrame:
     )
 
 
-def sliding_event_agg(events: DataFrame) -> DataFrame:
-    """Sliding 1-hour windows every 15 minutes — each event lands in 4
-    windows (late-data demo surface; not oracle-checked since DuckDB
-    has no window-duplication primitive)."""
-    return (
-        events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("bucket_start"), "n_events")
-    )
-
-
 def with_watermark(
     events: DataFrame, delay: str = DEFAULT_WATERMARK
 ) -> DataFrame:
@@ -918,35 +907,3 @@ def bloom_gate_batch(
         if verdict is not None:
             verdict.unpersist()
         batch_df.unpersist()
-
-
-def stream_bloom_gate(
-    spark: SparkSession,
-    src_path: str,
-    accept_path: str,
-    quarantine_path: str,
-    schema: str,
-    index_path: str,
-    max_files_per_trigger: int | None = None,
-):
-    """Online Bloom dedup gate (the streaming form of the
-    ``bloom_gate`` entry): each micro-batch gates against the merged
-    bitmap of everything accepted before it. Semantics are
-    ``bloom_gate_batch``'s — stream==batch by construction, and the
-    batch form is what the DuckDB oracle checks."""
-
-    def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_gate_batch(
-            batch_df, batch_id, accept_path, quarantine_path, index_path
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.parquet(src_path)
-        .writeStream.foreachBatch(_gate)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", accept_path + "_checkpoint")
-        .start()
-    )

@@ -1,20 +1,20 @@
-"""Rank fusion (A1/J1) hand-case with the reference constants
-(hybrid_search.py: k=60, weights bm25 .3 / dense .5 / colpali .2), plus
-J2/J3 page-score propagation and J4 priority merge."""
+"""Rank fusion (A1/J1) hand-cases with the reference constants
+(hybrid_search.py: k=60, weights bm25 .3 / dense .5 / colpali .2):
+static and per-query weights, tie-break, absent legs, plus J2/J3
+page-score propagation."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rag_database_spark.operators.fusion import (
     DEFAULT_WEIGHTS,
     RRF_K,
-    priority_merge,
-    propagate_page_scores,
-    rank_per_method,
+    propagate_page_scores_batch,
     rrf_fuse,
 )
+
+LEG_SCHEMA = "query_id long, id string, rank long"
 
 
 def test_reference_constants():
@@ -24,70 +24,73 @@ def test_reference_constants():
 
 def test_rrf_hand_case(spark):
     # doc A: bm25 rank 1, dense rank 2; doc B: dense rank 1 only
-    ranked = spark.createDataFrame(
-        [(1, "A", "bm25", 1), (1, "A", "dense", 2), (1, "B", "dense", 1)],
-        "query_id long, id string, method string, rank long",
-    )
-    got = {r["id"]: r["rrf_score"] for r in rrf_fuse(ranked).collect()}
-    assert got["A"] == pytest.approx(0.3 / 61 + 0.5 / 62)
-    assert got["B"] == pytest.approx(0.5 / 61)
+    legs = {
+        "bm25": spark.createDataFrame([(1, "A", 1)], LEG_SCHEMA),
+        "dense": spark.createDataFrame([(1, "A", 2), (1, "B", 1)], LEG_SCHEMA),
+    }
+    got = {r["id"]: r for r in rrf_fuse(legs, limit=10).collect()}
+    assert got["A"]["rrf_score"] == round(0.3 / 61 + 0.5 / 62, 6)
+    assert got["B"]["rrf_score"] == round(0.5 / 61, 6)
+    assert (got["A"]["bm25_rank"], got["A"]["dense_rank"]) == (1, 2)
+    assert (got["B"]["bm25_rank"], got["B"]["dense_rank"]) == (None, 1)
+    assert (got["A"]["rank"], got["B"]["rank"]) == (1, 2)
 
 
 def test_rrf_limit_and_tie_break(spark):
     # identical contributions → tie broken by id ascending
-    ranked = spark.createDataFrame(
-        [(1, "Z", "dense", 1), (1, "A", "dense", 1)],
-        "query_id long, id string, method string, rank long",
-    )
-    rows = rrf_fuse(ranked, limit=1).collect()
+    legs = {
+        "dense": spark.createDataFrame([(1, "Z", 1), (1, "A", 1)], LEG_SCHEMA)
+    }
+    rows = rrf_fuse(legs, limit=1).collect()
     assert len(rows) == 1 and rows[0]["id"] == "A"
 
 
-def test_rank_per_method(spark):
-    scored = spark.createDataFrame(
-        [(1, "bm25", "A", 3.0), (1, "bm25", "B", 5.0), (1, "dense", "A", 1.0)],
-        "query_id long, method string, id string, score double",
-    )
-    got = {
-        (r["method"], r["id"]): r["rank"]
-        for r in rank_per_method(scored).collect()
+def test_rrf_per_query_weights(spark):
+    """A per-query (query_id, w_<method>...) weight frame: both queries
+    see the same legs, but opposite weights pick different top ids."""
+    ranks = [(q, "A", 1) for q in (1, 2)] + [(q, "B", 2) for q in (1, 2)]
+    flipped = [(q, i, 3 - r) for q, i, r in ranks]
+    legs = {
+        "bm25": spark.createDataFrame(ranks, LEG_SCHEMA),
+        "dense": spark.createDataFrame(flipped, LEG_SCHEMA),
     }
-    assert got == {("bm25", "B"): 1, ("bm25", "A"): 2, ("dense", "A"): 1}
+    weights = spark.createDataFrame(
+        [(1, 0.9, 0.1), (2, 0.1, 0.9)],
+        "query_id long, w_bm25 double, w_dense double",
+    )
+    rows = rrf_fuse(legs, limit=2, weights=weights).collect()
+    top = {r["query_id"]: r["id"] for r in rows if r["rank"] == 1}
+    assert top == {1: "A", 2: "B"}
+    score = {(r["query_id"], r["id"]): r["rrf_score"] for r in rows}
+    assert score[(1, "A")] == round(0.9 / 61 + 0.1 / 62, 6)
+    assert score[(2, "A")] == round(0.1 / 61 + 0.9 / 62, 6)
 
 
 def test_propagation_page_match_and_doc_fallback(spark):
     chunks = spark.createDataFrame(
         [("c1", "d1", 1), ("c2", "d1", 9), ("c3", "d2", 1)],
-        "chunk_id string, document_id string, page_number int",
+        "id string, document_id string, page_number int",
     )
     pages = spark.createDataFrame(
-        [("d1", 1, 0.9), ("d1", 2, 0.4)],
-        "document_id string, page_number int, score double",
+        [(1, "d1", 1, 0.9), (1, "d1", 2, 0.4), (2, "d2", 3, 0.5)],
+        "query_id long, document_id string, page_number int, score double",
     )
     got = {
-        r["chunk_id"]: r["propagated_score"]
-        for r in propagate_page_scores(chunks, pages).collect()
+        (r["query_id"], r["id"]): r["propagated_score"]
+        for r in propagate_page_scores_batch(chunks, pages).collect()
     }
-    assert got["c1"] == pytest.approx(0.9)  # J2: exact page match
-    assert got["c2"] == pytest.approx(0.9 * 0.8)  # J3: doc max × 0.8
-    assert got["c3"] is None  # document absent from page results
-
-
-def test_priority_merge_first_seen_wins(spark):
-    prio = spark.createDataFrame(
-        [(1, "A", 10.0)], "query_id long, id string, score double"
-    )
-    base = spark.createDataFrame(
-        [(1, "A", 1.0), (1, "B", 2.0)], "query_id long, id string, score double"
-    )
-    got = {r["id"]: r["score"] for r in priority_merge(prio, base).collect()}
-    assert got == {"A": 10.0, "B": 2.0}
+    assert got[(1, "c1")] == pytest.approx(0.9)  # J2: exact page match
+    assert got[(1, "c2")] == pytest.approx(0.9 * 0.8)  # J3: doc max × 0.8
+    assert got[(2, "c3")] == pytest.approx(0.5 * 0.8)
+    # chunks join in only for the documents their query matched
+    assert set(got) == {(1, "c1"), (1, "c2"), (2, "c3")}
 
 
 def test_hybrid_absent_leg_contributes_zero(spark):
     """A query whose BM25 leg matches nothing still fuses: missing
     methods contribute 0 (the reference's defaultdict semantics)."""
-    from rag_database_spark.operators.hybrid import hybrid_search
+    from rag_database_spark.operators import bm25 as bm25_ops
+    from rag_database_spark.operators.hybrid import bm25_leg, dense_leg
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "delta epsilon zeta")],
@@ -101,12 +104,16 @@ def test_hybrid_absent_leg_contributes_zero(spark):
         [(1, "zzzz qqqq missing terms", 3)],  # zero BM25 matches
         "query_id long, query_text string, query_vec_id long",
     )
-    rows = hybrid_search(queries, docs, emb, limit=5).collect()
+    postings = bm25_ops.build_postings(docs)
+    doclens = bm25_ops.build_doclens(docs)
+    legs = {
+        "bm25": bm25_leg(queries, postings, doclens, 15),
+        "dense": dense_leg(queries, emb, 15),
+    }
+    rows = rrf_fuse(legs, limit=5).collect()
     assert rows  # dense leg alone produces results
     assert all(r["bm25_rank"] is None for r in rows)
     assert all(r["dense_rank"] is not None for r in rows)
     # rrf score equals the dense-only contribution
     first = min(rows, key=lambda r: r["rank"])
-    assert first["rrf_score"] == pytest.approx(
-        round(0.5 / (60 + first["dense_rank"]), 6)
-    )
+    assert first["rrf_score"] == round(0.5 / (60 + first["dense_rank"]), 6)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -642,3 +643,16 @@ def test_split_leakage_audit_joins_are_keyed(spark):
     )
     p = plan_of(dedup.split_leakage_audit(pairs, split))
     assert "NestedLoop" not in p and "CartesianProduct" not in p, p
+
+
+def test_hybrid_rrf3_single_union_exchange_ceiling(spark):
+    """The three legs meet in ONE Union feeding the single RRF groupBy,
+    and the whole three-leg plan stays at or under 10 shuffle exchanges
+    (the count of the single-fusion form) — a duplicated leg or a
+    second fusion would show up as extra Unions or Exchanges."""
+    import __spark_entry__ as entrymod
+
+    p = plan_of(entrymod.queries()["hybrid_rrf3"](spark, SF_DIR), "simple")
+    assert len(re.findall(r"\bUnion\b", p)) == 1, p
+    shuffles = re.findall(r"(?<![A-Za-z])Exchange ", p)
+    assert len(shuffles) <= 10, p
