@@ -65,8 +65,10 @@ def colpali_leg(
     pages_scored = similarity.maxsim_scores_pruned(
         query_patches, page_patches, fetch
     )
-    # propagate_page_scores_batch reads page_topk once (r18), so the
-    # MaxSim GEMM subtree appears once in the plan: no eager fold.
+    # MaxSim prefetch + rescore is one Arrow pass over one page-table
+    # scan, and propagate_page_scores_batch reads page_topk once, so
+    # that subtree appears once in the plan: the leg is pure lazy (no
+    # eager fold here or in the fixtures) and its plan can be reused.
     page_topk = bm25_ops.topk(
         pages_scored, fetch, id_col="page_id"
     ).select(

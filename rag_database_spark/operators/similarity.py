@@ -140,6 +140,27 @@ def cosine_topk(
     return _ranked(scored, k)
 
 
+def _partial_topk(Qn, ids, vecs, k: int, round_dp: int | None):
+    """One Arrow batch's GEMM partial top-k: normalize the batch rows
+    ``vecs``, score ``S = Qn @ Vn.T`` (``Qn``: normalized queries),
+    optionally round to ``round_dp``, and keep each query's best ``k``
+    rows by (score DESC, id ASC) — the order the global window uses, so
+    ties at the k boundary resolve as in the unblocked computation.
+    Returns flat ``(query index, row index, score)`` arrays."""
+    import numpy as np
+
+    V = np.vstack(vecs).astype(np.float64)
+    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
+    S = Qn @ Vn.T  # (n_queries, batch)
+    if round_dp is not None:
+        S = np.round(S, round_dp)
+    kk = min(k, S.shape[1])
+    # lexsort's last key is primary
+    rows = np.concatenate([np.lexsort((ids, -s))[:kk] for s in S])
+    qi = np.repeat(np.arange(S.shape[0]), kk)
+    return qi, rows, S[qi, rows]
+
+
 def cosine_topk_blocked(
     queries: DataFrame,
     corpus: DataFrame,
@@ -168,7 +189,7 @@ def cosine_topk_blocked(
         return spark.createDataFrame(
             [], "query_id long, id long, score double, rank int"
         )
-    qids = [r["query_id"] for r in q_rows]
+    qids = np.array([r["query_id"] for r in q_rows])
     Q = np.array([r["qvec"] for r in q_rows], dtype=np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
     bq = spark.sparkContext.broadcast((qids, Qn))
@@ -183,25 +204,11 @@ def cosine_topk_blocked(
             if pdf.empty:
                 continue
             ids = pdf["id"].to_numpy()
-            V = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-            S = Qn_l @ Vn.T  # (n_queries, batch)
-            if round_dp is not None:
-                S = np.round(S, round_dp)
-            kk = min(k, S.shape[1])
-            out_q, out_i, out_s = [], [], []
-            for qi in range(S.shape[0]):
-                # (score DESC, id ASC): lexsort's last key is primary
-                order = np.lexsort((ids, -S[qi]))[:kk]
-                out_q.append(np.full(kk, qids_l[qi]))
-                out_i.append(ids[order])
-                out_s.append(S[qi][order])
+            qi, rows, s = _partial_topk(
+                Qn_l, ids, pdf["vec"].to_numpy(), k, round_dp
+            )
             yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "id": np.concatenate(out_i),
-                    "score": np.concatenate(out_s),
-                }
+                {"query_id": qids_l[qi], "id": ids[rows], "score": s}
             )
 
     scored = c.mapInPandas(
@@ -382,53 +389,6 @@ def _near_dupes_gemm(
     )
 
 
-def maxsim_scores(
-    query_patches: DataFrame,
-    page_patches: DataFrame,
-    query_id_col: str = "query_id",
-    page_id_col: str = "page_id",
-) -> DataFrame:
-    """ColPali-style MaxSim late interaction (J12,
-    src/embeddings/colpali_embedder.py:136-169):
-
-        score(q, p) = Σ_{token t ∈ q} max_{patch r ∈ p} <t, r>
-
-    Inputs carry ``patches array<array<double>>``. Queries are broadcast;
-    computation is one numpy matmul per (page-batch) in a Pandas UDF —
-    the array-of-array columns never shuffle."""
-    import numpy as np
-
-    spark = query_patches.sparkSession
-    q_rows = query_patches.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col("patches").cast("array<array<double>>").alias("patches"),
-    ).collect()
-    if not q_rows:
-        return spark.createDataFrame([], "query_id long, page_id long, score double")
-    qdata = [(r["query_id"], np.array(r["patches"], dtype=np.float64)) for r in q_rows]
-    bq = spark.sparkContext.broadcast(qdata)
-
-    pages = page_patches.select(
-        F.col(page_id_col).alias("page_id"),
-        F.col("patches").cast("array<array<double>>").alias("patches"),
-    )
-
-    def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qs = bq.value
-        for pdf in it:
-            rows = []
-            for pid, patches in zip(pdf["page_id"], pdf["patches"]):
-                P = np.array([np.asarray(p) for p in patches], dtype=np.float64)
-                for qid, Q in qs:
-                    s = float(np.dot(Q, P.T).max(axis=1).sum())
-                    rows.append((qid, pid, s))
-            yield pd.DataFrame(rows, columns=["query_id", "page_id", "score"])
-
-    return pages.mapInPandas(
-        score_batches, schema="query_id long, page_id long, score double"
-    )
-
-
 def maxsim_scores_pruned(
     query_patches: DataFrame,
     page_patches: DataFrame,
@@ -436,72 +396,96 @@ def maxsim_scores_pruned(
     query_id_col: str = "query_id",
     page_id_col: str = "page_id",
 ) -> DataFrame:
-    """Two-stage MaxSim (vector_store.py:474-523 — Qdrant prefetch +
-    rescore): stage 1 prefetches ``fetch_k`` candidate pages per query
-    by cosine over the avg-pooled vectors (M7 — a plain single-vector
-    top-k, blocked-GEMM scan, linear in corpus size); stage 2 runs the
-    exact token×patch MaxSim only on the ≤ queries×fetch_k candidate
-    pairs. This is the scale path: the dense O(pages×queries) pass of
-    ``maxsim_scores`` never touches pages outside the prefetch set, so
-    a 100× corpus costs 100× *scan* (stage 1) but constant rescore.
+    """Two-stage MaxSim (J12, vector_store.py:474-523 — Qdrant prefetch
+    + rescore) → (query_id, page_id, score):
 
-    Exact on the candidate set — scores returned are identical to what
-    ``maxsim_scores`` computes for those pairs; recall vs brute force
-    is governed by ``fetch_k`` exactly as in the reference."""
+        score(q, p) = Σ_{token t ∈ q} max_{patch r ∈ p} <t, r>
+
+    Stage 1 prefetches ``fetch_k`` candidate pages per query by cosine
+    over the avg-pooled vectors (M7, rounded to ``PREFETCH_ROUND_DP``);
+    stage 2 runs the exact token×patch MaxSim only on the candidates.
+    Inputs carry ``patches array<array<double>>``.
+
+    Both stages run in ONE ``mapInPandas`` over (page id, pooled vector,
+    patches): per Arrow batch, the pooled-cosine GEMM and its partial
+    top-``fetch_k`` (``_partial_topk``, the ``cosine_topk_blocked``
+    kernel), then MaxSim for those rows only; the global window keeps
+    the ``fetch_k`` best prefetch scores per query and returns their
+    MaxSim score. The page table is scanned once. The trade: every
+    page's patches cross to Python once, instead of a second full scan
+    of the page table plus a candidate join; and each Arrow batch
+    rescores its own top-``fetch_k``, so rescore work is queries × Σ
+    over batches of min(fetch_k, batch rows). It grows linearly with
+    the number of batches, which grows with the corpus (post-shuffle
+    partitions of at most ``maxRecordsPerBatch`` rows), and is
+    brute-force MaxSim when batches hold fewer than ``fetch_k`` pages;
+    the two-scan plan rescored a constant queries × fetch_k.
+
+    Exact on the candidate set — the candidates are the pooled-cosine
+    top-``fetch_k`` and each score is the brute-force MaxSim of its
+    pair; recall vs brute force is governed by ``fetch_k`` exactly as in
+    the reference."""
     import numpy as np
 
     spark = query_patches.sparkSession
-    pooled_q = query_patches.select(
-        F.col(query_id_col).alias("query_id"),
-        avg_pool_patches(F.col("patches")).alias("qvec"),
-    )
-    pooled_p = page_patches.select(
-        F.col(page_id_col).alias("id"),
-        avg_pool_patches(F.col("patches")).alias("vec"),
-    )
-    cands = cosine_topk(
-        pooled_q, pooled_p, fetch_k, round_dp=PREFETCH_ROUND_DP
-    ).select("query_id", F.col("id").alias("page_id"))
-
+    # one collect supplies the pooled prefetch vectors AND the
+    # raw token vectors of the rescore
     q_rows = query_patches.select(
         F.col(query_id_col).alias("query_id"),
+        to_double_array(avg_pool_patches(F.col("patches"))).alias("qvec"),
         F.col("patches").cast("array<array<double>>").alias("patches"),
     ).collect()
     if not q_rows:
         return spark.createDataFrame(
             [], "query_id long, page_id long, score double"
         )
-    bq = spark.sparkContext.broadcast(
-        {r["query_id"]: np.array(r["patches"], dtype=np.float64)
-         for r in q_rows}
+    qids = np.array([r["query_id"] for r in q_rows])
+    Q = np.array([r["qvec"] for r in q_rows], dtype=np.float64)
+    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
+    Qt = [np.array(r["patches"], dtype=np.float64) for r in q_rows]
+    bq = spark.sparkContext.broadcast((qids, Qn, Qt))
+
+    pages = page_patches.select(
+        F.col(page_id_col).alias("id"),
+        to_double_array(avg_pool_patches(F.col("patches"))).alias("vec"),
+        F.col("patches").cast("array<array<double>>").alias("patches"),
     )
 
-    cand_pages = cands.join(
-        page_patches.select(
-            F.col(page_id_col).alias("page_id"),
-            F.col("patches").cast("array<array<double>>").alias("patches"),
-        ),
-        "page_id",
-    )
-
-    def score_pairs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qd = bq.value
+    def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        qids_l, Qn_l, Qt_l = bq.value
         for pdf in it:
-            rows = []
-            for qid, pid, patches in zip(
-                pdf["query_id"], pdf["page_id"], pdf["patches"]
-            ):
-                P = np.array(
-                    [np.asarray(p) for p in patches], dtype=np.float64
+            if pdf.empty:
+                continue
+            ids = pdf["id"].to_numpy()
+            qi, rows, s = _partial_topk(
+                Qn_l, ids, pdf["vec"].to_numpy(), fetch_k, PREFETCH_ROUND_DP
+            )
+            patches = pdf["patches"].to_numpy()
+            P = {
+                r: np.array(
+                    [np.asarray(p) for p in patches[r]], dtype=np.float64
                 )
-                Q = qd[qid]
-                rows.append((qid, pid, float(np.dot(Q, P.T).max(axis=1).sum())))
+                for r in np.unique(rows)
+            }
+            maxsim = [
+                float(np.dot(Qt_l[q], P[r].T).max(axis=1).sum())
+                for q, r in zip(qi, rows)
+            ]
             yield pd.DataFrame(
-                rows, columns=["query_id", "page_id", "score"]
+                {
+                    "query_id": qids_l[qi],
+                    "id": ids[rows],
+                    "score": s,
+                    "maxsim": maxsim,
+                }
             )
 
-    return cand_pages.mapInPandas(
-        score_pairs, schema="query_id long, page_id long, score double"
+    scored = pages.mapInPandas(
+        score_batches,
+        schema="query_id long, id long, score double, maxsim double",
+    )
+    return _ranked(scored, fetch_k).select(
+        "query_id", F.col("id").alias("page_id"), F.col("maxsim").alias("score")
     )
 
 

@@ -95,12 +95,7 @@ def multivector_pages(embeddings: DataFrame) -> DataFrame:
     grouped = embeddings.withColumn(
         "page_id", F.floor(F.col("vec_id") / PAGE_GROUP).cast("long")
     )
-    # eager localCheckpoint (r17): consumers (maxsim prefetch + exact
-    # rescore join) reference the page table twice, re-running the
-    # collect_list aggregation per reference. Fixture-sized, rebuilt
-    # per call. A production multi-vector table is a stored table, so
-    # this fold lives in the workload glue, not the operator.
-    return _collect_patches(grouped, "page_id").localCheckpoint()
+    return _collect_patches(grouped, "page_id")
 
 
 def query_patches_df(spark: SparkSession, embeddings: DataFrame) -> DataFrame:
@@ -113,9 +108,7 @@ def query_patches_df(spark: SparkSession, embeddings: DataFrame) -> DataFrame:
         (embeddings["vec_id"] >= q["query_vec_id"])
         & (embeddings["vec_id"] < q["query_vec_id"] + QUERY_TOKENS),
     ).select("query_id", "vec_id", "embedding")
-    # same fold as multivector_pages: referenced by the pooled
-    # prefetch AND the collected rescore side
-    return _collect_patches(joined, "query_id").localCheckpoint()
+    return _collect_patches(joined, "query_id")
 
 
 def chunk_page_map(embeddings: DataFrame) -> DataFrame:

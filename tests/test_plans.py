@@ -656,3 +656,13 @@ def test_hybrid_rrf3_single_union_exchange_ceiling(spark):
     assert len(re.findall(r"\bUnion\b", p)) == 1, p
     shuffles = re.findall(r"(?<![A-Za-z])Exchange ", p)
     assert len(shuffles) <= 10, p
+
+
+def test_maxsim_topk_single_arrow_pass_no_join(spark):
+    """MaxSim prefetch and rescore run in ONE MapInPandas over the page
+    table: no candidate join back to the pages, no second page scan."""
+    import __spark_entry__ as entrymod
+
+    p = plan_of(entrymod.queries()["maxsim_topk"](spark, SF_DIR), "simple")
+    assert len(re.findall(r"\bMapInPandas\b", p)) == 1, p
+    assert "Join" not in p, p

@@ -4,6 +4,11 @@ eager/effectful entries rebuild every call; a session swap invalidates."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
+
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -36,12 +41,12 @@ def test_checkpoint_bearing_entries_rebuild_per_call(spark):
     across bench passes). bm25_topk, listed beside it and pure lazy,
     is served from the cache."""
     qs = entrymod.queries()
-    fp = entrymod._source_fingerprint(SF_DIR)
     a = qs["semantic_components"](spark, SF_DIR)
     b = qs["semantic_components"](spark, SF_DIR)
     assert a is not b
     assert entrymod._has_materialized_leaf(a)
-    assert ("semantic_components", fp) not in entrymod._PREPARED
+    key = entrymod._prepared_key("semantic_components", SF_DIR)
+    assert key not in entrymod._PREPARED
     c = qs["bm25_topk"](spark, SF_DIR)
     assert qs["bm25_topk"](spark, SF_DIR) is c
     assert not entrymod._has_materialized_leaf(c)
@@ -60,12 +65,64 @@ def test_prepared_cache_serves_only_pure_lazy_plans(spark):
         assert not entrymod._has_materialized_leaf(df), name
 
 
+@pytest.mark.parametrize(
+    "name", ["hybrid_rrf3", "maxsim_topk", "visual_search", "colpali_lite_topk"]
+)
+def test_colpali_entries_served_from_prepared_plan(spark, name):
+    """The ColPali entries build pure-lazy plans (no checkpointed
+    fixture leaf), so the second call is served the cached DataFrame."""
+    qs = entrymod.queries()
+    a = qs[name](spark, SF_DIR)
+    assert not entrymod._has_materialized_leaf(a)
+    assert qs[name](spark, SF_DIR) is a
+    assert entrymod._PREPARED[entrymod._prepared_key(name, SF_DIR)][1] is a
+
+
+def test_prepared_key_covers_every_table(spark, tmp_path):
+    """maxsim_topk bakes in query patches collected from embeddings:
+    touching embeddings.parquet alone must rebuild the cached plan."""
+    sf = tmp_path / "sf_copy"
+    shutil.copytree(SF_DIR, sf)
+    qs = entrymod.queries()
+    old_key = entrymod._prepared_key("maxsim_topk", str(sf))
+    new_key = None
+    try:
+        a = qs["maxsim_topk"](spark, str(sf))
+        assert qs["maxsim_topk"](spark, str(sf)) is a
+        emb = sf / "embeddings.parquet"
+        st = emb.stat()
+        os.utime(emb, (st.st_atime, st.st_mtime + 10))
+        new_key = entrymod._prepared_key("maxsim_topk", str(sf))
+        assert new_key != old_key
+        b = qs["maxsim_topk"](spark, str(sf))
+        assert b is not a
+        assert b.count() == a.count() > 0
+    finally:
+        # the keys name a directory pytest deletes: drop their frames
+        entrymod._PREPARED.pop(old_key, None)
+        entrymod._PREPARED.pop(new_key, None)
+
+
+def test_directly_executed_plan_is_served_fresh(spark):
+    """A served frame that ran directly (collect) holds a finished
+    adaptive plan whose shuffle stages a second run would skip: the
+    next call rebuilds the frame, which then stays cached until it
+    runs."""
+    qs = entrymod.queries()
+    a = qs["maxsim_topk"](spark, SF_DIR)
+    rows = sorted(a.collect())
+    b = qs["maxsim_topk"](spark, SF_DIR)
+    assert b is not a
+    assert qs["maxsim_topk"](spark, SF_DIR) is b
+    assert "isFinalPlan=true" not in b._jdf.queryExecution().toString()
+    assert sorted(b.collect()) == rows
+
+
 def test_stale_session_invalidates(spark):
-    key_fn = entrymod._source_fingerprint
     name = "db_stats"
     qs = entrymod.queries()
     df = qs[name](spark, SF_DIR)
-    key = (name, key_fn(SF_DIR))
+    key = entrymod._prepared_key(name, SF_DIR)
     assert entrymod._PREPARED[key][1] is df
     # simulate a replaced session: poison the cached owner
     entrymod._PREPARED[key] = (object(), df)

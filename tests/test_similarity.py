@@ -13,9 +13,20 @@ from rag_database_spark.operators.similarity import (
     avg_pool_patches,
     cosine_topk,
     embedding_near_dupes,
-    maxsim_scores,
     maxsim_scores_pruned,
 )
+
+
+def _brute_maxsim(qdf, pdf):
+    """Numpy brute-force MaxSim, sum over query tokens of the best
+    patch dot product, for every (query_id, page_id) pair."""
+    qs = [(r["query_id"], np.array(r["patches"])) for r in qdf.collect()]
+    ps = [(r["page_id"], np.array(r["patches"])) for r in pdf.collect()]
+    return {
+        (q, p): float((Q @ P.T).max(axis=1).sum())
+        for q, Q in qs
+        for p, P in ps
+    }
 
 
 def _vecs(seed, n, d):
@@ -74,7 +85,11 @@ def test_maxsim_matches_numpy_loop(spark):
         [(pid, p.tolist()) for pid, p in pages.items()],
         "page_id long, patches array<array<double>>",
     )
-    got = {r["page_id"]: r["score"] for r in maxsim_scores(qdf, pdf).collect()}
+    # fetch_k covers both pages, so every page is rescored
+    got = {
+        r["page_id"]: r["score"]
+        for r in maxsim_scores_pruned(qdf, pdf, fetch_k=2).collect()
+    }
     for pid, P in pages.items():
         exp = sum(max(float(np.dot(t, p)) for p in P) for t in qp)
         assert got[pid] == pytest.approx(exp, rel=1e-12)
@@ -98,10 +113,7 @@ def test_pruned_covers_all_equals_brute_force(spark, patch_corpus):
     # fetch ≥ n_pages ⇒ the prefetch keeps every page and the two-stage
     # plan must reproduce brute-force MaxSim exactly, scores included
     qdf, pdf = patch_corpus
-    brute = {
-        (r["query_id"], r["page_id"]): r["score"]
-        for r in maxsim_scores(qdf, pdf).collect()
-    }
+    brute = _brute_maxsim(qdf, pdf)
     pruned = {
         (r["query_id"], r["page_id"]): r["score"]
         for r in maxsim_scores_pruned(qdf, pdf, fetch_k=20).collect()
@@ -116,10 +128,7 @@ def test_pruned_rescore_is_exact_on_candidates(spark, patch_corpus):
     # query, and each candidate's score equals the brute-force score
     qdf, pdf = patch_corpus
     fetch = 6
-    brute = {
-        (r["query_id"], r["page_id"]): r["score"]
-        for r in maxsim_scores(qdf, pdf).collect()
-    }
+    brute = _brute_maxsim(qdf, pdf)
     pooled_q = qdf.select(
         "query_id", avg_pool_patches(qdf["patches"]).alias("qvec")
     )
