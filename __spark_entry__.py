@@ -51,6 +51,7 @@ from rag_database_spark.sources.tables import (
     fan_out,
     load_table,
     load_tables,
+    local_frame,
 )
 
 
@@ -104,14 +105,11 @@ def _has_materialized_leaf(df: DataFrame) -> bool:
     gate item; the r17 folds accidentally created exactly this
     channel).
 
-    The checkpoint flag is the precise criterion: a ``LogicalRDD``
-    from an Arrow ``createDataFrame`` fixture (tiny local input
-    literals — the query workload tables) is NOT materialized state,
-    it is input data, and re-serving its plan skips no compute; an
-    un-checkpointed RDD lineage recomputes on every action anyway.
-    Flagging all LogicalRDD leaves over-evicted 45 entries (16 of
-    them fixture-only) and cost those entries the legitimate
-    plan-compilation amortization."""
+    The checkpoint flag is the precise criterion: an un-checkpointed
+    RDD lineage recomputes on every action, so re-serving its plan
+    skips no compute. Driver-local fixtures no longer produce
+    ``LogicalRDD`` leaves at all: ``local_frame`` builds them as
+    ``LocalRelation``s."""
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
     for i in range(leaves.size()):
         node = leaves.apply(i)
@@ -1995,14 +1993,14 @@ def _hybrid_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the static .3/.5/.2 (hybrid_search.py:191-217 +
     query_analyzer.py:123-186)."""
     queries = workload.queries_df(spark)
-    # eager localCheckpoint (r17): the F8 signal expression bank is a
-    # very large tree (keyword-count chains); materializing the tiny
-    # per-query weight frame keeps it out of the fusion plan that AQE
-    # re-optimizes at every stage boundary. Recomputed per invocation.
-    # A plain projected frame measured slower per call (sf0.01, 4 cores).
+    # no localCheckpoint: over the LocalRelation workload the optimizer
+    # folds the F8 signal projection into a literal table
+    # (ConvertToLocalRelation), and the lazy entry is served from
+    # _PREPARED — 1.25 s vs 2.57 s per call with the checkpoint
+    # (median of 6 alternating pairs, sf0.01, 4 cores)
     weights = queries.select(
         "query_id", qa.suggested_weights(F.col("query_text")).alias("w")
-    ).select("query_id", "w.*").localCheckpoint()
+    ).select("query_id", "w.*")
     return rrf_fuse(
         _three_legs(spark, sf_dir, queries), workload.HYBRID_LIMIT, weights
     ).select("query_id", "id", "rrf_score", "rank")
@@ -2739,10 +2737,11 @@ def _table_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18: dual table representations — CSV-like structured text and
     the one-sentence semantic description."""
     fx = tables_extract.fixtures_df(spark)
-    # eager localCheckpoint (r17): the parsed cell table feeds
-    # table_texts (row rollup + header rollup) AND table_summary —
-    # the regex parse otherwise re-ran per reference. Fixture-sized.
-    cells = tables_extract.parse_pipe_tables(fx).localCheckpoint()
+    # the parsed cell table feeds table_texts (row rollup + header
+    # rollup) AND table_summary, so the regex parse re-runs per
+    # reference: cheap JVM work over the fixture's LocalRelation, and
+    # with no checkpoint the entry is pure lazy (served from _PREPARED)
+    cells = tables_extract.parse_pipe_tables(fx)
     return tables_extract.table_texts(
         cells, tables_extract.table_summary(cells, fx)
     )
@@ -2806,7 +2805,8 @@ def _kmeans_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the settled centroids are part of the artifact too: the
         # outlier pruner computes distance against them without ever
         # re-running the fit (k rows × dim doubles — tiny)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(j, c) for j, c in enumerate(cents)],
             "cluster_id int, cvec array<double>",
         ).write.mode("overwrite").parquet(str(cent_dir))
@@ -2944,8 +2944,10 @@ def _perceptron_weights(spark: SparkSession, sf_dir: str) -> list[int]:
         w = classifier.perceptron_train(
             classifier.perceptron_features(docs)
         )
-        spark.createDataFrame(
-            [tuple(w)], ", ".join(f"w{i + 1} long" for i in range(len(w)))
+        local_frame(
+            spark,
+            [tuple(w)],
+            ", ".join(f"w{i + 1} long" for i in range(len(w))),
         ).write.mode("overwrite").parquet(str(cache_dir))
     row = spark.read.parquet(str(cache_dir)).collect()[0]
     weights = [row[f"w{i + 1}"] for i in range(len(classifier.FEATURES))]
@@ -3214,7 +3216,7 @@ ROWS_ONLY_ENTRIES: tuple[str, ...] = ("events_profile_approx",)
 # DataFrame skips only re-compilation — every execution still computes
 # the full result. Anything eager or effectful stays out. This list is
 # an OPT-IN HINT, not the enforcement: _prepared itself refuses to
-# cache any built plan carrying a LogicalRDD leaf
+# cache any built plan carrying a checkpointed LogicalRDD leaf
 # (_has_materialized_leaf), so an entry listed here whose builder
 # localCheckpoints simply rebuilds per call (r18 gate fix — in r17 the
 # list alone let ~29 checkpoint-bearing entries serve

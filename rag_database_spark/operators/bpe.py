@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.text import raw_tokens
+from rag_database_spark.sources.tables import local_frame
 
 # end-of-word sentinel: cannot collide with corpus symbols (words are
 # \w-only after the shared tokenizer's punctuation strip, so no '<',
@@ -161,8 +162,10 @@ def train_bpe(docs: DataFrame, num_merges: int = DEFAULT_MERGES,
             "syms", merge_pair(F.col("syms"), lhs, rhs)
         ).localCheckpoint()
     spark = docs.sparkSession
-    merges_df = spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, merged string, pair_count bigint"
+    merges_df = local_frame(
+        spark,
+        merges,
+        "rank int, lhs string, rhs string, merged string, pair_count bigint",
     )
     encoded = words.select(
         "word", "cnt", F.col("syms").alias("tokens")

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.text import SPLIT_RE
+from rag_database_spark.sources.tables import local_frame
 
 CHUNK_SIZE = 32  # words per chunk (scaled-down 512, config.py:27)
 OVERLAP = 8      # carried words   (scaled-down 128, config.py:28)
@@ -343,9 +344,7 @@ SECTION_FIXTURES: tuple[tuple[int, str], ...] = (
 
 
 def section_fixtures_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(SECTION_FIXTURES), "doc_id long, text string"
-    )
+    return local_frame(spark, SECTION_FIXTURES, "doc_id long, text string")
 
 
 def section_fixtures_values_sql() -> str:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.vector import cosine, to_double_array
+from rag_database_spark.sources.tables import local_frame
 
 KMEANS_K = 8
 KMEANS_ITERS = 4
@@ -112,7 +113,8 @@ def _assign_gemm(xq: DataFrame, centroids: list[list[float]]) -> DataFrame:
     from rag_database_spark.operators.similarity import assign_centroids
 
     spark = xq.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(j, c) for j, c in enumerate(centroids)],
         "centroid_id int, cvec array<double>",
     )

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rag_database_spark.sources.tables import local_frame
+
 # F10 contract types (domain_schemas.py:97-135, representative keywords)
 CONTRACT_TYPE_KEYWORDS: dict[str, tuple[str, ...]] = {
     "amendment": ("amendment", "addendum", "modification", "supplement to"),
@@ -253,9 +255,7 @@ DOC_FIXTURES: tuple[tuple[int, str], ...] = (
 
 
 def fixtures_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(DOC_FIXTURES), "doc_id long, text string"
-    )
+    return local_frame(spark, DOC_FIXTURES, "doc_id long, text string")
 
 
 def fixtures_values_sql() -> str:

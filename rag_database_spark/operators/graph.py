@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.exact import exact_avg, exact_sum
+from rag_database_spark.sources.tables import local_frame
 
 MIN_CONFIDENCE = 0.5  # document_graph.py:357 default
 
@@ -280,7 +281,7 @@ def shortest_chain(
     chain between two documents, None if unreachable within
     ``max_depth``. Early exit per hop (driver checks a 1-row count)."""
     spark = edges.sparkSession
-    seeds = spark.createDataFrame([(src,)], ["start_id"])
+    seeds = local_frame(spark, [(src,)], "start_id long")
     adj = undirected(edges).filter(F.col("confidence") >= min_confidence)
     frontier = seeds.select(F.col("start_id").alias("doc_id"))
     visited = frontier
@@ -724,15 +725,11 @@ IDENT_REGISTRY: tuple[tuple[str, int], ...] = (
 
 
 def rel_fixtures_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(REL_FIXTURES), "doc_id long, text string"
-    )
+    return local_frame(spark, REL_FIXTURES, "doc_id long, text string")
 
 
 def ident_registry_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(IDENT_REGISTRY), "identifier string, doc_id long"
-    )
+    return local_frame(spark, IDENT_REGISTRY, "identifier string, doc_id long")
 
 
 def ident_registry_values_sql() -> str:

@@ -52,6 +52,7 @@ from rag_database_spark.operators.clustering import (
     kmeans_fit,
     quantize_embeddings_int,
 )
+from rag_database_spark.sources.tables import local_frame
 
 # subspaces × centroids: 8 × 16 → 4-bit codes, 4 bytes/vector at d=64.
 # K ≤ clustering.KMEANS_EXPR_MAX_K so the build always runs the
@@ -110,9 +111,7 @@ def pq_fit(
                 F.col("cluster_id").alias(f"code{j}"),
             )
         )
-    codebooks = spark.createDataFrame(
-        cb_rows, "m int, cid int, cvec array<double>"
-    )
+    codebooks = local_frame(spark, cb_rows, "m int, cid int, cvec array<double>")
     codes = reduce(lambda a, b: a.join(b, "id"), code_frames)
     return codebooks, codes
 
@@ -273,13 +272,14 @@ def write_ivfpq_index(
     if n_centroids is None:
         n_centroids = ivf_k_for(n)
     if n == 0:
-        spark.createDataFrame(
-            [], "centroid_id int, cvec array<double>, frame_scale int"
+        local_frame(
+            spark, [], "centroid_id int, cvec array<double>, frame_scale int"
         ).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame(
-            [], "m int, cid int, cvec array<double>"
+        local_frame(
+            spark, [], "m int, cid int, cvec array<double>"
         ).write.mode("overwrite").parquet(f"{path}/codebooks")
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [],
             "centroid_id int, id long, "
             + ", ".join(f"code{j} int" for j in range(m)),
@@ -292,7 +292,8 @@ def write_ivfpq_index(
     )
     codebooks, codes = pq_fit(corpus, dim, m, k, id_col=id_col,
                               vec_col=vec_col)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, c, KMEANS_SCALE) for i, c in enumerate(coarse_cents)],
         "centroid_id int, cvec array<double>, frame_scale int",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -369,12 +370,10 @@ def ivfpq_topk(
         queries, centroids, n_probe, query_id_col, query_vec_col
     )
     if not probes:
-        return spark.createDataFrame(
-            [], "query_id long, id long, adc_dist double, rank long"
+        return local_frame(
+            spark, [], "query_id long, id long, adc_dist double, rank long"
         )
-    probe_df = spark.createDataFrame(
-        probes, "query_id long, centroid_id int"
-    )
+    probe_df = local_frame(spark, probes, "query_id long, centroid_id int")
     probed_cids = sorted({cid for _, cid in probes})
     q = queries.select(
         F.col(query_id_col).alias("query_id"),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rag_database_spark.sources.tables import local_frame
+
 # (name, pattern, replacement-token) — order is semantics: earlier
 # classes claim their text before later ones can see it.
 PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
@@ -85,9 +87,7 @@ PII_FIXTURES: tuple[tuple[int, str], ...] = (
 
 
 def pii_fixtures_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(PII_FIXTURES), "doc_id long, text string"
-    )
+    return local_frame(spark, PII_FIXTURES, "doc_id long, text string")
 
 
 def pii_fixtures_values_sql() -> str:

@@ -36,6 +36,7 @@ from rag_database_spark.functions.vector import (
     let as vec_let,
     to_double_array,
 )
+from rag_database_spark.sources.tables import local_frame
 
 
 # Decimal places used to quantize PREFETCH scores before ranking.
@@ -186,8 +187,8 @@ def cosine_topk_blocked(
         to_double_array(F.col(query_vec_col)).alias("qvec"),
     ).collect()
     if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, id long, score double, rank int"
+        return local_frame(
+            spark, [], "query_id long, id long, score double, rank int"
         )
     qids = np.array([r["query_id"] for r in q_rows])
     Q = np.array([r["qvec"] for r in q_rows], dtype=np.float64)
@@ -347,8 +348,8 @@ def _near_dupes_gemm(
         F.col(id_col).alias("id"), to_double_array(F.col(vec_col)).alias("vec")
     ).collect()
     if not rows:
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, cos_sim double"
+        return local_frame(
+            spark, [], "id_a long, id_b long, cos_sim double"
         )
     all_ids = np.array([r["id"] for r in rows])
     V = np.array([r["vec"] for r in rows], dtype=np.float64)
@@ -436,8 +437,8 @@ def maxsim_scores_pruned(
         F.col("patches").cast("array<array<double>>").alias("patches"),
     ).collect()
     if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, page_id long, score double"
+        return local_frame(
+            spark, [], "query_id long, page_id long, score double"
         )
     qids = np.array([r["query_id"] for r in q_rows])
     Q = np.array([r["qvec"] for r in q_rows], dtype=np.float64)
@@ -544,7 +545,8 @@ def _ivf_fit(
         assign, cents = clustering.kmeans_fit(
             corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
         )
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [(i, c, clustering.KMEANS_SCALE) for i, c in enumerate(cents)],
             "centroid_id int, cvec array<double>, frame_scale int",
         )
@@ -570,7 +572,8 @@ def _ivf_fit(
     model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(
         ml_df
     )
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [
             (i, [float(x) for x in ctr], 1)
             for i, ctr in enumerate(model.clusterCenters())
@@ -611,11 +614,11 @@ def write_ivf_index(
         # write schema-carrying empty tables instead (the det fit
         # would also return no centroids to partition on)
         spark = corpus.sparkSession
-        spark.createDataFrame(
-            [], "centroid_id int, cvec array<double>, frame_scale int"
+        local_frame(
+            spark, [], "centroid_id int, cvec array<double>, frame_scale int"
         ).write.mode("overwrite").parquet(f"{path}/centroids")
-        spark.createDataFrame(
-            [], "centroid_id int, id long, vec array<double>"
+        local_frame(
+            spark, [], "centroid_id int, id long, vec array<double>"
         ).write.mode("overwrite").parquet(f"{path}/lists")
         return
     centroids, lists = _ivf_fit(
@@ -860,8 +863,8 @@ def ivf_topk_indexed(
             to_double_array(F.col(query_vec_col)).alias("qvec"),
         ).collect()
         if not q_rows:
-            return spark.createDataFrame(
-                [], "query_id long, id long, score double, rank int"
+            return local_frame(
+                spark, [], "query_id long, id long, score double, rank int"
             )
         cent_rows = centroids.collect()
         cids = np.array([r["centroid_id"] for r in cent_rows])
@@ -875,12 +878,10 @@ def ivf_topk_indexed(
             for j in order:
                 probes.append((r["query_id"], int(cids[j])))
     if not probes:
-        return spark.createDataFrame(
-            [], "query_id long, id long, score double, rank int"
+        return local_frame(
+            spark, [], "query_id long, id long, score double, rank int"
         )
-    probe_df = spark.createDataFrame(
-        probes, "query_id long, centroid_id int"
-    )
+    probe_df = local_frame(spark, probes, "query_id long, centroid_id int")
 
     probed_cids = sorted({cid for _, cid in probes})
     cands = (

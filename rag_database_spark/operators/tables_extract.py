@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rag_database_spark.sources.tables import local_frame
+
 # F16 (table_extractor.py:428-443) — tried in order, first match wins
 CELL_TYPE_PATTERNS: tuple[tuple[str, str], ...] = (
     ("currency", r"^\$[\d,]+(?:\.\d{2})?$"),
@@ -267,9 +269,7 @@ TABLE_FIXTURES: tuple[tuple[int, str], ...] = (
 
 
 def fixtures_df(spark):
-    return spark.createDataFrame(
-        list(TABLE_FIXTURES), "table_id long, text string"
-    )
+    return local_frame(spark, TABLE_FIXTURES, "table_id long, text string")
 
 
 def fixtures_values_sql() -> str:

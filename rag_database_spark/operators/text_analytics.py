@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rag_database_spark.sources.tables import fan_out
+from rag_database_spark.sources.tables import fan_out, local_frame
 from rag_database_spark.functions.text import (
     SPLIT_RE,
     avg_word_length,
@@ -641,7 +641,8 @@ C4_FIXTURES: tuple[tuple[int, tuple[str, ...]], ...] = (
 
 
 def c4_fixtures_df(spark) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(d, "\n".join(lines)) for d, lines in C4_FIXTURES],
         "doc_id long, text string",
     )

@@ -123,6 +123,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-local rows (fixtures, query workloads, probe lists, small
+    fitted models) as a JVM ``LocalRelation`` with exactly ``ddl``'s
+    schema.
+
+    ``spark.createDataFrame(<list>, ddl)`` in classic PySpark yields a
+    ``LogicalRDD`` over a Python RDD: every scan of even a 6-row frame
+    launches ``defaultParallelism`` Python-worker tasks to reserialize
+    the rows. An Arrow table handed over with its schema lands in the
+    JVM once, as a ``LocalRelation`` (a ``LocalTableScan`` that
+    Catalyst can fold), whatever the Arrow conf says and for empty
+    input too. Every driver-local frame goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    schema = to_arrow_schema(struct)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(schema)
+        ],
+        schema=schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
@@ -162,9 +191,7 @@ def append_tombstones(spark, root: str, ids, id_col: str = "doc_id") -> None:
     without ``id_col`` raises — silently tombstoning whichever column
     happened to be first would delete the wrong rows with no error."""
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} long"
-        )
+        ids = local_frame(spark, [(int(i),) for i in ids], f"{id_col} long")
     if id_col in ids.columns:
         src = id_col
     elif len(ids.columns) == 1:

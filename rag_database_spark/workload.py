@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rag_database_spark.sources.tables import local_frame
+
 HYBRID_QUERIES: tuple[tuple[int, str, int], ...] = (
     (1, "fast hash join order table scan", 3),
     (2, "window merge sort batch stream", 7),
@@ -50,12 +52,13 @@ KNN_K = 10
 
 
 def queries_df(spark: SparkSession) -> DataFrame:
-    # plain LocalRelation — do NOT coalesce(1): a Coalesce over a
+    # a LocalRelation (local_frame), so scanning the 6 rows launches no
+    # Python-worker tasks. Do NOT coalesce(1): a Coalesce over a
     # LocalTableScan blocks the ConvertToLocalRelation fold AND makes
     # every collect re-evaluate the wide analysis projections in one
     # serial task (measured 4 s/run vs 0.5 s warm without it)
-    return spark.createDataFrame(
-        list(HYBRID_QUERIES), "query_id long, query_text string, query_vec_id long"
+    return local_frame(
+        spark, HYBRID_QUERIES, "query_id long, query_text string, query_vec_id long"
     )
 
 
@@ -134,10 +137,8 @@ def queries_values_sql() -> str:
 
 
 def analysis_queries_df(spark: SparkSession) -> DataFrame:
-    # plain LocalRelation — no coalesce(1); see queries_df
-    return spark.createDataFrame(
-        list(ANALYSIS_QUERIES), "query_id long, query_text string"
-    )
+    # a LocalRelation (local_frame) — no coalesce(1); see queries_df
+    return local_frame(spark, ANALYSIS_QUERIES, "query_id long, query_text string")
 
 
 def analysis_queries_values_sql() -> str:

@@ -31,6 +31,22 @@ def _normalize(rows, cols):
     return sorted(out)
 
 
+def unmaterialized_rdd_leaves(df) -> list[str]:
+    """``LogicalRDD`` leaves of the analyzed plan that are not
+    checkpointed: an RDD lineage every scan re-runs, such as a
+    ``createDataFrame(<list>)`` frame whose rows each scan reserializes
+    in Python workers. Driver-local rows belong in ``local_frame``."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.nodeName() == "LogicalRDD":
+            rdd = node.rdd()
+            if not (rdd.isCheckpointed() or rdd.isLocallyCheckpointed()):
+                out.append(node.toString())
+    return out
+
+
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
@@ -44,6 +60,7 @@ def test_entry_matches_oracle(spark, duck, name):
     if not Path(SF_DIR).exists():
         pytest.skip("driver testdata not present")
     sdf = entrymod.queries()[name](spark, SF_DIR)
+    assert unmaterialized_rdd_leaves(sdf) == []
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     oracle = entrymod.oracle_sql().get(name)

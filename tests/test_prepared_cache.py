@@ -66,11 +66,15 @@ def test_prepared_cache_serves_only_pure_lazy_plans(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["hybrid_rrf3", "maxsim_topk", "visual_search", "colpali_lite_topk"]
+    "name",
+    ["hybrid_rrf3", "maxsim_topk", "visual_search", "colpali_lite_topk",
+     "hybrid_adaptive", "table_texts"],
 )
 def test_colpali_entries_served_from_prepared_plan(spark, name):
     """The ColPali entries build pure-lazy plans (no checkpointed
-    fixture leaf), so the second call is served the cached DataFrame."""
+    fixture leaf), so the second call is served the cached DataFrame.
+    So are the entries that derive a frame from a LocalRelation fixture
+    (the adaptive weights, the table parse) without checkpointing it."""
     qs = entrymod.queries()
     a = qs[name](spark, SF_DIR)
     assert not entrymod._has_materialized_leaf(a)

@@ -38,6 +38,7 @@ sys.path.insert(0, str(REPO))
 
 from rag_database_spark.seams import have  # noqa: E402
 from rag_database_spark.session import get_spark  # noqa: E402
+from rag_database_spark.sources.tables import local_frame  # noqa: E402
 
 FAILURES: list[str] = []
 
@@ -119,7 +120,8 @@ def build_checks(spark, fasttext_model: str = "lid.176.bin"):
     class by value into the workers) against injected fake modules."""
     from pyspark.sql.functions import col as F_col  # noqa: N812
 
-    docs = spark.createDataFrame(
+    docs = local_frame(
+        spark,
         [
             (1, "the quick brown fox jumps over the lazy dog"),
             (2, "la rapida volpe marrone salta sopra il cane pigro"),
@@ -142,11 +144,13 @@ def build_checks(spark, fasttext_model: str = "lid.176.bin"):
     def check_rerank() -> str:
         from rag_database_spark.operators import lifecycle
 
-        results = spark.createDataFrame(
+        results = local_frame(
+            spark,
             [(10, 1, 0.9), (10, 2, 0.8), (10, 3, 0.7)],
             "query_id long, id long, score double",
         )
-        queries = spark.createDataFrame(
+        queries = local_frame(
+            spark,
             [(10, "fox jumping over dog")],
             "query_id long, query_text string",
         )
@@ -175,7 +179,8 @@ def build_checks(spark, fasttext_model: str = "lid.176.bin"):
     def check_parse() -> str:
         from rag_database_spark.sources import ingest
 
-        files = spark.createDataFrame(
+        files = local_frame(
+            spark,
             [("mem://a.txt", b"A Title\n\nBody paragraph one.\n\nBody two.")],
             "path string, content binary",
         )
@@ -187,7 +192,8 @@ def build_checks(spark, fasttext_model: str = "lid.176.bin"):
     def check_render() -> str:
         from rag_database_spark.sources import ingest
 
-        files = spark.createDataFrame(
+        files = local_frame(
+            spark,
             [("mem://a.pdf", MINIMAL_PDF)], "path string, content binary"
         )
         rows = ingest.page_images_stub(files, dpi=36).collect()
@@ -199,7 +205,8 @@ def build_checks(spark, fasttext_model: str = "lid.176.bin"):
     def check_image() -> str:
         from rag_database_spark.operators import multimodal
 
-        media = spark.createDataFrame(
+        media = local_frame(
+            spark,
             [(1, "image", minimal_png())],
             "media_id long, kind string, payload binary",
         )
@@ -212,7 +219,8 @@ def build_checks(spark, fasttext_model: str = "lid.176.bin"):
     def check_audio() -> str:
         from rag_database_spark.operators import multimodal
 
-        media = spark.createDataFrame(
+        media = local_frame(
+            spark,
             [(1, minimal_wav())], "media_id long, payload binary"
         )
         out = multimodal.audio_fingerprint(media, real=True).collect()
