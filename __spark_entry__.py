@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import sys
 from collections.abc import Callable
-from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1021,9 +1020,9 @@ INGEST_GATE_MOD = 25  # doc_id % 25 == 0 → the simulated incoming batch
 
 
 def _ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup admission gate (batch twin of stream_dedup_gate): for
-    each simulated incoming doc, its best Jaccard match in the
-    accepted corpus — both sides sliced from the persisted index."""
+    """Near-dup admission gate: for each simulated incoming doc, its
+    best Jaccard match in the accepted corpus — both sides sliced from
+    the persisted index."""
     docs = load_table(spark, sf_dir, "documents")
     idx = _shingle_index(spark, sf_dir).filter(
         F.col("doc_id") % INGEST_GATE_MOD != 0
@@ -1659,18 +1658,14 @@ def _bm25_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event analytics — the batch-equivalent form of
-    the Structured Streaming topology (streaming/events.py; identical
-    plan via foreachBatch reuse, stream path tested in tests/)."""
+    """Tumbling-window event analytics (streaming/events.py)."""
     return streaming_events.hourly_event_agg(
         load_table(spark, sf_dir, "events")
     )
 
 
 def _user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity), batch window form;
-    the stateful streaming equivalent (applyInPandasWithState) is
-    tested for agreement in tests/."""
+    """Gap-based sessionization (30-min inactivity), batch window form."""
     return streaming_events.sessionize(load_table(spark, sf_dir, "events"))
 
 
@@ -3586,12 +3581,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 # Round-17 window rotation (VERDICT r16 item 1): keep certifications
 # fresh — rotate toward the stalest last-driver-green rows in the
-# CORRECTNESS_r01-r16 union. The 50 in-window names = the 1 NEW r17
-# entry (events_profile_approx, rows-only by design — sketch
-# estimates are engine-implementation-defined) + the 9 remaining
+# CORRECTNESS_r01-r16 union. The 49 names below = the 9 remaining
 # r13-stale certifications (named since r16's window comment) + ALL
 # 37 r14-stale + the 3 alphabetically-first of the 47 r15-stale
-# (bpe_pair_stats, c4_rules, chunk_documents). No existing entry's
+# (bpe_pair_stats, c4_rules, chunk_documents); driver slot 50 is the
+# first tail entry (bm25_topk), so all 50 slots are oracle-backed.
+# The rows-only sketch entry events_profile_approx certified its rows
+# in r17 and now sits in the tail. No existing entry's
 # RESULT changed in r17 (the graph/curation artifact cache-key fixes
 # rebuild artifacts under versioned keys with unchanged logic, so
 # values are identical); the graph-family entries that consume the
@@ -3613,7 +3609,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # previous relative order and stay green via
 # tests/test_entry_oracle.py.
 _WINDOW_R17: tuple[str, ...] = (
-    "events_profile_approx",  # NEW in r17 (rows-only: sketch entry)
     "semantic_components", "semantic_pagerank", "semdedup",
     "shuffle_export", "soft_dedup", "tenant_scoped_search",
     "text_embed_topk", "token_budget_select",

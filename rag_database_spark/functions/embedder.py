@@ -106,8 +106,7 @@ def model_embed(
     prepended to every text, the BGE query-side convention
     (``BGE_QUERY_PREFIX``, dense_embedder.py:46-50).
 
-    Raises ImportError when sentence-transformers is absent; callers
-    wanting automatic fallback use ``embed_text``. Recorded-fixture
+    Raises ImportError when sentence-transformers is absent. Recorded-fixture
     tests pin the encode contract (batch_size forwarding, normalize
     flag, prefix application, input order) without the real weights
     (tests/test_seams.py)."""
@@ -116,8 +115,8 @@ def model_embed(
     st_mod = optional_import("sentence_transformers")
     if st_mod is None:
         raise ImportError(
-            "sentence_transformers not installed — use embed_text() for "
-            "automatic fallback to the hash-projection embedder"
+            "sentence_transformers not installed — hash_embed is the "
+            "deterministic fallback embedder"
         )
     # captured at driver time: a real installed class pickles by
     # reference (worker re-imports it), while the smoke test's fake
@@ -148,18 +147,3 @@ def model_embed(
     return df.mapInPandas(batches, schema=f"{schema}, {out_col} array<double>")
 
 
-def embed_text(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "embedding",
-    dim: int = EMBED_DIM,
-) -> DataFrame:
-    """M1 dispatcher: the real model when sentence-transformers is
-    importable, else the deterministic hash projection — identical
-    (id…, array<double>) contract either way, so every downstream
-    consumer (cosine top-k, near-dup, hybrid legs) is agnostic."""
-    from rag_database_spark.seams import have
-
-    if have("sentence_transformers"):  # pragma: no cover - no model here
-        return model_embed(df, text_col, out_col)
-    return df.withColumn(out_col, hash_embed(F.col(text_col), dim))

@@ -2,15 +2,15 @@
 
 The reference keeps parallel in-memory lists and rebuilds a ``BM25Okapi``
 object on every add (bm25_store.py:134-188 — "good for < 1M documents").
-The Spark formulation replaces that with three derived tables that scale
+The Spark formulation replaces that with two derived tables that scale
 horizontally and update incrementally:
 
     postings(doc_id, term, tf)        — explode + groupBy (map-side combine)
     doclens(doc_id, dl)               — array size per doc, no shuffle
-    termstats(term, df, idf)          — groupBy term
 
 Scoring a *batch* of queries is a join pipeline: query terms (tiny,
-broadcast) ⋈ termstats ⋈ postings ⋈ doclens → per-(query, doc) sum. The
+broadcast) ⋈ postings ⋈ doclens → per-(query, doc) sum, with df/idf
+computed per matched term at query time. The
 only large shuffle is the final groupBy(query_id, doc_id), proportional to
 candidate matches, not the corpus.
 
@@ -23,9 +23,6 @@ k1 = 1.5, b = 0.75 from the reference config (src/config.py:32-33).
 """
 
 from __future__ import annotations
-
-import shutil
-from pathlib import Path
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -57,20 +54,6 @@ def build_doclens(
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(tokenize(F.col(text_col))).alias("dl"),
-    )
-
-
-def build_termstats(postings: DataFrame, n_docs_df: DataFrame) -> DataFrame:
-    """termstats(term, df, idf). ``n_docs_df`` is a 1-row (n_docs) frame so
-    the whole computation stays one lazy plan (no driver-side collect)."""
-    df_counts = postings.groupBy("term").agg(F.count("*").alias("df"))
-    return df_counts.crossJoin(F.broadcast(n_docs_df)).select(
-        "term",
-        "df",
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ).alias("idf"),
     )
 
 
@@ -111,10 +94,8 @@ def score_queries(
 
     The window exchanges only the MATCHED stream (query-term postings,
     not the corpus-wide table) keyed on term; hot query terms buffer in
-    one spillable window partition — the same rows the old termstats
-    aggregate funneled through one partition. idf per row is the exact
-    expression ``build_termstats`` computed per term: same double
-    inputs, same double result.
+    one spillable window partition — the same rows a per-term df
+    aggregate would funnel through one partition.
     """
     stats = corpus_stats(doclens)
 
@@ -168,8 +149,8 @@ def tfidf_keywords(
     twin of the reference's query-side keyword surface (F1 tokenizer,
     bm25_store.py:38-100; search-term extraction, hybrid_search.py).
 
-    Scale: df is one groupBy(term) with map-side partials (exchange-
-    free over the bucketed index layout); the 1-row corpus count
+    Scale: df is one groupBy(term) with map-side partials; the 1-row
+    corpus count
     broadcasts; the rank window partitions by doc_id and is bounded by
     per-document vocabulary, never corpus size."""
     n_docs = doclens.agg(F.count("*").alias("n_docs"))
@@ -216,11 +197,7 @@ def write_index(
     the derived postings + doclens tables once; the query path then
     reads them instead of re-tokenizing the corpus per query batch
     (the reference rebuilds BM25Okapi on every add, :176-188 — the
-    incremental-table form is the scale fix).
-
-    See ``write_index_bucketed`` for the cluster-scale layout (postings
-    bucketed by term → shuffle-free term joins); plain parquet keeps
-    the local harness simple."""
+    incremental-table form is the scale fix)."""
     build_postings(docs, id_col, text_col).write.mode("overwrite").parquet(
         f"{path}/postings"
     )
@@ -251,191 +228,12 @@ def append_index(
     )
 
 
-def write_index_bucketed(
-    docs: DataFrame,
-    table_prefix: str,
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Cluster-scale S7 layout: postings bucketed (and sorted) by term
-    via ``bucketBy`` into the session catalog. Any join/aggregation
-    keyed on ``term`` — the query-term semi-join, df stats — then reads
-    co-located buckets with NO exchange on the postings side; at 100 TB
-    that removes the biggest shuffle in the scoring plan. Doclens is
-    bucketed by doc_id for the same reason on the rollup join."""
-    spark = docs.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    for suffix in ("postings", "doclens"):
-        name = f"{table_prefix}_{suffix}"
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # a session-local catalog forgets tables across restarts while
-        # the warehouse dir persists — clear the orphaned location
-        if warehouse.startswith("file:"):
-            warehouse_path = warehouse[len("file:"):]
-        else:
-            warehouse_path = warehouse
-        orphan = Path(warehouse_path) / name.lower()
-        if warehouse_path and orphan.exists():
-            shutil.rmtree(orphan, ignore_errors=True)
-    (
-        build_postings(docs, id_col, text_col)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .saveAsTable(f"{table_prefix}_postings")
-    )
-    (
-        build_doclens(docs, id_col, text_col)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .saveAsTable(f"{table_prefix}_doclens")
-    )
-
-
-def read_index_bucketed(spark, table_prefix: str) -> tuple[DataFrame, DataFrame]:
-    return (
-        spark.table(f"{table_prefix}_postings"),
-        spark.table(f"{table_prefix}_doclens"),
-    )
-
-
-def remove_from_index(
-    spark,
-    path: str,
-    doc_ids,
-    id_col: str = "doc_id",
-) -> None:
-    """Incremental S7 DELETE — the maintenance half ``append_index``
-    lacked: appending the ids to a tombstone table under the index
-    root makes ``read_index`` anti-join them out of BOTH derived
-    tables, and because corpus stats (N, avgdl, df) are recomputed
-    from the tables at query time, post-delete scores are IDENTICAL
-    to a full rebuild over the surviving corpus (unit-pinned). The
-    reference instead rebuilds BM25Okapi over the remaining documents
-    on every delete (bm25_store.py:257-280) — cost ∝ corpus; the
-    tombstone append is cost ∝ delta, the same asymmetry the add path
-    fixed.
-
-    Idempotent under replay: duplicate tombstone rows change nothing
-    (anti-join semantics). Physical reclamation is a compaction
-    concern — ``write_index`` over the filtered corpus rewrites the
-    artifact and drops the tombstone dir with it; until then deletes
-    are logical, the merge-on-read contract ``sources/acid.py``
-    uses. (Shared primitive: ``sources.tables.append_tombstones`` —
-    the IVF and IVF-PQ artifacts delete the same way.)"""
-    from rag_database_spark.sources.tables import append_tombstones
-
-    append_tombstones(spark, path, doc_ids, id_col)
-
-
-def heal_index(spark, path: str) -> None:
-    """Heal an index root left half-swapped by a crash inside
-    ``compact_index`` (the ``dedup.heal_slices`` recovery contract):
-    root present → clear residue staging/old; root missing + complete
-    staging → roll FORWARD; root missing + only old → roll BACK. All
-    through the root's Hadoop FileSystem.
-
-    Completeness is judged by the compactor's explicit
-    ``dedup.STAGING_SENTINEL`` file (written after BOTH staging
-    writes return), falling back to the committer's per-subdir
-    ``_SUCCESS`` markers for pre-sentinel staging residue — so a
-    deployment that sets
-    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false`` still
-    rolls completed compactions FORWARD instead of silently redoing
-    them (r13 ADVICE #5)."""
-    from rag_database_spark.operators.dedup import (
-        STAGING_SENTINEL,
-        _drop_staging_sentinel,
-        _rename_or_raise,
-    )
-
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    path = path.rstrip("/")
-    fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    root, staging, old = (
-        jpath(path), jpath(path + "__staging"), jpath(path + "__old")
-    )
-    if fs.exists(root):
-        for residue in (staging, old):
-            if fs.exists(residue):
-                fs.delete(residue, True)
-        return
-    complete = fs.exists(
-        jpath(f"{path}__staging/{STAGING_SENTINEL}")
-    ) or all(
-        fs.exists(jpath(f"{path}__staging/{sub}/_SUCCESS"))
-        for sub in ("postings", "doclens")
-    )
-    if fs.exists(staging) and complete:
-        _rename_or_raise(fs, staging, root)
-        if fs.exists(old):
-            fs.delete(old, True)
-        _drop_staging_sentinel(fs, jpath, path)
-        return
-    if fs.exists(old):
-        _rename_or_raise(fs, old, root)
-        if fs.exists(staging):
-            fs.delete(staging, True)
-
-
-def compact_index(spark, path: str) -> None:
-    """Apply accumulated ``remove_from_index`` tombstones physically:
-    rewrite the tombstone-filtered postings/doclens to a staging root
-    and two-rename it in (crash between the renames heals forward or
-    back on the next ``heal_index``/``compact_index`` call — the
-    ``dedup.compact_slices`` swap contract). After the swap the
-    tombstone dir is gone with the old root, so reads drop the
-    anti-join until the next delete. Run when the tombstone set has
-    grown enough that the merge-on-read filter is worth reclaiming —
-    the same policy call as ACID-table compaction. Roll-forward after
-    a crash is proven by the explicit ``dedup.STAGING_SENTINEL`` file
-    written after both staging writes (see ``heal_index``) — it does
-    not depend on the committer's ``marksuccessfuljobs`` setting."""
-    from rag_database_spark.operators.dedup import (
-        _drop_staging_sentinel,
-        _rename_or_raise,
-        _write_staging_sentinel,
-    )
-
-    heal_index(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    path = path.rstrip("/")
-    fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath(path)):
-        return
-    postings, doclens = read_index(spark, path)
-    staging = jpath(path + "__staging")
-    if fs.exists(staging):
-        fs.delete(staging, True)
-    postings.write.mode("overwrite").parquet(f"{path}__staging/postings")
-    doclens.write.mode("overwrite").parquet(f"{path}__staging/doclens")
-    # completeness proof for heal_index, independent of the
-    # committer's _SUCCESS markers — written only after both writes
-    _write_staging_sentinel(fs, jpath, path + "__staging")
-    old = jpath(path + "__old")
-    if fs.exists(old):
-        fs.delete(old, True)
-    _rename_or_raise(fs, jpath(path), old)
-    _rename_or_raise(fs, staging, jpath(path))
-    fs.delete(old, True)
-    _drop_staging_sentinel(fs, jpath, path)
-
-
 def read_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(postings, doclens) from a ``write_index`` directory, with any
-    ``remove_from_index`` tombstones anti-joined out of both tables
-    (merge-on-read; the tombstone side is a distinct id list, tiny —
-    AQE broadcasts it)."""
-    from rag_database_spark.sources.tables import read_tombstones
-
-    postings = spark.read.parquet(f"{path}/postings")
-    doclens = spark.read.parquet(f"{path}/doclens")
-    dead = read_tombstones(spark, path, "doc_id")
-    if dead is not None:
-        postings = postings.join(dead, "doc_id", "left_anti")
-        doclens = doclens.join(dead, "doc_id", "left_anti")
-    return postings, doclens
+    """(postings, doclens) from a ``write_index`` directory."""
+    return (
+        spark.read.parquet(f"{path}/postings"),
+        spark.read.parquet(f"{path}/doclens"),
+    )
 
 
 def topk(

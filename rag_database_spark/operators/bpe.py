@@ -173,20 +173,6 @@ def train_bpe(docs: DataFrame, num_merges: int = DEFAULT_MERGES,
     return merges_df, encoded
 
 
-def apply_merges(words: DataFrame, merges: list[tuple[str, str]],
-                 word_col: str = "word") -> DataFrame:
-    """Re-encode arbitrary words under a TRAINED merge list (the
-    out-of-vocabulary path: unseen words still tokenize, exactly like a
-    shipped tokenizer). Folds are chained lazily; checkpoint every 8
-    rules keeps codegen expressions bounded."""
-    out = words.withColumn("tokens", initial_symbols(F.col(word_col)))
-    for i, (lhs, rhs) in enumerate(merges):
-        out = out.withColumn("tokens", merge_pair(F.col("tokens"), lhs, rhs))
-        if (i + 1) % 8 == 0:
-            out = out.localCheckpoint()
-    return out
-
-
 def encode_docs(docs: DataFrame, encoded_words: DataFrame,
                 id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:

@@ -4,7 +4,7 @@ Two operators the reference's embedding stack implies but never ships
 (its Qdrant store only does per-query ANN, src/storage/vector_store.py) —
 both are table stakes for a 100 TB training-data pipeline:
 
-- ``kmeans_fit`` / ``kmeans_assignments``: Lloyd's k-means over an
+- ``kmeans_fit``: Lloyd's k-means over an
   embedding column, made **cross-engine reproducible** so a SQL oracle
   can replay it bit-for-bit (see Determinism below). This is the
   corpus-structuring primitive (topic buckets, stratification keys,
@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rag_database_spark.functions.vector import cosine, to_double_array
+from rag_database_spark.functions.vector import to_double_array
 from rag_database_spark.sources.tables import local_frame
 
 KMEANS_K = 8
@@ -187,19 +187,6 @@ def kmeans_fit(
         # safe (plan stays valid) and frees executor memory once the
         # caller has materialized or persisted its artifact
         xq.unpersist()
-
-
-def kmeans_assignments(
-    df: DataFrame,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    impl: str = "auto",
-) -> DataFrame:
-    """(id, cluster_id) — the persistable clustering artifact."""
-    out, _ = kmeans_fit(df, k, iters, id_col, vec_col, impl)
-    return out
 
 
 def semdedup(

@@ -5,8 +5,7 @@
   (``shingle_jaccard_pairs``) — exact and 100 TB-viable: any pair with
   Jaccard > 0 shares a shingle, so the candidate join touches only
   pairs with overlap, never the N² cross product.
-- MinHash signatures (``minhash_signatures``) + banded LSH candidate
-  generation (``lsh_candidate_pairs``) — the sub-linear scale path.
+- MinHash signatures (``minhash_signatures``).
 - SimHash fingerprints (``simhash``) with Hamming-distance pairing.
 - random-hyperplane LSH bucketing for embedding-space near-dups
   (``rp_blocks`` / ``embedding_near_dupes_lsh``) — the block producer
@@ -30,7 +29,6 @@ from rag_database_spark.functions.text import raw_tokens, shingles
 from rag_database_spark.sources.tables import fan_out
 
 N_MINHASHES = 16
-LSH_BANDS = 4  # 4 bands × 4 rows over the 16 minhashes
 SIMHASH_BITS = 32
 SHINGLE_K = 3
 
@@ -69,7 +67,7 @@ def write_shingle_index(
 
 def _read_slices(
     spark, path: str, columns: list[str] | None = None,
-    exclude_batch: int | None = None, keep_batch: bool = False,
+    exclude_batch: int | None = None,
 ) -> DataFrame:
     """Read a slice-written artifact root in ANY layout it can be in:
 
@@ -89,10 +87,6 @@ def _read_slices(
     ``exclude_batch`` drops that batch's own slice — the replay-probe
     filter every caller of the old inline snippet needed — wherever
     the batch id survives (partition dirs or the compacted column).
-
-    ``keep_batch`` retains ``ingest_batch`` (long; −1 for pre-tracking
-    rows) in the output — the compactor uses it so a rewrite never
-    erases replay-exclusion.
 
     Listing goes through the Hadoop FileSystem API, not local pathlib,
     so the mixed-layout detection works identically for ``file://``,
@@ -143,215 +137,11 @@ def _read_slices(
         )
         if columns is None:
             columns = [c for c in flat.columns if c != "ingest_batch"]
-        if keep_batch:
-            columns = [*columns, "ingest_batch"]
         return flat.select(*columns).unionByName(part.select(*columns))
     df = _norm(spark.read.option("mergeSchema", "true").parquet(path))
     if columns is None:
         columns = [c for c in df.columns if c != "ingest_batch"]
-    if keep_batch:
-        columns = [*columns, "ingest_batch"]
     return df.select(*columns)
-
-
-def _slice_fs(path: str, spark=None):
-    """(fs, Path-class) for the slice root's filesystem — the SAME
-    Hadoop FileSystem API ``_read_slices`` lists through, so heal /
-    compact work identically for ``file://``, ``hdfs://`` and
-    object-store roots (local pathlib silently no-ops on anything but
-    a bare local path — ADVICE r11 #4)."""
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                "heal/compact need an active SparkSession to reach the "
-                "slice root's Hadoop FileSystem"
-            )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
-def slice_root_has_index(spark, path: str) -> bool:
-    """True iff a slice root holds a readable index: a flat-layout
-    ``_SUCCESS`` (offline overwrite / compaction) or any
-    ``ingest_batch=N`` slice dir (dynamic-partition gate writes commit
-    no root _SUCCESS). Goes through the root's Hadoop FileSystem —
-    the gates' bootstrap check must not silently report 'no index' on
-    ``hdfs://``/object-store roots the way local pathlib does (the
-    same failure class as ADVICE r11 #4: a remote gate would admit
-    every duplicate forever, growing an index it never reads)."""
-    fs, jpath = _slice_fs(path, spark)
-    root = jpath(path.rstrip("/"))
-    if not fs.exists(root):
-        return False
-    if fs.exists(jpath(path.rstrip("/") + "/_SUCCESS")):
-        return True
-    return any(
-        st.isDirectory()
-        and st.getPath().getName().startswith("ingest_batch=")
-        for st in fs.listStatus(root)
-    )
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    """Hadoop FileSystem.rename returns False instead of raising (and
-    when dst exists as a directory it nests src INSIDE it) — pathlib
-    raised, so the port must check or a failed swap silently leaves
-    residue the healer can never classify."""
-    if not fs.rename(src, dst):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-#: Explicit staging-complete sentinel written by the compactors AFTER
-#: every staging write finishes. The healers treat a staging root as
-#: roll-forward-safe when EITHER this sentinel or the committer's
-#: ``_SUCCESS`` markers are present, so deployments that set
-#: ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false`` no
-#: longer silently roll back completed compactions (r13 ADVICE #5 /
-#: r14 VERDICT item 6).
-STAGING_SENTINEL = "_STAGING_COMPLETE"
-
-
-def _write_staging_sentinel(fs, jpath, staging_path: str) -> None:
-    """Create the empty ``STAGING_SENTINEL`` file under a staging
-    root. Must be called only after ALL staging writes have returned —
-    its existence is the healer's roll-forward proof."""
-    fs.create(jpath(f"{staging_path}/{STAGING_SENTINEL}"), True).close()
-
-
-def _drop_staging_sentinel(fs, jpath, root_path: str) -> None:
-    """Remove the sentinel a completed swap carried into the live
-    root (the staging dir BECOMES the root on rename). Purely
-    cosmetic — parquet readers ignore underscore files — and safe to
-    crash before: the root-present heal branch needs no sentinel."""
-    p = jpath(f"{root_path}/{STAGING_SENTINEL}")
-    if fs.exists(p):
-        fs.delete(p, False)
-
-
-def heal_slices(path: str, spark=None) -> None:
-    """Heal a slice root left half-swapped by a crash inside
-    ``compact_slices`` (same recovery contract as the ACID table's
-    ``_recover``, sources/acid.py):
-
-    - root present → clear residue staging/old dirs,
-    - root missing + complete staging (our ``STAGING_SENTINEL``, or
-      the committer's ``_SUCCESS`` for pre-sentinel staging residue)
-      → roll FORWARD,
-    - root missing + only old → roll BACK.
-
-    All existence checks / renames / deletes go through the Hadoop
-    FileSystem of the root's URI, not local pathlib, so recovery works
-    on remote roots too."""
-    fs, jpath = _slice_fs(path, spark)
-    path = path.rstrip("/")
-    root = jpath(path)
-    staging = jpath(path + "__staging")
-    old = jpath(path + "__old")
-    if fs.exists(root):
-        for residue in (staging, old):
-            if fs.exists(residue):
-                fs.delete(residue, True)
-        return
-    if fs.exists(staging) and (
-        fs.exists(jpath(f"{path}__staging/{STAGING_SENTINEL}"))
-        or fs.exists(jpath(path + "__staging/_SUCCESS"))
-    ):
-        _rename_or_raise(fs, staging, root)
-        if fs.exists(old):
-            fs.delete(old, True)
-        _drop_staging_sentinel(fs, jpath, path)
-        return
-    if fs.exists(old):
-        _rename_or_raise(fs, old, root)
-        if fs.exists(staging):
-            fs.delete(staging, True)
-
-
-def compact_slices(spark, path: str, cluster_col: str | None = None) -> None:
-    """Fold a gate index's accumulated ``ingest_batch=N`` slices (and
-    any legacy flat files) into one flat parquet PLUS the untouched
-    latest slice dir — a long-running gate writes a partition per
-    micro-batch, and a 10k-batch index pays 10k directory listings +
-    footer reads per probe without this.
-
-    The rewrite goes to a staging dir first, then two renames swap it
-    in (``heal_slices`` rolls a crash between them forward/back on the
-    next call — run it, or any compaction, at open). ``cluster_col``
-    optionally repartitions the compacted layout on a join key (e.g.
-    ``id_a`` for the pair index) so read-back joins scan key-local
-    files.
-
-    Replay safety (ADVICE r11 #3), two parts:
-    - the compacted file KEEPS ``ingest_batch`` as a plain column
-      (legacy pre-tracking rows become batch −1), so a replayed batch
-      still EXCLUDES its own rows from the probe
-      (``_read_slices(exclude_batch=...)`` filters the column) — no
-      self-quarantine;
-    - the LATEST slice stays a partition dir (the only batch an
-      at-least-once replay can still target, since older batches'
-      checkpoint commits have landed): folding it flat would make the
-      replay's dynamic partition overwrite double-append, because it
-      rewrites the dir but cannot remove folded flat rows.
-
-    All filesystem mutations go through the root's Hadoop FileSystem,
-    same as ``_read_slices``."""
-    heal_slices(path, spark)
-    fs, jpath = _slice_fs(path, spark)
-    path = path.rstrip("/")
-    root = jpath(path)
-    if not fs.exists(root):
-        return
-    # The LATEST partition slice is the only batch an at-least-once
-    # replay can still target (older batches' checkpoint commits have
-    # landed — that is the streaming contract). Folding it into the
-    # flat file would make a replay DOUBLE-APPEND: the dynamic
-    # partition overwrite rewrites the (now re-created) dir but cannot
-    # remove the folded flat rows. So it stays a partition dir — the
-    # compacted layout is one flat file + at most one dir, which the
-    # mixed-layout reader absorbs, and a post-compaction replay
-    # overwrites the surviving dir exactly as before.
-    latest = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("ingest_batch="):
-            b = int(name.split("=", 1)[1])
-            latest = b if latest is None else max(latest, b)
-    # _read_slices absorbs flat / partitioned / mixed layouts (a plain
-    # read throws 'Conflicting directory structures' on the mix);
-    # keep_batch preserves replay-exclusion through the rewrite
-    rows = _read_slices(spark, path, keep_batch=True)
-    fold = rows
-    keep = None
-    if latest is not None:
-        fold = rows.filter(F.col("ingest_batch") != latest)
-        keep = rows.filter(F.col("ingest_batch") == latest)
-    if cluster_col is not None:
-        fold = fold.repartition(cluster_col)
-    staging = jpath(path + "__staging")
-    if fs.exists(staging):
-        fs.delete(staging, True)
-    fold.write.mode("overwrite").parquet(path + "__staging")
-    if keep is not None:
-        # COPIED (not moved) into staging so the root stays intact
-        # until the swap — staging is self-contained for roll-forward
-        keep.write.mode("append").partitionBy("ingest_batch").parquet(
-            path + "__staging"
-        )
-    # explicit completeness proof, independent of the committer's
-    # marksuccessfuljobs setting — written only after every staging
-    # write above has returned
-    _write_staging_sentinel(fs, jpath, path + "__staging")
-    old = jpath(path + "__old")
-    if fs.exists(old):
-        fs.delete(old, True)
-    _rename_or_raise(fs, root, old)
-    _rename_or_raise(fs, staging, root)
-    fs.delete(old, True)
-    _drop_staging_sentinel(fs, jpath, path)
 
 
 def read_shingle_index(
@@ -574,75 +364,6 @@ def minhash_signatures(
         for i in range(n_hashes)
     ]
     return hs.groupBy("doc_id").agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = LSH_BANDS,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Banded LSH over a MinHash signature frame (sig_0..sig_{n-1}):
-    docs sharing one full band collide. Emits distinct candidate
-    (id_a, id_b) pairs; feed them to an exact verifier.
-
-    Scale: the join is keyed on (band_idx, band_key) — sub-linear in
-    corpus size for any fixed collision rate, the standard
-    MinHash-LSH dedup topology."""
-    sig_cols = sorted(
-        (c for c in signatures.columns if c.startswith("sig_")),
-        key=lambda c: int(c.split("_")[1]),
-    )
-    rows_per_band = len(sig_cols) // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(c).cast("string")
-                            for c in sig_cols[
-                                bi * rows_per_band : (bi + 1) * rows_per_band
-                            ]
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    exploded = signatures.select(
-        F.col(id_col).alias("doc_id"), F.explode(band_structs).alias("b")
-    ).select("doc_id", "b.band_idx", "b.band_key")
-    a = exploded.select(F.col("doc_id").alias("id_a"), "band_idx", "band_key")
-    b = exploded.select(F.col("doc_id").alias("id_b"), "band_idx", "band_key")
-    return (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = N_MINHASHES,
-    bands: int = LSH_BANDS,
-    k: int = SHINGLE_K,
-) -> DataFrame:
-    """The full MinHash-LSH pipeline: signatures → banded candidates →
-    exact Jaccard verification of candidates only. Exactness caveat: a
-    true pair colliding in no band is missed (probability
-    (1−j^r)^b — < 2% at j=.9 with 16/4 defaults)."""
-    cands = lsh_candidate_pairs(
-        minhash_signatures(docs, id_col, text_col, n_hashes, k), bands
-    )
-    exact = shingle_jaccard_pairs(docs, threshold, id_col, text_col, k)
-    return exact.join(cands, ["id_a", "id_b"])
 
 
 def simhash(
@@ -1344,9 +1065,8 @@ def best_jaccard_vs_index(
 ) -> DataFrame:
     """Admission-gate probe: for each INCOMING document, its best
     shingle-Jaccard match in the existing corpus (represented by its
-    persisted ``(doc_id, s)`` shingle index). The batch twin of
-    ``stream_dedup_gate`` — an ingest pipeline calls this per
-    micro-batch to quarantine near-duplicates of already-accepted
+    persisted ``(doc_id, s)`` shingle index) — an ingest pipeline calls
+    this per batch to quarantine near-duplicates of already-accepted
     documents before they enter the corpus.
 
     Scale design: the incoming batch is tiny next to the corpus, so

@@ -270,34 +270,6 @@ def bfs_expand(
     return out
 
 
-def shortest_chain(
-    edges: DataFrame,
-    src: object,
-    dst: object,
-    max_depth: int = 5,
-    min_confidence: float = MIN_CONFIDENCE,
-) -> int | None:
-    """J6 (document_graph.py:469-513): length of the shortest relation
-    chain between two documents, None if unreachable within
-    ``max_depth``. Early exit per hop (driver checks a 1-row count)."""
-    spark = edges.sparkSession
-    seeds = local_frame(spark, [(src,)], "start_id long")
-    adj = undirected(edges).filter(F.col("confidence") >= min_confidence)
-    frontier = seeds.select(F.col("start_id").alias("doc_id"))
-    visited = frontier
-    for depth in range(1, max_depth + 1):
-        frontier = (
-            frontier.join(adj, frontier["doc_id"] == adj["me"])
-            .select(F.col("other").alias("doc_id"))
-            .distinct()
-            .join(visited, ["doc_id"], "left_anti")
-        )
-        if frontier.filter(F.col("doc_id") == dst).limit(1).count() > 0:
-            return depth
-        visited = visited.unionByName(frontier).distinct()
-    return None
-
-
 def shortest_chains(
     edges: DataFrame,
     pairs: DataFrame,

@@ -9,7 +9,7 @@ rewrites here — one keyed shuffle each, no driver loops.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.text import tokenize
@@ -270,32 +270,3 @@ def retention_actions(
     return docs.withColumn("action", action)
 
 
-def apply_retention(
-    table,
-    as_of: str,
-    retention_col: str = "retention_until",
-    hold_col: str = "legal_hold",
-) -> int:
-    """EXECUTE the sweep ``retention_actions`` selects — the full
-    compliance loop the reference schema declares but never closes
-    (init.sql:208-209 carries the flags; nothing ever deletes):
-    classify the table's CURRENT view, tombstone every ``sweep`` row
-    (``TombstoneTable.delete_keys`` — a commit of its own), and return
-    the swept-key count.
-
-    ``hold``/``retain`` rows are untouched; because the delete is a
-    tombstone, every pre-sweep epoch still reads the swept docs
-    (``read(as_of_epoch=...)`` time travel) until a ``compact()``
-    truncates history — the unit test pins exactly that composition.
-    ``table`` is any TombstoneTable-shaped object (read /
-    delete_keys / key_col)."""
-    decisions = retention_actions(
-        table.read(), as_of, retention_col, hold_col
-    )
-    doomed = decisions.filter(F.col("action") == "sweep").select(
-        table.key_col
-    )
-    n = doomed.count()
-    if n:
-        table.delete_keys(doomed)
-    return n

@@ -13,7 +13,7 @@ decoder drops in by replacing ``_fake_decode`` only.
 Reference parity: the reference stores page images as PIL/base64
 (S4, document_processor.py:219-237) and visual-element crops (S5,
 :239-308); its embedders are GPU torch models (M4). Here those are the
-``decode_media`` / ``media_embedding`` seams.
+``decode_media`` seam.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, meta map<string,string>"
 )
-EMBED_DIM = 16
 FRAME_BYTES = 256  # stub 'frame' = fixed-size byte window
 
 
@@ -163,33 +162,6 @@ def frame_sample(
     return media.mapInPandas(
         batches,
         schema="media_id long, frame_index int, n_bytes long, frame binary",
-    )
-
-
-def media_embedding(media: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
-    """Feature-extraction stub: deterministic pseudo-embedding — md5
-    over (seed, payload) per dimension, scaled to [-1, 1). Real models
-    (M4 ColPali / CLIP-style) replace the inner function; the Arrow
-    batch shape and the array<float> output contract stay."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = payload or b""
-                vec = []
-                for i in range(dim):
-                    h = hashlib.md5(i.to_bytes(2, "big") + payload).digest()
-                    vec.append(
-                        int.from_bytes(h[:8], "big") / 2**63 - 1.0
-                    )
-                out.append((mid, vec))
-            yield pd.DataFrame(out, columns=["media_id", "embedding"])
-
-    return media.mapInPandas(
-        batches, schema="media_id long, embedding array<double>"
     )
 
 

@@ -300,36 +300,3 @@ def shuffle_export(
     )
 
 
-def packing_stats(
-    docs: DataFrame,
-    budget: int = PACK_BUDGET,
-    n_shards: int = PACK_NSHARDS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-shard packing audit: documents, tokens, full training rows
-    produced, and the fill ratio of the final partial row."""
-    packed = pack_sequences(docs, budget, n_shards, id_col, text_col)
-    return (
-        packed.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum(F.col("spans_boundary").cast("long")).alias(
-                "n_spanning"
-            ),
-            F.max("end_offset").alias("stream_len"),
-        )
-        .select(
-            "shard",
-            "n_docs",
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            F.col("n_spanning").cast("bigint").alias("n_spanning"),
-            F.floor(F.col("stream_len") / budget)
-            .cast("bigint")
-            .alias("n_full_rows"),
-            F.round(
-                (F.col("stream_len") % budget) / F.lit(float(budget)), 6
-            ).alias("tail_fill"),
-        )
-    )

@@ -217,29 +217,6 @@ def _adc_ranked(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    dim: int,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-    id_col: str = "id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """Fit-and-query convenience for ad-hoc/unit use — production
-    persists once with ``write_pq_index`` and serves through
-    ``pq_topk_indexed``."""
-    codebooks, codes = pq_fit(
-        corpus, dim, m, n_codes, id_col=id_col, vec_col=vec_col
-    )
-    return pq_topk_indexed(
-        queries, codebooks, codes, k, dim, m, query_id_col, query_vec_col
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ: coarse-quantizer lists over PQ codes — the Faiss IVFADC
 # serving layout (minus residual encoding: codes quantize the raw
@@ -311,34 +288,14 @@ def write_ivfpq_index(
     )
 
 
-def remove_from_ivfpq_index(spark, path: str, ids) -> None:
-    """Logical delete for the composed layout (twin of
-    ``append_ivfpq_index``): tombstoned ids vanish from the coded
-    lists at read time; coarse centroids and sub-codebooks stay
-    frozen (code geometry never moves on delete), so ADC scores of
-    survivors are unchanged. Replay-idempotent; compaction =
-    ``write_ivfpq_index`` over the surviving corpus."""
-    from rag_database_spark.sources.tables import append_tombstones
-
-    append_tombstones(spark, path, ids, "id")
-
-
 def read_ivfpq_index(
     spark, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(coarse centroids, sub-codebooks, coded lists); any
-    ``remove_from_ivfpq_index`` tombstones anti-join out of the coded
-    lists after the probe's partition pruning."""
-    from rag_database_spark.sources.tables import read_tombstones
-
-    lists = spark.read.parquet(f"{path}/lists")
-    dead = read_tombstones(spark, path, "id")
-    if dead is not None:
-        lists = lists.join(dead, "id", "left_anti")
+    """(coarse centroids, sub-codebooks, coded lists)."""
     return (
         spark.read.parquet(f"{path}/centroids"),
         spark.read.parquet(f"{path}/codebooks"),
-        lists,
+        spark.read.parquet(f"{path}/lists"),
     )
 
 
@@ -387,54 +344,3 @@ def ivfpq_topk(
     return _adc_ranked(_adc_score(cands, codebooks, dim, m), k)
 
 
-def append_ivfpq_index(
-    new_vectors: DataFrame,
-    path: str,
-    dim: int,
-    m: int = PQ_M,
-    id_col: str = "id",
-    vec_col: str = "vec",
-) -> None:
-    """Incremental IVF-PQ maintenance — the composed twin of
-    ``similarity.append_ivf_index``: new vectors are assigned to a
-    coarse list under the FROZEN persisted centroids and PQ-encoded
-    under the FROZEN sub-codebooks, then appended into the coded lists
-    (dynamic partition append touches only the lists that gain rows).
-    No refit anywhere — cost ∝ batch, never ∝ corpus; centroids and
-    codebooks drift from the true means as the corpus grows, fixed by
-    a periodic offline ``write_ivfpq_index`` rebuild (the standard
-    serving-index compromise)."""
-    from rag_database_spark.operators.similarity import assign_centroids
-
-    spark = new_vectors.sparkSession
-    centroids = spark.read.parquet(f"{path}/centroids")
-    codebooks = spark.read.parquet(f"{path}/codebooks")
-    nv = new_vectors.select(
-        F.col(id_col).alias("id"),
-        to_double_array(F.col(vec_col)).alias("v"),
-    ).withColumn("qx", quantize_embeddings_int(F.col("v")))
-    # coarse assignment in the quantized frame the centroids live in
-    coarse = assign_centroids(
-        nv, centroids, id_col="id", vec_col="qx"
-    ).select("centroid_id", "id")
-    out = coarse
-    for j, (start, sub) in enumerate(_sub_slices(dim, m)):
-        cb = codebooks.filter(F.col("m") == j).select(
-            F.col("cid").alias("centroid_id"), "cvec"
-        )
-        sub_assign = assign_centroids(
-            nv.select("id", F.slice(F.col("qx"), start, sub).alias("sx")),
-            cb,
-            id_col="id",
-            vec_col="sx",
-        ).select(F.col("id"), F.col("centroid_id").alias(f"code{j}"))
-        out = out.join(sub_assign, "id")
-    (
-        out.select(
-            "centroid_id", "id",
-            *[f"code{j}" for j in range(m)],
-        )
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/lists")
-    )

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.vector import (
-    cosine,
     dot,
     l2_norm,
     let as vec_let,
@@ -632,34 +631,12 @@ def write_ivf_index(
     )
 
 
-def remove_from_ivf_index(spark, path: str, ids) -> None:
-    """Logical vector delete (the maintenance twin of
-    ``append_ivf_index``): ids append to a tombstone table under the
-    index root — cost ∝ delta — and ``read_ivf_index`` anti-joins
-    them out of the inverted lists. Centroid geometry is FROZEN
-    through deletes (same contract as appends: assignments never
-    move), so surviving vectors score identically and deleted ids
-    simply stop appearing; a drift-heavy corpus refits via
-    ``write_ivf_index`` compaction, which drops the tombstones with
-    the rewrite. Replay-idempotent."""
-    from rag_database_spark.sources.tables import append_tombstones
-
-    append_tombstones(spark, path, ids, "id")
-
-
 def read_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(centroids, lists) from a ``write_ivf_index`` directory, with
-    any ``remove_from_ivf_index`` tombstones anti-joined out of the
-    lists (the anti-join composes with the probe's partition pruning:
-    only probed lists are read, then filtered)."""
-    from rag_database_spark.sources.tables import read_tombstones
-
-    centroids = spark.read.parquet(f"{path}/centroids")
-    lists = spark.read.parquet(f"{path}/lists")
-    dead = read_tombstones(spark, path, "id")
-    if dead is not None:
-        lists = lists.join(dead, "id", "left_anti")
-    return centroids, lists
+    """(centroids, lists) from a ``write_ivf_index`` directory."""
+    return (
+        spark.read.parquet(f"{path}/centroids"),
+        spark.read.parquet(f"{path}/lists"),
+    )
 
 
 def assign_centroids(
@@ -910,34 +887,6 @@ def ivf_topk_indexed(
         ).otherwise(F.lit(0.0)).alias("score"),
     )
     return _ranked(scored, k)
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-    id_col: str = "id",
-    vec_col: str = "vec",
-    method: str = "det",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the coarse-quantizer
-    scale path next to brute force and LSH (build brief: 'IVF or
-    LSH-bucketed variant'). Convenience form that fits and queries in
-    one call — for ad-hoc/unit use. Production callers persist once
-    with ``write_ivf_index`` and serve every query batch through
-    ``ivf_topk_indexed``; refitting k-means per query batch at 100 TB
-    would be a multi-pass clustering job per call."""
-    centroids, lists = _ivf_fit(
-        corpus, n_centroids, seed, id_col, vec_col, method
-    )
-    return ivf_topk_indexed(
-        queries, centroids, lists, k, n_probe, query_id_col, query_vec_col
-    )
 
 
 def lsh_topk(

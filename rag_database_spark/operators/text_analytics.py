@@ -59,15 +59,14 @@ def model_lang_id(
 
     Returns (doc_id, lang_pred, confidence); predictions under
     ``min_confidence`` become 'unknown' (the CCNet 0.5 convention).
-    Raises ImportError when fasttext is absent — callers wanting
-    automatic fallback use ``lang_id_auto``."""
+    Raises ImportError when fasttext is absent."""
     from rag_database_spark.seams import optional_import
 
     ft_mod = optional_import("fasttext")
     if ft_mod is None:
         raise ImportError(
-            "fasttext not installed — use lang_id_auto() for automatic "
-            "fallback to the stopword-marker heuristic"
+            "fasttext not installed — lang_id is the "
+            "stopword-marker fallback"
         )
     load_model = ft_mod.load_model  # pickled by reference or value
 
@@ -80,7 +79,7 @@ def model_lang_id(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")
     )
     # id type follows the caller's column (string-keyed corpora work),
-    # matching the heuristic path's schema so lang_id_auto is uniform
+    # matching the heuristic path's schema
     id_type = src.schema["doc_id"].dataType.simpleString()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -123,28 +122,6 @@ def model_lang_id(
     return src.mapInPandas(
         batches,
         schema=f"doc_id {id_type}, lang_pred string, confidence double",
-    )
-
-
-def lang_id_auto(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    model_path: str = "lid.176.bin",
-    min_confidence: float = 0.0,
-) -> DataFrame:
-    """fastText when importable, else the stopword-marker heuristic
-    with confidence NULL — the same auto-dispatch contract as
-    ``embed_text`` (real model preferred, deterministic fallback keeps
-    every downstream op runnable in this container)."""
-    from rag_database_spark.seams import have
-
-    if have("fasttext"):
-        return model_lang_id(
-            docs, id_col, text_col, model_path, min_confidence
-        )
-    return lang_id(docs, id_col, text_col).withColumn(
-        "confidence", F.lit(None).cast("double")
     )
 
 

@@ -56,8 +56,9 @@ def get_spark(
         # recompilation PER QUERY PER PASS — measured 2-5× inflation of
         # steady-state times at sf0.1. Static conf: must be set here.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # bucketed tables (bm25.write_index_bucketed) land here; static
-        # conf, so it must be set before the session exists
+        # the catalog's default-database directory lands here instead of
+        # the working directory; static conf, so it must be set before
+        # the session exists
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

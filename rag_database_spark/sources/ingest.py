@@ -1,5 +1,5 @@
-"""Ingestion sources — directory scan, document parse seam, element
-filtering, page-image extraction stub (S1-S6;
+"""Ingestion sources — document parse seam and page-image extraction
+stub over a ``binaryFile`` scan (S1/S2/S4;
 src/ingestion/document_processor.py).
 
 The reference parses with Unstructured.io + pdf2image (not available in
@@ -18,29 +18,13 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 ELEMENT_SCHEMA = (
     "document_id string, element_index int, category string, text string, "
     "page_number int"
 )
-VISUAL_CATEGORIES = ("Image", "Table", "Figure")
 PAGE_CHARS = 2000  # fake-parser page size
-
-
-def scan_directory(
-    spark: SparkSession, path: str, glob: str = "*.txt"
-) -> DataFrame:
-    """S6 (master_pipeline.py:815-845 rglob fan-out): distributed
-    binary-file scan — (path, modificationTime, length, content).
-    Parallel listing and reading come free from the source."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
 
 
 def _doc_id(path: str, content: bytes) -> str:
@@ -126,44 +110,6 @@ def parse_documents(files: DataFrame) -> DataFrame:
     )
 
 
-def visual_elements(elements: DataFrame) -> DataFrame:
-    """S5 (document_processor.py:239-308): keep visual categories,
-    assign deterministic element ids."""
-    return elements.filter(
-        F.col("category").isin(*VISUAL_CATEGORIES)
-    ).select(
-        F.concat_ws(
-            "_",
-            F.col("document_id"),
-            F.lit("vis"),
-            F.col("element_index").cast("string"),
-        ).alias("element_id"),
-        "document_id",
-        "category",
-        "text",
-        "page_number",
-    )
-
-
-def full_text(elements: DataFrame) -> DataFrame:
-    """Reassemble per-document full text (master_pipeline.py:258-265:
-    full_text = join of element texts)."""
-    return (
-        elements.groupBy("document_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("element_index", "text"))
-                    ),
-                    lambda s: s["text"],
-                ),
-                "\n\n",
-            ).alias("text")
-        )
-    )
-
-
 def _real_render(content: bytes, dpi: int) -> list[tuple[int, int, int, bytes]]:
     """S4 real path (document_processor.py:219-237): pdf2image page
     rendering → (page_number, width, height, png_bytes) rows, the same
@@ -231,88 +177,3 @@ def page_images_stub(files: DataFrame, dpi: int = 150) -> DataFrame:
     )
 
 
-def parse_sheets(files: DataFrame) -> DataFrame:
-    """S3 seam (document_processor.py:369-374 per-sheet XLSX
-    partition): spreadsheet files → (sheet, row_idx, cells) rows. The
-    container has no xlsx library, so the stub parses CSV bytes with
-    the stdlib reader — an openpyxl/pandas.read_excel call replaces
-    the inner loop; the one-file→many-rows Arrow topology stays."""
-    import csv
-    import io
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                sheet = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                text = (content or b"").decode("utf-8", errors="replace")
-                for ri, cells in enumerate(csv.reader(io.StringIO(text))):
-                    rows.append((sheet, ri, cells))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["sheet", "row_idx", "cells"]
-                )
-
-    return files.select("path", "content").mapInPandas(
-        batches, schema="sheet string, row_idx int, cells array<string>"
-    )
-
-
-DOCUMENT_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def read_jsonl_documents(
-    spark: SparkSession, path: str, schema: str = DOCUMENT_SCHEMA
-) -> DataFrame:
-    """JSONL document source — the training-data interchange format the
-    dedup/quality/chunking pipelines consume in practice. Explicit
-    schema (no sampling pass); corrupt lines are quarantined into
-    ``_corrupt`` rather than failing the job, the standard
-    dirty-at-scale posture."""
-    return (
-        spark.read.schema(schema + ", _corrupt string")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(path)
-    )
-
-
-def write_jsonl_documents(df: DataFrame, path: str) -> None:
-    """JSONL sink, gzip-compressed (text sources support a narrower
-    codec set than parquet — no zstd for JSON lines)."""
-    df.write.mode("overwrite").option("compression", "gzip").json(path)
-
-
-def read_csv_documents(
-    spark: SparkSession, path: str, schema: str = DOCUMENT_SCHEMA
-) -> DataFrame:
-    """CSV document source with the same dirty-at-scale posture as the
-    JSONL reader: explicit schema (no sampling pass), corrupt rows
-    quarantined into ``_corrupt``. ``multiLine`` + RFC-4180 quoting so
-    embedded newlines/commas/quotes in document text survive.
-
-    Scale caveat: multiLine CSV files are NOT splittable (one task per
-    file) — acceptable for many-file interchange drops; convert to
-    JSONL/parquet for single-huge-file corpora."""
-    return (
-        spark.read.schema(schema + ", _corrupt string")
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .option("multiLine", True)
-        .option("escape", '"')
-        .csv(path)
-    )
-
-
-def write_csv_documents(df: DataFrame, path: str) -> None:
-    """CSV sink, RFC-4180 quoted (quoteAll + double-quote escape) so
-    the reader round-trips embedded delimiters/newlines exactly."""
-    (
-        df.write.mode("overwrite")
-        .option("header", True)
-        .option("quoteAll", True)
-        .option("escape", '"')
-        .option("compression", "gzip")
-        .csv(path)
-    )

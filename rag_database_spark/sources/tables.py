@@ -1,4 +1,4 @@
-"""Parquet table sources and tenant-partitioned sinks.
+"""Parquet table sources.
 
 The driver materializes ten deterministic tables per scale factor
 (TESTDATA.md). Loading is a plain columnar scan: Catalyst pushes filters
@@ -7,13 +7,10 @@ predicates on the returned DataFrame rather than pre-collecting.
 
 Reference parity: the reference's stores (pickle BM25, Qdrant, Postgres —
 src/storage/{bm25_store,vector_store,metadata_store}.py) become Parquet
-tables; its per-document delete+reinsert upsert (metadata_store.py:799-847)
-maps to dynamic partition overwrite in ``write_partitioned``.
+tables.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # fan_out target = this × defaultParallelism. Two tasks per core
 # smooths per-row cost skew (document lengths vary ~100×, so exactly
@@ -156,64 +152,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("organization_id",),
-    mode: str = "overwrite",
-    dynamic: bool = True,
-) -> None:
-    """Tenant-partitioned Parquet sink.
-
-    ``dynamic=True`` + mode=overwrite replaces only the partitions present
-    in ``df`` — the Spark-native form of the reference's per-document
-    delete-then-insert re-ingest (metadata_store.py:799-847), idempotent
-    under replay.
-    """
-    writer = df.write.mode(mode)
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-
-
-def append_tombstones(spark, root: str, ids, id_col: str = "doc_id") -> None:
-    """Shared logical-delete primitive for persisted index artifacts
-    (BM25 postings, IVF lists, IVF-PQ coded lists): append the ids to
-    a tombstone table under the artifact root — cost ∝ delta, never
-    a rewrite; the matching reader anti-joins them out
-    (merge-on-read, the ``sources/acid.py`` contract). Idempotent
-    under replay: duplicate tombstone rows change nothing.
-
-    A DataFrame argument must either carry ``id_col`` or be a single
-    column (taken as the ids whatever its name); a multi-column frame
-    without ``id_col`` raises — silently tombstoning whichever column
-    happened to be first would delete the wrong rows with no error."""
-    if not isinstance(ids, DataFrame):
-        ids = local_frame(spark, [(int(i),) for i in ids], f"{id_col} long")
-    if id_col in ids.columns:
-        src = id_col
-    elif len(ids.columns) == 1:
-        src = ids.columns[0]
-    else:
-        raise ValueError(
-            f"append_tombstones: no column {id_col!r} in {ids.columns}; "
-            "pass the id column explicitly or a single-column frame"
-        )
-    ids.select(F.col(src).alias(id_col)).write.mode(
-        "append"
-    ).parquet(f"{root}/tombstones")
-
-
-def read_tombstones(spark, root: str, id_col: str = "doc_id"):
-    """Distinct tombstoned ids under an artifact root, or None when no
-    delete has ever run. Existence goes through the root's Hadoop
-    FileSystem so ``hdfs://`` / object-store artifacts behave like
-    local ones."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/tombstones")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    tomb = spark.read.parquet(f"{root}/tombstones")
-    return tomb.select(F.col(tomb.columns[0]).alias(id_col)).distinct()

@@ -46,10 +46,6 @@ ANALYSIS_QUERIES: tuple[tuple[int, str], ...] = (
 
 HYBRID_LIMIT = 10
 
-# vec_ids whose embeddings act as standalone similarity-search queries
-KNN_QUERY_IDS: tuple[int, ...] = (0, 7, 42, 99, 123)
-KNN_K = 10
-
 
 def queries_df(spark: SparkSession) -> DataFrame:
     # a LocalRelation (local_frame), so scanning the 6 rows launches no

@@ -1,0 +1,44 @@
+"""Plan inspection shared by the test modules: the one place that reads
+Catalyst's analyzed and physical plans of a DataFrame."""
+
+from __future__ import annotations
+
+import contextlib
+import io
+
+
+def plan_of(df, mode: str = "formatted") -> str:
+    """``df.explain(mode)`` captured as a string."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode)
+    return buf.getvalue()
+
+
+def executed_plan(df) -> str:
+    """The physical plan's tree string (``executedPlan().toString()``)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _analyzed_leaves(df) -> list:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def leaf_names(df) -> list[str]:
+    """Node names of the analyzed plan's leaves, in plan order."""
+    return [node.nodeName() for node in _analyzed_leaves(df)]
+
+
+def unmaterialized_rdd_leaves(df) -> list[str]:
+    """``LogicalRDD`` leaves of the analyzed plan that are not
+    checkpointed: an RDD lineage every scan re-runs, such as a
+    ``createDataFrame(<list>)`` frame whose rows each scan reserializes
+    in Python workers. Driver-local rows belong in ``local_frame``."""
+    return [
+        node.toString()
+        for node in _analyzed_leaves(df)
+        if node.nodeName() == "LogicalRDD"
+        and not (node.rdd().isCheckpointed()
+                 or node.rdd().isLocallyCheckpointed())
+    ]

@@ -82,58 +82,6 @@ def test_reopen_same_path(table, spark):
     assert _ids(reopened.read()) == list(range(25))
 
 
-def test_stream_upsert_matches_batch_last_write_wins(table, spark, tmp_path):
-    """CDC stream → TombstoneTable: final state must equal batch
-    last-write-wins over the change log."""
-    from rag_database_spark.streaming import events as se
-
-    changes = [
-        (3, "v2 of 3", 7, 1),
-        (3, "v3 of 3", 8, 2),      # same key twice in one batch
-        (99, "new 99", 1, 1),
-        (0, "v2 of 0", 5, 3),
-    ]
-    schema = "id long, body string, org long, seq long"
-    src = tmp_path / "changes"
-    spark.createDataFrame(changes, schema).write.parquet(str(src))
-
-    q = se.stream_upsert_table(spark, str(src), table, schema, "seq")
-    q.awaitTermination(120)
-
-    view = {r["id"]: r["body"] for r in table.read().collect()}
-    assert view[3] == "v3 of 3"       # max-seq wins within the batch
-    assert view[99] == "new 99"
-    assert view[0] == "v2 of 0"
-    assert len(view) == 31            # 30 originals + 1 insert
-
-
-def test_stream_upsert_bootstraps_empty_table_without_order_col(
-    spark, tmp_path
-):
-    """First micro-batch lands on an EMPTY table: the change-log-only
-    order column must not leak into the bootstrapped base schema, or
-    every later clean-schema append() would be rejected as drift."""
-    from rag_database_spark.streaming import events as se
-
-    fresh = TombstoneTable(spark, str(tmp_path / "fresh"), key_col="id")
-    changes = [(1, "one", 0, 1), (1, "one v2", 0, 2), (2, "two", 1, 1)]
-    schema = "id long, body string, org long, seq long"
-    src = tmp_path / "changes"
-    spark.createDataFrame(changes, schema).write.parquet(str(src))
-
-    q = se.stream_upsert_table(spark, str(src), fresh, schema, "seq")
-    q.awaitTermination(120)
-
-    assert set(fresh.read().columns) == {"id", "body", "org"}
-    view = {r["id"]: r["body"] for r in fresh.read().collect()}
-    assert view == {1: "one v2", 2: "two"}
-    # a later clean-schema append must still be accepted
-    fresh.append(
-        spark.createDataFrame([(3, "three", 2)], "id long, body string, org long")
-    )
-    assert len(fresh.read().collect()) == 3
-
-
 def test_append_rejects_schema_drift(table, spark):
     bad = spark.createDataFrame(
         [(1000, "body", 0, 99)], "id long, body string, org long, seq long"
@@ -206,54 +154,6 @@ def test_time_travel_snapshots(table, spark):
 
     table.compact()                      # truncates travel history
     assert _ids(table.read(as_of_epoch=e1)) == []  # re-stamped past e1
-
-
-def test_retention_sweep_tombstone_time_travel_end_to_end(spark, tmp_path):
-    """The full compliance loop (VERDICT r11/r12): retention_actions
-    classifies, apply_retention tombstones the sweep set, and the
-    epochs tell the story — swept docs vanish from the current view,
-    legal-hold docs survive even with expired retention, and a
-    pre-sweep snapshot still reads every swept doc until compact()
-    truncates history."""
-    from rag_database_spark.operators.lifecycle import apply_retention
-
-    t = TombstoneTable(spark, str(tmp_path / "docs"), key_col="doc_id")
-    rows = [
-        # (doc_id, retention_until, legal_hold)
-        (1, "2026-01-01", False),   # expired -> sweep
-        (2, "2026-01-01", True),    # expired but held -> hold
-        (3, "2027-01-01", False),   # inside window -> retain
-        (4, None, False),           # no policy -> retain
-        (5, "2025-06-30", False),   # expired -> sweep
-    ]
-    t.append(
-        spark.createDataFrame(
-            rows, "doc_id long, retention_until string, legal_hold boolean"
-        ).withColumn("retention_until", F.to_date("retention_until"))
-    )
-    pre_sweep_epoch = t._current_epoch()
-
-    swept = apply_retention(t, as_of="2026-08-15")
-    assert swept == 2
-
-    # current view: swept docs gone, hold + retain docs intact
-    now_ids = sorted(r["doc_id"] for r in t.read().collect())
-    assert now_ids == [2, 3, 4]
-
-    # idempotent: a second sweep sees no remaining sweep rows
-    assert apply_retention(t, as_of="2026-08-15") == 0
-
-    # time travel: the pre-sweep snapshot still reads the swept docs
-    before = sorted(
-        r["doc_id"] for r in t.read(as_of_epoch=pre_sweep_epoch).collect()
-    )
-    assert before == [1, 2, 3, 4, 5]
-
-    # compaction folds the tombstones away; the view is unchanged but
-    # the pre-sweep epoch is no longer reachable (snapshot expiry)
-    t.compact()
-    assert sorted(r["doc_id"] for r in t.read().collect()) == [2, 3, 4]
-    assert t.tombstone_count() == 0
 
 
 def test_recover_rolls_back_on_incomplete_staging(spark, tmp_path):

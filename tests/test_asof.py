@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from rag_database_spark.operators.relational import asof_join
 
+from plan_inspect import plan_of
+
 
 def ts(s):
     return datetime(2024, 1, 1, 0, 0, s)
@@ -95,9 +97,6 @@ def test_interval_join_equals_naive(spark):
 
 
 def test_interval_join_plan_is_keyed_not_nested_loop(spark):
-    import contextlib
-    import io
-
     from rag_database_spark.operators.relational import interval_join
 
     events = spark.range(100).select(F.col("id").alias("es"))
@@ -107,9 +106,6 @@ def test_interval_join_plan_is_keyed_not_nested_loop(spark):
         (F.col("id") * 10 + 14).alias("w_end_s"),
     )
     df = interval_join(events, windows, band=15)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("simple")
-    p = buf.getvalue()
+    p = plan_of(df, "simple")
     assert "BroadcastNestedLoopJoin" not in p
     assert "Join" in p  # a keyed join on the band id

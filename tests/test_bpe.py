@@ -110,22 +110,6 @@ def test_pair_stats_matches_brute(spark):
     assert got == dict(brute)
 
 
-def test_apply_merges_handles_oov(spark):
-    # train on SENNRICH, apply to an UNSEEN word: same result as the
-    # python reference applying the same ordered rules
-    exp_merges, _ = py_bpe(SENNRICH, 8)
-    rules = [(m[1], m[2]) for m in exp_merges]
-    oov = "slowest"
-    exp = list(oov) + [bpe.EOW]
-    for lhs, rhs in rules:
-        exp = py_apply_one(exp, lhs, rhs)
-    df = spark.createDataFrame([(oov,)], "word string")
-    got = bpe.apply_merges(df, rules).first()["tokens"]
-    assert list(got) == exp
-    # concat identity: tokens re-concatenate to word + EOW
-    assert "".join(got) == oov + bpe.EOW
-
-
 def test_encode_docs_and_fallback(spark):
     _, enc = bpe.train_bpe(_docs(spark, SENNRICH), num_merges=8)
     docs = spark.createDataFrame(

@@ -59,7 +59,7 @@ def rand_vecs():
 def test_kmeans_matches_numpy_reference(spark, rand_vecs):
     df = _emb_df(spark, rand_vecs)
     got = dict(
-        clustering.kmeans_assignments(df, k=4, iters=3)
+        clustering.kmeans_fit(df, k=4, iters=3)[0]
         .orderBy("id").collect()
     )
     want = _numpy_kmeans(rand_vecs, k=4, iters=3)
@@ -69,8 +69,8 @@ def test_kmeans_matches_numpy_reference(spark, rand_vecs):
 
 def test_kmeans_deterministic_across_refits(spark, rand_vecs):
     df = _emb_df(spark, rand_vecs).repartition(5)
-    a = sorted(clustering.kmeans_assignments(df, k=3, iters=2).collect())
-    b = sorted(clustering.kmeans_assignments(df, k=3, iters=2).collect())
+    a = sorted(clustering.kmeans_fit(df, k=3, iters=2)[0].collect())
+    b = sorted(clustering.kmeans_fit(df, k=3, iters=2)[0].collect())
     assert a == b
 
 
@@ -100,11 +100,11 @@ def test_kmeans_gemm_impl_matches_expr(spark, rand_vecs):
     # everywhere, on real data
     df = _emb_df(spark, rand_vecs)
     a = sorted(
-        clustering.kmeans_assignments(df, k=4, iters=3, impl="expr")
+        clustering.kmeans_fit(df, k=4, iters=3, impl="expr")[0]
         .collect()
     )
     b = sorted(
-        clustering.kmeans_assignments(df, k=4, iters=3, impl="gemm")
+        clustering.kmeans_fit(df, k=4, iters=3, impl="gemm")[0]
         .collect()
     )
     assert a == b
@@ -135,7 +135,7 @@ def test_semdedup_keep_rule_is_auditable(spark, rand_vecs):
     V[50:55] = V[0:5] + 1e-3
     V = V / np.linalg.norm(V, axis=1, keepdims=True)
     df = _emb_df(spark, V)
-    assign = clustering.kmeans_assignments(df, k=4, iters=3)
+    assign = clustering.kmeans_fit(df, k=4, iters=3)[0]
     out = clustering.semdedup(df, assign, threshold=0.9).collect()
     by_id = {r["id"]: r for r in out}
     assert len(by_id) == len(V)
@@ -164,7 +164,7 @@ def test_semdedup_keep_rule_is_auditable(spark, rand_vecs):
 
 def test_semdedup_threshold_one_keeps_everything(spark, rand_vecs):
     df = _emb_df(spark, rand_vecs)
-    assign = clustering.kmeans_assignments(df, k=4, iters=2)
+    assign = clustering.kmeans_fit(df, k=4, iters=2)[0]
     out = clustering.semdedup(df, assign, threshold=1.0 + 1e-9)
     assert out.filter(~F.col("keep")).count() == 0
 

@@ -42,13 +42,6 @@ def test_minhash_estimates_jaccard(spark, docs):
     assert agree_12 > agree_13  # near-dup agrees more than unrelated
 
 
-def test_lsh_finds_planted_dupes(spark, docs):
-    pairs = dedup.minhash_dedup_pairs(docs, threshold=0.5).collect()
-    found = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert (1, 4) in found  # exact dup always collides
-    assert (1, 3) not in found
-
-
 def test_simhash_identical_and_hamming(spark, docs):
     fps = dedup.simhash(docs)
     by_id = {r["doc_id"]: r["simhash"] for r in fps.collect()}

@@ -175,15 +175,12 @@ def test_r12_operators_tolerate_empty_corpus(spark):
     assert dedup.bloom_gate_paragraphs(empty_docs, fw2).count() == 0
 
 
-def test_r13_ivf_and_retention_tolerate_degenerate_input(spark, tmp_path):
-    """r13 additions: det-IVF quantized probe with empty queries /
-    empty corpus, apply_retention over an all-retain table."""
+def test_r13_ivf_tolerates_degenerate_input(spark, tmp_path):
+    """r13 addition: det-IVF quantized probe with empty queries /
+    empty corpus."""
     import numpy as np
 
     from rag_database_spark.operators import similarity
-    from rag_database_spark.operators.lifecycle import apply_retention
-    from rag_database_spark.sources.acid import TombstoneTable
-    from pyspark.sql import functions as F
 
     rng = np.random.default_rng(3)
     corpus = spark.createDataFrame(
@@ -220,17 +217,6 @@ def test_r13_ivf_and_retention_tolerate_degenerate_input(spark, tmp_path):
     similarity.write_ivf_index(empty_c, path2)
     cent2, lists2 = similarity.read_ivf_index(spark, path2)
     assert cent2.count() == 0 and lists2.count() == 0
-
-    # retention over a table with nothing to sweep: zero, view intact
-    t = TombstoneTable(spark, str(tmp_path / "docs"), key_col="doc_id")
-    t.append(
-        spark.createDataFrame(
-            [(1, None, False)],
-            "doc_id long, retention_until string, legal_hold boolean",
-        ).withColumn("retention_until", F.to_date("retention_until"))
-    )
-    assert apply_retention(t, as_of="2026-08-15") == 0
-    assert t.read().count() == 1
 
 
 def test_r13_flagged_shuffle_matryoshka_tolerate_empty_input(spark):

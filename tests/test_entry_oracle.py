@@ -13,6 +13,8 @@ import pytest
 import __spark_entry__ as entrymod
 from rag_database_spark.sources.tables import TABLES
 
+from plan_inspect import unmaterialized_rdd_leaves
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -29,22 +31,6 @@ def _normalize(rows, cols):
                 vals.append(str(v))
         out.append(tuple(vals))
     return sorted(out)
-
-
-def unmaterialized_rdd_leaves(df) -> list[str]:
-    """``LogicalRDD`` leaves of the analyzed plan that are not
-    checkpointed: an RDD lineage every scan re-runs, such as a
-    ``createDataFrame(<list>)`` frame whose rows each scan reserializes
-    in Python workers. Driver-local rows belong in ``local_frame``."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    out = []
-    for i in range(leaves.size()):
-        node = leaves.apply(i)
-        if node.nodeName() == "LogicalRDD":
-            rdd = node.rdd()
-            if not (rdd.isCheckpointed() or rdd.isLocallyCheckpointed()):
-                out.append(node.toString())
-    return out
 
 
 @pytest.fixture(scope="module")

@@ -77,10 +77,14 @@ def test_bfs_depth_and_confidence_filter(spark, chain_edges):
     assert got == {2: 1, 3: 2}
 
 
-def test_shortest_chain(chain_edges):
-    assert g.shortest_chain(chain_edges, 1, 4, min_confidence=0.5) == 3
-    assert g.shortest_chain(chain_edges, 1, 4, min_confidence=0.3) == 1
-    assert g.shortest_chain(chain_edges, 1, 99) is None
+def test_shortest_chain(spark, chain_edges):
+    def chain_len(src, dst, **kw):
+        pairs = spark.createDataFrame([(src, dst)], "src long, dst long")
+        return g.shortest_chains(chain_edges, pairs, **kw).first()["chain_len"]
+
+    assert chain_len(1, 4, min_confidence=0.5) == 3
+    assert chain_len(1, 4, min_confidence=0.3) == 1
+    assert chain_len(1, 99) is None
 
 
 def test_shortest_chains_hub_skew(spark):

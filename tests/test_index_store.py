@@ -1,13 +1,9 @@
-"""Persisted-index layouts (S7) and tenant-partitioned sink semantics
-(S12 dynamic partition overwrite)."""
+"""Persisted-index layouts (S7): write/read round trips and appends
+that equal a full rebuild."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from rag_database_spark.operators import bm25 as bm25_ops
-from rag_database_spark.sources.tables import write_partitioned
 
 DOCS = [
     (0, "fast hash join beats sort merge join"),
@@ -143,583 +139,3 @@ def test_append_ivf_index_assigns_like_kmeans(spark, tmp_path):
     )
     top = similarity.ivf_topk_indexed(q, centroids, lists, 3).collect()
     assert top[0]["id"] == batch_rows[0][0]
-
-
-def test_bucketed_index_join_is_exchange_free(spark):
-    # warehouse dir is a static conf set by session.get_spark (.cache/)
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    bm25_ops.write_index_bucketed(docs, "t_idx", n_buckets=4)
-    postings, doclens = bm25_ops.read_index_bucketed(spark, "t_idx")
-
-    # same values as the direct build
-    direct = bm25_ops.build_postings(docs).collect()
-    assert sorted(map(tuple, postings.collect())) == sorted(map(tuple, direct))
-
-    # an aggregation keyed on the bucket column runs WITHOUT an exchange
-    # on the postings side (bucketing pre-partitions by term)
-    agg_plan = (
-        postings.groupBy("term")
-        .count()
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in agg_plan
-    # the same aggregation over unbucketed postings DOES shuffle
-    plain_plan = (
-        bm25_ops.build_postings(docs)
-        .groupBy("term")
-        .count()
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" in plain_plan
-
-
-def test_dynamic_partition_overwrite_is_idempotent(spark, tmp_path):
-    path = str(tmp_path / "tenants")
-    v1 = spark.createDataFrame(
-        [(1, "a", "org0"), (2, "b", "org1")],
-        "doc_id long, text string, organization_id string",
-    )
-    write_partitioned(v1, path)
-    # re-ingest ONLY org1 with new content; org0 must survive untouched
-    v2 = spark.createDataFrame(
-        [(2, "b-v2", "org1"), (3, "c", "org1")],
-        "doc_id long, text string, organization_id string",
-    )
-    write_partitioned(v2, path)
-    got = {
-        (r["doc_id"], r["text"], r["organization_id"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {(1, "a", "org0"), (2, "b-v2", "org1"), (3, "c", "org1")}
-
-
-def _gate_two_batches(spark, tmp_path):
-    """Run two vector-gate micro-batches; return the index path and
-    the expected standing rows."""
-    from rag_database_spark.streaming import events as se
-
-    accept = str(tmp_path / "c_accept")
-    quar = str(tmp_path / "c_quar")
-    index = str(tmp_path / "c_index")
-
-    def vecs(rows):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in rows],
-            "vec_id long, embedding array<float>",
-        )
-
-    se.vector_gate_batch(
-        vecs([(1, [1.0, 0.0]), (2, [0.0, 1.0])]), 0,
-        accept, quar, index, threshold=0.95,
-    )
-    se.vector_gate_batch(
-        vecs([(10, [0.999, 0.02]), (11, [0.5, -0.5])]), 1,
-        accept, quar, index, threshold=0.95,
-    )
-    return index, {1, 2, 11}  # 10 quarantined
-
-
-def test_compact_slices_preserves_rows_and_flattens(spark, tmp_path):
-    from rag_database_spark.operators import dedup as dd
-
-    index, want = _gate_two_batches(spark, tmp_path)
-    before = sorted(
-        (r["vec_id"], tuple(r["embedding"]))
-        for r in dd._read_slices(spark, index).collect()
-    )
-    assert {t[0] for t in before} == want
-
-    dd.compact_slices(spark, index)
-    import os
-
-    assert os.path.exists(os.path.join(index, "_SUCCESS"))  # flat now
-    # every slice folded EXCEPT the latest (batch 1) — the one dir an
-    # at-least-once replay can still dynamic-overwrite idempotently
-    dirs = sorted(
-        n for n in os.listdir(index) if n.startswith("ingest_batch=")
-    )
-    assert dirs == ["ingest_batch=1"]
-    after = sorted(
-        (r["vec_id"], tuple(r["embedding"]))
-        for r in dd._read_slices(spark, index).collect()
-    )
-    assert after == before
-
-    # a post-compaction batch leaves the documented MIXED layout and
-    # the reader still unions both halves
-    from rag_database_spark.streaming import events as se
-
-    se.vector_gate_batch(
-        spark.createDataFrame(
-            [(20, [0.0, -1.0])], "vec_id long, embedding array<float>"
-        ),
-        2, str(tmp_path / "c_accept"), str(tmp_path / "c_quar"),
-        index, threshold=0.95,
-    )
-    ids = {r["vec_id"] for r in dd._read_slices(spark, index).collect()}
-    assert ids == want | {20}
-
-
-def test_heal_slices_rolls_forward_and_back(spark, tmp_path):
-    import shutil
-    from pathlib import Path
-
-    from rag_database_spark.operators import dedup as dd
-
-    index, want = _gate_two_batches(spark, tmp_path)
-    root = Path(index)
-    staging = root.parent / (root.name + "__staging")
-    old = root.parent / (root.name + "__old")
-
-    # crash AFTER staging completed and root was renamed away:
-    # heal must roll FORWARD to the compacted base
-    rows = dd._read_slices(spark, index)
-    rows.write.mode("overwrite").parquet(str(staging))
-    root.rename(old)
-    dd.heal_slices(index)
-    assert root.exists() and not staging.exists() and not old.exists()
-    got = {r["vec_id"] for r in dd._read_slices(spark, index).collect()}
-    assert got == want
-
-    # crash BEFORE staging completed (no _SUCCESS): roll BACK to old
-    (root.parent / "incomplete").mkdir()
-    root.rename(old)
-    shutil.copytree(root.parent / "incomplete", staging)
-    dd.heal_slices(index)
-    assert root.exists() and not staging.exists()
-    got = {r["vec_id"] for r in dd._read_slices(spark, index).collect()}
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# streaming Bloom gate (r12)
-# ---------------------------------------------------------------------------
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _bloom_two_batches(spark, tmp_path):
-    from rag_database_spark.streaming import events as se
-
-    accept = str(tmp_path / "b_accept")
-    quar = str(tmp_path / "b_quar")
-    index = str(tmp_path / "b_index")
-    se.bloom_gate_batch(
-        _docs(spark, [(1, "the quick brown fox jumps over the dog"),
-                      (2, "totally different second document body")]),
-        0, accept, quar, index,
-    )
-    se.bloom_gate_batch(
-        _docs(spark, [(10, "The QUICK brown fox, jumps over the dog!"),
-                      (11, "a genuinely fresh third document xyzzy")]),
-        1, accept, quar, index,
-    )
-    return accept, quar, index
-
-
-def test_bloom_gate_batches_quarantine_and_learn(spark, tmp_path):
-    from rag_database_spark.operators import dedup as dd
-    from rag_database_spark.streaming import events as se
-
-    accept, quar, index = _bloom_two_batches(spark, tmp_path)
-    acc_ids = {r["doc_id"] for r in dd._read_slices(spark, accept).collect()}
-    assert acc_ids == {1, 2, 11}  # 10 is a dup of 1 modulo normalization
-    q = dd._read_slices(spark, quar).collect()
-    assert {r["doc_id"] for r in q} == {10}
-    assert q[0]["n_hits"] == dd.BLOOM_K
-
-    # batch 2 gates against batch 1's ACCEPTED doc too (the gate learns)
-    se.bloom_gate_batch(
-        _docs(spark, [(20, "a genuinely fresh third document xyzzy")]),
-        2, accept, quar, index,
-    )
-    q2 = {r["doc_id"] for r in dd._read_slices(spark, quar).collect()}
-    assert q2 == {10, 20}
-
-
-def test_bloom_gate_replay_is_idempotent(spark, tmp_path):
-    from rag_database_spark.operators import dedup as dd
-    from rag_database_spark.streaming import events as se
-
-    accept, quar, index = _bloom_two_batches(spark, tmp_path)
-
-    def snapshot():
-        return (
-            sorted(map(tuple, dd._read_slices(spark, accept).collect())),
-            sorted(map(tuple, dd._read_slices(spark, quar).collect())),
-            sorted(map(tuple, dd._read_slices(spark, index).collect())),
-        )
-
-    before = snapshot()
-    # at-least-once replay of batch 1: must not self-match (own slice
-    # excluded from the probe) nor double-append
-    se.bloom_gate_batch(
-        _docs(spark, [(10, "The QUICK brown fox, jumps over the dog!"),
-                      (11, "a genuinely fresh third document xyzzy")]),
-        1, accept, quar, index,
-    )
-    assert snapshot() == before
-
-
-def test_bloom_gate_survives_index_compaction(spark, tmp_path):
-    """compact_slices folds the bitmap slices flat (ingest_batch kept
-    as a column); the next batch still probes the merged filter and a
-    replay of a PRE-compaction batch still excludes its own rows."""
-    from rag_database_spark.operators import dedup as dd
-    from rag_database_spark.streaming import events as se
-
-    accept, quar, index = _bloom_two_batches(spark, tmp_path)
-    dd.compact_slices(spark, index)
-
-    # replay of pre-compaction batch 1 stays idempotent post-compaction
-    before_q = sorted(
-        map(tuple, dd._read_slices(spark, quar).collect())
-    )
-    se.bloom_gate_batch(
-        _docs(spark, [(10, "The QUICK brown fox, jumps over the dog!"),
-                      (11, "a genuinely fresh third document xyzzy")]),
-        1, accept, quar, index,
-    )
-    assert sorted(map(tuple, dd._read_slices(spark, quar).collect())) == before_q
-
-    # and a new batch still gates against everything accepted so far
-    se.bloom_gate_batch(
-        _docs(spark, [(30, "totally different second document body"),
-                      (31, "never seen before content abcde")]),
-        3, accept, quar, index,
-    )
-    assert {r["doc_id"] for r in dd._read_slices(spark, quar).collect()} >= {10, 30}
-    acc_ids = {r["doc_id"] for r in dd._read_slices(spark, accept).collect()}
-    assert 31 in acc_ids and 30 not in acc_ids
-
-
-def test_remove_from_index_equals_rebuild(spark, tmp_path):
-    """Tombstoned deletes: after remove_from_index, read_index serves
-    EXACTLY what write_index over the surviving corpus would —
-    including the recomputed corpus stats (N, avgdl, df) inside the
-    BM25 scores — and replaying the same delete changes nothing."""
-    from rag_database_spark.workload import queries_df
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    path = str(tmp_path / "idx_del")
-    bm25_ops.write_index(docs, path)
-    bm25_ops.remove_from_index(spark, path, [1])
-
-    postings, doclens = bm25_ops.read_index(spark, path)
-    survivors = docs.filter(F.col("doc_id") != 1)
-    rebuilt_p = bm25_ops.build_postings(survivors)
-    rebuilt_d = bm25_ops.build_doclens(survivors)
-    assert sorted(map(tuple, postings.collect())) == sorted(
-        map(tuple, rebuilt_p.collect())
-    )
-    assert sorted(map(tuple, doclens.collect())) == sorted(
-        map(tuple, rebuilt_d.collect())
-    )
-
-    # scores after delete == scores of a fresh index over survivors
-    q = queries_df(spark)
-    got = bm25_ops.score_queries(q, postings, doclens).collect()
-    want = bm25_ops.score_queries(q, rebuilt_p, rebuilt_d).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-    # replaying the identical delete is a no-op (anti-join semantics)
-    bm25_ops.remove_from_index(spark, path, [1])
-    p2, d2 = bm25_ops.read_index(spark, path)
-    assert sorted(map(tuple, p2.collect())) == sorted(
-        map(tuple, postings.collect())
-    )
-    assert d2.count() == doclens.count()
-
-    # an untouched index root still reads cleanly (no tombstone dir)
-    path2 = str(tmp_path / "idx_plain")
-    bm25_ops.write_index(docs, path2)
-    p3, _ = bm25_ops.read_index(spark, path2)
-    assert p3.count() == bm25_ops.build_postings(docs).count()
-
-
-def test_remove_from_ivf_index_frozen_geometry(spark, tmp_path):
-    """Vector deletes under frozen centroids: deleted ids stop
-    appearing, surviving rows score exactly as before the delete, and
-    replaying the delete is a no-op."""
-    import numpy as np
-
-    from rag_database_spark.operators.similarity import (
-        ivf_topk_indexed,
-        read_ivf_index,
-        remove_from_ivf_index,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(31)
-    centers = rng.normal(size=(4, 12)) * 5
-    rows = [
-        (i, (centers[i % 4] + rng.normal(scale=0.3, size=12)).tolist())
-        for i in range(80)
-    ]
-    corpus = spark.createDataFrame(rows, "id long, vec array<double>")
-    queries = spark.createDataFrame(
-        [(qi, rows[qi][1]) for qi in range(4)],
-        "query_id long, qvec array<double>",
-    )
-    path = str(tmp_path / "ivf_del")
-    write_ivf_index(corpus, path, n_centroids=4)
-
-    cents, lists = read_ivf_index(spark, path)
-    before = {(r["query_id"], r["id"]): r["score"]
-              for r in ivf_topk_indexed(queries, cents, lists, 10,
-                                        n_probe=2).collect()}
-    dead = {0, 5, 17}
-    remove_from_ivf_index(spark, path, sorted(dead))
-    cents2, lists2 = read_ivf_index(spark, path)
-    after = {(r["query_id"], r["id"]): r["score"]
-             for r in ivf_topk_indexed(queries, cents2, lists2, 10,
-                                       n_probe=2).collect()}
-    assert not any(i in dead for (_, i) in after)
-    # survivors that were in the old top-k keep their exact score
-    for key, s in after.items():
-        if key in before:
-            assert before[key] == s
-    # replay: same tombstones again, identical result
-    remove_from_ivf_index(spark, path, sorted(dead))
-    _, lists3 = read_ivf_index(spark, path)
-    assert lists3.count() == lists2.count()
-
-
-def test_remove_from_ivfpq_index_drops_only_dead_codes(spark, tmp_path):
-    """IVF-PQ deletes: tombstoned ids vanish from the coded lists,
-    codebooks/centroids are untouched, survivors' ADC ranks hold."""
-    import numpy as np
-
-    from rag_database_spark.operators.pq import (
-        ivfpq_topk,
-        read_ivfpq_index,
-        remove_from_ivfpq_index,
-        write_ivfpq_index,
-    )
-
-    rng = np.random.default_rng(37)
-    rows = [(i, rng.normal(size=16).tolist()) for i in range(60)]
-    corpus = spark.createDataFrame(rows, "id long, vec array<double>")
-    queries = spark.createDataFrame(
-        [(0, rows[7][1])], "query_id long, qvec array<double>"
-    )
-    path = str(tmp_path / "ivfpq_del")
-    write_ivfpq_index(corpus, path, dim=16)
-
-    c1, cb1, l1 = read_ivfpq_index(spark, path)
-    n_lists = l1.count()
-    remove_from_ivfpq_index(spark, path, [7, 8])
-    c2, cb2, l2 = read_ivfpq_index(spark, path)
-    assert l2.count() == n_lists - 2
-    assert sorted(map(tuple, cb2.collect())) == sorted(map(tuple, cb1.collect()))
-    got = ivfpq_topk(queries, c2, cb2, l2, 5, dim=16,
-                     n_probe=c2.count()).collect()
-    assert got and all(r["id"] not in (7, 8) for r in got)
-
-
-def test_delete_cascade_reaches_persisted_indexes(spark, tmp_path):
-    """The reference's S13 delete removes a document from ALL three
-    stores (ES + Qdrant + Postgres). The engine's composition:
-    delete_document_cascade anti-joins the tables, and the same id
-    list tombstones the persisted BM25 and IVF artifacts — after
-    which a BM25 query and an indexed ANN probe both exclude the
-    document with no rebuild."""
-    from rag_database_spark.operators import lifecycle
-    from rag_database_spark.operators.similarity import (
-        ivf_topk_indexed,
-        read_ivf_index,
-        remove_from_ivf_index,
-        write_ivf_index,
-    )
-    from rag_database_spark.workload import queries_df
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    vecs = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(8)]) for i in range(3)],
-        "id long, vec array<double>",
-    )
-    dead = spark.createDataFrame([(0,)], ["doc_id"])
-
-    # tables: one anti-join each
-    out = lifecycle.delete_document_cascade(
-        {"documents": docs, "embeddings": vecs},
-        dead,
-        {"documents": "doc_id", "embeddings": "id"},
-    )
-    assert out["documents"].filter(F.col("doc_id") == 0).count() == 0
-    assert out["embeddings"].filter(F.col("id") == 0).count() == 0
-
-    # BM25 artifact: tombstone, then query — doc 0 gone from results
-    bpath = str(tmp_path / "bm25_del")
-    bm25_ops.write_index(docs, bpath)
-    bm25_ops.remove_from_index(spark, bpath, [0])
-    postings, doclens = bm25_ops.read_index(spark, bpath)
-    hits = bm25_ops.score_queries(
-        queries_df(spark), postings, doclens
-    ).collect()
-    assert all(r["doc_id"] != 0 for r in hits)
-
-    # IVF artifact: tombstone, then probe — vector 0 unservable
-    vpath = str(tmp_path / "ivf_cascade")
-    write_ivf_index(vecs, vpath, n_centroids=2)
-    remove_from_ivf_index(spark, vpath, [0])
-    cents, lists = read_ivf_index(spark, vpath)
-    q = spark.createDataFrame(
-        [(0, [1.0] + [0.0] * 7)], "query_id long, qvec array<double>"
-    )
-    got = ivf_topk_indexed(q, cents, lists, 3, n_probe=2).collect()
-    assert got and all(r["id"] != 0 for r in got)
-
-
-def test_compact_index_applies_tombstones_and_heals(spark, tmp_path):
-    """Physical reclamation: compact_index rewrites the filtered
-    tables (tombstone dir gone, same rows as the merge-on-read view),
-    and a crash between the two swap renames heals forward from a
-    complete staging root."""
-    import os
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    path = str(tmp_path / "idx_compact")
-    bm25_ops.write_index(docs, path)
-    bm25_ops.remove_from_index(spark, path, [2])
-    before = sorted(map(tuple, bm25_ops.read_index(spark, path)[0].collect()))
-
-    bm25_ops.compact_index(spark, path)
-    assert not os.path.exists(f"{path}/tombstones")
-    after_p, after_d = bm25_ops.read_index(spark, path)
-    assert sorted(map(tuple, after_p.collect())) == before
-    assert after_d.filter(F.col("doc_id") == 2).count() == 0
-
-    # simulate a crash AFTER root->old but BEFORE staging->root:
-    # build a complete staging, move root away — heal must roll forward
-    bm25_ops.remove_from_index(spark, path, [1])
-    p2, d2 = bm25_ops.read_index(spark, path)
-    p2.write.mode("overwrite").parquet(f"{path}__staging/postings")
-    d2.write.mode("overwrite").parquet(f"{path}__staging/doclens")
-    os.rename(path, f"{path}__old")
-    bm25_ops.heal_index(spark, path)
-    assert os.path.exists(f"{path}/postings") and not os.path.exists(
-        f"{path}__staging"
-    )
-    healed_p, _ = bm25_ops.read_index(spark, path)
-    assert healed_p.filter(F.col("doc_id") == 1).count() == 0
-
-
-def test_append_tombstones_column_contract(spark, tmp_path):
-    """A DataFrame argument selects by id_col when present (any column
-    order), accepts a single differently-named column, and REFUSES a
-    multi-column frame without id_col — tombstoning whichever column
-    happened to be first would delete the wrong rows silently."""
-    from rag_database_spark.sources.tables import (
-        append_tombstones,
-        read_tombstones,
-    )
-
-    root = str(tmp_path / "idx")
-    # id_col present but NOT first: must pick doc_id, not score
-    df = spark.createDataFrame(
-        [(9.5, 1), (3.5, 2)], "score double, doc_id long"
-    )
-    append_tombstones(spark, root, df)
-    got = {r["doc_id"] for r in read_tombstones(spark, root).collect()}
-    assert got == {1, 2}
-
-    # single-column frame under another name: taken as the ids
-    one = spark.createDataFrame([(7,)], "vec_id long")
-    append_tombstones(spark, root, one)
-    got = {r["doc_id"] for r in read_tombstones(spark, root).collect()}
-    assert got == {1, 2, 7}
-
-    # multi-column frame without id_col: loud failure
-    bad = spark.createDataFrame([(1.0, 5)], "score double, other long")
-    with pytest.raises(ValueError, match="doc_id"):
-        append_tombstones(spark, root, bad)
-
-
-def test_heal_index_sentinel_forward_without_success(spark, tmp_path):
-    """marksuccessfuljobs=false simulation (r13 ADVICE #5): a staging
-    root stripped of every committer ``_SUCCESS`` marker but carrying
-    the compactor's explicit ``STAGING_SENTINEL`` must heal FORWARD —
-    the completed compaction is not silently rolled back and redone."""
-    import os
-
-    from rag_database_spark.operators import dedup as dd
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    path = str(tmp_path / "idx_nosuccess")
-    bm25_ops.write_index(docs, path)
-    bm25_ops.remove_from_index(spark, path, [2])
-    p2, d2 = bm25_ops.read_index(spark, path)
-    p2.write.mode("overwrite").parquet(f"{path}__staging/postings")
-    d2.write.mode("overwrite").parquet(f"{path}__staging/doclens")
-    # the disabled committer: no _SUCCESS anywhere under staging
-    for sub in ("postings", "doclens"):
-        os.remove(f"{path}__staging/{sub}/_SUCCESS")
-    # what compact_index writes after both staging writes return
-    open(f"{path}__staging/{dd.STAGING_SENTINEL}", "w").close()
-    os.rename(path, f"{path}__old")
-
-    bm25_ops.heal_index(spark, path)
-    assert os.path.exists(f"{path}/postings")
-    assert not os.path.exists(f"{path}__staging")
-    assert not os.path.exists(f"{path}__old")
-    # the swap must not leak the sentinel into the live root
-    assert not os.path.exists(f"{path}/{dd.STAGING_SENTINEL}")
-    healed_p, _ = bm25_ops.read_index(spark, path)
-    assert healed_p.filter(F.col("doc_id") == 2).count() == 0
-
-    # same staging WITHOUT the sentinel and without _SUCCESS: still
-    # rolls BACK (incomplete staging is never trusted)
-    bm25_ops.remove_from_index(spark, path, [1])
-    p3, d3 = bm25_ops.read_index(spark, path)
-    p3.write.mode("overwrite").parquet(f"{path}__staging/postings")
-    d3.write.mode("overwrite").parquet(f"{path}__staging/doclens")
-    for sub in ("postings", "doclens"):
-        os.remove(f"{path}__staging/{sub}/_SUCCESS")
-    os.rename(path, f"{path}__old")
-    bm25_ops.heal_index(spark, path)
-    assert os.path.exists(f"{path}/postings")
-    assert not os.path.exists(f"{path}__staging")
-    # rolled back to old: doc 1 still served (tombstone dir intact)
-    rolled_p, _ = bm25_ops.read_index(spark, path)
-    assert rolled_p.filter(F.col("doc_id") == 1).count() == 0  # tombstoned
-    assert os.path.exists(f"{path}/tombstones")
-
-
-def test_heal_slices_sentinel_forward_without_success(spark, tmp_path):
-    """Slice-store twin of the sentinel test: heal_slices rolls a
-    sentinel-complete staging forward even when the committer marker
-    is disabled, and compact_slices leaves no sentinel in the root."""
-    import os
-    from pathlib import Path
-
-    from rag_database_spark.operators import dedup as dd
-
-    index, want = _gate_two_batches(spark, tmp_path)
-    root = Path(index)
-    staging = root.parent / (root.name + "__staging")
-    old = root.parent / (root.name + "__old")
-
-    rows = dd._read_slices(spark, index)
-    rows.write.mode("overwrite").parquet(str(staging))
-    os.remove(staging / "_SUCCESS")  # marksuccessfuljobs=false
-    open(staging / dd.STAGING_SENTINEL, "w").close()
-    root.rename(old)
-
-    dd.heal_slices(index)
-    assert root.exists() and not staging.exists() and not old.exists()
-    assert not (root / dd.STAGING_SENTINEL).exists()
-    got = {r["vec_id"] for r in dd._read_slices(spark, index).collect()}
-    assert got == want
-
-    # the real compactor writes AND cleans up the sentinel itself
-    dd.compact_slices(spark, index)
-    assert not (root / dd.STAGING_SENTINEL).exists()
-    got = {r["vec_id"] for r in dd._read_slices(spark, index).collect()}
-    assert got == want

@@ -1,5 +1,6 @@
-"""Ingestion sources S1-S6 (binaryFile scan + parse seam), W5 overlap
-dedup, U3 related ids, U4 search-term expansion."""
+"""Ingestion sources S1/S2/S4 (parse and render seams over a
+binaryFile scan), W5 overlap dedup, U3 related ids, U4 search-term
+expansion."""
 
 from __future__ import annotations
 
@@ -32,14 +33,8 @@ def files_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def test_scan_directory_glob_and_recursion(spark, files_dir):
-    files = ingest.scan_directory(spark, files_dir, "*.txt")
-    paths = sorted(r["path"].rsplit("/", 1)[-1] for r in files.collect())
-    assert paths == ["other.txt", "report.txt"]  # .bin filtered by glob
-
-
 def test_parse_emits_typed_elements(spark, files_dir):
-    files = ingest.scan_directory(spark, files_dir, "report.txt")
+    files = spark.read.format("binaryFile").load(f"{files_dir}/report.txt")
     els = ingest.parse_documents(files).orderBy("element_index").collect()
     cats = [e["category"] for e in els]
     assert cats == ["Title", "NarrativeText", "Table", "NarrativeText"]
@@ -48,22 +43,13 @@ def test_parse_emits_typed_elements(spark, files_dir):
     assert len(els[0]["document_id"].split("_")[-1]) == 12  # md5[:12]
 
 
-def test_visual_elements_filter(spark, files_dir):
-    files = ingest.scan_directory(spark, files_dir, "report.txt")
-    vis = ingest.visual_elements(ingest.parse_documents(files)).collect()
-    assert len(vis) == 1 and vis[0]["category"] == "Table"
-    assert vis[0]["element_id"].endswith("_vis_2")
-
-
-def test_full_text_roundtrip(spark, files_dir):
-    files = ingest.scan_directory(spark, files_dir, "report.txt")
-    ft = ingest.full_text(ingest.parse_documents(files)).first()["text"]
-    assert ft.startswith("QUARTERLY REPORT")
-    assert "Costs were contained." in ft
-
-
 def test_page_images_stub(spark, files_dir):
-    files = ingest.scan_directory(spark, files_dir, "*.txt")
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.txt")
+        .option("recursiveFileLookup", "true")
+        .load(files_dir)
+    )
     pages = ingest.page_images_stub(files).collect()
     assert all(p["width"] == 612 and len(p["image"]) == 16 for p in pages)
 
@@ -105,65 +91,3 @@ def test_search_terms_expansion(spark):
     assert "Non-Disclosure Agreement" in terms
 
 
-def test_parse_sheets(spark, tmp_path):
-    d = tmp_path / "sheets"
-    d.mkdir()
-    (d / "revenue.csv").write_text('quarter,amount\nQ1,"1,200"\nQ2,900\n')
-    (d / "costs.csv").write_text("month,cost\nJan,10\n")
-    files = ingest.scan_directory(spark, str(d), "*.csv")
-    rows = ingest.parse_sheets(files).collect()
-    by_sheet = {}
-    for r in rows:
-        by_sheet.setdefault(r["sheet"], []).append((r["row_idx"], r["cells"]))
-    assert sorted(by_sheet) == ["costs", "revenue"]
-    rev = dict(by_sheet["revenue"])
-    assert rev[0] == ["quarter", "amount"]
-    assert rev[1] == ["Q1", "1,200"]  # quoted comma survives csv parsing
-    assert len(by_sheet["costs"]) == 2
-
-
-def test_jsonl_roundtrip_and_corrupt_quarantine(spark, tmp_path):
-    d = str(tmp_path / "docs.jsonl")
-    (tmp_path / "src").mkdir()
-    raw = tmp_path / "src" / "part.jsonl"
-    raw.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", '
-        '"source": "s", "n_chars": 11}\n'
-        "this line is not json at all\n"
-        '{"doc_id": 2, "text": "two", "lang": "en", "source": "s", '
-        '"n_chars": 3}\n'
-    )
-    # Spark disallows querying only the corrupt column straight off a
-    # raw JSON scan — materialize first (the documented workaround)
-    df = ingest.read_jsonl_documents(spark, str(tmp_path / "src")).cache()
-    df.count()
-    good = df.filter("_corrupt IS NULL")
-    bad = df.filter("_corrupt IS NOT NULL")
-    assert sorted(r["doc_id"] for r in good.collect()) == [1, 2]
-    assert bad.count() == 1
-
-    ingest.write_jsonl_documents(good.drop("_corrupt"), d)
-    back = ingest.read_jsonl_documents(spark, d).cache()
-    back.count()
-    assert back.filter("_corrupt IS NULL").count() == 2
-
-
-def test_csv_roundtrip_with_hostile_text(spark, tmp_path):
-    """CSV round-trip preserves embedded commas, quotes and newlines
-    (RFC-4180 quoting both ways); corrupt rows quarantine instead of
-    failing the read."""
-    docs = spark.createDataFrame(
-        [
-            (1, 'has,commas, and "quotes" inside', "en", "s1", 31),
-            (2, "line one\nline two\nline three", "en", "s2", 27),
-            (3, 'trailing backslash \\ and ""double""', "de", "s1", 34),
-        ],
-        ingest.DOCUMENT_SCHEMA,
-    )
-    d = str(tmp_path / "docs_csv")
-    ingest.write_csv_documents(docs, d)
-    back = ingest.read_csv_documents(spark, d).cache()
-    assert back.filter(F.col("_corrupt").isNotNull()).count() == 0
-    a = sorted(map(tuple, docs.collect()))
-    b = sorted(map(tuple, back.drop("_corrupt").collect()))
-    assert a == b

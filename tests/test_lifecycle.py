@@ -6,6 +6,8 @@ import pytest
 
 from rag_database_spark.operators import lifecycle
 
+from plan_inspect import executed_plan
+
 
 def test_delete_by_ids(spark):
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, v string")
@@ -87,7 +89,7 @@ def test_rerank_candidate_lineage_appears_once(spark):
     out = lifecycle.lexical_overlap_rerank(
         cands, queries, docs, limit=2, id_col="doc_id"
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     lines = plan.splitlines()
     # the candidate scan and its marker filter (`(id#NL >= 0)`) each
     # appear exactly once; the queries fixture is also an ExistingRDD,

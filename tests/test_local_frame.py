@@ -18,10 +18,7 @@ from rag_database_spark.operators import (
 )
 from rag_database_spark.sources.tables import local_frame
 
-
-def leaf_names(df) -> list[str]:
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+from plan_inspect import leaf_names
 
 
 def test_local_frame_is_local_relation_with_ddl_schema(spark):

@@ -96,24 +96,12 @@ def test_driver_window_composition_is_pinned():
     oracled = set(entrymod.oracle_sql())
     rows_only = set(entrymod.ROWS_ONLY_ENTRIES)
 
-    # Certifying-rows-only exception (r12 precedent: a NEW rows-only
-    # entry sits in-window for ONE round so the driver records its
-    # rows check, then rotates to the tail): r17 certifies the sketch
-    # entry events_profile_approx (rows-only by design — sketch
-    # estimates are engine-implementation-defined; accuracy is pinned
-    # vs the exact twin in tests/test_sketches.py). Rotate it out in
-    # r18 and empty this set again.
-    certifying_rows_only: set[str] = {"events_profile_approx"}
-
-    not_oracled = [
-        k for k in head
-        if k not in oracled and k not in certifying_rows_only
-    ]
+    not_oracled = [k for k in head if k not in oracled]
     assert not not_oracled, (
         f"non-oracle entries inside the driver's {DRIVER_WINDOW}-entry "
         f"window (move to the tail): {not_oracled}"
     )
-    in_head = (rows_only & set(head)) - certifying_rows_only
+    in_head = rows_only & set(head)
     assert not in_head, f"rows-only entries occupying verified slots: {in_head}"
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from rag_database_spark.operators.packing import pack_sequences, packing_stats
+from rag_database_spark.operators.packing import pack_sequences
 from rag_database_spark.operators.text_analytics import decontaminate
 
 
@@ -57,15 +57,6 @@ def test_pack_bin_spans(spark, docs):
     assert out[2]["n_tokens"] == 0
     assert out[2]["first_bin"] == out[2]["last_bin"]
     assert not out[2]["spans_boundary"]
-
-
-def test_packing_stats_rollup(spark, docs):
-    stats = {r["shard"]: r for r in packing_stats(docs, budget=8, n_shards=4).collect()}
-    assert stats[0]["n_docs"] == 3
-    assert stats[0]["n_tokens"] == 10
-    assert stats[0]["n_full_rows"] == 1      # 10 tokens / budget 8
-    assert stats[0]["tail_fill"] == pytest.approx(2 / 8)
-    assert stats[1]["n_spanning"] == 1
 
 
 def test_decontaminate_flags_overlap(spark):

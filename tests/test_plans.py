@@ -6,23 +6,15 @@ and hot projections stay inside whole-stage codegen."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from plan_inspect import plan_of
 from rag_database_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def plan_of(df, mode="formatted") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
 
 
 def test_filter_pushdown_and_column_pruning(spark):
@@ -90,29 +82,6 @@ def test_dup_ngram_rollup_partial_aggregates(spark):
     df = dup_ngram_fraction(load_table(spark, SF_DIR, "documents"))
     p = plan_of(df)
     assert "partial_count" in p
-
-
-def test_date_partitioned_layout_prunes(spark, tmp_path):
-    """Hive-layout day partitioning: a day-equality filter must become
-    a PartitionFilter (scan touches one directory), not a data filter
-    over every file — the difference between reading one day and
-    reading 100 TB."""
-    from rag_database_spark.sources.tables import write_partitioned
-
-    events = load_table(spark, SF_DIR, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    root = str(tmp_path / "events_by_day")
-    write_partitioned(events, root, partition_cols=("day",))
-
-    day = events.select(F.min("day").alias("d")).collect()[0]["d"]
-    back = spark.read.parquet(root).filter(F.col("day") == F.lit(day))
-    p = plan_of(back)
-    assert "PartitionFilters" in p
-    assert f"(day = {day})" in p or "isnotnull(day" in p
-    # correctness of the pruned read
-    expected = events.filter(F.col("day") == F.lit(day)).count()
-    assert back.count() == expected and expected > 0
 
 
 def test_ivf_probe_scan_is_partition_pruned(spark, tmp_path):

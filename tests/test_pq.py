@@ -24,6 +24,12 @@ def _corpus(spark, n=60, dim=16, seed=5, normalize=False):
     return rows, spark.createDataFrame(rows, "id long, vec array<double>")
 
 
+def _pq_topk(queries, corpus, k, dim, m, n_codes):
+    """Fit the codebooks in memory and query them (no persisted index)."""
+    codebooks, codes = pq.pq_fit(corpus, dim, m, n_codes)
+    return pq.pq_topk_indexed(queries, codebooks, codes, k, dim, m)
+
+
 def test_pq_codes_are_per_slice_kmeans_assignments(spark):
     """pq_fit's code columns must equal an independent kmeans_fit over
     each slice — the PQ build is exactly M deterministic sub-fits."""
@@ -101,15 +107,15 @@ def test_pq_topk_recall_vs_brute_force(spark):
     )
     exact = cosine_topk(queries, corpus, 10).collect()
     # production code width: 4-bit codebooks (PQ_K=16) per subspace
-    shortlist = pq.pq_topk(queries, corpus, 30, dim=16, m=4,
-                           n_codes=16).collect()
+    shortlist = _pq_topk(queries, corpus, 30, dim=16, m=4,
+                         n_codes=16).collect()
     key = lambda rs: {(r["query_id"], r["id"]) for r in rs}
     recall = len(key(exact) & key(shortlist)) / len(key(exact))
     assert recall >= 0.8, recall
     # deterministic and partition-invariant
     again = sorted(
         (r["query_id"], r["id"], r["rank"])
-        for r in pq.pq_topk(
+        for r in _pq_topk(
             queries.repartition(5), corpus.repartition(11), 30, dim=16,
             m=4, n_codes=16,
         ).collect()
@@ -159,7 +165,7 @@ def test_ivfpq_full_probe_equals_flat_pq(spark, tmp_path):
         ).collect())
     )
     flat = sorted(
-        map(tuple, pq.pq_topk(
+        map(tuple, _pq_topk(
             queries, corpus, 10, dim=16, m=4, n_codes=4
         ).collect())
     )
@@ -208,57 +214,3 @@ def test_ivfpq_empty_inputs(spark, tmp_path):
     assert out.columns == ["query_id", "id", "adc_dist", "rank"]
 
 
-def test_append_ivfpq_assigns_and_encodes_like_frozen_artifacts(
-    spark, tmp_path
-):
-    """Appended vectors must land in the coarse list AND carry the PQ
-    codes a frozen-artifact re-derivation chooses (numpy argmin in the
-    quantized frame for both layers), and the probe must serve them."""
-    rows, corpus = _corpus(spark, n=60, dim=16, seed=31)
-    path = str(tmp_path / "ivfpq_app")
-    pq.write_ivfpq_index(corpus, path, dim=16, n_centroids=3, m=4, k=4)
-    batch_rows, batch = _corpus(spark, n=10, dim=16, seed=32)
-    batch = batch.select(
-        (F.col("id") + 100).alias("id"), "vec"
-    )
-    pq.append_ivfpq_index(batch, path, dim=16, m=4)
-
-    centroids, codebooks, lists = pq.read_ivfpq_index(spark, path)
-    ctr = {
-        r["centroid_id"]: np.array(r["cvec"]) for r in centroids.collect()
-    }
-    cb = {
-        (r["m"], r["cid"]): np.array(r["cvec"])
-        for r in codebooks.collect()
-    }
-    got = {
-        r["id"]: (r["centroid_id"], [r[f"code{j}"] for j in range(4)])
-        for r in lists.filter(lists.id >= 100).collect()
-    }
-    assert set(got) == {100 + i for i in range(10)}
-    for bid, vec in ((100 + i, v) for i, v in enumerate(
-        r[1] for r in batch_rows
-    )):
-        qx = np.round(np.array(vec) * KMEANS_SCALE)
-        d_coarse = {
-            cid: float(((qx - c) ** 2).sum()) for cid, c in ctr.items()
-        }
-        exp_coarse = min(sorted(d_coarse), key=lambda c: (d_coarse[c], c))
-        assert got[bid][0] == exp_coarse, bid
-        for j in range(4):
-            sx = qx[j * 4:(j + 1) * 4]
-            d = {
-                cid: float(((sx - cb[(j, cid)]) ** 2).sum())
-                for mm, cid in cb if mm == j
-            }
-            assert got[bid][1][j] == min(
-                sorted(d), key=lambda c: (d[c], c)
-            ), (bid, j)
-    # the probe serves an appended vector at rank 1 for its own value
-    q = spark.createDataFrame(
-        [(1, batch_rows[0][1])], "query_id long, qvec array<double>"
-    )
-    top = pq.ivfpq_topk(
-        q, centroids, codebooks, lists, 3, dim=16, n_probe=1, m=4
-    ).collect()
-    assert top[0]["id"] == 100

@@ -350,15 +350,6 @@ def test_model_rerank_pair_order_and_batch_recorded(spark, monkeypatch):
     ]
 
 
-def test_embed_text_fallback_is_hash_projection(spark):
-    from rag_database_spark.functions import embedder
-
-    df = spark.createDataFrame([(1, "alpha beta gamma")], "id long, text string")
-    row = embedder.embed_text(df).first()
-    assert len(row["embedding"]) == embedder.EMBED_DIM
-    assert any(v != 0.0 for v in row["embedding"])
-
-
 def test_real_parse_consumes_recorded_unstructured_elements(monkeypatch):
     """The real-branch logic itself — element typing via the class
     name, str() text extraction, page-number fallback — runs against a
@@ -535,24 +526,6 @@ def test_model_lang_id_plumbing_with_fake_fasttext(spark, monkeypatch):
     for blank_id in (3, 4):
         assert rows[blank_id]["lang_pred"] == "unknown"
         assert rows[blank_id]["confidence"] == 0.0
-
-
-def test_lang_id_auto_falls_back_to_heuristic(spark):
-    """Without fasttext installed, lang_id_auto serves the stopword
-    heuristic with a NULL confidence column — same schema as the
-    model path, so downstream code is branch-free."""
-    from rag_database_spark.operators import text_analytics as ta
-
-    df = spark.createDataFrame(
-        [(1, "the cat and the dog are in the house with a friend")],
-        "doc_id long, text string",
-    )
-    rows = ta.lang_id_auto(df).collect()
-    assert rows[0]["lang_pred"] == "en"
-    assert rows[0]["confidence"] is None
-    assert [f.name for f in ta.lang_id_auto(df).schema.fields] == [
-        "doc_id", "lang_pred", "confidence",
-    ]
 
 
 def test_real_model_smoke_harness(spark, monkeypatch, tmp_path):

@@ -176,11 +176,15 @@ def test_ivf_recall_vs_brute_force(spark):
          for qi in range(4)],
         "query_id long, qvec array<double>",
     )
-    from rag_database_spark.operators.similarity import ivf_topk
+    from rag_database_spark.operators.similarity import (
+        _ivf_fit,
+        ivf_topk_indexed,
+    )
 
     exact = cosine_topk(queries, corpus, 10).collect()
-    approx = ivf_topk(
-        queries, corpus, 10, n_centroids=8, n_probe=3
+    centroids, lists = _ivf_fit(corpus, 8, 42, "id", "vec")
+    approx = ivf_topk_indexed(
+        queries, centroids, lists, 10, n_probe=3
     ).collect()
     key = lambda rs: {
         (r["query_id"], r["id"]) for r in rs
@@ -190,15 +194,15 @@ def test_ivf_recall_vs_brute_force(spark):
 
 
 def test_ivf_persisted_index_matches_inline_fit(spark, tmp_path):
-    """write_ivf_index → ivf_topk_indexed returns exactly what the
-    one-call ivf_topk computes (same seed ⇒ same centroids ⇒ same
-    probes ⇒ same candidates), and the query path never touches
-    KMeans — refitting per query batch is the scale bug the split
-    removes."""
+    """write_ivf_index → ivf_topk_indexed returns exactly what an
+    in-memory ``_ivf_fit`` → ivf_topk_indexed computes (same seed ⇒
+    same centroids ⇒ same probes ⇒ same candidates), and the query
+    path never touches KMeans — refitting per query batch is the scale
+    bug the split removes."""
     from pyspark.ml.clustering import KMeans
 
     from rag_database_spark.operators.similarity import (
-        ivf_topk,
+        _ivf_fit,
         ivf_topk_indexed,
         read_ivf_index,
         write_ivf_index,
@@ -217,7 +221,9 @@ def test_ivf_persisted_index_matches_inline_fit(spark, tmp_path):
         "query_id long, qvec array<double>",
     )
 
-    inline = ivf_topk(queries, corpus, 10, n_centroids=8, n_probe=3)
+    inline = ivf_topk_indexed(
+        queries, *_ivf_fit(corpus, 8, 42, "id", "vec"), 10, n_probe=3
+    )
     inline_rows = {(r["query_id"], r["id"], round(r["score"], 9))
                    for r in inline.collect()}
 

@@ -1,9 +1,8 @@
-"""Structured Streaming topology (stream == batch equivalence,
-foreachBatch ingest) and multimodal binary plumbing."""
+"""Event analytics (sessions, funnels, conversions) and multimodal
+binary plumbing."""
 
 from __future__ import annotations
 
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def event_dir(spark, tmp_path_factory):
-    """A small event parquet directory the file-source stream reads."""
+    """A small event parquet directory."""
     path = str(tmp_path_factory.mktemp("events_src"))
     from rag_database_spark.sources.tables import load_table
 
@@ -24,48 +23,6 @@ def event_dir(spark, tmp_path_factory):
         "overwrite"
     ).parquet(path)
     return path
-
-
-def test_stream_matches_batch(spark, event_dir):
-    q = se.stream_hourly_to_memory(spark, event_dir, "hourly_test")
-    q.awaitTermination(120)
-    streamed = spark.sql(
-        "SELECT bucket_start, event_type, n_events, sum_value "
-        "FROM hourly_test"
-    ).collect()
-    batch = se.hourly_event_agg(
-        spark.read.parquet(event_dir), exact_users=False
-    ).select("bucket_start", "event_type", "n_events", "sum_value").collect()
-    key = lambda r: (r["bucket_start"], r["event_type"])
-    sm = {key(r): (r["n_events"], r["sum_value"]) for r in streamed}
-    bm = {key(r): (r["n_events"], r["sum_value"]) for r in batch}
-    assert sm == bm and len(sm) > 0
-
-
-def test_watermark_is_applied(spark, event_dir):
-    stream = se.with_watermark(se.read_event_stream(spark, event_dir))
-    assert stream.isStreaming
-    # the watermark column survives into the windowed plan
-    agg = se.hourly_event_agg(stream, exact_users=False)
-    assert "bucket_start" in agg.columns
-
-
-def test_stream_ingest_documents(spark, tmp_path):
-    src = str(tmp_path / "docs_src")
-    dst = str(tmp_path / "chunks_out")
-    from rag_database_spark.sources.tables import load_table
-
-    load_table(spark, SF_DIR, "documents").limit(20).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    q = se.stream_ingest_documents(
-        spark, src, dst, "doc_id long, text string, lang string, "
-        "source string, n_chars long"
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(dst)
-    assert out.count() > 20  # ≥1 paragraph chunk + 1 doc chunk per doc
-    assert {"chunk_id", "level", "page_number"} <= set(out.columns)
 
 
 @pytest.fixture(scope="module")
@@ -336,113 +293,30 @@ def test_image_dhash_hand_case(spark):
     assert pairs == {(1, 3): 0}
 
 
-def test_media_embedding_shape(spark, media):
-    rows = multimodal.media_embedding(media).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert len(r["embedding"]) == multimodal.EMBED_DIM
-        assert all(-1.0 <= v < 1.0 for v in r["embedding"])
-
-
-def test_stateful_sessionization_matches_batch(spark, event_dir):
-    batch = se.sessionize(spark.read.parquet(event_dir)).collect()
-    stream = se.sessionize_stream(
-        se.read_event_stream(spark, event_dir)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = spark.sql("SELECT * FROM sessions_test").collect()
-    key = lambda r: (r["user_id"], r["session_start"])
-    b = {key(r): (r["n_events"], r["session_end"]) for r in batch}
-    s = {key(r): (r["n_events"], r["session_end"]) for r in streamed}
-    # single availableNow micro-batch sees all events → sessions agree
-    assert s == b and len(s) > 0
-
-
-def test_stream_dedup(spark, tmp_path):
-    import pyspark.sql.functions as F
-    src = str(tmp_path / "dup_events")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 5, "click", 1.0, "{}"),
-         (2, "2024-01-01 10:01:00", 6, "view", 2.0, "{}")],
-        "event_id long, ts string, user_id long, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    base.unionAll(base).write.mode("overwrite").parquet(src)  # duplicates
-    q = (
-        se.dedup_events_stream(se.read_event_stream(spark, src))
-        .writeStream.format("memory")
-        .queryName("dedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT event_id FROM dedup_test").collect()
-    assert sorted(r["event_id"] for r in got) == [1, 2]
-
-
 def test_native_session_window_agrees(spark, event_dir):
+    """``sessionize`` (lag + running-sum windows) against Spark's
+    built-in ``session_window`` as the reference formulation."""
+    from rag_database_spark.functions.exact import exact_sum
+
     events = spark.read.parquet(event_dir)
     mine = se.sessionize(events).collect()
-    native = se.sessionize_native(events).collect()
+    native = (
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"),
+                       "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(exact_sum("value"), 6).alias("total_value"),
+        )
+        .select("user_id", F.col("w.start").alias("session_start"),
+                "n_events", "total_value")
+        .collect()
+    )
     key = lambda r: (r["user_id"], r["session_start"])
     a = {key(r): (r["n_events"], r["total_value"]) for r in mine}
     b = {key(r): (r["n_events"], r["total_value"]) for r in native}
     # random microsecond timestamps never land exactly on the gap
     # boundary, so the two formulations partition events identically
     assert a == b and len(a) > 0
-
-
-def test_stream_stream_join_matches_batch_candidates(spark, event_dir):
-    """The stream-stream interval join must emit exactly the batch
-    join's candidate pairs (the last-touch pick runs downstream)."""
-    batch_events = spark.read.parquet(event_dir)
-    clicks = se.read_event_stream(spark, event_dir).filter(
-        F.col("event_type") == "click"
-    )
-    purchases = se.read_event_stream(spark, event_dir).filter(
-        F.col("event_type") == "purchase"
-    )
-    q = (
-        se.attribute_conversions_stream(clicks, purchases)
-        .writeStream.format("memory")
-        .queryName("conv_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM conv_test").collect()
-    }
-
-    c = batch_events.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = batch_events.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    c_us = F.unix_micros(F.col("click_ts"))
-    p_us = F.unix_micros(F.col("purchase_ts"))
-    batch = {
-        (r["purchase_id"], r["click_id"])
-        for r in p.join(c, "user_id")
-        .filter((c_us <= p_us) & (c_us > p_us - se.ATTRIBUTION_WINDOW_US))
-        .collect()
-    }
-    assert streamed == batch and streamed
 
 
 def test_conversions_last_touch(spark):
@@ -465,200 +339,6 @@ def test_conversions_last_touch(spark):
         for r in se.attribute_conversions(events).collect()
     }
     assert got == {3: 2}
-
-
-def test_sessionize_stream_expire_state_matches_batch(spark, event_dir):
-    """expire_state=True (EventTimeTimeout) must not change emitted
-    sessions — it only bounds state retention."""
-    stream = se.sessionize_stream(
-        se.with_watermark(se.read_event_stream(spark, event_dir)),
-        expire_state=True,
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sess_expire_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r["user_id"], r["session_id"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM sess_expire_test").collect()
-    }
-    batch = {
-        (r["user_id"], r["session_id"]): (r["n_events"], r["total_value"])
-        for r in se.sessionize(spark.read.parquet(event_dir)).collect()
-    }
-    assert streamed == batch and streamed
-
-
-def test_stream_dedup_gate_quarantines_and_learns(spark, tmp_path):
-    """Two micro-batches: batch 1 bootstraps the corpus+index; batch 2
-    holds a near-dup of an accepted doc (quarantined with its match)
-    and a fresh doc (accepted and indexed)."""
-    import time as _time
-
-    from rag_database_spark.operators import dedup as dd
-
-    src = str(tmp_path / "gate_src")
-    accept = str(tmp_path / "gate_accept")
-    quarantine = str(tmp_path / "gate_quarantine")
-    index = str(tmp_path / "gate_index")
-    schema = "doc_id long, text string"
-    spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta"),
-            (2, "one two three four five six seven eight"),
-        ],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)  # distinct mod-times pin micro-batch order
-    spark.createDataFrame(
-        [
-            (10, "alpha beta gamma delta epsilon zeta eta"),  # dup of 1
-            (11, "completely fresh new document text content here"),
-        ],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    q = se.stream_dedup_gate(
-        spark, src, accept, quarantine, schema, index,
-        threshold=0.8, max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    accepted = {r["doc_id"] for r in spark.read.parquet(accept).collect()}
-    assert accepted == {1, 2, 11}
-    quar = spark.read.parquet(quarantine).collect()
-    assert [(r["doc_id"], r["match_id"], r["best_jaccard"]) for r in quar] \
-        == [(10, 1, 1.0)]
-    # the index holds shingles for accepted docs only
-    idx_ids = {
-        r["doc_id"]
-        for r in dd.read_shingle_index(spark, index)
-        .select("doc_id").distinct().collect()
-    }
-    assert idx_ids == {1, 2, 11}
-
-
-def test_stream_gate_maintains_pair_index(spark, tmp_path):
-    """With pair_path the gate's online pair maintenance must leave
-    the artifact equal to a full shingle_jaccard_pairs rebuild over
-    everything it accepted — across the bootstrap batch (within-slice
-    only) and a later batch (cross + within via append_pair_index)."""
-    import time as _time
-
-    from rag_database_spark.operators import dedup as dd
-
-    src = str(tmp_path / "src")
-    accept = str(tmp_path / "accept")
-    quarantine = str(tmp_path / "quar")
-    index = str(tmp_path / "index")
-    pairs = str(tmp_path / "pairs")
-    schema = "doc_id long, text string"
-    dup = "the quick brown fox jumps over the lazy dog daily "
-    spark.createDataFrame(
-        [(1, dup * 3), (2, dup * 3 + "small tail variation one two")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)
-    spark.createDataFrame(
-        [
-            (10, dup * 3),  # exact dup of 1 -> quarantined
-            (11, dup * 2 + "different continuation text entirely here now"),
-            (12, "unrelated fresh content with other words only"),
-        ],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    q = se.stream_dedup_gate(
-        spark, src, accept, quarantine, schema, index,
-        threshold=0.9, max_files_per_trigger=1,
-        pair_path=pairs, pair_threshold=0.3,
-    )
-    q.awaitTermination(120)
-
-    accepted_df = spark.read.parquet(accept).select("doc_id", "text")
-    online = sorted(map(tuple, dd.read_pair_index(spark, pairs).collect()))
-    rebuilt = sorted(
-        map(tuple, dd.shingle_jaccard_pairs(accepted_df, 0.3).collect())
-    )
-    assert online == rebuilt
-    assert len(rebuilt) > 0  # the 1-2 and cross 11 pairs exist
-
-
-def test_gate_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-running a micro-batch body
-    with the same batch_id must leave every artifact (accept,
-    quarantine, pairs, shingle index) EXACTLY as after the first run —
-    no double-appended rows, and no self-matches at jaccard 1.0 from
-    the replay probing its own already-written shingles."""
-    from rag_database_spark.operators import dedup as dd
-
-    accept = str(tmp_path / "accept")
-    quarantine = str(tmp_path / "quar")
-    index = str(tmp_path / "index")
-    pairs = str(tmp_path / "pairs")
-    schema = "doc_id long, text string"
-    dup = "the quick brown fox jumps over the lazy dog daily "
-    batch0 = spark.createDataFrame(
-        [(1, dup * 3), (2, "unrelated seed corpus words only here now")],
-        schema,
-    )
-    batch1 = spark.createDataFrame(
-        [
-            (10, dup * 3),  # near-dup of 1 -> quarantined
-            (11, dup * 2 + "different continuation text entirely here"),
-            (12, "fresh second batch document with new content words"),
-        ],
-        schema,
-    )
-
-    def run(df, bid):
-        se.dedup_gate_batch(
-            df, bid, accept, quarantine, index, 0.9,
-            pair_path=pairs, pair_threshold=0.3,
-        )
-
-    import os
-
-    def snapshot():
-        def rows(path, reader=spark.read.parquet):
-            if not os.path.exists(path):
-                return []
-            return sorted(map(tuple, reader(path).collect()))
-
-        return {
-            "accept": rows(accept),
-            "quar": rows(quarantine),
-            "pairs": rows(pairs, lambda p: dd.read_pair_index(spark, p)),
-            "index": rows(
-                index, lambda p: dd.read_shingle_index(spark, p)
-            ),
-        }
-
-    # Structured Streaming replays only the LATEST uncommitted batch,
-    # so replay each batch while it is the newest slice.
-    run(batch0, 0)
-    boot = snapshot()
-    run(batch0, 0)  # replayed bootstrap
-    assert snapshot() == boot
-
-    run(batch1, 1)
-    first = snapshot()
-    assert {t[0] for t in first["accept"]} == {1, 2, 11, 12}
-    assert {t[0] for t in first["quar"]} == {10}
-
-    run(batch1, 1)  # replayed batch 1 (same batch_id)
-    assert snapshot() == first
-
-    # and the online pair artifact still equals a full rebuild
-    accepted_df = spark.read.parquet(accept).select("doc_id", "text")
-    rebuilt = sorted(
-        map(tuple, dd.shingle_jaccard_pairs(accepted_df, 0.3).collect())
-    )
-    assert first["pairs"] == rebuilt
 
 
 def test_funnel_requires_strict_order(spark):
@@ -719,32 +399,6 @@ def test_cohort_retention_triangle(spark):
         ("2024-01-01", 1): 1,
         ("2024-01-08", 0): 1,
     }
-
-
-def test_stream_funnel_matches_batch(spark, event_dir):
-    """Single availableNow micro-batch (event-time-complete input):
-    the streaming funnel's per-user snapshot reproduces the batch
-    funnel's per-step totals exactly."""
-    batch = {
-        r["step_idx"]: r["n_users"]
-        for r in se.funnel(spark.read.parquet(event_dir)).collect()
-    }
-    q = (
-        se.funnel_stream(se.read_event_stream(spark, event_dir))
-        .writeStream.format("memory")
-        .queryName("funnel_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    snap = spark.sql("SELECT * FROM funnel_test").collect()
-    reached = {r["user_id"]: r["steps_reached"] for r in snap}
-    got = {
-        i: sum(1 for n in reached.values() if n >= i)
-        for i in (1, 2, 3)
-    }
-    assert got == batch and got[1] > 0
 
 
 def test_funnel_conversion_window(spark):
@@ -808,7 +462,6 @@ def test_funnel_is_order_and_partition_invariant(spark):
     """The batch funnel is min-based, so input row order and
     partitioning must not change any step count (the determinism the
     oracle hash-compare relies on)."""
-    events = se.read_event_stream  # noqa: F841 (keep import surface)
     from rag_database_spark.sources.tables import load_table
 
     base = load_table(spark, SF_DIR, "events").limit(2000)
@@ -873,94 +526,3 @@ def test_use_real_pins_the_seam_branch(monkeypatch):
     assert multimodal._use_real(True, "PIL.Image") is True
 
 
-def _vecs_df(spark, rows):
-    return spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in rows],
-        "vec_id long, embedding array<float>",
-    )
-
-
-def test_stream_vector_gate_quarantines_and_learns(spark, tmp_path):
-    """Vector twin of the dedup gate: batch 1 bootstraps the vector
-    index; batch 2 holds a near-identical embedding (quarantined with
-    its match + cosine) and an orthogonal one (accepted, indexed)."""
-    src = str(tmp_path / "vgate_src")
-    accept = str(tmp_path / "vgate_accept")
-    quarantine = str(tmp_path / "vgate_quar")
-    index = str(tmp_path / "vgate_index")
-    schema = "vec_id long, embedding array<float>"
-    _vecs_df(
-        spark, [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])]
-    ).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    _vecs_df(
-        spark,
-        [(10, [0.999, 0.01, 0.0]), (11, [0.0, 0.0, 1.0])],
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    q = se.stream_vector_gate(
-        spark, src, accept, quarantine, schema, index,
-        threshold=0.95, max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    accepted = {r["vec_id"] for r in spark.read.parquet(accept).collect()}
-    assert accepted == {1, 2, 11}
-    quar = spark.read.parquet(quarantine).collect()
-    assert [(r["vec_id"], r["match_id"]) for r in quar] == [(10, 1)]
-    assert quar[0]["best_cosine"] > 0.99
-    from rag_database_spark.operators import dedup as dd
-
-    idx_ids = {
-        r["vec_id"]
-        for r in dd._read_slices(spark, index, ["vec_id"]).collect()
-    }
-    assert idx_ids == {1, 2, 11}
-
-
-def test_vector_gate_replay_is_idempotent(spark, tmp_path):
-    """Replaying a micro-batch body with the same batch_id leaves
-    accept/quarantine/index byte-identical: slices overwrite in place
-    and the probe excludes the batch's own already-written vectors
-    (no self-match at cosine 1.0)."""
-    import os
-
-    accept = str(tmp_path / "accept")
-    quarantine = str(tmp_path / "quar")
-    index = str(tmp_path / "index")
-    batch0 = _vecs_df(
-        spark, [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])]
-    )
-    batch1 = _vecs_df(
-        spark,
-        [(10, [0.999, 0.01, 0.0]), (11, [0.0, 0.0, 1.0])],
-    )
-
-    def run(df, bid):
-        se.vector_gate_batch(
-            df, bid, accept, quarantine, index, threshold=0.95
-        )
-
-    def snapshot():
-        out = {}
-        for name, path in (
-            ("accept", accept), ("quar", quarantine), ("index", index)
-        ):
-            if not os.path.exists(path):
-                out[name] = []
-                continue
-            out[name] = sorted(
-                map(tuple, spark.read.parquet(path).collect())
-            )
-        return out
-
-    run(batch0, 0)
-    boot = snapshot()
-    run(batch0, 0)  # replayed bootstrap
-    assert snapshot() == boot
-
-    run(batch1, 1)
-    first = snapshot()
-    assert {t[0] for t in first["accept"]} == {1, 2, 11}
-    run(batch1, 1)  # replayed second batch
-    assert snapshot() == first

@@ -11,6 +11,8 @@ import pytest
 
 from rag_database_spark.operators import text_analytics as ta
 
+from plan_inspect import executed_plan
+
 
 def _corpus(rng, n, empties=True):
     words = ["alpha", "beta", "gamma", "the", "and", "data", "spark",
@@ -113,7 +115,7 @@ def test_bracket_recenters_under_weight_skew(spark):
     sel = ta.token_budget_select(df, frac=0.5, bracket=True)
     got = {r["doc_id"] for r in sel.collect()}
     assert got == _brute(_scored_rows(spark, rows), 0.5)
-    plan = sel._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(sel)
     if "Window" in plan:
         win_subtree = plan[plan.index("Window"):]
         assert "q_score" in win_subtree and "Filter" in win_subtree

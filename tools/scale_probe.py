@@ -420,21 +420,14 @@ def main() -> int:
     blob = {
         "probe": "sf0.1 -> synthetic sf1 (10x rows, tools/make_scale_probe.py)",
         "runs_per_point": RUNS_PER_POINT,
-        # r14 VERDICT item 7: why the streaming wrappers carry no own
-        # exponent rows — their compute IS the probed batch plans.
+        # why no streaming rows: the engine has no streaming path.
         "streaming_scope": (
-            "streaming/events.py wrappers (stream_hourly_to_memory, "
-            "stream_upsert_table, stream_ingest_documents, "
-            "sessionize_stream, attribute_conversions_stream, "
-            "dedup_events_stream, stream_dedup_gate, vector/bloom gate "
-            "streams) execute the SAME batch transformations via "
-            "foreachBatch (stream==batch parity is unit-pinned in "
-            "tests/test_streaming_multimodal.py); per-micro-batch cost scales "
-            "with batch size and with the persisted gate index "
-            "(probed here through ingest_gate / vector_ingest_gate / "
-            "bloom_gate / bloom_gate_paras on the main axis), so a "
-            "probe of the wrappers would measure trigger overhead, "
-            "not plan scaling — out of probe scope by design"
+            "the engine runs batch only (online serving is out of "
+            "scope, PAPER.md); streaming/events.py holds batch event "
+            "analytics, probed here through their entries, and the "
+            "admission gates are probed through ingest_gate / "
+            "vector_ingest_gate / bloom_gate / bloom_gate_paras on the "
+            "main axis"
         ),
         **{
             k: v
