@@ -227,7 +227,10 @@ def _bm25_index_key(sf_dir: str) -> str:
     )
 
 
-def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def _bm25_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(postings, doclens, stats) of the persisted BM25 index."""
     fp = _bm25_index_key(sf_dir)
     hit = _INDEX_CACHE.get(fp)
     if hit is not None and hit[0] is spark:
@@ -235,13 +238,16 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     cache_dir = (
         Path(__file__).resolve().parent / ".cache" / "bm25_index" / fp
     )
-    if not (cache_dir / "postings" / "_SUCCESS").exists():
+    if not (cache_dir / "stats" / "_SUCCESS").exists():
         bm25_ops.write_index(
             load_table(spark, sf_dir, "documents"), str(cache_dir)
         )
-    pair = bm25_ops.read_index(spark, str(cache_dir))
-    _INDEX_CACHE[fp] = (spark, pair)
-    return pair
+    index = (
+        *bm25_ops.read_index(spark, str(cache_dir)),
+        bm25_ops.read_stats(spark, str(cache_dir)),
+    )
+    _INDEX_CACHE[fp] = (spark, index)
+    return index
 
 
 def prepare(spark: SparkSession, sf_dir: str) -> None:
@@ -285,8 +291,7 @@ def prepare(spark: SparkSession, sf_dir: str) -> None:
 def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/T1/W1/S7: batch BM25 top-k over the persisted index."""
     queries = workload.queries_df(spark)
-    postings, doclens = _bm25_index(spark, sf_dir)
-    scored = bm25_ops.score_queries(queries, postings, doclens)
+    scored = bm25_ops.score_queries(queries, *_bm25_index(spark, sf_dir))
     limit = workload.HYBRID_LIMIT * FETCH_MULTIPLIER
     return bm25_ops.topk(scored, limit).select(
         "query_id",
@@ -543,10 +548,9 @@ def _text_legs(
     spark: SparkSession, sf_dir: str, queries: DataFrame, emb: DataFrame
 ) -> dict[str, DataFrame]:
     """The BM25 (persisted index) and dense legs of the hybrid entries."""
-    postings, doclens = _bm25_index(spark, sf_dir)
     fetch = FETCH_MULTIPLIER * workload.HYBRID_LIMIT
     return {
-        "bm25": bm25_leg(queries, postings, doclens, fetch),
+        "bm25": bm25_leg(queries, *_bm25_index(spark, sf_dir), fetch),
         "dense": dense_leg(queries, emb, fetch),
     }
 
@@ -627,8 +631,7 @@ def _tenant_scoped_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tenant conjunct into every search, api/main.py:407-410)."""
     docs = load_table(spark, sf_dir, "documents")
     queries = workload.queries_df(spark)
-    postings, doclens = _bm25_index(spark, sf_dir)
-    scored = bm25_ops.score_queries(queries, postings, doclens)
+    scored = bm25_ops.score_queries(queries, *_bm25_index(spark, sf_dir))
     ctx = filter_ops.TenantContext(TENANT_ORG, access_levels=TENANT_ACCESS)
     eligible = filter_ops.scoped(
         filter_ops.derive_tenant(docs), ctx, {"n_chars": TENANT_NCHARS}
@@ -950,7 +953,7 @@ DOC_KEYWORDS_K = 3
 def _doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document tf-idf keyword extraction served from the
     persisted BM25 postings/doclens artifact (no re-tokenization)."""
-    postings, doclens = _bm25_index(spark, sf_dir)
+    postings, doclens, _ = _bm25_index(spark, sf_dir)
     return bm25_ops.tfidf_keywords(postings, doclens, DOC_KEYWORDS_K)
 
 
@@ -1637,9 +1640,8 @@ def _rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6/M8: rerank the BM25 candidate list with the deterministic
     pair scorer, re-sort, top-k."""
     queries = workload.queries_df(spark)
-    postings, doclens = _bm25_index(spark, sf_dir)
     cands = bm25_ops.topk(
-        bm25_ops.score_queries(queries, postings, doclens),
+        bm25_ops.score_queries(queries, *_bm25_index(spark, sf_dir)),
         RERANK_CANDIDATES,
     ).select("query_id", F.col("doc_id").alias("id"))
     return lifecycle.lexical_overlap_rerank(
@@ -1653,7 +1655,7 @@ def _rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bm25_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/A5: index-level stats from the persisted tables."""
-    postings, doclens = _bm25_index(spark, sf_dir)
+    postings, doclens, _ = _bm25_index(spark, sf_dir)
     return lifecycle.bm25_index_stats(postings, doclens)
 
 
@@ -2039,14 +2041,12 @@ def _query_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _enhanced_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2: base hybrid (2× over-fetch) + precision BM25 fallback with
     +0.5 boost, J4 priority merge, top-k."""
-    postings, doclens = _bm25_index(spark, sf_dir)
     return qa.enhanced_search(
         workload.queries_df(spark),
         load_table(spark, sf_dir, "documents"),
         load_table(spark, sf_dir, "embeddings"),
         limit=workload.HYBRID_LIMIT,
-        postings=postings,
-        doclens=doclens,
+        index=_bm25_index(spark, sf_dir),
     )
 
 

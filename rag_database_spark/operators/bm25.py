@@ -2,17 +2,20 @@
 
 The reference keeps parallel in-memory lists and rebuilds a ``BM25Okapi``
 object on every add (bm25_store.py:134-188 — "good for < 1M documents").
-The Spark formulation replaces that with two derived tables that scale
+The Spark formulation replaces that with derived tables that scale
 horizontally and update incrementally:
 
     postings(doc_id, term, tf)        — explode + groupBy (map-side combine)
     doclens(doc_id, dl)               — array size per doc, no shuffle
+    stats(n_docs, sum_dl)             — one row per write/append (persisted
+                                        indexes only; ``read_stats``)
 
-Scoring a *batch* of queries is a join pipeline: query terms (tiny,
-broadcast) ⋈ postings ⋈ doclens → per-(query, doc) sum, with df/idf
-computed per matched term at query time. The
-only large shuffle is the final groupBy(query_id, doc_id), proportional to
-candidate matches, not the corpus.
+Scoring a *batch* of queries is a join pipeline with ONE shuffle: query
+terms (tiny, broadcast) ⋈ postings ⋈ doclens ⋈ corpus stats, hash
+partitioned once on query_id. The document frequency of each query term
+is a count inside that partitioning, so the whole leg — df, the
+per-(query, doc) rollup and the caller's per-query top-k — runs without
+a further exchange, and only matched postings ever move.
 
 IDF variant: Lucene/Elasticsearch BM25 — ``ln(1 + (N - df + .5)/(df + .5))``
 — i.e. the formula the reference's Elasticsearch backend uses
@@ -24,10 +27,11 @@ k1 = 1.5, b = 0.75 from the reference config (src/config.py:32-33).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.text import tokenize
+from rag_database_spark.sources.tables import local_frame
 
 K1 = 1.5
 B = 0.75
@@ -58,7 +62,8 @@ def build_doclens(
 
 
 def corpus_stats(doclens: DataFrame) -> DataFrame:
-    """1-row (n_docs, avgdl) frame, broadcast into the scoring join."""
+    """1-row (n_docs, avgdl) frame of an in-memory doclens table; a
+    persisted index reads the same frame with ``read_stats``."""
     return doclens.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
@@ -68,6 +73,7 @@ def score_queries(
     queries: DataFrame,
     postings: DataFrame,
     doclens: DataFrame,
+    stats: DataFrame,
     query_id_col: str = "query_id",
     query_text_col: str = "query_text",
     k1: float = K1,
@@ -75,55 +81,52 @@ def score_queries(
 ) -> DataFrame:
     """BM25 score for every (query, matching doc) pair.
 
-    Returns (query_id, doc_id, score). Query terms keep multiplicity via a
-    qtf multiplier (rank_bm25 iterates duplicate query tokens,
-    bm25_store.py:217). The queries side is broadcast — postings never
-    shuffles for the join, only for the final (query_id, doc_id) rollup.
+    Returns (query_id, doc_id, score), hash partitioned on query_id.
+    ``stats`` is the 1-row (n_docs, avgdl) frame: ``read_stats`` for a
+    persisted index, ``corpus_stats(doclens)`` for in-memory tables.
 
-    Pure-lazy single-pass shape (r18; replaces the r17 eager
-    localCheckpoint folds): postings are scanned exactly ONCE — the
-    per-term document frequency that used to be a groupBy(term)
-    aggregate joined back onto a second postings scan (or a checkpoint
-    of the first) is now a ``count over (partition by term)`` window on
-    the matched stream, and idf is computed inline per row from it.
-    The 1-row corpus stats frame broadcasts once carrying BOTH n_docs
-    and avgdl (it fed two separate consumers before). The plan has no
-    eager jobs and no RDD leaves, so the entry-level prepared-plan
-    cache can legitimately memoize it — every action still recomputes
-    everything from the parquet inputs.
+    Query terms keep multiplicity via a qtf multiplier (rank_bm25
+    iterates duplicate query tokens, bm25_store.py:217); (term, qtf)
+    comes from one projection over each query's token array, so the
+    query side needs no aggregate.
 
-    The window exchanges only the MATCHED stream (query-term postings,
-    not the corpus-wide table) keyed on term; hot query terms buffer in
-    one spillable window partition — the same rows a per-term df
-    aggregate would funnel through one partition.
+    One shuffle: postings are broadcast-joined to the query terms, then
+    to doclens and the stats row, and the matched stream is hash
+    partitioned on query_id once. Inside that partitioning, df is
+    ``count over (partition by query_id, term)`` — postings are unique
+    on (doc_id, term), so it counts the documents holding the term —
+    and the (query_id, doc_id) rollup and ``topk``'s query_id window
+    reuse the same partitioning. The vocabulary is never aggregated.
+
+    The trade: one query's whole matched stream lands in one task. A
+    df window keyed on term put each hot term in one task instead; at
+    batch scale many queries spread the load over the partitions.
     """
-    stats = corpus_stats(doclens)
-
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(tokenize(F.col(query_text_col))).alias("term"),
-        )
-        .groupBy("query_id", "term")
-        .agg(F.count("*").alias("qtf"))
+    toks = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        tokenize(F.col(query_text_col)).alias("toks"),
     )
-
-    # Semi-join postings down to query terms FIRST (broadcast the tiny
-    # term set), then derive df/idf from the survivors only. The full
-    # vocabulary is never aggregated or broadcast — at 100 TB the
-    # vocabulary is 10^8+ terms, but a query workload touches a few
-    # hundred, so the matched stream is query-term-bounded.
-    qterm_set = qterms.select("term").distinct()
-    matched_postings = postings.join(F.broadcast(qterm_set), "term")
-
-    wterm = Window.partitionBy("term")
+    qterms = toks.select(
+        "query_id",
+        F.inline(
+            F.transform(
+                F.array_distinct("toks"),
+                lambda t: F.struct(
+                    t.alias("term"),
+                    F.size(F.filter("toks", lambda x: x == t)).alias("qtf"),
+                ),
+            )
+        ),
+    )
     matched = (
-        matched_postings.withColumn(
-            "df", F.count(F.lit(1)).over(wterm)
-        )
-        .join(F.broadcast(qterms), "term")
+        postings.join(F.broadcast(qterms), "term")
         .join(doclens, "doc_id")
         .crossJoin(F.broadcast(stats))
+        .repartition("query_id")
+        .withColumn(
+            "df",
+            F.count(F.lit(1)).over(Window.partitionBy("query_id", "term")),
+        )
     )
     idf = F.log(
         F.lit(1.0)
@@ -187,6 +190,30 @@ def tfidf_keywords(
     )
 
 
+def _write_tables(
+    docs: DataFrame, path: str, mode: str, id_col: str, text_col: str
+) -> None:
+    """Write (``mode`` overwrite) or append the postings and doclens
+    rows of ``docs``, then the one stats row (n_docs, sum_dl) of the
+    doclens just written: an ``Observation`` collects it during the
+    doclens write, so the documents are tokenized once per table."""
+    build_postings(docs, id_col, text_col).write.mode(mode).parquet(
+        f"{path}/postings"
+    )
+    seen = Observation("bm25_stats")
+    build_doclens(docs, id_col, text_col).observe(
+        seen,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
+    ).write.mode(mode).parquet(f"{path}/doclens")
+    row = seen.get
+    local_frame(
+        docs.sparkSession,
+        [(row["n_docs"], row["sum_dl"])],
+        "n_docs long, sum_dl long",
+    ).write.mode(mode).parquet(f"{path}/stats")
+
+
 def write_index(
     docs: DataFrame,
     path: str,
@@ -194,16 +221,11 @@ def write_index(
     text_col: str = "text",
 ) -> None:
     """S7 (bm25_store.py:290-324 pickle persist → parquet tables): write
-    the derived postings + doclens tables once; the query path then
-    reads them instead of re-tokenizing the corpus per query batch
-    (the reference rebuilds BM25Okapi on every add, :176-188 — the
-    incremental-table form is the scale fix)."""
-    build_postings(docs, id_col, text_col).write.mode("overwrite").parquet(
-        f"{path}/postings"
-    )
-    build_doclens(docs, id_col, text_col).write.mode("overwrite").parquet(
-        f"{path}/doclens"
-    )
+    the derived postings + doclens tables and the corpus stats row
+    once; the query path then reads them instead of re-tokenizing the
+    corpus per query batch (the reference rebuilds BM25Okapi on every
+    add, :176-188 — the incremental-table form is the scale fix)."""
+    _write_tables(docs, path, "overwrite", id_col, text_col)
 
 
 def append_index(
@@ -213,19 +235,14 @@ def append_index(
     text_col: str = "text",
 ) -> None:
     """Incremental S7 maintenance: tokenizing ONLY the new documents
-    and appending their postings/doclens rows yields the identical
-    index to a full rebuild, because both derived tables are purely
-    per-document (no cross-document state is stored — corpus stats
-    N/avgdl/df are recomputed from the tables at query time). The
-    reference instead rebuilds BM25Okapi over the whole corpus on
-    every add (bm25_store.py:176-188); at 100 TB that's the difference
-    between cost ∝ delta and cost ∝ corpus."""
-    build_postings(new_docs, id_col, text_col).write.mode("append").parquet(
-        f"{path}/postings"
-    )
-    build_doclens(new_docs, id_col, text_col).write.mode("append").parquet(
-        f"{path}/doclens"
-    )
+    and appending their postings/doclens rows plus one (n_docs, sum_dl)
+    delta row yields the same index as a full rebuild: postings and
+    doclens are per-document, the stats rows sum to the corpus totals
+    (``read_stats``), and df is counted from the postings at query
+    time. The reference instead rebuilds BM25Okapi over the whole
+    corpus on every add (bm25_store.py:176-188); at 100 TB that's the
+    difference between cost ∝ delta and cost ∝ corpus."""
+    _write_tables(new_docs, path, "append", id_col, text_col)
 
 
 def read_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
@@ -233,6 +250,20 @@ def read_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     return (
         spark.read.parquet(f"{path}/postings"),
         spark.read.parquet(f"{path}/doclens"),
+    )
+
+
+def read_stats(spark, path: str) -> DataFrame:
+    """1-row (n_docs, avgdl) of a ``write_index`` directory: the sum of
+    its stats rows (one per write or append), read in one task instead
+    of aggregating every doclens row per query batch."""
+    total = (
+        spark.read.parquet(f"{path}/stats")
+        .coalesce(1)
+        .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
+    )
+    return total.select(
+        "n_docs", F.try_divide("sum_dl", "n_docs").alias("avgdl")
     )
 
 

@@ -65,91 +65,10 @@ def write_shingle_index(
     ).write.mode("overwrite").parquet(path)
 
 
-def _read_slices(
-    spark, path: str, columns: list[str] | None = None,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    """Read a slice-written artifact root in ANY layout it can be in:
-
-    - pure flat part-files (offline overwrite / legacy append / the
-      compacted root, which RETAINS ingest_batch as a plain column),
-    - pure ``ingest_batch=N`` partition dirs (the gate's idempotent
-      replay layout),
-    - the MIXED state left by upgrading a live stream in place or by
-      batches landing after a compaction: flat files at the root PLUS
-      partition dirs. One ``spark.read.parquet(root)`` throws
-      'Conflicting directory structures' on that mix, so the two
-      halves load separately and union. A flat half WITHOUT an
-      ingest_batch column predates batch tracking — standing corpus,
-      batch −1, never excluded; a flat half WITH the column is a
-      compacted root and keeps its replay-exclusion semantics.
-
-    ``exclude_batch`` drops that batch's own slice — the replay-probe
-    filter every caller of the old inline snippet needed — wherever
-    the batch id survives (partition dirs or the compacted column).
-
-    Listing goes through the Hadoop FileSystem API, not local pathlib,
-    so the mixed-layout detection works identically for ``file://``,
-    ``hdfs://``, and object-store roots."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    part_dirs: list[str] = []
-    flat_files: list[str] = []
-    if fs.exists(hpath):
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("ingest_batch="):
-                part_dirs.append(st.getPath().toString())
-            elif st.isFile() and name.endswith(".parquet"):
-                flat_files.append(st.getPath().toString())
-    part_dirs.sort()
-    flat_files.sort()
-
-    def _norm(df: DataFrame) -> DataFrame:
-        if "ingest_batch" in df.columns:
-            # legacy flat files carry no ingest_batch column — under a
-            # mergeSchema read their rows surface as NULL, which a
-            # plain `!= N` exclusion filter would silently drop;
-            # coalesce them to the same -1 the no-column branch uses
-            df = df.withColumn(
-                "ingest_batch",
-                F.coalesce(
-                    F.col("ingest_batch").cast("long"),
-                    F.lit(-1).cast("long"),
-                ),
-            )
-        else:
-            df = df.withColumn("ingest_batch", F.lit(-1).cast("long"))
-        if exclude_batch is not None:
-            df = df.filter(F.col("ingest_batch") != int(exclude_batch))
-        return df
-
-    # flat halves read with mergeSchema: a root can mix legacy flat
-    # files (no ingest_batch column) with compacted flat files (column
-    # present), and a plain read would pick ONE file's schema — either
-    # dropping legacy rows via the NULL exclusion filter or erasing
-    # the replay-exclusion column entirely (ADVICE r12)
-    if part_dirs and flat_files:
-        part = _norm(spark.read.option("basePath", path).parquet(*part_dirs))
-        flat = _norm(
-            spark.read.option("mergeSchema", "true").parquet(*flat_files)
-        )
-        if columns is None:
-            columns = [c for c in flat.columns if c != "ingest_batch"]
-        return flat.select(*columns).unionByName(part.select(*columns))
-    df = _norm(spark.read.option("mergeSchema", "true").parquet(path))
-    if columns is None:
-        columns = [c for c in df.columns if c != "ingest_batch"]
-    return df.select(*columns)
-
-
-def read_shingle_index(
-    spark, path: str, exclude_batch: int | None = None
-) -> DataFrame:
-    """(doc_id, s) in any slice layout; ``exclude_batch`` drops the
-    calling micro-batch's own replayed slice (self-match guard)."""
-    return _read_slices(spark, path, ["doc_id", "s"], exclude_batch)
+def read_shingle_index(spark, path: str) -> DataFrame:
+    """(doc_id, s) of a ``write_shingle_index`` root (plus its
+    ``append_pair_index`` appends)."""
+    return spark.read.parquet(path).select("doc_id", "s")
 
 
 def write_pair_index(pairs: DataFrame, path: str) -> None:
@@ -165,8 +84,9 @@ def write_pair_index(pairs: DataFrame, path: str) -> None:
 
 
 def read_pair_index(spark, path: str) -> DataFrame:
-    # see _read_slices: any layout reads back as (id_a, id_b, jaccard)
-    return _read_slices(spark, path, ["id_a", "id_b", "jaccard"])
+    """(id_a, id_b, jaccard) of a ``write_pair_index`` root (plus its
+    ``append_pair_index`` appends)."""
+    return spark.read.parquet(path).select("id_a", "id_b", "jaccard")
 
 
 # Candidate-row ceiling for the direct inverted-index self-join: the
@@ -1194,7 +1114,6 @@ def append_pair_index(
     k: int = SHINGLE_K,
     id_col: str = "doc_id",
     text_col: str = "text",
-    batch_id: int | None = None,
 ) -> None:
     """Incremental pair-index maintenance — the near-dup analog of
     ``bm25.append_index``: admitting a batch appends exactly the NEW
@@ -1205,68 +1124,21 @@ def append_pair_index(
     batch (unit-pinned). Cost ∝ delta, never ∝ corpus — the reference
     instead rebuilds full indexes on every add
     (bm25_store.py:176-188). Batch doc_ids must be new (the gate's
-    admission contract).
-
-    With ``batch_id`` the appended slice lands in an
-    ``ingest_batch=<id>`` hive partition via dynamic-partition
-    OVERWRITE instead of a blind append — foreachBatch has
-    at-least-once semantics, and a replayed micro-batch must overwrite
-    exactly its own slice (idempotent) rather than double-append pairs
-    and shingle rows (duplicated shingles would corrupt every later
-    probe's per-doc index_sizes denominator). The corpus index read is
-    likewise filtered to ``ingest_batch != batch_id``: on a replay the
-    failed attempt's shingle slice is already on disk, and probing
-    against it would emit self-pairs at jaccard 1.0."""
+    admission contract)."""
     spark = batch_docs.sparkSession
-    idx = read_shingle_index(spark, shingle_path, exclude_batch=batch_id)
+    idx = read_shingle_index(spark, shingle_path)
     cross = pairs_vs_index(
         batch_docs, idx, threshold, k, id_col, text_col
     )
     within = shingle_jaccard_pairs(
         batch_docs, threshold, id_col, text_col, k
     )
-    _write_slice(
-        cross.unionByName(within).repartition("id_a"),
-        pair_path,
-        batch_id,
-    )
-    _write_slice(
-        _doc_shingles(batch_docs, id_col, text_col, k).select(
-            "doc_id", F.explode("sh").alias("s")
-        ),
-        shingle_path,
-        batch_id,
-    )
-
-
-def _write_slice(df: DataFrame, path: str, batch_id: int | None) -> None:
-    """Append ``df`` to ``path`` — idempotently when ``batch_id`` is
-    given (ingest_batch=N partition + dynamic overwrite, so a replay
-    rewrites the same slice), plain append otherwise (offline callers
-    that manage their own exactly-once)."""
-    if batch_id is None:
-        df.write.mode("append").parquet(path)
-    else:
-        # materialize the slice ONCE: the emptiness probe below and
-        # the write would otherwise each re-execute the full slice
-        # lineage (for the pair slice that is the broadcast index
-        # probe + the banded self-join — the most expensive work of
-        # the micro-batch, and cross-action shuffle stages are not
-        # reused)
-        df = df.localCheckpoint()
-        # a zero-row dynamic-partition overwrite deletes nothing and
-        # writes nothing but still creates a schema-less root dir that
-        # breaks later reads — skip it (a replay recomputes the same
-        # rows, so skipping is deterministic)
-        if df.isEmpty():
-            return
-        (
-            df.withColumn("ingest_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(path)
-        )
+    cross.unionByName(within).repartition("id_a").write.mode(
+        "append"
+    ).parquet(pair_path)
+    _doc_shingles(batch_docs, id_col, text_col, k).select(
+        "doc_id", F.explode("sh").alias("s")
+    ).write.mode("append").parquet(shingle_path)
 
 
 # edge-count ceiling under which dedup_clusters_star finishes the

@@ -25,12 +25,16 @@ from rag_database_spark.operators.fusion import propagate_page_scores_batch
 
 
 def bm25_leg(
-    queries: DataFrame, postings: DataFrame, doclens: DataFrame, fetch: int
+    queries: DataFrame,
+    postings: DataFrame,
+    doclens: DataFrame,
+    stats: DataFrame,
+    fetch: int,
 ) -> DataFrame:
     """A3 + W1 + T4: top-``fetch`` BM25 documents per query over a
-    persisted index (``bm25.read_index``), so the corpus is not
-    re-tokenized per query batch (S7)."""
-    scored = bm25_ops.score_queries(queries, postings, doclens)
+    persisted index (``bm25.read_index`` + ``bm25.read_stats``), so the
+    corpus is not re-tokenized per query batch (S7)."""
+    scored = bm25_ops.score_queries(queries, postings, doclens, stats)
     return bm25_ops.topk(scored, fetch).select(
         "query_id",
         F.col("doc_id").alias("id"),

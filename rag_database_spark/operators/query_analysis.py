@@ -421,23 +421,28 @@ def enhanced_search(
     documents: DataFrame,
     embeddings: DataFrame,
     limit: int = 10,
-    postings: DataFrame | None = None,
-    doclens: DataFrame | None = None,
+    index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Q2 (enhanced_hybrid_search.py:236-367, engine subset): base
     hybrid with 2× over-fetch → precision BM25 fallback (+0.5 score
     boost, 5 results) → J4 priority merge (precision first, first-seen
     id wins) → top-k.
 
+    ``index`` is a persisted BM25 index's (postings, doclens, stats);
+    without one the tables are built in memory from ``documents``.
+
     Output: (query_id, id, final_score, source, rank)."""
-    if postings is None:
-        postings = bm25_ops.build_postings(documents)
-    if doclens is None:
+    if index is None:
         doclens = bm25_ops.build_doclens(documents)
+        index = (
+            bm25_ops.build_postings(documents),
+            doclens,
+            bm25_ops.corpus_stats(doclens),
+        )
     fetch = FETCH_MULTIPLIER * 2 * limit
     base = rrf_fuse(
         {
-            "bm25": bm25_leg(queries, postings, doclens, fetch),
+            "bm25": bm25_leg(queries, *index, fetch),
             "dense": dense_leg(queries, embeddings, fetch),
         },
         2 * limit,
@@ -453,7 +458,7 @@ def enhanced_search(
     pterms = precision_search_terms(queries).select(
         "query_id", F.col("search_term").alias("query_text")
     )
-    pscored = bm25_ops.score_queries(pterms, postings, doclens)
+    pscored = bm25_ops.score_queries(pterms, *index)
     prec_rows = bm25_ops.topk(pscored, PRECISION_FALLBACK_LIMIT).select(
         "query_id",
         F.col("doc_id").alias("id"),

@@ -61,10 +61,7 @@ def get_spark(
         # the session exists
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE",
-                str(Path(__file__).resolve().parent.parent / ".cache" / "warehouse"),
-            ),
+            str(Path(__file__).resolve().parent.parent / ".cache" / "warehouse"),
         )
         .config("spark.ui.enabled", "false")
         # files.maxPartitionBytes default 128m is right for the 100 TB target;

@@ -15,6 +15,13 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def query_execution(df) -> str:
+    """The whole query execution as a string
+    (``queryExecution().toString()``): every plan phase, including the
+    adaptive plan's ``isFinalPlan`` flag."""
+    return df._jdf.queryExecution().toString()
+
+
 def executed_plan(df) -> str:
     """The physical plan's tree string (``executedPlan().toString()``)."""
     return df._jdf.queryExecution().executedPlan().toString()

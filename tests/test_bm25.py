@@ -21,7 +21,14 @@ DOCS = [
     (3, "columnar scan with filter pushdown"),
     (4, "the the the of of and"),  # stopwords only → empty doc
 ]
-QUERIES = [(10, "hash join"), (11, "sort data scan")]
+QUERIES = [
+    (10, "hash join"),
+    (11, "sort data scan"),
+    (12, "hash hash join"),  # repeated term: qtf = 2
+    (13, "the of and"),  # stopwords only: no rows
+    (14, "quantum"),  # matches no document: no rows
+    (15, "quantum join"),  # the unmatched term adds nothing
+]
 
 K1, B = 1.5, 0.75
 
@@ -65,7 +72,8 @@ def scored(spark):
     queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
     postings = bm25_ops.build_postings(docs)
     doclens = bm25_ops.build_doclens(docs)
-    rows = bm25_ops.score_queries(queries, postings, doclens).collect()
+    stats = bm25_ops.corpus_stats(doclens)
+    rows = bm25_ops.score_queries(queries, postings, doclens, stats).collect()
     return {(r["query_id"], r["doc_id"]): r["score"] for r in rows}
 
 
@@ -97,8 +105,9 @@ def test_topk_tie_break_is_id_ascending(spark):
 
 
 def test_append_index_equals_full_rebuild(spark, tmp_path):
-    """Incremental append of the delta's postings/doclens must yield
-    the identical index (and identical query scores) as a rebuild."""
+    """Incremental append of the delta's postings/doclens/stats must
+    yield the identical index (and identical query scores) as a
+    rebuild."""
     corpus = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
@@ -112,9 +121,15 @@ def test_append_index_equals_full_rebuild(spark, tmp_path):
 
     from rag_database_spark.workload import queries_df
 
+    assert bm25_ops.read_stats(spark, str(inc)).collect() == (
+        bm25_ops.corpus_stats(bm25_ops.build_doclens(corpus)).collect()
+    )
     for path in (inc, full):
         postings, doclens = bm25_ops.read_index(spark, str(path))
-        scored = bm25_ops.score_queries(queries_df(spark), postings, doclens)
+        stats = bm25_ops.read_stats(spark, str(path))
+        scored = bm25_ops.score_queries(
+            queries_df(spark), postings, doclens, stats
+        )
         yield_rows = sorted(
             (r["query_id"], r["doc_id"], round(r["score"], 9))
             for r in scored.collect()
@@ -122,3 +137,19 @@ def test_append_index_equals_full_rebuild(spark, tmp_path):
         if path is inc:
             inc_rows = yield_rows
     assert inc_rows == yield_rows and inc_rows
+
+
+def test_empty_index_stats_match_in_memory(spark, tmp_path):
+    """An index written from no documents reads back the stats of an
+    empty in-memory doclens (n_docs 0, avgdl NULL) and scores no rows,
+    instead of failing on 0 / 0."""
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    path = str(tmp_path / "empty")
+    bm25_ops.write_index(docs, path)
+    stats = bm25_ops.read_stats(spark, path)
+    assert stats.collect() == (
+        bm25_ops.corpus_stats(bm25_ops.build_doclens(docs)).collect()
+    )
+    queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
+    postings, doclens = bm25_ops.read_index(spark, path)
+    assert bm25_ops.score_queries(queries, postings, doclens, stats).count() == 0

@@ -107,7 +107,9 @@ def test_hybrid_absent_leg_contributes_zero(spark):
     postings = bm25_ops.build_postings(docs)
     doclens = bm25_ops.build_doclens(docs)
     legs = {
-        "bm25": bm25_leg(queries, postings, doclens, 15),
+        "bm25": bm25_leg(
+            queries, postings, doclens, bm25_ops.corpus_stats(doclens), 15
+        ),
         "dense": dense_leg(queries, emb, 15),
     }
     rows = rrf_fuse(legs, limit=5).collect()

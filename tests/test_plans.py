@@ -70,7 +70,9 @@ def test_bm25_query_semijoin_before_vocab_agg(spark):
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     postings = bm25_ops.build_postings(docs)
     doclens = bm25_ops.build_doclens(docs)
-    scored = bm25_ops.score_queries(queries_df(spark), postings, doclens)
+    scored = bm25_ops.score_queries(
+        queries_df(spark), postings, doclens, bm25_ops.corpus_stats(doclens)
+    )
     assert "BroadcastHashJoin" in plan_of(scored, "simple")
 
 
@@ -614,17 +616,32 @@ def test_split_leakage_audit_joins_are_keyed(spark):
     assert "NestedLoop" not in p and "CartesianProduct" not in p, p
 
 
+def test_bm25_topk_exchange_ceiling(spark):
+    """The BM25 leg shuffles once: the matched stream is hash
+    partitioned on query_id, and df, the (query_id, doc_id) rollup and
+    the top-k window all run inside that partitioning. A df window
+    keyed on term alone would bring back its own exchange."""
+    import __spark_entry__ as entrymod
+
+    p = plan_of(entrymod.queries()["bm25_topk"](spark, SF_DIR), "simple")
+    shuffles = re.findall(r"(?<![A-Za-z])Exchange ", p)
+    assert len(shuffles) <= 1, p
+    term_windows = re.findall(r"\bWindow \[.*\], \[term#\d+L?\]", p)
+    assert not term_windows, p
+
+
 def test_hybrid_rrf3_single_union_exchange_ceiling(spark):
     """The three legs meet in ONE Union feeding the single RRF groupBy,
-    and the whole three-leg plan stays at or under 10 shuffle exchanges
-    (the count of the single-fusion form) — a duplicated leg or a
-    second fusion would show up as extra Unions or Exchanges."""
+    and the whole three-leg plan stays at or under 5 shuffle exchanges
+    (the BM25 leg's one, the dense and ColPali legs' own, none for
+    the fusion) — a duplicated leg or a second fusion would show up as
+    extra Unions or Exchanges."""
     import __spark_entry__ as entrymod
 
     p = plan_of(entrymod.queries()["hybrid_rrf3"](spark, SF_DIR), "simple")
     assert len(re.findall(r"\bUnion\b", p)) == 1, p
     shuffles = re.findall(r"(?<![A-Za-z])Exchange ", p)
-    assert len(shuffles) <= 10, p
+    assert len(shuffles) <= 5, p
 
 
 def test_maxsim_topk_single_arrow_pass_no_join(spark):

@@ -10,6 +10,7 @@ import shutil
 import pytest
 
 import __spark_entry__ as entrymod
+from plan_inspect import query_execution
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -118,7 +119,7 @@ def test_directly_executed_plan_is_served_fresh(spark):
     b = qs["maxsim_topk"](spark, SF_DIR)
     assert b is not a
     assert qs["maxsim_topk"](spark, SF_DIR) is b
-    assert "isFinalPlan=true" not in b._jdf.queryExecution().toString()
+    assert "isFinalPlan=true" not in query_execution(b)
     assert sorted(b.collect()) == rows
 
 
@@ -140,9 +141,9 @@ def test_index_cache_stale_session_invalidates(spark):
     same (session, value) identity guard as _PREPARED — a hit owned by
     a stopped/replaced session must rebuild, never serve the dead
     frame."""
-    pair = entrymod._bm25_index(spark, SF_DIR)
+    index = entrymod._bm25_index(spark, SF_DIR)
     fp = entrymod._bm25_index_key(SF_DIR)
-    assert entrymod._INDEX_CACHE[fp] == (spark, pair)
+    assert entrymod._INDEX_CACHE[fp] == (spark, index)
     sentinel = ("dead", "frames")
     entrymod._INDEX_CACHE[fp] = (object(), sentinel)
     rebuilt = entrymod._bm25_index(spark, SF_DIR)

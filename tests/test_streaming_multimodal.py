@@ -471,47 +471,6 @@ def test_funnel_is_order_and_partition_invariant(spark):
     assert got == want
 
 
-def test_slice_reader_handles_mixed_flat_and_partitioned_layout(
-    spark, tmp_path
-):
-    """Upgrading a live stream in place leaves the old gate's flat
-    part-files at the index root NEXT TO the new gate's
-    ingest_batch=N partition dirs; one spark.read.parquet(root) throws
-    'Conflicting directory structures' on that mix, so the slice
-    reader must load the halves separately and union them (the flat
-    half is standing corpus — never batch-excluded)."""
-    from rag_database_spark.operators import dedup as dd
-
-    path = str(tmp_path / "index")
-    # legacy flat append (pre-upgrade gate)
-    spark.createDataFrame(
-        [(1, "aa"), (2, "bb")], "doc_id long, s string"
-    ).write.mode("append").parquet(path)
-    # new-gate batch slices on the same root
-    dd._write_slice(
-        spark.createDataFrame([(3, "cc")], "doc_id long, s string"),
-        path,
-        batch_id=7,
-    )
-    dd._write_slice(
-        spark.createDataFrame([(4, "dd")], "doc_id long, s string"),
-        path,
-        batch_id=8,
-    )
-    got = sorted(
-        map(tuple, dd.read_shingle_index(spark, path).collect())
-    )
-    assert got == [(1, "aa"), (2, "bb"), (3, "cc"), (4, "dd")]
-    # excluding a batch drops exactly that slice; flat rows stay
-    got7 = sorted(
-        map(
-            tuple,
-            dd.read_shingle_index(spark, path, exclude_batch=7).collect(),
-        )
-    )
-    assert got7 == [(1, "aa"), (2, "bb"), (4, "dd")]
-
-
 def test_use_real_pins_the_seam_branch(monkeypatch):
     """Entries whose payloads are synthesized from text pass
     real=False: even when the library is importable, the real decoder
