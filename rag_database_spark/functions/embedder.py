@@ -28,14 +28,6 @@ EMBED_DIM = 8
 # M1 real-model default (dense_embedder.py:27-35)
 DEFAULT_MODEL = "BAAI/bge-small-en-v1.5"
 
-# BGE models want this prefix on QUERIES (not documents) for best
-# retrieval quality (dense_embedder.py:46-50, 66-72); pass it as
-# model_embed(prefix=...) on the query side
-BGE_QUERY_PREFIX = (
-    "Represent this sentence for searching relevant passages: "
-)
-
-
 DIMS_PER_DIGEST = 8  # 32 hex chars / 4 per dimension
 
 
@@ -103,8 +95,9 @@ def model_embed(
     ``normalize`` forwards sentence-transformers'
     ``normalize_embeddings`` — the reference always L2-normalizes so
     dot product == cosine (dense_embedder.py:60-63); ``prefix`` is
-    prepended to every text, the BGE query-side convention
-    (``BGE_QUERY_PREFIX``, dense_embedder.py:46-50).
+    prepended to every text, the BGE query-side convention (BGE
+    models want an instruction prefix on queries, not documents,
+    dense_embedder.py:46-50).
 
     Raises ImportError when sentence-transformers is absent. Recorded-fixture
     tests pin the encode contract (batch_size forwarding, normalize

@@ -144,7 +144,7 @@ def score_queries(
 
 
 def tfidf_keywords(
-    postings: DataFrame, doclens: DataFrame, k: int = 3
+    postings: DataFrame, stats: DataFrame, k: int = 3
 ) -> DataFrame:
     """Per-document keyword extraction: top-``k`` terms by tf-idf
     (smoothed idf ln((N+1)/(df+1)) + 1, ties → term ascending) over
@@ -152,11 +152,11 @@ def tfidf_keywords(
     twin of the reference's query-side keyword surface (F1 tokenizer,
     bm25_store.py:38-100; search-term extraction, hybrid_search.py).
 
-    Scale: df is one groupBy(term) with map-side partials; the 1-row
-    corpus count
+    Scale: df is one groupBy(term) with map-side partials; N comes
+    from the index's 1-row stats frame (``read_stats``) and
     broadcasts; the rank window partitions by doc_id and is bounded by
     per-document vocabulary, never corpus size."""
-    n_docs = doclens.agg(F.count("*").alias("n_docs"))
+    n_docs = stats.select("n_docs")
     dfreq = postings.groupBy("term").agg(F.count("*").alias("df"))
     scored = (
         postings.join(dfreq, "term")

@@ -559,90 +559,17 @@ def embedding_near_dupes_lsh(
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Near-duplicate CLUSTERS from pairwise edges: connected
-    components with cluster_id = min(doc_id) in the component.
-    Singleton documents are their own cluster — the output is one row
-    per corpus document, the keep/drop decision a pipeline makes after
-    pair generation.
-
-    Iterative min-label propagation: each round joins labels to the
-    symmetric edge list and takes the per-vertex min — one shuffle
-    join plus one groupBy per round, converging in O(component
-    diameter) rounds. Near-dup components are overwhelmingly tiny
-    (dupes of a document cluster tightly), so 2-4 rounds dominate in
-    practice; ``localCheckpoint`` after every round cuts the lineage
-    so the plan doesn't grow with iterations. (A corpus with a
-    pathological giant component would want the large-star/small-star
-    [CC-MR] round structure, which converges in O(log n); the label
-    topology here is the same, only the round rule differs.)
-    """
-    sym = pairs.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    )
-    sym = sym.union(
-        sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    labels = docs.select(
-        F.col(id_col).alias("a"), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        msgs = sym.join(labels, "a").select(
-            F.col("b").alias("a"), "label"
-        )
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("a")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("label", "old"), "a"
-            )
-            .filter(F.col("label") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # fell through without converging: a component with diameter >
-        # max_iter would carry stale (non-minimal) cluster_ids — make
-        # that loud instead of silently returning wrong clusters
-        import warnings
-
-        warnings.warn(
-            f"dedup_clusters: min-label propagation did not converge "
-            f"within max_iter={max_iter} rounds; cluster_ids for "
-            f"components with diameter > {max_iter} are not settled",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(
-        F.col("a").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def keep_representatives(
     docs: DataFrame,
     clusters: DataFrame,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Materialized deduplicated corpus: one representative per
-    near-dup cluster — the component-min document ``dedup_clusters``
-    labels with its own id — plus the number of duplicates that
-    representative absorbs. This is the step a training pipeline
-    actually ships: the *filtered corpus*, not just the audit of pairs
-    or cluster labels.
+    near-dup cluster — the component-min document
+    ``dedup_clusters_star`` labels with its own id — plus the number
+    of duplicates that representative absorbs. This is the step a
+    training pipeline actually ships: the *filtered corpus*, not just
+    the audit of pairs or cluster labels.
 
     Plan: one groupBy(cluster_id) for component sizes (uniform small
     keys, map-side partials), a codegen filter ``doc_id == cluster_id``
@@ -687,7 +614,7 @@ def leakage_safe_split(
     prevented at split time instead).
 
     ``labels`` is the (doc_id, cluster_id) component frame
-    (``dedup_clusters`` output or its persisted artifact); the split
+    (``dedup_clusters_star`` output or its persisted artifact); the split
     hashes the CLUSTER id, not the doc id, with the same md5-derived
     60-bit integer threshold as the deterministic samplers
     (``stratified_sample``) — a pure function of the component label,
@@ -823,11 +750,11 @@ def soft_dedup(
     column unconditionally.
 
     Plan: connected components over the pair graph
-    (``dedup_clusters_star`` — the same component-min labels as
-    ``dedup_clusters``, one Arrow batch for small graphs), then ONE
-    count window on cluster_id — the labels subtree runs once, where a
-    groupBy joined back would run it twice: no step beyond the pair
-    generation itself touches document text."""
+    (``dedup_clusters_star`` — component-min labels, one Arrow batch
+    for small graphs), then ONE count window on cluster_id — the
+    labels subtree runs once, where a groupBy joined back would run it
+    twice: no step beyond the pair generation itself touches document
+    text."""
     cl = dedup_clusters_star(pairs, docs, id_col, src_col, dst_col)
     return cl.withColumn(
         "group_size",
@@ -1191,7 +1118,8 @@ def dedup_clusters_star(
     max_rounds: int = 30,
 ) -> DataFrame:
     """Connected components, one row per corpus document, cluster_id =
-    component-min doc_id (the ``dedup_clusters`` contract).
+    component-min doc_id; a document with no edge is its own
+    cluster.
 
     The distinct edge set is checkpointed once and its (count,
     hash) signature taken. Two paths follow:

@@ -444,7 +444,7 @@ def pagerank(
     1-row cross join, so a round is a single job (no separate driver
     collect), keeping the ranks a true probability distribution.
     ``localCheckpoint`` every second round (and the last) truncates
-    the lineage (same discipline as ``dedup_clusters``) — depth-2
+    the lineage (as ``dedup_clusters_star``'s rounds do) — depth-2
     lineage stays constant-bounded at half the materialization cost,
     so the plan does not grow with the iteration count.
 

@@ -216,22 +216,22 @@ def model_rerank(
     )
 
 
-def bm25_index_stats(postings: DataFrame, doclens: DataFrame) -> DataFrame:
+def bm25_index_stats(postings: DataFrame, stats: DataFrame) -> DataFrame:
     """A4 (bm25_store.py:326-334): corpus size, average doc length,
     vocabulary size, postings count. ``approx_vocabulary`` shows the
-    approx_count_distinct upgrade SURVEY §2 notes for 100 TB."""
+    approx_count_distinct upgrade SURVEY §2 notes for 100 TB.
+
+    ``stats`` is the index's 1-row (n_docs, avgdl) frame
+    (``bm25.read_stats``): avgdl is the exact integer length sum
+    divided ONCE in IEEE double — bit-deterministic across engines,
+    unlike round(avg(...), 6) whose pre-rounding accumulation order
+    differs by ulps."""
     p = postings.agg(
         F.countDistinct("term").alias("vocabulary_size"),
         F.count("*").alias("n_postings"),
         F.sum("tf").alias("total_tokens"),
     )
-    d = doclens.agg(
-        F.count("*").alias("n_docs"),
-        # exact integer sum, then ONE IEEE division — bit-deterministic
-        # across engines, unlike round(avg(...), 6) whose pre-rounding
-        # accumulation order differs by ulps
-        (F.sum("dl").cast("double") / F.count("*")).alias("avg_doc_len"),
-    )
+    d = stats.select("n_docs", F.col("avgdl").alias("avg_doc_len"))
     return d.crossJoin(p).select(
         "n_docs", "avg_doc_len", "vocabulary_size", "n_postings",
         "total_tokens",

@@ -201,18 +201,18 @@ def test_dedup_clusters_hand_case(spark):
     )
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dedup_clusters(pairs, docs).collect()
+        for r in dedup.dedup_clusters_star(pairs, docs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
 def test_dedup_clusters_long_chain_converges(spark):
-    # a 12-node path exercises multiple propagation rounds
+    # a 12-node path: every node takes the far end's label
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     docs = spark.createDataFrame([(i,) for i in range(13)], "doc_id long")
-    rows = dedup.dedup_clusters(pairs, docs).collect()
+    rows = dedup.dedup_clusters_star(pairs, docs).collect()
     assert {r["cluster_id"] for r in rows} == {0}
 
 
@@ -226,7 +226,7 @@ def test_keep_representatives_hand_case(spark):
         [(i, i * 100) for i in (1, 2, 3, 10, 11, 20)],
         "doc_id long, n_chars long",
     )
-    clusters = dedup.dedup_clusters(pairs, docs)
+    clusters = dedup.dedup_clusters_star(pairs, docs)
     rows = dedup.keep_representatives(docs, clusters).collect()
     got = {
         r["doc_id"]: (r["cluster_size"], r["n_dupes_removed"], r["n_chars"])
@@ -315,6 +315,27 @@ def cc_path(request, monkeypatch):
     return request.param
 
 
+def _bfs_component_min(nodes, edges):
+    """Reference labels: plain BFS over the undirected edge list, each
+    node labelled with its component's smallest id."""
+    adj = {n: set() for n in nodes}
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    label = {}
+    for start in sorted(nodes):
+        if start in label:
+            continue
+        label[start] = start
+        todo = [start]
+        while todo:
+            for nb in adj[todo.pop()]:
+                if nb not in label:
+                    label[nb] = start
+                    todo.append(nb)
+    return label
+
+
 def test_star_cc_matches_min_label_hand_case(spark, cc_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
@@ -340,13 +361,11 @@ def test_star_cc_matches_min_label_on_random_graph(spark, cc_path):
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    a = sorted(
-        tuple(r) for r in dedup.dedup_clusters(pairs, docs).collect()
-    )
-    b = sorted(
-        tuple(r) for r in dedup.dedup_clusters_star(pairs, docs).collect()
-    )
-    assert a == b
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dedup_clusters_star(pairs, docs).collect()
+    }
+    assert got == _bfs_component_min(range(n), edges)
 
 
 def test_star_cc_long_chain_converges_logarithmically(spark, monkeypatch):
@@ -377,15 +396,17 @@ def test_star_cc_long_chain_converges_logarithmically(spark, monkeypatch):
 
 
 def test_keep_representatives_agrees_across_cc_algorithms(spark, cc_path):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
+    ids, edges = (1, 2, 3, 10, 11, 20), [(1, 2), (2, 3), (10, 11)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     docs = spark.createDataFrame(
-        [(i, i * 10) for i in (1, 2, 3, 10, 11, 20)],
-        "doc_id long, n_chars long",
+        [(i, i * 10) for i in ids], "doc_id long, n_chars long"
+    )
+    ref = spark.createDataFrame(
+        sorted(_bfs_component_min(ids, edges).items()),
+        "doc_id long, cluster_id long",
     )
     a = sorted(tuple(r) for r in dedup.keep_representatives(
-        docs, dedup.dedup_clusters(pairs, docs)).collect())
+        docs, ref).collect())
     b = sorted(tuple(r) for r in dedup.keep_representatives(
         docs, dedup.dedup_clusters_star(pairs, docs)).collect())
     assert a == b

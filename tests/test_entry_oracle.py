@@ -47,6 +47,11 @@ def test_entry_matches_oracle(spark, duck, name):
         pytest.skip("driver testdata not present")
     sdf = entrymod.queries()[name](spark, SF_DIR)
     assert unmaterialized_rdd_leaves(sdf) == []
+    # every entry goes through the plan cache: the second call is served
+    # the first frame unless a checkpointed leaf keeps it out. Checked
+    # before collect(), since a frame that ran is rebuilt on purpose.
+    again = entrymod.queries()[name](spark, SF_DIR)
+    assert (again is sdf) == (not entrymod._has_materialized_leaf(sdf))
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     oracle = entrymod.oracle_sql().get(name)

@@ -105,6 +105,40 @@ def test_driver_window_composition_is_pinned():
     assert not in_head, f"rows-only entries occupying verified slots: {in_head}"
 
 
+def test_driver_window_holds_the_stalest_certifications():
+    """The window is computed from the CORRECTNESS_r<N>.json files: no
+    oracle-backed entry outside the first 50 keys had its last green
+    hash match in an older round than an entry inside them (never green
+    counts as round 0)."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    last = {}
+    root = Path(entrymod.__file__).resolve().parent
+    for path in root.glob("CORRECTNESS_r*.json"):
+        rnd = path.stem.removeprefix("CORRECTNESS_r")
+        if not rnd.isdigit():
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if row["hash_match"] is True:
+                last[name] = max(last.get(name, 0), int(rnd))
+    order = list(entrymod.queries())
+    rows_only = set(entrymod.ROWS_ONLY_ENTRIES)
+    head = {n: last.get(n, 0) for n in order[:DRIVER_WINDOW]}
+    tail = {
+        n: last.get(n, 0)
+        for n in order[DRIVER_WINDOW:]
+        if n not in rows_only
+    }
+    newest_in = max(head.values())
+    older_out = sorted(n for n, r in tail.items() if r < newest_in)
+    assert not older_out, (
+        f"entries outside the window certified before round {newest_in}: "
+        f"{older_out}"
+    )
+
+
 def test_embedding_corpus_has_no_zero_norm_vectors():
     """Data contract behind the unguarded full-vector cosines in the
     oracle SQL: the engine maps a zero-norm vector to score 0.0 while

@@ -1,6 +1,7 @@
-"""Prepared-plan cache semantics (__spark_entry__._prepared): pure lazy
-entries reuse their analyzed DataFrame per (entry, corpus fingerprint);
-eager/effectful entries rebuild every call; a session swap invalidates."""
+"""Prepared-plan cache semantics (__spark_entry__._prepared): entries
+whose plan has no checkpointed leaf reuse their analyzed DataFrame per
+(entry, corpus fingerprint); entries that checkpoint while building
+rebuild every call; a session swap invalidates."""
 
 from __future__ import annotations
 
@@ -34,13 +35,13 @@ def test_eager_entry_not_cached(spark):
 
 
 def test_checkpoint_bearing_entries_rebuild_per_call(spark):
-    """The guard fires on the plan shape, not the name list: an entry
-    listed in _PURE_LAZY whose build still checkpoints (the edge set
-    of semantic_components' connected-components pass) must NOT be
-    served from _PREPARED — the cached frame would hand every later
-    invocation the warmup-materialized RDD blocks (result caching
-    across bench passes). bm25_topk, listed beside it and pure lazy,
-    is served from the cache."""
+    """The guard decides on the plan shape: an entry whose build
+    checkpoints (the edge set of semantic_components'
+    connected-components pass) must NOT be served from _PREPARED — the
+    cached frame would hand every later invocation the
+    warmup-materialized RDD blocks (result caching across bench
+    passes). bm25_topk, which builds a plain lazy plan, is served from
+    the cache."""
     qs = entrymod.queries()
     a = qs["semantic_components"](spark, SF_DIR)
     b = qs["semantic_components"](spark, SF_DIR)

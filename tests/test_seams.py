@@ -12,6 +12,10 @@ import pytest
 
 from rag_database_spark import seams
 
+# BGE models want this prefix on QUERIES (not documents) for best
+# retrieval quality (reference dense_embedder.py:46-50, 66-72)
+BGE_QUERY_PREFIX = "Represent this sentence for searching relevant passages: "
+
 
 @pytest.fixture(autouse=True)
 def _clear_probe_cache():
@@ -288,10 +292,10 @@ def test_model_embed_encode_contract_recorded(spark, monkeypatch):
     out = {
         r["id"]: r["embedding"]
         for r in embedder.model_embed(
-            df, batch_size=7, prefix=embedder.BGE_QUERY_PREFIX
+            df, batch_size=7, prefix=BGE_QUERY_PREFIX
         ).collect()
     }
-    plen = len(embedder.BGE_QUERY_PREFIX)
+    plen = len(BGE_QUERY_PREFIX)
     # normalize defaults ON (the reference always L2-normalizes)
     assert out[1] == [float(plen + 5), 7.0, 1.0]
     assert out[2] == [float(plen + 2), 7.0, 1.0]
