@@ -70,7 +70,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # `is spark` on hit: a cached DataFrame is bound to the session that
 # read it, so after a stop/restart in the same process a bare
 # fingerprint hit would hand back a frame on a dead session.
-_INDEX_CACHE: dict[str, tuple[SparkSession, tuple[DataFrame, DataFrame]]] = {}
+_INDEX_CACHE: dict[
+    str, tuple[SparkSession, tuple[DataFrame, DataFrame, DataFrame]]
+] = {}
 _IVF_CACHE: dict[str, tuple[SparkSession, tuple[DataFrame, DataFrame]]] = {}
 _PQ_CACHE: dict[str, tuple[SparkSession, tuple[DataFrame, DataFrame]]] = {}
 _IVFPQ_CACHE: dict[
@@ -89,11 +91,13 @@ _IVFPQ_CACHE: dict[
 # source table's fingerprint (_prepared_key) so a regenerated corpus
 # can never serve a stale plan.
 # Every queries() entry goes through _prepared, and its checkpoint guard
-# alone decides what is kept: a plan over a checkpointed leaf (BFS or
-# components loops) rebuilds per call, or the cache would skip real
-# compute, not just compilation. Values a builder collects or writes
-# while building (query vectors, event bounds, time_travel's first-call
-# table) depend only on the source tables the key covers.
+# alone decides what is kept: a plan over a checkpointed leaf (the BFS
+# loops, the components loop above its edge budget) rebuilds per call,
+# or the cache would skip real compute, not just compilation. Values a
+# builder collects or writes while building (query vectors, the
+# near-dup GEMM's broadcast matrix, event bounds, the components edge
+# count, time_travel's first-call table) depend only on the source
+# tables the key covers.
 _PREPARED: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
@@ -837,7 +841,9 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, cluster_id = component min (dedup_clusters_star: one
     Arrow-batch union-find under its edge budget, large-star/small-star
     rounds above it). Serves both dedup_clusters and dedup_clusters_cc,
-    which share one oracle."""
+    which share one oracle. Under the budget the plan has no
+    checkpointed leaf and is served from ``_PREPARED``; only the
+    over-budget rounds rebuild per call."""
     return dedup.dedup_clusters_star(
         _jaccard_pairs(spark, sf_dir),
         load_table(spark, sf_dir, "documents"),
@@ -3110,10 +3116,10 @@ def _semantic_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_clusters_star). The pair graph is small (59 edges over the
     sf0.01 fixture's 500 vectors, 920 over sf0.1's 2,000), far under
     ``dedup_clusters_star``'s ``CC_LOCAL_MAX_EDGES`` budget, so the labels
-    come from one lazy Arrow-batch union-find after the edge
-    checkpoint and its count probe; a graph above the budget runs the
-    large/small-star rounds (O(log n) of them). The edge checkpoint
-    keeps the entry out of ``_PREPARED``: it rebuilds per call."""
+    come from one Arrow-batch union-find over the lazy edge set, chosen
+    by the edge checkpoint's count probe, and the plan is served from
+    ``_PREPARED``; a graph above the budget runs the large/small-star
+    rounds (O(log n) of them) and rebuilds per call."""
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = similarity.embedding_near_dupes(
         emb, SEMANTIC_CC_THRESHOLD, id_col="vec_id", vec_col="embedding"

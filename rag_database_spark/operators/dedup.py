@@ -1122,28 +1122,37 @@ def dedup_clusters_star(
     cluster.
 
     The distinct edge set is checkpointed once and its (count,
-    hash) signature taken. Two paths follow:
+    hash) signature taken; the checkpoint feeds only that signature
+    and the star rounds. Two paths follow:
 
     - up to ``CC_LOCAL_MAX_EDGES`` edges (near-dup graphs are sparse:
       the sf0.01 fixture's 500 vectors give 59 semantic-duplicate
-      edges), the labels come from one lazy Arrow batch on one worker
-      (``_union_find_labels``) — no further eager job, where the star
-      loop spends two per round;
+      edges), the labels come from one Arrow batch on one worker
+      (``_union_find_labels``) over the LAZY edge set, not its
+      checkpoint: the returned plan has no checkpointed leaf, so a
+      plan cache may keep it, and each execution recomputes the edges;
     - above it, alternating large-star/small-star rounds (Kiveris et
       al. 2014, "Connected Components in MapReduce and Beyond" —
-      public paper), which converge in O(log n) rounds on ANY
-      component topology, where min-label propagation needs
-      O(diameter). Each round is one groupBy + one join per star op,
-      with ``localCheckpoint`` truncating lineage; the fixpoint test
-      compares the edge-set signature — two scans, no subtract join.
+      public paper) start from the checkpoint. They converge in
+      O(log n) rounds on ANY component topology, where min-label
+      propagation needs O(diameter). Each round is one groupBy + one
+      join per star op, with ``localCheckpoint`` truncating lineage;
+      the fixpoint test compares the edge-set signature — two scans,
+      no subtract join.
+
+    The path is chosen from the checkpoint's count, not a count of the
+    lazy set: above the budget that would generate the pairs twice.
+    The edge count decides the plan shape, so a cached plan stays
+    valid only while ``pairs``' sources are unchanged.
 
     Both paths end in the same left join to ``docs``: a document with
     no edge is its own cluster.
     """
-    edges = pairs.select(
+    lazy_edges = pairs.select(
         F.col(src_col).cast("long").alias("u"),
         F.col(dst_col).cast("long").alias("v"),
-    ).filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    ).filter(F.col("u") != F.col("v")).distinct()
+    edges = lazy_edges.localCheckpoint()
 
     def _signature(e: DataFrame) -> tuple[int, int]:
         # bit_xor is order-insensitive and cannot overflow (ANSI mode
@@ -1190,7 +1199,7 @@ def dedup_clusters_star(
 
     sig = _signature(edges)
     if sig[0] <= CC_LOCAL_MAX_EDGES:
-        labels = edges.coalesce(1).mapInPandas(
+        labels = lazy_edges.coalesce(1).mapInPandas(
             _union_find_labels, schema="u long, label long"
         )
     else:

@@ -1,5 +1,6 @@
 """Plan inspection shared by the test modules: the one place that reads
-Catalyst's analyzed and physical plans of a DataFrame."""
+Catalyst's analyzed and physical plans of a DataFrame, and counts the
+Spark jobs a piece of driver code launches."""
 
 from __future__ import annotations
 
@@ -49,3 +50,16 @@ def unmaterialized_rdd_leaves(df) -> list[str]:
         and not (node.rdd().isCheckpointed()
                  or node.rdd().isLocallyCheckpointed())
     ]
+
+
+def jobs_launched(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted under a fresh
+    job group through the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

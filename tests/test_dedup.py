@@ -7,6 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
+from plan_inspect import jobs_launched
 from rag_database_spark.operators import dedup
 from rag_database_spark.operators.similarity import embedding_near_dupes
 
@@ -190,22 +192,6 @@ def test_prefix_filter_is_exact(spark, docs):
     assert base == pf and base  # identical, non-empty
 
 
-def test_dedup_clusters_hand_case(spark):
-    # chain 1-2-3 (transitive, no direct 1-3 edge), pair 10-11,
-    # singleton 20
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 20)], "doc_id long"
-    )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.dedup_clusters_star(pairs, docs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
-
-
 def test_dedup_clusters_long_chain_converges(spark):
     # a 12-node path: every node takes the far end's label
     pairs = spark.createDataFrame(
@@ -337,6 +323,8 @@ def _bfs_component_min(nodes, edges):
 
 
 def test_star_cc_matches_min_label_hand_case(spark, cc_path):
+    # chain 1-2-3 (transitive, no direct 1-3 edge), pair 10-11,
+    # singleton 20
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
@@ -395,6 +383,20 @@ def test_star_cc_long_chain_converges_logarithmically(spark, monkeypatch):
     assert 2 <= calls["rounds"] <= 12, calls["rounds"]
 
 
+def test_star_cc_checkpointed_leaf_only_above_budget(spark, cc_path):
+    """Under the edge budget the union-find reads the lazy edge set, so
+    the labels plan has no checkpointed leaf and the plan cache may keep
+    it; the star rounds above the budget build over checkpoints."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    docs = spark.createDataFrame(
+        [(i,) for i in (1, 2, 3, 10, 11, 20)], "doc_id long"
+    )
+    labels = dedup.dedup_clusters_star(pairs, docs)
+    assert entrymod._has_materialized_leaf(labels) == (cc_path == "star")
+
+
 def test_keep_representatives_agrees_across_cc_algorithms(spark, cc_path):
     ids, edges = (1, 2, 3, 10, 11, 20), [(1, 2), (2, 3), (10, 11)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -417,17 +419,6 @@ def test_keep_representatives_agrees_across_cc_algorithms(spark, cc_path):
 STAR_CC_SMALL_GRAPH_MAX_JOBS = 4
 
 
-def _build_jobs(spark, group, build):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_star_cc_small_graph_job_ceiling(spark, monkeypatch):
     """Under the edge budget, building the components launches a fixed
     handful of jobs whatever the graph's depth; the star rounds the
@@ -436,13 +427,13 @@ def test_star_cc_small_graph_job_ceiling(spark, monkeypatch):
         [(i, i + 1) for i in range(31)], "id_a long, id_b long"
     )
     docs = spark.createDataFrame([(i,) for i in range(32)], "doc_id long")
-    n_batch = _build_jobs(
+    n_batch = jobs_launched(
         spark, "star-cc-batch",
         lambda: dedup.dedup_clusters_star(pairs, docs),
     )
     assert 1 <= n_batch <= STAR_CC_SMALL_GRAPH_MAX_JOBS, n_batch
     monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", 0)
-    n_star = _build_jobs(
+    n_star = jobs_launched(
         spark, "star-cc-rounds",
         lambda: dedup.dedup_clusters_star(pairs, docs),
     )

@@ -11,7 +11,7 @@ import shutil
 import pytest
 
 import __spark_entry__ as entrymod
-from plan_inspect import query_execution
+from plan_inspect import jobs_launched, query_execution
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -36,22 +36,41 @@ def test_eager_entry_not_cached(spark):
 
 def test_checkpoint_bearing_entries_rebuild_per_call(spark):
     """The guard decides on the plan shape: an entry whose build
-    checkpoints (the edge set of semantic_components'
-    connected-components pass) must NOT be served from _PREPARED — the
-    cached frame would hand every later invocation the
+    checkpoints (shortest_chains' BFS rounds) must NOT be served from
+    _PREPARED — the cached frame would hand every later invocation the
     warmup-materialized RDD blocks (result caching across bench
     passes). bm25_topk, which builds a plain lazy plan, is served from
     the cache."""
     qs = entrymod.queries()
-    a = qs["semantic_components"](spark, SF_DIR)
-    b = qs["semantic_components"](spark, SF_DIR)
+    a = qs["shortest_chains"](spark, SF_DIR)
+    b = qs["shortest_chains"](spark, SF_DIR)
     assert a is not b
     assert entrymod._has_materialized_leaf(a)
-    key = entrymod._prepared_key("semantic_components", SF_DIR)
+    key = entrymod._prepared_key("shortest_chains", SF_DIR)
     assert key not in entrymod._PREPARED
     c = qs["bm25_topk"](spark, SF_DIR)
     assert qs["bm25_topk"](spark, SF_DIR) is c
     assert not entrymod._has_materialized_leaf(c)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["semantic_components", "dedup_clusters", "dedup_clusters_cc",
+     "soft_dedup"],
+)
+def test_components_entries_served_from_prepared_plan(spark, name):
+    """Under the edge budget the connected-components union-find reads
+    the lazy edge set, not its checkpoint: the plan has no checkpointed
+    leaf, and a warm call is the cached frame and launches no job."""
+    qs = entrymod.queries()
+    a = qs[name](spark, SF_DIR)
+    assert not entrymod._has_materialized_leaf(a)
+    served = []
+    n_jobs = jobs_launched(
+        spark, f"warm-{name}", lambda: served.append(qs[name](spark, SF_DIR))
+    )
+    assert served[0] is a
+    assert n_jobs == 0, n_jobs
 
 
 def test_prepared_cache_serves_only_pure_lazy_plans(spark):
