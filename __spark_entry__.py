@@ -61,24 +61,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return _hybrid_rrf(spark, sf_dir)
 
 
-# --------------------------------------------------------------------------
-# Persisted BM25 index (S7): built once per sf_dir under .cache/, reused by
-# every BM25-consuming entry so queries measure query time, not indexing.
-# --------------------------------------------------------------------------
-
-# Every in-memory artifact memo stores (session, value) and verifies
-# `is spark` on hit: a cached DataFrame is bound to the session that
-# read it, so after a stop/restart in the same process a bare
-# fingerprint hit would hand back a frame on a dead session.
-_INDEX_CACHE: dict[
-    str, tuple[SparkSession, tuple[DataFrame, DataFrame, DataFrame]]
-] = {}
-_IVF_CACHE: dict[str, tuple[SparkSession, tuple[DataFrame, DataFrame]]] = {}
-_PQ_CACHE: dict[str, tuple[SparkSession, tuple[DataFrame, DataFrame]]] = {}
-_IVFPQ_CACHE: dict[
-    str, tuple[SparkSession, tuple[DataFrame, DataFrame, DataFrame]]
-] = {}
-
 # Prepared-query plans: the search entries are parameterized templates
 # over a fixed workload, and for the composite ones (three-leg hybrid,
 # enhanced search) driver-side plan construction + analysis is 40-60%
@@ -219,52 +201,78 @@ def _logic_version(*mods, with_entry: bool = True) -> str:
     return v
 
 
-def _graph_logic_version() -> str:
-    """Version hash for the doc-graph artifact family (pagerank edge
-    list, pagerank/PPR scores, adjacency): covers graph.py (iteration
-    /edge-prep logic), dedup.py (shingle pairs feeding near_dup
-    edges), and the entry file itself (_doc_edge_table's confidence
-    grid, JACCARD_THRESHOLD, seed constants) — r17 ADVICE: the
-    fingerprint-only pagerank_edges key let an edge-parameter edit
-    serve stale PPR scores. text_fns rides too: shingling (and hence
-    the near_dup edge set) derives from the tokenizer layer."""
-    return _logic_version(graph_ops, dedup, text_fns)
+# --------------------------------------------------------------------------
+# Persisted artifacts: every index, pair set, score table and trained model
+# a query reads is built once per corpus under .cache/<family>/<key> and
+# read back by every consumer, so queries measure query time, not indexing.
+# --------------------------------------------------------------------------
+
+# (family, key) -> (session, value). A read-back DataFrame is bound to the
+# session that read it, so a hit owned by a stopped or replaced session
+# re-reads instead of handing back a frame on a dead session.
+_ARTIFACTS: dict[tuple[str, str], tuple[SparkSession, object]] = {}
 
 
-def _bm25_index_key(sf_dir: str) -> str:
-    """Cache key for the persisted BM25 index: the SOURCE FINGERPRINT
-    (not sf_dir) so the in-memory and on-disk layers invalidate
-    together when the corpus is regenerated, plus the logic version of
-    the modules the postings bake in (r17 sweep: a tokenizer edit must
-    rebuild the index, not serve stale postings against a rebuilt
-    oracle)."""
+def _artifact_key(
+    sf_dir: str, constants: str, *mods, table: str = "documents",
+    with_entry: bool = True,
+) -> str:
+    """``<source fingerprint><constants>-v<logic version>``: the source
+    table the artifact derives from, every constant it bakes in, and
+    the hash of the modules (``with_entry``: and this file) whose code
+    builds it. A regenerated corpus, a constant edit or a logic edit
+    each name a new directory instead of serving a stale one."""
     return (
-        f"{_source_fingerprint(sf_dir)}"
-        f"-v{_logic_version(bm25_ops, text_fns, with_entry=False)}"
+        f"{_source_fingerprint(sf_dir, table)}{constants}"
+        f"-v{_logic_version(*mods, with_entry=with_entry)}"
     )
+
+
+def _artifact_dir(family: str, key: str) -> str:
+    """The one place a ``.cache/<family>/<key>`` path is built."""
+    return str(Path(__file__).resolve().parent / ".cache" / family / key)
+
+
+def _artifact(spark, family, key, build, read=None, done=""):
+    """The persisted artifact ``family``/``key``, memoised per session:
+    ``build(dir)`` writes it when ``<dir>/<done>/_SUCCESS`` is missing
+    (``done`` names the part written last), and ``read(dir)``
+    (default ``spark.read.parquet``) reads it back."""
+    hit = _ARTIFACTS.get((family, key))
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    path = _artifact_dir(family, key)
+    if not Path(path, done, "_SUCCESS").exists():
+        build(path)
+    value = (read or spark.read.parquet)(path)
+    _ARTIFACTS[(family, key)] = (spark, value)
+    return value
+
+
+def _graph_key(sf_dir: str, constants: str = "") -> str:
+    """Key of the doc-graph artifacts (adjacency, PageRank edge list,
+    PageRank/PPR scores). Its version covers graph.py (iteration and
+    edge prep), dedup.py and functions/text.py (the near_dup edges
+    derive from shingling) and this file (_doc_edge_table's confidence
+    grid, JACCARD_THRESHOLD, the seed constants)."""
+    return _artifact_key(sf_dir, constants, graph_ops, dedup, text_fns)
 
 
 def _bm25_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(postings, doclens, stats) of the persisted BM25 index."""
-    fp = _bm25_index_key(sf_dir)
-    hit = _INDEX_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = (
-        Path(__file__).resolve().parent / ".cache" / "bm25_index" / fp
+    return _artifact(
+        spark, "bm25_index",
+        _artifact_key(sf_dir, "", bm25_ops, text_fns, with_entry=False),
+        lambda d: bm25_ops.write_index(
+            load_table(spark, sf_dir, "documents"), d
+        ),
+        lambda d: (
+            *bm25_ops.read_index(spark, d), bm25_ops.read_stats(spark, d)
+        ),
+        done="stats",
     )
-    if not (cache_dir / "stats" / "_SUCCESS").exists():
-        bm25_ops.write_index(
-            load_table(spark, sf_dir, "documents"), str(cache_dir)
-        )
-    index = (
-        *bm25_ops.read_index(spark, str(cache_dir)),
-        bm25_ops.read_stats(spark, str(cache_dir)),
-    )
-    _INDEX_CACHE[fp] = (spark, index)
-    return index
 
 
 def prepare(spark: SparkSession, sf_dir: str) -> None:
@@ -339,30 +347,24 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     DETERMINISTIC method (clustering.kmeans_fit in the quantized
     frame) and a count-derived centroid count (similarity.ivf_k_for),
     so the DuckDB oracle replays the whole index CTE-for-CTE at any
-    sf; the cache key is versioned with method + derived k so neither
-    a pre-r13 MLlib artifact nor a stale smaller-k one can serve."""
-    n = load_table(spark, sf_dir, "embeddings").count()
-    k = similarity.ivf_k_for(n)
-    fp = (
-        f"{_source_fingerprint(sf_dir, table='embeddings')}-det-ka{k}"
-        f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}"
-        f"-v{_logic_version(similarity, clustering, vector_fns, with_entry=False)}"
+    sf. The key names the method; the derived count needs no suffix,
+    since the embeddings fingerprint and ivf_k_for's module version
+    already cover it."""
+    return _artifact(
+        spark, "ivf_index",
+        _artifact_key(
+            sf_dir,
+            f"-det-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}",
+            similarity, clustering, vector_fns,
+            table="embeddings", with_entry=False,
+        ),
+        lambda d: similarity.write_ivf_index(
+            load_table(spark, sf_dir, "embeddings"), d,
+            id_col="vec_id", vec_col="embedding",
+        ),
+        lambda d: similarity.read_ivf_index(spark, d),
+        done="lists",
     )
-    hit = _IVF_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "ivf_index" / fp
-    if not (cache_dir / "centroids" / "_SUCCESS").exists():
-        similarity.write_ivf_index(
-            load_table(spark, sf_dir, "embeddings"),
-            str(cache_dir),
-            n_centroids=k,
-            id_col="vec_id",
-            vec_col="embedding",
-        )
-    pair = similarity.read_ivf_index(spark, str(cache_dir))
-    _IVF_CACHE[fp] = (spark, pair)
-    return pair
 
 
 def _ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,27 +393,22 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     table) — the compressed-domain ANN index (pq.write_pq_index),
     built once per corpus fingerprint; M and K are format constants so
     they version the cache key."""
-    fp = (
-        f"{_source_fingerprint(sf_dir, table='embeddings')}"
-        f"-m{pq_ops.PQ_M}-k{pq_ops.PQ_K}"
-        f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}"
-        f"-v{_logic_version(pq_ops, clustering, vector_fns, with_entry=False)}"
+    return _artifact(
+        spark, "pq_index",
+        _artifact_key(
+            sf_dir,
+            f"-m{pq_ops.PQ_M}-k{pq_ops.PQ_K}"
+            f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}",
+            pq_ops, clustering, vector_fns,
+            table="embeddings", with_entry=False,
+        ),
+        lambda d: pq_ops.write_pq_index(
+            load_table(spark, sf_dir, "embeddings"), d, dim=EMBEDDING_DIM,
+            id_col="vec_id", vec_col="embedding",
+        ),
+        lambda d: pq_ops.read_pq_index(spark, d),
+        done="codes",
     )
-    hit = _PQ_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "pq_index" / fp
-    if not (cache_dir / "codes" / "_SUCCESS").exists():
-        pq_ops.write_pq_index(
-            load_table(spark, sf_dir, "embeddings"),
-            str(cache_dir),
-            dim=EMBEDDING_DIM,
-            id_col="vec_id",
-            vec_col="embedding",
-        )
-    pair = pq_ops.read_pq_index(spark, str(cache_dir))
-    _PQ_CACHE[fp] = (spark, pair)
-    return pair
 
 
 def _pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,31 +498,24 @@ def _ivfpq_index(
     """Persisted IVF-PQ artifact (coarse centroids + sub-codebooks +
     coded lists partitioned by coarse list) — the composed
     billion-scale layout (pq.write_ivfpq_index); every constant the
-    artifact bakes in versions the cache key."""
-    n = load_table(spark, sf_dir, "embeddings").count()
-    kc = similarity.ivf_k_for(n)
-    fp = (
-        f"{_source_fingerprint(sf_dir, table='embeddings')}"
-        f"-kc{kc}-m{pq_ops.PQ_M}-k{pq_ops.PQ_K}"
-        f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}"
-        f"-v{_logic_version(pq_ops, similarity, clustering, vector_fns, with_entry=False)}"
+    artifact bakes in versions the cache key, and the count-derived
+    coarse centroid count is covered as in ``_ivf_index``."""
+    return _artifact(
+        spark, "ivfpq",
+        _artifact_key(
+            sf_dir,
+            f"-m{pq_ops.PQ_M}-k{pq_ops.PQ_K}"
+            f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}",
+            pq_ops, similarity, clustering, vector_fns,
+            table="embeddings", with_entry=False,
+        ),
+        lambda d: pq_ops.write_ivfpq_index(
+            load_table(spark, sf_dir, "embeddings"), d, dim=EMBEDDING_DIM,
+            id_col="vec_id", vec_col="embedding",
+        ),
+        lambda d: pq_ops.read_ivfpq_index(spark, d),
+        done="lists",
     )
-    hit = _IVFPQ_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "ivfpq" / fp
-    if not (cache_dir / "lists" / "_SUCCESS").exists():
-        pq_ops.write_ivfpq_index(
-            load_table(spark, sf_dir, "embeddings"),
-            str(cache_dir),
-            dim=EMBEDDING_DIM,
-            n_centroids=kc,
-            id_col="vec_id",
-            vec_col="embedding",
-        )
-    triple = pq_ops.read_ivfpq_index(spark, str(cache_dir))
-    _IVFPQ_CACHE[fp] = (spark, triple)
-    return triple
 
 
 def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -734,69 +724,44 @@ def _chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 JACCARD_THRESHOLD = 0.8
 COSINE_DUP_THRESHOLD = 0.4
 
-# the shingle-Jaccard inverted-index join is the most expensive derived
-# artifact; four entries consume it, so persist it per sf_dir.
-# values are (session, frame): cached DataFrames are session-bound, so
-# a stopped/replaced SparkSession must re-read (same staleness rule as
-# _PAGERANK_CACHE below)
-_JACCARD_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # every constant the artifact bakes in rides the cache key —
-    # changing SHINGLE_K must rebuild, not serve stale shingles
-    # (the ADVICE r12 staleness class, swept repo-wide in r13). r17:
-    # the dedup + tokenizer module hashes ride too (a shingling or
-    # tokenize LOGIC edit with unchanged constants previously served
-    # stale shingles into every downstream pair/graph artifact).
-    # with_entry=False: the builder is a thin call into dedup.py and
-    # the entry-side constant is in the key — a per-round rebuild of
-    # the most expensive artifact family would buy no extra safety.
-    cache_dir = (
-        Path(__file__).resolve().parent
-        / ".cache" / "shingle_index"
-        / (
-            f"{_source_fingerprint(sf_dir)}-s{dedup.SHINGLE_K}"
-            f"-v{_logic_version(dedup, text_fns, with_entry=False)}"
-        )
+    """Persisted shingle inverted index (doc_id, s). with_entry=False:
+    the builder is a thin call into dedup.py and the entry-side
+    constant is in the key, so a rebuild of this expensive family on
+    every edit of this file would buy no extra safety."""
+    return _artifact(
+        spark, "shingle_index",
+        _artifact_key(
+            sf_dir, f"-s{dedup.SHINGLE_K}", dedup, text_fns, with_entry=False
+        ),
+        lambda d: dedup.write_shingle_index(
+            load_table(spark, sf_dir, "documents"), d
+        ),
+        lambda d: dedup.read_shingle_index(spark, d),
     )
-    if not (cache_dir / "_SUCCESS").exists():
-        dedup.write_shingle_index(
-            load_table(spark, sf_dir, "documents"), str(cache_dir)
-        )
-    return dedup.read_shingle_index(spark, str(cache_dir))
 
 
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pair set as a PERSISTED parquet artifact (same
-    discipline as the BM25/IVF/shingle stores): built once per corpus
-    fingerprint, read back key-clustered; a restarted session serves
-    every dedup/graph consumer from disk instead of re-running the
-    inverted-index self-join. The in-memory memo on top keeps the
-    read-back frame persisted across the session's many consumers."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}"
-        f"-s{dedup.SHINGLE_K}-j{JACCARD_THRESHOLD}"
-        f"-v{_logic_version(dedup, text_fns, with_entry=False)}"
-    )
-    hit = _JACCARD_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = (
-        Path(__file__).resolve().parent / ".cache" / "jaccard_pairs" / fp
-    )
-    if not (cache_dir / "_SUCCESS").exists():
-        dedup.write_pair_index(
+    """Near-dup pair set as a PERSISTED parquet artifact: built once
+    per corpus fingerprint by the inverted-index self-join, read back
+    key-clustered, and persisted across the session's many dedup and
+    graph consumers."""
+    return _artifact(
+        spark, "jaccard_pairs",
+        _artifact_key(
+            sf_dir, f"-s{dedup.SHINGLE_K}-j{JACCARD_THRESHOLD}",
+            dedup, text_fns, with_entry=False,
+        ),
+        lambda d: dedup.write_pair_index(
             dedup.shingle_jaccard_pairs(
                 load_table(spark, sf_dir, "documents"),
                 JACCARD_THRESHOLD,
                 shingle_index=_shingle_index(spark, sf_dir),
             ),
-            str(cache_dir),
-        )
-    pairs = dedup.read_pair_index(spark, str(cache_dir)).persist()
-    _JACCARD_CACHE[fp] = (spark, pairs)
-    return pairs
+            d,
+        ),
+        lambda d: dedup.read_pair_index(spark, d).persist(),
+    )
 
 
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,36 +769,24 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs(spark, sf_dir)
 
 
-# cluster labels are query-independent per corpus (one row per doc,
-# cluster_id = component min) — a derived artifact like the pair set.
-# The dedup_clusters/_cc ENTRIES still run the algorithm live (that's
-# what they certify); consumers (dedup_keep, curate_corpus)
-# serve from the persisted labels.
-_LABEL_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # labels derive from the pair set → same constant + logic-version
-    # suffix (r17 sweep)
-    fp = (
-        f"{_source_fingerprint(sf_dir)}"
-        f"-s{dedup.SHINGLE_K}-j{JACCARD_THRESHOLD}"
-        f"-v{_logic_version(dedup, text_fns, with_entry=False)}"
-    )
-    hit = _LABEL_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = (
-        Path(__file__).resolve().parent / ".cache" / "dedup_labels" / fp
-    )
-    if not (cache_dir / "_SUCCESS").exists():
-        dedup.dedup_clusters_star(
+    """Persisted near-dup cluster labels (doc_id, cluster_id =
+    component min), derived from the pair set under the same key. The
+    dedup_clusters/_cc ENTRIES still run the algorithm live (that is
+    what they certify); consumers (dedup_keep, curate_corpus) serve
+    from these labels."""
+    return _artifact(
+        spark, "dedup_labels",
+        _artifact_key(
+            sf_dir, f"-s{dedup.SHINGLE_K}-j{JACCARD_THRESHOLD}",
+            dedup, text_fns, with_entry=False,
+        ),
+        lambda d: dedup.dedup_clusters_star(
             _jaccard_pairs(spark, sf_dir),
             load_table(spark, sf_dir, "documents"),
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    labels = spark.read.parquet(str(cache_dir)).persist()
-    _LABEL_CACHE[fp] = (spark, labels)
-    return labels
+        ).write.mode("overwrite").parquet(d),
+        lambda d: spark.read.parquet(d).persist(),
+    )
 
 
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,7 +822,7 @@ def _cluster_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted k-means artifact; the oracle replays the unrolled
     Lloyd's chain plus the same pick/keep tail."""
     return clustering.cluster_quota_sample(
-        _kmeans_artifact(spark, sf_dir)
+        _kmeans_artifact(spark, sf_dir)[0]
     ).withColumnRenamed("id", "vec_id")
 
 
@@ -1003,8 +956,7 @@ def _dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percentile-threshold quality filter: drop the bottom ⌊N·p⌋ docs
-    by composite score under a discrete total order (exact twin of the
-    approx_percentile scale path)."""
+    by composite score under a discrete total order."""
     return text_analytics.quality_filter(
         load_table(spark, sf_dir, "documents")
     )
@@ -1064,20 +1016,21 @@ def _bloom_filter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size (dedup.bloom_filter_build). The cache key folds in
     EVERY constant the bitmap depends on (m, BLOOM_K, the batch-split
     mod) — changing any of them must rebuild, not serve a bitmap the
-    rebuilt oracle no longer matches (ADVICE r12)."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}-m{BLOOM_FIXTURE_M_BITS}"
-        f"-k{dedup.BLOOM_K}-g{INGEST_GATE_MOD}"
-        f"-v{_logic_version(dedup, text_fns, with_entry=False)}"
-    )
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "bloom" / fp
-    if not (cache_dir / "_SUCCESS").exists():
-        docs = load_table(spark, sf_dir, "documents")
-        dedup.bloom_filter_build(
-            docs.filter(F.col("doc_id") % INGEST_GATE_MOD != 0),
+    rebuilt oracle no longer matches."""
+    return _artifact(
+        spark, "bloom",
+        _artifact_key(
+            sf_dir,
+            f"-m{BLOOM_FIXTURE_M_BITS}-k{dedup.BLOOM_K}-g{INGEST_GATE_MOD}",
+            dedup, text_fns, with_entry=False,
+        ),
+        lambda d: dedup.bloom_filter_build(
+            load_table(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % INGEST_GATE_MOD != 0
+            ),
             m_bits=BLOOM_FIXTURE_M_BITS,
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    return spark.read.parquet(str(cache_dir))
+        ).write.mode("overwrite").parquet(d),
+    )
 
 
 def _bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1100,23 +1053,24 @@ def _bloom_paras_filter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted packed Bloom bitmap over the STANDING corpus'
     PARAGRAPH fingerprints — the paragraph half of the Dolma-style
     gate (dedup.doc_paragraphs feeds the same builder). Same
-    constant-folding cache key as _bloom_filter_words (ADVICE r12)."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}-m{BLOOM_FIXTURE_M_BITS}"
-        f"-k{dedup.BLOOM_K}-g{INGEST_GATE_MOD}"
-        f"-v{_logic_version(dedup, text_fns, with_entry=False)}"
-    )
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "bloom_paras" / fp
-    if not (cache_dir / "_SUCCESS").exists():
-        docs = load_table(spark, sf_dir, "documents")
-        dedup.bloom_filter_build(
+    constant-folding cache key as _bloom_filter_words."""
+    return _artifact(
+        spark, "bloom_paras",
+        _artifact_key(
+            sf_dir,
+            f"-m{BLOOM_FIXTURE_M_BITS}-k{dedup.BLOOM_K}-g{INGEST_GATE_MOD}",
+            dedup, text_fns, with_entry=False,
+        ),
+        lambda d: dedup.bloom_filter_build(
             dedup.doc_paragraphs(
-                docs.filter(F.col("doc_id") % INGEST_GATE_MOD != 0)
+                load_table(spark, sf_dir, "documents").filter(
+                    F.col("doc_id") % INGEST_GATE_MOD != 0
+                )
             ),
             text_col="para",
             m_bits=BLOOM_FIXTURE_M_BITS,
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    return spark.read.parquet(str(cache_dir))
+        ).write.mode("overwrite").parquet(d),
+    )
 
 
 def _bloom_gate_paras(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,33 +1121,6 @@ def _nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CURATION_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-_CURATION_LOGIC_VERSION: str | None = None
-
-
-def _curation_logic_version() -> str:
-    """Content hash of the sources whose LOGIC determines the curation
-    artifact: quality regex banks + score formula
-    (text_analytics/functions.text), dedup shingling/clustering and
-    decontamination n-gram rules (dedup), AND this entry file itself —
-    _curation_artifact's join/flag composition and _cluster_labels
-    wiring live here, so an entry-side edit must rebuild too (r17
-    ADVICE: the module-only hash left the builder's own source
-    uncovered). Folded into the cache key so neither a parameter edit
-    nor a logic edit anywhere in the defining closure can serve a
-    stale flags frame."""
-    global _CURATION_LOGIC_VERSION
-    if _CURATION_LOGIC_VERSION is None:
-        from rag_database_spark.functions import text as _text_mod
-        from rag_database_spark.operators import (
-            text_analytics as _ta_mod,
-        )
-
-        _CURATION_LOGIC_VERSION = _logic_version(_ta_mod, _text_mod, dedup)
-    return _CURATION_LOGIC_VERSION
-
-
 def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted per-document curation stage-membership frame — ONE
     row per raw document with the stage flags and the quality score:
@@ -1210,24 +1137,16 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Built once per corpus fingerprint (r14 VERDICT item 4: the
     curate_corpus / curation_funnel pair previously re-ran the full
     dedup + 19-regex quality ancestry on every call, ~7.5 s combined
-    at sf0.1) with the same ``.cache`` discipline as the BM25/IVF/
-    k-means artifacts; the cache key carries the dedup + quality
-    constants AND a content hash of the defining modules
-    (``_curation_logic_version``) so neither a parameter edit nor a
-    logic/regex-bank edit can ever serve a stale frame.
-    Serving both entries becomes a doc-count-sized parquet scan —
-    at 100× the build amortizes across every downstream read and the
-    flags frame stays one narrow row per document."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}-s{dedup.SHINGLE_K}"
-        f"-j{JACCARD_THRESHOLD}-p{text_analytics.QUALITY_FILTER_P}"
-        f"-v{_curation_logic_version()}"
-    )
-    hit = _CURATION_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "curation" / fp
-    if not (cache_dir / "_SUCCESS").exists():
+    at sf0.1). The key carries the dedup + quality constants and the
+    logic version of text_analytics, functions.text, dedup and this
+    file (the join/flag composition and the _cluster_labels wiring
+    live here), so neither a parameter edit nor a logic/regex-bank
+    edit can serve a stale frame. Serving both entries becomes a
+    doc-count-sized parquet scan — at 100× the build amortizes across
+    every downstream read and the flags frame stays one narrow row per
+    document."""
+
+    def build(path: str) -> None:
         import math
 
         docs = load_table(spark, sf_dir, "documents")
@@ -1293,10 +1212,18 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q_score",
             )
         )
-        art.write.mode("overwrite").parquet(str(cache_dir))
-    df = spark.read.parquet(str(cache_dir))
-    _CURATION_CACHE[fp] = (spark, df)
-    return df
+        art.write.mode("overwrite").parquet(path)
+
+    return _artifact(
+        spark, "curation",
+        _artifact_key(
+            sf_dir,
+            f"-s{dedup.SHINGLE_K}-j{JACCARD_THRESHOLD}"
+            f"-p{text_analytics.QUALITY_FILTER_P}",
+            text_analytics, text_fns, dedup,
+        ),
+        build,
+    )
 
 
 def _curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1361,15 +1288,15 @@ def _time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same two snapshots (idempotent under bench reruns)."""
     from rag_database_spark.sources import acid
 
-    root = (
-        Path(__file__).resolve().parent
-        / ".cache" / "tt_table"
-        / (
-            f"{_source_fingerprint(sf_dir)}-d{TIME_TRAVEL_DELETE_MOD}"
-            f"-v{_logic_version(acid, with_entry=False)}"
-        )
+    # the table is complete by its epochs, not by a _SUCCESS marker, so
+    # it takes only its directory from the artifact store
+    root = _artifact_dir(
+        "tt_table",
+        _artifact_key(
+            sf_dir, f"-d{TIME_TRAVEL_DELETE_MOD}", acid, with_entry=False
+        ),
     )
-    tbl = acid.TombstoneTable(spark, str(root), key_col="doc_id")
+    tbl = acid.TombstoneTable(spark, root, key_col="doc_id")
     if tbl._current_epoch() < 2:  # epoch 1 = append, epoch 2 = delete
         tbl.append(
             load_table(spark, sf_dir, "documents").select(
@@ -1417,39 +1344,29 @@ def _temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LM_MODEL_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
+def _lm_artifact(spark: SparkSession, sf_dir: str, family: str,
+                 lang: str | None = None) -> DataFrame:
+    """Per-corpus bigram-LM artifact (w1, w2, lp), trained once per
+    corpus fingerprint — on the ``lang`` slice when given — so scoring
+    calls join the read-back model instead of re-aggregating the
+    corpus. LM_ALPHA is baked into the log-probs and the slice into
+    the counts, so both version the key."""
 
-
-def _lm_artifact(spark: SparkSession, sf_dir: str, subdir: str,
-                 doc_filter=None) -> DataFrame:
-    """Shared per-corpus bigram-LM artifact plumbing (w1, w2, lp):
-    trained once per corpus fingerprint and persisted, same discipline
-    as the BM25/IVF/adjacency/PageRank artifacts — scoring calls join
-    the read-back model instead of re-aggregating the corpus. One
-    cache-probe / _SUCCESS-check / train-write / read-back sequence
-    serves both the whole-corpus and in-domain models."""
-    # LM_ALPHA is baked into the persisted log-probs → it versions
-    # the key (ADVICE r12 staleness class), as does the training
-    # logic version (r17 sweep)
-    fp = (
-        f"{_source_fingerprint(sf_dir)}-a{text_analytics.LM_ALPHA}"
-        f"-v{_logic_version(text_analytics, text_fns, with_entry=False)}"
-    )
-    key = f"{subdir}:{fp}"
-    hit = _LM_MODEL_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / subdir / fp
-    if not (cache_dir / "_SUCCESS").exists():
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        if doc_filter is not None:
-            docs = docs.filter(doc_filter)
-        text_analytics.train_lm(docs).write.mode("overwrite").parquet(
-            str(cache_dir)
-        )
-    model = spark.read.parquet(str(cache_dir))
-    _LM_MODEL_CACHE[key] = (spark, model)
-    return model
+        if lang is not None:
+            docs = docs.filter(F.col("lang") == lang)
+        text_analytics.train_lm(docs).write.mode("overwrite").parquet(path)
+
+    return _artifact(
+        spark, family,
+        _artifact_key(
+            sf_dir,
+            f"-a{text_analytics.LM_ALPHA}" + (f"-l{lang}" if lang else ""),
+            text_analytics, text_fns, with_entry=False,
+        ),
+        build,
+    )
 
 
 def _lm_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1469,36 +1386,33 @@ def _lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_CACHE: dict[str, tuple[SparkSession, DataFrame, DataFrame]] = {}
-
-
 def _bpe_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Per-corpus BPE tokenizer artifacts: the ordered merge list AND
     the (word → tokens) encode table, trained once per corpus
-    fingerprint and persisted (same discipline as the BM25 / IVF / LM
-    artifacts — the merge loop never runs at query time; encoding is a
-    keyed join against the read-back table)."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}"
-        f"-n{bpe_ops.DEFAULT_MERGES}-c{bpe_ops.DEFAULT_MIN_COUNT}"
-        f"-v{_logic_version(bpe_ops, text_fns, with_entry=False)}"
-    )
-    hit = _BPE_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "bpe" / fp
-    if not (cache_dir / "encoded" / "_SUCCESS").exists():
+    fingerprint and persisted — the merge loop never runs at query
+    time; encoding is a keyed join against the read-back table."""
+
+    def build(path: str) -> None:
         merges, encoded = bpe_ops.train_bpe(
             load_table(spark, sf_dir, "documents")
         )
-        merges.coalesce(1).write.mode("overwrite").parquet(
-            str(cache_dir / "merges")
-        )
-        encoded.write.mode("overwrite").parquet(str(cache_dir / "encoded"))
-    merges = spark.read.parquet(str(cache_dir / "merges"))
-    encoded = spark.read.parquet(str(cache_dir / "encoded"))
-    _BPE_CACHE[fp] = (spark, merges, encoded)
-    return merges, encoded
+        merges.coalesce(1).write.mode("overwrite").parquet(f"{path}/merges")
+        encoded.write.mode("overwrite").parquet(f"{path}/encoded")
+
+    return _artifact(
+        spark, "bpe",
+        _artifact_key(
+            sf_dir,
+            f"-n{bpe_ops.DEFAULT_MERGES}-c{bpe_ops.DEFAULT_MIN_COUNT}",
+            bpe_ops, text_fns, with_entry=False,
+        ),
+        build,
+        lambda d: (
+            spark.read.parquet(f"{d}/merges"),
+            spark.read.parquet(f"{d}/encoded"),
+        ),
+        done="encoded",
+    )
 
 
 def _bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1549,10 +1463,7 @@ def _lm_model_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-domain bigram-LM artifact: trained on the ``lang = en``
     slice only, persisted per corpus fingerprint beside the
     whole-corpus model (``_lm_model``)."""
-    return _lm_artifact(
-        spark, sf_dir, "lm_model_in",
-        doc_filter=F.col("lang") == CONTRASTIVE_IN_LANG,
-    )
+    return _lm_artifact(spark, sf_dir, "lm_model_in", CONTRASTIVE_IN_LANG)
 
 
 def _contrastive_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2133,45 +2044,25 @@ def _doc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_edge_table(spark, sf_dir)
 
 
-# Traversal-ready adjacency (undirected, confidence-filtered, hash-
-# partitioned on the join key) — query-independent per (corpus,
-# cutoff), so it materializes once and every BFS/augmentation call
-# reuses the persisted partitions instead of re-deriving edge
-# extraction + exchange per walk (same artifact discipline as the
-# BM25/IVF index caches above).
-_ADJ_CACHE: dict[tuple[str, float], tuple[SparkSession, DataFrame]] = {}
-
-
 def _adjacency(spark: SparkSession, sf_dir: str, min_conf: float) -> DataFrame:
-    # fingerprint + cutoff + graph-logic version (same r17 ADVICE
-    # staleness class as the pagerank keys: the adjacency bakes in
-    # _doc_edge_table's construction)
-    fp = f"{_source_fingerprint(sf_dir)}-v{_graph_logic_version()}"
-    key = (fp, min_conf)
-    hit = _ADJ_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = (
-        Path(__file__).resolve().parent
-        / ".cache" / "adjacency" / f"{fp}_c{int(min_conf * 100)}"
-    )
-    if not (cache_dir / "_SUCCESS").exists():
-        graph_ops.write_adjacency(
-            graph_ops.build_adjacency(
-                _doc_edge_table(spark, sf_dir), min_conf
-            ),
-            str(cache_dir),
-        )
-    # repartition("me") restores the join-key clustering the
-    # parquet round-trip drops from the plan's partitioning info;
-    # the persist pins it so every BFS wave reuses one exchange
-    adj = (
-        graph_ops.read_adjacency(spark, str(cache_dir))
+    """Traversal-ready adjacency (undirected, confidence-filtered,
+    hash-partitioned on the join key) — query-independent per (corpus,
+    cutoff), so it materializes once and every BFS/augmentation call
+    reuses the persisted partitions instead of re-deriving edge
+    extraction + exchange per walk."""
+    # repartition("me") restores the join-key clustering the parquet
+    # round-trip drops from the plan's partitioning info; the persist
+    # pins it so every BFS wave reuses one exchange
+    return _artifact(
+        spark, "adjacency", _graph_key(sf_dir, f"-c{min_conf}"),
+        lambda d: graph_ops.write_adjacency(
+            graph_ops.build_adjacency(_doc_edge_table(spark, sf_dir), min_conf),
+            d,
+        ),
+        lambda d: graph_ops.read_adjacency(spark, d)
         .repartition("me")
-        .persist()
+        .persist(),
     )
-    _ADJ_CACHE[key] = (spark, adj)
-    return adj
 
 
 def _graph_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2196,61 +2087,27 @@ def _graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PAGERANK_TOPK = 20
 
-# global pagerank scores are query-independent per corpus — a derived
-# artifact like the BM25/IVF/adjacency indexes, so serving reads the
-# persisted parquet instead of re-running the 5-round iteration. The
-# PageRank-ready out-edge list (undirected + degree, the walk
-# structure every pagerank/PPR call needs) persists the same way so
-# personalized runs skip the per-call edge prep too.
-# values are (session, frame): a cached DataFrame is session-bound, so
-# a stopped/replaced SparkSession must rebuild (same staleness rule as
-# _PREPARED — without it the _PREPARED guard would rebuild into a dead
-# frame served from here)
-_PAGERANK_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_PAGERANK_OUT_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _pagerank_out(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # graph-logic version rides the key (r17 ADVICE): the edge table's
-    # construction constants (JACCARD_THRESHOLD's near_dup arm, the
-    # sequence confidence grid) and graph.py's edge prep are baked
-    # into this artifact but were previously invisible to the
-    # fingerprint-only key
-    fp = f"{_source_fingerprint(sf_dir)}-v{_graph_logic_version()}"
-    hit = _PAGERANK_OUT_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = (
-        Path(__file__).resolve().parent / ".cache" / "pagerank_edges" / fp
-    )
-    if not (cache_dir / "_SUCCESS").exists():
-        graph_ops.pagerank_edges(
+    """The PageRank-ready out-edge list (undirected + degree, the walk
+    structure every pagerank/PPR call needs), persisted so personalized
+    runs skip the per-call edge prep."""
+    return _artifact(
+        spark, "pagerank_edges", _graph_key(sf_dir),
+        lambda d: graph_ops.pagerank_edges(
             _doc_edge_table(spark, sf_dir)
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    out = spark.read.parquet(str(cache_dir)).repartition("me").persist()
-    _PAGERANK_OUT_CACHE[fp] = (spark, out)
-    return out
+        ).write.mode("overwrite").parquet(d),
+        lambda d: spark.read.parquet(d).repartition("me").persist(),
+    )
 
 
 def _pagerank_scores(
     spark: SparkSession, sf_dir: str, weighted: bool = False
 ) -> DataFrame:
-    # iteration count, damping, and the graph-logic version (edge
-    # construction + iteration code, r17 ADVICE) are baked into the
-    # persisted scores
-    fp = (
-        f"{_source_fingerprint(sf_dir)}"
-        f"-i{graph_ops.PAGERANK_ITERATIONS}-d{graph_ops.PAGERANK_DAMPING}"
-        f"-v{_graph_logic_version()}"
-    )
-    key = fp + ("_w" if weighted else "")
-    hit = _PAGERANK_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = (
-        Path(__file__).resolve().parent / ".cache" / "pagerank" / key
-    )
-    if not (cache_dir / "_SUCCESS").exists():
+    """Global PageRank scores: query-independent per corpus, so
+    serving reads the persisted parquet instead of re-running the
+    5-round iteration."""
+
+    def build(path: str) -> None:
         out = (
             graph_ops.pagerank_edges(
                 _doc_edge_table(spark, sf_dir), weighted=True
@@ -2261,12 +2118,20 @@ def _pagerank_scores(
         graph_ops.pagerank(
             load_table(spark, sf_dir, "documents"), out=out,
             weighted=weighted,
-        ).write.mode("overwrite").parquet(str(cache_dir))
+        ).write.mode("overwrite").parquet(path)
         if weighted:
             out.unpersist()
-    scores = spark.read.parquet(str(cache_dir))
-    _PAGERANK_CACHE[key] = (spark, scores)
-    return scores
+
+    # iteration count and damping are baked into the persisted scores
+    return _artifact(
+        spark, "pagerank",
+        _graph_key(
+            sf_dir,
+            f"-i{graph_ops.PAGERANK_ITERATIONS}"
+            f"-d{graph_ops.PAGERANK_DAMPING}" + ("-w" if weighted else ""),
+        ),
+        build,
+    )
 
 
 def _doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2309,43 +2174,33 @@ def _graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PPR_SEED_MAX = 5
 
-_PPR_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _ppr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted personalized-PageRank score artifact — the entry's
     seed set is a FIXED workload constant (doc_id < PPR_SEED_MAX),
     so like ``_pagerank_scores`` the scores are query-independent per
     corpus and serve from parquet (r16: the live 5-round power
     iteration previously re-ran per call, 4.3 s at sf0.1 vs ~0.05 s
-    served — same artifact treatment doc_pagerank/pagerank_weighted
-    have had since r11). The iteration count, damping, and seed bound
-    are baked into the key, as is the graph-logic version hash (r17
-    ADVICE: the edge-construction constants shape _doc_edge_table,
-    consumed via _pagerank_out — without the version an edge-parameter
-    edit served stale PPR scores). A caller with DYNAMIC seeds runs
+    served). The iteration count, damping, and seed bound are baked
+    into the key. A caller with DYNAMIC seeds runs
     ``graph_ops.pagerank(seeds=...)`` live — the loop this artifact's
     build (and the pagerank units) exercises."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}"
-        f"-i{graph_ops.PAGERANK_ITERATIONS}-d{graph_ops.PAGERANK_DAMPING}"
-        f"-s{PPR_SEED_MAX}-v{_graph_logic_version()}"
-    )
-    hit = _PPR_CACHE.get(fp)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "ppr" / fp
-    if not (cache_dir / "_SUCCESS").exists():
+
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        seeds = docs.filter(F.col("doc_id") < PPR_SEED_MAX).select(
-            "doc_id"
-        )
+        seeds = docs.filter(F.col("doc_id") < PPR_SEED_MAX).select("doc_id")
         graph_ops.pagerank(
             docs, seeds=seeds, out=_pagerank_out(spark, sf_dir)
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    scores = spark.read.parquet(str(cache_dir))
-    _PPR_CACHE[fp] = (spark, scores)
-    return scores
+        ).write.mode("overwrite").parquet(path)
+
+    return _artifact(
+        spark, "ppr",
+        _graph_key(
+            sf_dir,
+            f"-i{graph_ops.PAGERANK_ITERATIONS}"
+            f"-d{graph_ops.PAGERANK_DAMPING}-s{PPR_SEED_MAX}",
+        ),
+        build,
+    )
 
 
 def _ppr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2769,15 +2624,15 @@ def _embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # to exactly this many terms
 EMBEDDING_DIM = 64
 
-_KMEANS_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
-def _kmeans_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted deterministic k-means assignments (vec_id, cluster_id)
-    — trained once per EMBEDDINGS-table fingerprint (Lloyd's with
-    KMEANS_ITERS updates, clustering.kmeans_fit), same artifact
-    discipline as the BM25/IVF/LM models: both clustering entries read
-    this back instead of re-running the iterative fit per call.
+def _kmeans_artifact(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Persisted deterministic k-means artifact: the assignments
+    (vec_id, cluster_id) and the settled centroids (cluster_id, cvec) —
+    trained once per EMBEDDINGS-table fingerprint (Lloyd's with
+    KMEANS_ITERS updates, clustering.kmeans_fit), so the clustering
+    entries read it back instead of re-running the iterative fit per
+    call.
 
     k is ADAPTIVE (clustering.kmeans_k_for over the corpus count), the
     SemDeDup scale contract: cluster size stays ~KMEANS_TARGET_CLUSTER
@@ -2785,17 +2640,12 @@ def _kmeans_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the r12 pinned k=8 made Σ|c|² quadratic — measured exponent 1.47
     on the scale probe). Exact cross-engine replay survives because
     the oracle's kk CTE derives the SAME k from count(*) in SQL
-    (oracles._kmeans_ctes — the knn_graph_lsh plane-count trick), and
-    the cache key is versioned with the derived k so a grown corpus
-    never serves a stale smaller-k artifact."""
-    fp, cache_dir, cent_dir = _kmeans_cache_dirs(spark, sf_dir)
-    key = f"kmeans:{fp}"
-    hit = _KMEANS_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if not (
-        (cache_dir / "_SUCCESS").exists() and (cent_dir / "_SUCCESS").exists()
-    ):
+    (oracles._kmeans_ctes — the knn_graph_lsh plane-count trick). The
+    count is taken at build only: the embeddings fingerprint in the
+    key covers it, so a grown corpus never serves a smaller-k
+    artifact."""
+
+    def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         # impl='auto': the codegen'd literal-fold assignment (the
         # oracle-exact path) up to KMEANS_EXPR_MAX_K, the Arrow-batch
@@ -2805,63 +2655,30 @@ def _kmeans_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the documented scale implementation (no hash check runs
         # there).
         assign_df, cents = clustering.kmeans_fit(
-            emb, k=_kmeans_k(spark, sf_dir)
+            emb, k=clustering.kmeans_k_for(emb.count())
         )
-        assign_df.write.mode("overwrite").parquet(str(cache_dir))
+        assign_df.write.mode("overwrite").parquet(f"{path}/assign")
         # the settled centroids are part of the artifact too: the
         # outlier pruner computes distance against them without ever
         # re-running the fit (k rows × dim doubles — tiny)
         local_frame(
-            spark,
-            [(j, c) for j, c in enumerate(cents)],
-            "cluster_id int, cvec array<double>",
-        ).write.mode("overwrite").parquet(str(cent_dir))
-    assign = spark.read.parquet(str(cache_dir))
-    _KMEANS_CACHE[key] = (spark, assign)
-    return assign
+            spark, list(enumerate(cents)), "cluster_id int, cvec array<double>"
+        ).write.mode("overwrite").parquet(f"{path}/centroids")
 
-
-_KMEANS_K_CACHE: dict[str, int] = {}
-
-
-def _kmeans_k(spark: SparkSession, sf_dir: str) -> int:
-    """clustering.kmeans_k_for(count(embeddings)) — memoized per
-    fingerprint so the count() job runs once per corpus, not once per
-    entry call."""
-    fp = _source_fingerprint(sf_dir, table="embeddings")
-    k = _KMEANS_K_CACHE.get(fp)
-    if k is None:
-        n = load_table(spark, sf_dir, "embeddings").count()
-        k = clustering.kmeans_k_for(n)
-        _KMEANS_K_CACHE[fp] = k
-    return k
-
-
-def _kmeans_cache_dirs(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, Path, Path]:
-    """(key, assignments dir, centroids dir) — ONE key builder for
-    both halves of the k-means artifact so the "-k" staleness suffix
-    (the derived k is part of the artifact identity: r12 pinned-k
-    artifacts and any pre-growth smaller-k artifacts must not serve)
-    cannot drift between them."""
-    k = _kmeans_k(spark, sf_dir)
-    fp = (
-        f"{_source_fingerprint(sf_dir, table='embeddings')}-ka{k}"
-        f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}"
-        f"-v{_logic_version(clustering, vector_fns, with_entry=False)}"
+    return _artifact(
+        spark, "kmeans",
+        _artifact_key(
+            sf_dir,
+            f"-i{clustering.KMEANS_ITERS}-q{clustering.KMEANS_SCALE}",
+            clustering, vector_fns, table="embeddings", with_entry=False,
+        ),
+        build,
+        lambda d: (
+            spark.read.parquet(f"{d}/assign"),
+            spark.read.parquet(f"{d}/centroids"),
+        ),
+        done="centroids",
     )
-    base = Path(__file__).resolve().parent / ".cache"
-    return fp, base / "kmeans" / fp, base / "kmeans_cent" / fp
-
-
-def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (cluster_id, cvec) half of the persisted k-means artifact
-    (built by _kmeans_artifact; exact doubles survive the parquet
-    round trip)."""
-    _kmeans_artifact(spark, sf_dir)  # ensure both halves exist
-    _, _, cent_dir = _kmeans_cache_dirs(spark, sf_dir)
-    return spark.read.parquet(str(cent_dir))
 
 
 def _embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2875,7 +2692,7 @@ def _embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.select("vec_id", "label")
         .join(
-            _kmeans_artifact(spark, sf_dir).withColumnRenamed(
+            _kmeans_artifact(spark, sf_dir)[0].withColumnRenamed(
                 "id", "vec_id"
             ),
             "vec_id",
@@ -2891,7 +2708,7 @@ def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine ≥ SEMDEDUP_THRESHOLD. The published scale path for
     embedding dedup: Σ|cluster|² pairs instead of N²."""
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = _kmeans_artifact(spark, sf_dir)
+    assign, _ = _kmeans_artifact(spark, sf_dir)
     return clustering.semdedup(emb, assign).withColumnRenamed("id", "vec_id")
 
 
@@ -2905,9 +2722,7 @@ def _kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd's chain plus the same distance/rank tail."""
     emb = load_table(spark, sf_dir, "embeddings")
     return clustering.centroid_outliers(
-        emb,
-        _kmeans_artifact(spark, sf_dir),
-        _kmeans_centroids(spark, sf_dir),
+        emb, *_kmeans_artifact(spark, sf_dir)
     ).withColumnRenamed("id", "vec_id")
 
 
@@ -2934,31 +2749,33 @@ def _perceptron_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     """Persisted batch-perceptron quality weights — trained once per
     DOCUMENTS fingerprint (classifier.perceptron_train over the
     exact-integer feature scan), stored as a 1-row parquet so a
-    restarted session scores without retraining (same artifact
-    discipline as the LM/DSIR/k-means models)."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}-r{classifier.PERCEPTRON_ROUNDS}"
-        f"-v{_logic_version(classifier, text_fns, with_entry=False)}"
-    )
-    key = f"perceptron:{fp}"
-    hit = _LM_MODEL_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "perceptron" / fp
-    if not (cache_dir / "_SUCCESS").exists():
-        docs = load_table(spark, sf_dir, "documents")
+    restarted session scores without retraining."""
+
+    def build(path: str) -> None:
         w = classifier.perceptron_train(
-            classifier.perceptron_features(docs)
+            classifier.perceptron_features(
+                load_table(spark, sf_dir, "documents")
+            )
         )
         local_frame(
             spark,
             [tuple(w)],
             ", ".join(f"w{i + 1} long" for i in range(len(w))),
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    row = spark.read.parquet(str(cache_dir)).collect()[0]
-    weights = [row[f"w{i + 1}"] for i in range(len(classifier.FEATURES))]
-    _LM_MODEL_CACHE[key] = (spark, weights)
-    return weights
+        ).write.mode("overwrite").parquet(path)
+
+    def read(path: str) -> list[int]:
+        row = spark.read.parquet(path).collect()[0]
+        return [row[f"w{i + 1}"] for i in range(len(classifier.FEATURES))]
+
+    return _artifact(
+        spark, "perceptron",
+        _artifact_key(
+            sf_dir, f"-r{classifier.PERCEPTRON_ROUNDS}",
+            classifier, text_fns, with_entry=False,
+        ),
+        build,
+        read,
+    )
 
 
 def _perceptron_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2982,24 +2799,23 @@ def _dsir_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     log ratios between the in-domain slice (lang = en, the same slice
     Moore-Lewis uses) and the whole corpus — trained once per corpus
     fingerprint (text_analytics.train_dsir)."""
-    fp = (
-        f"{_source_fingerprint(sf_dir)}-b{text_analytics.DSIR_BUCKETS}"
-        f"-a{text_analytics.DSIR_ALPHA}-l{CONTRASTIVE_IN_LANG}"
-        f"-v{_logic_version(text_analytics, text_fns, with_entry=False)}"
-    )
-    key = f"dsir_model:{fp}"
-    hit = _LM_MODEL_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "dsir_model" / fp
-    if not (cache_dir / "_SUCCESS").exists():
+
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         text_analytics.train_dsir(
             docs, docs.filter(F.col("lang") == CONTRASTIVE_IN_LANG)
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    model = spark.read.parquet(str(cache_dir))
-    _LM_MODEL_CACHE[key] = (spark, model)
-    return model
+        ).write.mode("overwrite").parquet(path)
+
+    return _artifact(
+        spark, "dsir_model",
+        _artifact_key(
+            sf_dir,
+            f"-b{text_analytics.DSIR_BUCKETS}"
+            f"-a{text_analytics.DSIR_ALPHA}-l{CONTRASTIVE_IN_LANG}",
+            text_analytics, text_fns, with_entry=False,
+        ),
+        build,
+    )
 
 
 def _dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3041,34 +2857,28 @@ def _semantic_pagerank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted PageRank-over-knn-graph score artifact, keyed by the
     EMBEDDINGS fingerprint — same discipline as the doc-graph
     pagerank artifacts (train once, serve reads)."""
-    # "-q12" versions the EDGE DEFINITION into the key: r12 quantized
-    # knn_graph's rank to PREFETCH_ROUND_DP, which can flip edges at
-    # rank-k tie boundaries — a pre-change artifact served against the
-    # post-change oracle would diverge with no rebuild trigger (same
-    # staleness class the kmeans "-k" suffix guards). r17 generalizes
-    # that one-off suffix: the logic-version hash of the defining
-    # modules (knn edge construction + iteration) plus this entry
-    # file's wiring rides the key too.
-    fp = (
-        f"{_source_fingerprint(sf_dir, table='embeddings')}-q12"
-        f"-v{_logic_version(graph_ops, similarity, vector_fns)}"
-    )
-    key = f"sempr:{fp}"
-    hit = _PAGERANK_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cache_dir = Path(__file__).resolve().parent / ".cache" / "sempr" / fp
-    if not (cache_dir / "_SUCCESS").exists():
+
+    def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         edges = similarity.knn_graph(
             emb, KNN_GRAPH_K, id_col="vec_id", vec_col="embedding"
         ).select("src", "dst", F.col("cos_sim").alias("confidence"))
         graph_ops.pagerank(
             emb.select("vec_id"), edges, node_col="vec_id"
-        ).write.mode("overwrite").parquet(str(cache_dir))
-    scores = spark.read.parquet(str(cache_dir))
-    _PAGERANK_CACHE[key] = (spark, scores)
-    return scores
+        ).write.mode("overwrite").parquet(path)
+
+    # "-q12" names the EDGE DEFINITION: r12 quantized knn_graph's rank
+    # to PREFETCH_ROUND_DP, which can flip edges at rank-k tie
+    # boundaries. The version covers the knn edge construction, the
+    # iteration and this file's wiring.
+    return _artifact(
+        spark, "sempr",
+        _artifact_key(
+            sf_dir, "-q12", graph_ops, similarity, vector_fns,
+            table="embeddings",
+        ),
+        build,
+    )
 
 
 def _semantic_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

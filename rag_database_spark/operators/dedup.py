@@ -1121,9 +1121,9 @@ def dedup_clusters_star(
     component-min doc_id; a document with no edge is its own
     cluster.
 
-    The distinct edge set is checkpointed once and its (count,
-    hash) signature taken; the checkpoint feeds only that signature
-    and the star rounds. Two paths follow:
+    The distinct edge set is checkpointed once, by the job that takes
+    its (count, hash) signature; the checkpoint feeds only that
+    signature and the star rounds. Two paths follow:
 
     - up to ``CC_LOCAL_MAX_EDGES`` edges (near-dup graphs are sparse:
       the sf0.01 fixture's 500 vectors give 59 semantic-duplicate
@@ -1152,7 +1152,9 @@ def dedup_clusters_star(
         F.col(src_col).cast("long").alias("u"),
         F.col(dst_col).cast("long").alias("v"),
     ).filter(F.col("u") != F.col("v")).distinct()
-    edges = lazy_edges.localCheckpoint()
+    # lazy: the signature job right after materializes the checkpoint,
+    # so it adds no job of its own
+    edges = lazy_edges.localCheckpoint(eager=False)
 
     def _signature(e: DataFrame) -> tuple[int, int]:
         # bit_xor is order-insensitive and cannot overflow (ANSI mode
@@ -1208,7 +1210,9 @@ def dedup_clusters_star(
             # SLOWER at sf0.1 — the duplicated _large_star subtree runs
             # as parallel stages inside one job, while an inter-star
             # materialization adds a serial job per round)
-            edges = _small_star(_large_star(edges)).localCheckpoint()
+            edges = _small_star(_large_star(edges)).localCheckpoint(
+                eager=False
+            )
             new_sig = _signature(edges)
             if new_sig == sig:
                 break

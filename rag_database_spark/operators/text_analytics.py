@@ -1183,8 +1183,6 @@ def bottom_k_boundary(scored: DataFrame, k: int, n: int,
 
 
 def quality_filter(docs: DataFrame, p: float = QUALITY_FILTER_P,
-                   approx: bool = False,
-                   bracket: bool = False,
                    id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Percentile-threshold quality filtering: keep the top ``1 - p``
@@ -1195,41 +1193,15 @@ def quality_filter(docs: DataFrame, p: float = QUALITY_FILTER_P,
     resolve identically in any engine — no interpolated quantile whose
     last-ulp float could flip a boundary document.
 
-    Exact path: one count + a bottom-k selection that Spark plans as
+    One count + a bottom-k selection that Spark plans as
     TakeOrderedAndProject (per-partition heaps merged on the driver —
-    no global sort) + a broadcast anti-join. k grows with the corpus,
-    so at 100 TB pass either ``bracket=True`` — the SAME exact result
-    via :func:`bottom_k_boundary` (sketch-bracketed band selection;
-    the returned plan is a literal-threshold scan, no bottom-k
-    relation anywhere) — or ``approx=True``: cutoff straight from
-    ``approx_percentile`` (one pass, bounded error, documented drift
-    at the boundary), the same exact-twin-vs-sketch split as
-    ``events_profile``. ``bracket`` is eager (3 bounded driver jobs).
+    no global sort) + a broadcast anti-join. k grows with the corpus;
+    the curation pipeline takes the same cutoff at scale as one
+    boundary tuple from :func:`bottom_k_boundary` instead.
     """
-    scored = doc_quality(docs, id_col, text_col).select("doc_id", "q_score")
-    if bracket:
-        import math
-
-        n = docs.count()
-        b = bottom_k_boundary(scored, math.floor(n * p), n)
-        if b is None:
-            return scored
-        bq, bid = b
-        return scored.filter(
-            (F.col("q_score") > F.lit(bq))
-            | ((F.col("q_score") == F.lit(bq)) & (F.col("doc_id") > F.lit(bid)))
-        )
-    if approx:
-        thr = scored.agg(
-            F.expr(f"approx_percentile(q_score, {p})").alias("__thr")
-        )
-        return (
-            scored.join(F.broadcast(thr))
-            .filter(F.col("q_score") >= F.col("__thr"))
-            .select("doc_id", "q_score")
-        )
     import math
 
+    scored = doc_quality(docs, id_col, text_col).select("doc_id", "q_score")
     # count the INPUT, not the scored projection: doc_quality is 1:1
     # per doc, and a bare parquet count is metadata-only while
     # scored.count() would execute the full quality scan just for N

@@ -59,10 +59,12 @@ def test_logic_version_tracks_module_content(tmp_path, monkeypatch):
     assert v1 != v2
 
 
-def test_graph_logic_version_covers_tokenizer_layer():
-    """The doc-graph version must include graph.py, dedup.py AND
+def test_graph_logic_version_covers_tokenizer_layer(tmp_path):
+    """The doc-graph key's version must include graph.py, dedup.py AND
     functions/text.py (shingles — hence near_dup edges — derive from
     the tokenizer layer) plus the entry file's edge wiring."""
-    assert entrymod._graph_logic_version() == entrymod._logic_version(
-        graph_ops, dedup, text_fns
+    (tmp_path / "documents.parquet").write_bytes(b"")
+    key = entrymod._graph_key(str(tmp_path))
+    assert key.endswith(
+        "-v" + entrymod._logic_version(graph_ops, dedup, text_fns)
     )

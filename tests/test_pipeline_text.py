@@ -411,11 +411,17 @@ def test_quality_filter_drops_bottom_quartile(spark):
     assert max(dropped) <= min((all_scores[i], i) for i in kept_ids)
 
 
-def test_quality_filter_bracket_equals_exact(spark):
-    """bracket=True is the SAME exact discrete cutoff as the default
-    path — sketch-bracketed selection must not drift by a single doc,
-    including under q_score ties at the boundary."""
-    from rag_database_spark.operators.text_analytics import quality_filter
+def test_bottom_k_boundary_equals_exact_cut(spark):
+    """bottom_k_boundary is the SAME exact discrete cutoff as
+    quality_filter: the boundary tuple is the largest (q_score, doc_id)
+    the exact path drops — sketch-bracketed selection must not drift
+    by a single doc, including under q_score ties at the boundary.
+    The curation artifact filters on this tuple."""
+    import math
+
+    from rag_database_spark.operators.text_analytics import (
+        bottom_k_boundary, doc_quality, quality_filter,
+    )
 
     # 12 distinct lengths + 8 exact repeats of one text → heavy score
     # ties straddling the 25% boundary, resolved by doc_id
@@ -424,15 +430,14 @@ def test_quality_filter_bracket_equals_exact(spark):
         for i in range(12)
     ] + [(100 + i, "tied tied tied identical text body here") for i in range(8)]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
+    scored = doc_quality(docs).select("doc_id", "q_score")
+    scores = {r["doc_id"]: r["q_score"] for r in scored.collect()}
+    n = len(scores)
     for p in (0.25, 0.5, 0.05):
-        exact = {
-            r["doc_id"] for r in quality_filter(docs, p=p).collect()
-        }
-        bracket = {
-            r["doc_id"]
-            for r in quality_filter(docs, p=p, bracket=True).collect()
-        }
-        assert bracket == exact, f"p={p}"
+        kept = {r["doc_id"] for r in quality_filter(docs, p=p).collect()}
+        dropped = max((scores[i], i) for i in scores if i not in kept)
+        k = math.floor(n * p)
+        assert bottom_k_boundary(scored, k, n) == dropped, f"p={p}"
 
 
 def test_bottom_k_boundary_edges(spark):
@@ -448,19 +453,6 @@ def test_bottom_k_boundary_edges(spark):
     assert bottom_k_boundary(scored, 1, 9) == (0.0, 0)
     # mid-k lands inside a tie run: doc_ids 0,3,6 share score 0.0
     assert bottom_k_boundary(scored, 2, 9) == (0.0, 3)
-
-
-def test_quality_filter_approx_respects_threshold(spark):
-    from rag_database_spark.operators.text_analytics import quality_filter
-
-    texts = [
-        (i, ("alpha beta gamma delta " * (i + 1))[:300]) for i in range(10)
-    ]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    rows = quality_filter(docs, p=0.3, approx=True).collect()
-    assert 0 < len(rows) <= 10
-    thr = min(r["q_score"] for r in rows)
-    assert all(r["q_score"] >= thr for r in rows)
 
 
 def test_vocab_oov_hand_case(spark):

@@ -280,17 +280,6 @@ def test_curate_corpus_quality_stage_is_literal_threshold(spark):
     assert "__thr" not in p
 
 
-def test_quality_filter_bracket_plan_is_scan_filter(spark):
-    """bracket=True returns a plan with no bottom-k relation and no
-    anti-join — a literal-threshold scan over the scored projection."""
-    from rag_database_spark.operators.text_analytics import quality_filter
-
-    df = quality_filter(load_table(spark, SF_DIR, "documents"), bracket=True)
-    p = plan_of(df, "simple")
-    assert "TakeOrderedAndProject" not in p
-    assert "LeftAnti" not in p
-
-
 def test_token_budget_bracket_window_is_band_scoped(spark):
     """bracket=True: the only cumulative-sum Window in the plan runs
     over the FILTERED score band (~2·eps·N rows), never the whole

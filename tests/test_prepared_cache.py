@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from pathlib import Path
 
 import pytest
 
@@ -156,31 +157,60 @@ def test_stale_session_invalidates(spark):
     assert entrymod._PREPARED[key][0] is spark
 
 
-def test_index_cache_stale_session_invalidates(spark):
-    """r15 ADVICE: the artifact memos (_INDEX_CACHE et al.) carry the
-    same (session, value) identity guard as _PREPARED — a hit owned by
-    a stopped/replaced session must rebuild, never serve the dead
+@pytest.mark.parametrize("family", ["bm25_index", "curation"])
+def test_artifact_stale_session_invalidates(spark, family):
+    """The artifact memo carries the same (session, value) identity
+    guard as _PREPARED: a live hit is served as is, and a hit owned by
+    a stopped or replaced session re-reads, never serving the dead
     frame."""
-    index = entrymod._bm25_index(spark, SF_DIR)
-    fp = entrymod._bm25_index_key(SF_DIR)
-    assert entrymod._INDEX_CACHE[fp] == (spark, index)
-    sentinel = ("dead", "frames")
-    entrymod._INDEX_CACHE[fp] = (object(), sentinel)
-    rebuilt = entrymod._bm25_index(spark, SF_DIR)
-    assert rebuilt is not sentinel
-    assert entrymod._INDEX_CACHE[fp][0] is spark
+    build = {
+        "bm25_index": entrymod._bm25_index,
+        "curation": entrymod._curation_artifact,
+    }[family]
+    value = build(spark, SF_DIR)
+    (key,) = [k for k, v in entrymod._ARTIFACTS.items() if v[1] is value]
+    assert key[0] == family and entrymod._ARTIFACTS[key][0] is spark
+    assert build(spark, SF_DIR) is value
+    entrymod._ARTIFACTS[key] = (object(), value)
+    rebuilt = build(spark, SF_DIR)
+    assert rebuilt is not value
+    assert entrymod._ARTIFACTS[key][0] is spark
+    assert entrymod._ARTIFACTS[key][1] is rebuilt
 
 
-def test_curation_cache_stale_session_invalidates(spark):
-    art = entrymod._curation_artifact(spark, SF_DIR)
-    assert art.count() > 0
-    (fp,) = [
-        k for k, v in entrymod._CURATION_CACHE.items() if v[1] is art
+# the families whose artifacts derive from the embeddings table; every
+# other family derives from documents
+EMBEDDING_FAMILIES = {"ivf_index", "pq_index", "ivfpq", "kmeans", "sempr"}
+
+
+def test_every_artifact_is_keyed_by_family_fingerprint_and_version(spark):
+    """After prepare(), every memoised artifact lives in
+    .cache/<family>/<key>, and its key starts with its source table's
+    fingerprint and ends with -v<logic version>."""
+    entrymod.prepare(spark, SF_DIR)
+    fps = {
+        t: entrymod._source_fingerprint(SF_DIR, t)
+        for t in ("documents", "embeddings")
+    }
+    keys = [
+        k for k, (owner, _) in entrymod._ARTIFACTS.items()
+        if owner is spark and k[1].startswith(Path(SF_DIR).name + "-")
     ]
-    # the key must carry the logic-version hash (regex-bank edits
-    # invalidate, not just the numeric constants)
-    assert fp.endswith(f"-v{entrymod._curation_logic_version()}")
-    entrymod._CURATION_CACHE[fp] = (object(), art)
-    rebuilt = entrymod._curation_artifact(spark, SF_DIR)
-    assert rebuilt is not art
-    assert entrymod._CURATION_CACHE[fp][0] is spark
+    # the PageRank edge list is read only while the PageRank and PPR
+    # scores are built, so it is memoised only if they were built here
+    assert {family for family, _ in keys} - {"pagerank_edges"} == (
+        EMBEDDING_FAMILIES | {
+            "bm25_index", "shingle_index", "jaccard_pairs", "dedup_labels",
+            "bloom", "bloom_paras", "curation", "lm_model", "lm_model_in",
+            "bpe", "perceptron", "dsir_model", "adjacency", "pagerank",
+            "ppr",
+        }
+    )
+    cache = Path(entrymod.__file__).resolve().parent / ".cache"
+    versions = set(entrymod._LOGIC_VERSIONS.values())
+    for family, key in keys:
+        path = Path(entrymod._artifact_dir(family, key))
+        assert path == cache / family / key and path.is_dir()
+        table = "embeddings" if family in EMBEDDING_FAMILIES else "documents"
+        assert key.startswith(fps[table]), (family, key)
+        assert key.rsplit("-v", 1)[1] in versions, (family, key)

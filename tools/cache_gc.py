@@ -3,10 +3,12 @@
 
 Every persisted artifact (BM25 postings, IVF/PQ indexes, pair sets,
 pagerank scores, LM/DSIR models, …) lives in a content-addressed
-directory: ``.cache/<family>/<source-fingerprint>-<constants>-v<logic
-version>``. When a constant, a defining module, or the test corpus
-changes, builders write a NEW directory and the old one is never read
-again — so the cache grows monotonically across rounds.
+directory: ``.cache/<family>/<source-fingerprint><constants>-v<logic
+version>``. ``__spark_entry__._artifact`` is the only writer of these
+directories, and ``_artifact_key`` the only key format. When a
+constant, a defining module, or the test corpus changes, builders
+write a NEW directory and the old one is never read again — so the
+cache grows monotonically across rounds.
 
 GC here is ALWAYS SAFE: keys are deterministic functions of (corpus
 fingerprint, constants, module sources), so deleting a live directory

@@ -119,6 +119,9 @@ HEADLINE = (
     "shuffle_export",
     "matryoshka_topk",
     "soft_dedup",
+    # the embedding-pair components: the union-find MapInPandas reads
+    # the lazy edge set under the edge budget (no checkpointed leaf)
+    "semantic_components",
     "cluster_quota_sample",
     "rag_context_pack",
     # r13: retrieval evaluation — keyed relevance join + one ordered
