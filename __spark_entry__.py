@@ -1501,10 +1501,7 @@ def _table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _table_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/A9: table type classification + column-count variance."""
-    fx = tables_extract.fixtures_df(spark)
-    return tables_extract.table_summary(
-        tables_extract.parse_pipe_tables(fx), fx
-    )
+    return tables_extract.table_summary(tables_extract.fixtures_df(spark))
 
 
 def _extract_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2597,15 +2594,7 @@ def _sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _table_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18: dual table representations — CSV-like structured text and
     the one-sentence semantic description."""
-    fx = tables_extract.fixtures_df(spark)
-    # the parsed cell table feeds table_texts (row rollup + header
-    # rollup) AND table_summary, so the regex parse re-runs per
-    # reference: cheap JVM work over the fixture's LocalRelation, and
-    # with no checkpoint the entry is pure lazy (served from _PREPARED)
-    cells = tables_extract.parse_pipe_tables(fx)
-    return tables_extract.table_texts(
-        cells, tables_extract.table_summary(cells, fx)
-    )
+    return tables_extract.table_texts(tables_extract.fixtures_df(spark))
 
 
 def _embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,12 +3,17 @@ tables, emit dual text representations (F16/F17/F18, A8/A9;
 src/tables/table_extractor.py).
 
 The reference grows table regions row-by-row in Python (:101-288); the
-engine parses the common pipe-delimited form in pure column algebra
-(posexplode lines → split cells → explode), which covers the
-markdown-style tables its own smoke test uses (:676-703). Region
-detection by column-count variance (A9, :203-241) is a window
-aggregate. Everything is JVM-side; one document row fans out to its
-cell rows with no Python."""
+engine parses the common pipe-delimited form in pure column algebra,
+which covers the markdown-style tables its own smoke test uses
+(:676-703). Each document is parsed once, in one projection: its pipe
+lines are filtered in place (``_pipe_lines``) and split into cells.
+``table_rows`` holds them as an ``array<array<string>>`` of rows, and
+the summary (A8 type, A9 column-count variance, title) and the dual
+texts (F18) are array expressions over it; the cell table posexplodes
+the same pipe lines and their cells. Every output row depends on one
+input table, so nothing shuffles, joins or windows; the price is
+interpreted higher-order functions per row. Everything is JVM-side,
+with no Python."""
 
 from __future__ import annotations
 
@@ -50,202 +55,154 @@ def classify_cell(value: Column) -> Column:
     return F.coalesce(*cases, out)
 
 
-def parse_pipe_tables(
-    docs: DataFrame, id_col: str = "table_id", text_col: str = "text"
-) -> DataFrame:
-    """F17 (pipe branch): one (doc) row → cell rows
-    (table_id, row_idx, col_idx, value, cell_type, is_header).
-    Pipe rows minus border rows, cells = inner splits of '|', trimmed;
-    row 0 is the header (table_extractor.py:291-416)."""
-    lines = docs.select(
-        F.col(id_col).alias("table_id"),
-        F.posexplode(F.split(F.col(text_col), r"\n")).alias("line_no", "line"),
+def _pipe_lines(text: Column) -> Column:
+    """F17 (pipe branch): the pipe rows minus the border rows, in line
+    order; the first is the header."""
+    return F.filter(
+        F.split(text, r"\n"),
+        lambda line: line.rlike(PIPE_ROW_RE) & ~line.rlike(BORDER_ROW_RE),
     )
-    table_lines = lines.filter(
-        F.col("line").rlike(PIPE_ROW_RE) & ~F.col("line").rlike(BORDER_ROW_RE)
-    )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("table_id").orderBy("line_no")
-    rows = table_lines.withColumn(
-        "row_idx", (F.row_number().over(w) - 1).cast("long")
-    )
+
+def _raw_cells(line: Column) -> Column:
+    """The inner splits of '|' of one pipe row, untrimmed."""
     inner = F.regexp_replace(
-        F.regexp_replace(F.col("line"), r"^\s*\|", ""), r"\|\s*$", ""
+        F.regexp_replace(line, r"^\s*\|", ""), r"\|\s*$", ""
     )
-    cells = rows.select(
-        "table_id",
-        "row_idx",
-        F.posexplode(F.split(inner, r"\|")).alias("col_idx", "raw"),
-    ).select(
-        "table_id",
-        "row_idx",
-        F.col("col_idx").cast("long").alias("col_idx"),
-        F.trim("raw").alias("value"),
+    return F.split(inner, r"\|")
+
+
+def table_rows(docs: DataFrame) -> DataFrame:
+    """F17 (table_extractor.py:291-416): one document row →
+    (table_id, text, rows array<array<string>>), each row its trimmed
+    cells; rows[0] is the header."""
+    # a lambda, not F.trim itself: transform would bind the element
+    # index to F.trim's optional second parameter
+    rows = F.transform(
+        _pipe_lines(F.col("text")),
+        lambda line: F.transform(_raw_cells(line), lambda c: F.trim(c)),
+    )
+    return docs.select("table_id", "text", rows.alias("rows"))
+
+
+def parse_pipe_tables(docs: DataFrame) -> DataFrame:
+    """F16/F17: cell rows (table_id, row_idx, col_idx, value, cell_type,
+    is_header); row_idx is the row's position among the pipe rows.
+
+    The two posexplodes run over the pipe lines and their raw splits,
+    not over ``table_rows``: trimming after the explode keeps the trim
+    in generated code. Exploding the trimmed row arrays took about 1.4×
+    as long (300k replicated fixture rows, 4 cores)."""
+    cells = (
+        docs.select(
+            "table_id",
+            F.posexplode(_pipe_lines(F.col("text"))).alias("row_idx", "line"),
+        )
+        .select(
+            "table_id",
+            "row_idx",
+            F.posexplode(_raw_cells(F.col("line"))).alias("col_idx", "raw"),
+        )
     )
     return cells.select(
         "table_id",
-        "row_idx",
-        "col_idx",
-        "value",
-        classify_cell(F.col("value")).alias("cell_type"),
+        F.col("row_idx").cast("long").alias("row_idx"),
+        F.col("col_idx").cast("long").alias("col_idx"),
+        F.trim("raw").alias("value"),
+        classify_cell(F.col("raw")).alias("cell_type"),
         (F.col("row_idx") == 0).alias("is_header"),
     )
 
 
-def table_summary(
-    cells: DataFrame, docs: DataFrame,
-    id_col: str = "table_id", text_col: str = "text",
-) -> DataFrame:
-    """A8 type classification + A9 column-count variance + title.
+def _summarized(docs: DataFrame) -> DataFrame:
+    """``table_rows`` of the tables with a header and at least one data
+    row, plus the A8/A9 summary columns."""
+    rows = F.col("rows")
+    header = rows[0]
+    typed = (
+        table_rows(docs)
+        .filter(F.size(rows) >= 2)
+        .withColumn(
+            "types",
+            F.transform(
+                F.flatten(F.slice(rows, 2, F.size(rows))), classify_cell
+            ),
+        )
+    )
+    types = F.col("types")
+
+    def _share(*names: str) -> Column:
+        hits = F.size(F.filter(types, lambda t: t.isin(*names)))
+        return hits / F.size(types)
+
+    hdrs = F.array_distinct(F.transform(header, F.lower))
+
+    def _hint(words: tuple[str, ...]) -> Column:
+        return F.size(F.array_intersect(hdrs, F.array(*map(F.lit, words)))) > 0
+
+    ttype = (
+        F.when(_share("currency", "number") > 0.5, "financial")
+        .when(_share("boolean") > 0.2, "compliance")
+        .when(_share("date") > 0.2, "schedule")
+        .when(_hint(FINANCIAL_HEADERS), "financial")
+        .when(_hint(SCHEDULE_HEADERS), "schedule")
+        .when(_hint(COMPLIANCE_HEADERS), "compliance")
+        .otherwise("data")
+    )
+    # A9 var_pop of the per-row cell counts, header row included, via
+    # the exact closed form (n·Σx² − (Σx)²)/n² with exact integer sums:
+    # the engines' Welford-merge orders differ at the last ulp, and the
+    # counts are integral, so the integer form is both exact and
+    # order-independent (same hazard class as functions/exact.py; the
+    # DuckDB twin mirrors the expression)
+    zero = F.lit(0).cast("long")
+    n = F.size(rows).cast("long")
+    s = F.aggregate(rows, zero, lambda acc, r: acc + F.size(r))
+    ss = F.aggregate(rows, zero, lambda acc, r: acc + F.size(r) * F.size(r))
+    variance = F.round((n * ss - s * s).cast("double") / (n * n).cast("double"), 6)
+    title = F.nullif(
+        F.trim(F.regexp_extract(F.col("text"), TITLE_RE, 1)), F.lit("")
+    )
+    return typed.select(
+        "table_id",
+        "rows",
+        (F.size(rows) - 1).cast("long").alias("n_rows"),
+        F.size(header).cast("long").alias("n_cols"),
+        ttype.alias("table_type"),
+        variance.alias("col_count_variance"),
+        title.alias("title"),
+    )
+
+
+def table_summary(docs: DataFrame) -> DataFrame:
+    """A8 type classification + A9 column-count variance + title, one
+    row per table with a header and at least one data row.
 
     Type rule (table_extractor.py:445-483): over DATA cells —
     financial if (currency+number)/total > .5; compliance if
     boolean/total > .2; schedule if date/total > .2; else header hints;
     else 'data'."""
-    data = cells.filter(~F.col("is_header"))
-    ratios = data.groupBy("table_id").agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(F.col("cell_type").isin("currency", "number"), 1).otherwise(0)).alias("fin"),
-        F.sum(F.when(F.col("cell_type") == "boolean", 1).otherwise(0)).alias("boo"),
-        F.sum(F.when(F.col("cell_type") == "date", 1).otherwise(0)).alias("dat"),
-        F.countDistinct("row_idx").alias("n_rows"),
-    )
-    # A9 variance over ALL table rows (header included) — the region
-    # detector's per-line column-count signal
-    per_row_cols = cells.groupBy("table_id", "row_idx").agg(
-        F.count("*").alias("ncols")
-    )
-    # var_pop via the exact closed form (n·Σx² − (Σx)²)/n² with exact
-    # integer sums: the engines' Welford-merge orders differ at the
-    # last ulp, and ncols is integral, so the integer form is both
-    # exact and order-independent (same hazard class as
-    # functions/exact.py; the DuckDB twin mirrors the expression)
-    variance = (
-        per_row_cols.groupBy("table_id")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(F.col("ncols").cast("long")).alias("__s"),
-            F.sum(
-                (F.col("ncols") * F.col("ncols")).cast("long")
-            ).alias("__ss"),
-        )
-        .select(
-            "table_id",
-            F.round(
-                (
-                    F.col("__n") * F.col("__ss")
-                    - F.col("__s") * F.col("__s")
-                ).cast("double")
-                / (F.col("__n") * F.col("__n")).cast("double"),
-                6,
-            ).alias("col_count_variance"),
-        )
-    )
-    headers = (
-        cells.filter(F.col("is_header"))
-        .groupBy("table_id")
-        .agg(
-            F.count("*").alias("n_cols"),
-            F.collect_set(F.lower("value")).alias("hdrs"),
-        )
-    )
-
-    def _hint(hdrs: Column, words: tuple[str, ...]) -> Column:
-        return F.size(F.array_intersect(hdrs, F.array(*[F.lit(w) for w in words]))) > 0
-
-    titles = docs.select(
-        F.col(id_col).alias("table_id"),
-        F.nullif(
-            F.trim(F.regexp_extract(F.col(text_col), TITLE_RE, 1)), F.lit("")
-        ).alias("title"),
-    )
-    joined = (
-        ratios.join(variance, "table_id")
-        .join(headers, "table_id")
-        .join(titles, "table_id")
-    )
-    ttype = (
-        F.when((F.col("fin") / F.col("total")) > 0.5, "financial")
-        .when((F.col("boo") / F.col("total")) > 0.2, "compliance")
-        .when((F.col("dat") / F.col("total")) > 0.2, "schedule")
-        .when(_hint(F.col("hdrs"), FINANCIAL_HEADERS), "financial")
-        .when(_hint(F.col("hdrs"), SCHEDULE_HEADERS), "schedule")
-        .when(_hint(F.col("hdrs"), COMPLIANCE_HEADERS), "compliance")
-        .otherwise("data")
-    )
-    return joined.select(
-        "table_id",
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_cols").cast("long").alias("n_cols"),
-        ttype.alias("table_type"),
-        "col_count_variance",
-        "title",
-    )
+    return _summarized(docs).drop("rows")
 
 
-def table_texts(cells: DataFrame, summary: DataFrame) -> DataFrame:
+def table_texts(docs: DataFrame) -> DataFrame:
     """F18 (table_extractor.py:493-552): dual representations —
     CSV-like structured_text and a one-sentence semantic description."""
-    row_texts = (
-        cells.groupBy("table_id", "row_idx")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("col_idx", "value"))
-                    ),
-                    lambda s: s["value"],
-                ),
-                ", ",
-            ).alias("row_text")
-        )
-    )
-    structured = (
-        row_texts.groupBy("table_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("row_idx", "row_text"))
-                    ),
-                    lambda s: s["row_text"],
-                ),
-                "\n",
-            ).alias("structured_text")
-        )
-    )
-    header_list = (
-        cells.filter(F.col("is_header"))
-        .groupBy("table_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("col_idx", "value"))
-                    ),
-                    lambda s: s["value"],
-                ),
-                ", ",
-            ).alias("header_text")
-        )
-    )
-    return (
-        structured.join(header_list, "table_id")
-        .join(summary, "table_id")
-        .select(
-            "table_id",
-            "structured_text",
-            F.concat(
-                F.lit("A "),
-                F.col("table_type"),
-                F.lit(" table with columns "),
-                F.col("header_text"),
-                F.lit(" and "),
-                F.col("n_rows").cast("string"),
-                F.lit(" data rows."),
-            ).alias("semantic_description"),
-        )
+    rows = F.col("rows")
+    return _summarized(docs).select(
+        "table_id",
+        F.array_join(
+            F.transform(rows, lambda r: F.array_join(r, ", ")), "\n"
+        ).alias("structured_text"),
+        F.concat(
+            F.lit("A "),
+            F.col("table_type"),
+            F.lit(" table with columns "),
+            F.array_join(rows[0], ", "),
+            F.lit(" and "),
+            F.col("n_rows").cast("string"),
+            F.lit(" data rows."),
+        ).alias("semantic_description"),
     )
 
 

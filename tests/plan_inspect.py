@@ -28,6 +28,22 @@ def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def physical_node_names(df) -> list[str]:
+    """Node names of the executed physical plan, walked top down; an
+    adaptive plan is walked through its current physical plan."""
+    names = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
 def _analyzed_leaves(df) -> list:
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
     return [leaves.apply(i) for i in range(leaves.size())]

@@ -11,7 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from plan_inspect import plan_of
+from plan_inspect import jobs_launched, physical_node_names, plan_of
 from rag_database_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -587,6 +587,29 @@ def test_leakage_split_is_shuffle_free_projection(spark):
     p = plan_of(dedup.leakage_safe_split(labels))
     assert "Exchange" not in p, p
     assert "Join" not in p, p
+
+
+@pytest.mark.parametrize(
+    "name", ["table_cells", "table_summary", "table_texts"]
+)
+def test_table_family_is_one_narrow_pass(spark, name):
+    """Every table output row depends on one input table, so the family
+    is a per-row projection of the parsed row array: no shuffle,
+    broadcast, join, window or aggregate, and one job per write."""
+    import __spark_entry__ as entrymod
+
+    df = entrymod.queries()[name](spark, SF_DIR)
+    names = physical_node_names(df)
+    wide = [
+        n for n in names
+        if any(k in n for k in ("Exchange", "Join", "Window", "Aggregate"))
+    ]
+    assert not wide, names
+    n_jobs = jobs_launched(
+        spark, f"narrow-{name}",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    assert n_jobs <= 1, n_jobs
 
 
 def test_split_leakage_audit_joins_are_keyed(spark):
