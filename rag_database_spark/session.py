@@ -10,6 +10,13 @@ cluster the same configs apply per-executor. Scale-relevant choices:
   transfers columnar batches, not pickled rows.
 - UTC session timezone — parquet timestamps compare bit-identically with
   the DuckDB oracle.
+- Python workers fork from ``pyworker`` (``spark.python.daemon.module``):
+  PySpark invalidates import caches on every task, and before CPython
+  3.13 that re-parses ``pyspark.zip``'s directory once per importer, about
+  0.15-0.2 s of worker CPU per Arrow task. Its guard is exact for
+  archives that change: a zip whose mtime or size moved is re-read. The
+  checkout root goes on the executors' PYTHONPATH so the daemon (and the
+  UDF modules, pickled by reference) resolve from any working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +25,8 @@ import os
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from rag_database_spark import pyworker
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -33,6 +42,7 @@ def get_spark(
     ``spark-submit --master yarn|k8s`` — everything else carries over.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    root = Path(__file__).resolve().parent.parent
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -61,8 +71,10 @@ def get_spark(
         # the session exists
         .config(
             "spark.sql.warehouse.dir",
-            str(Path(__file__).resolve().parent.parent / ".cache" / "warehouse"),
+            str(root / ".cache" / "warehouse"),
         )
+        .config("spark.python.daemon.module", pyworker.__name__)
+        .config("spark.executorEnv.PYTHONPATH", str(root))
         .config("spark.ui.enabled", "false")
         # files.maxPartitionBytes default 128m is right for the 100 TB target;
         # local sf tables are single files and AQE coalesces the tail.

@@ -1,6 +1,8 @@
 """Dump .explain('formatted') for the given entries into per-query
 files under plans/<round>/<entry>_<suffix>.txt (judge-auditable
 evidence of plan-shape claims in the round's OPTIMIZATION report).
+No warm-up: each entry builds the ``.cache`` artifacts it reads on first
+use, so the plans are the ones a warmed session shows.
 
 Usage: python tools/dump_plan_files.py <suffix> [entry ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -28,7 +30,6 @@ def main(argv: list[str]) -> int:
     suffix = argv[0]
     names = argv[1:]
     spark = get_spark("dump_plan_files")
-    entrymod.prepare(spark, SF_DIR)
     qs = entrymod.queries()
     OUT.mkdir(parents=True, exist_ok=True)
     for n in names:
