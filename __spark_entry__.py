@@ -74,12 +74,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # can never serve a stale plan.
 # Every queries() entry goes through _prepared, and its checkpoint guard
 # alone decides what is kept: a plan over a checkpointed leaf (the BFS
-# loops, the components loop above its edge budget) rebuilds per call,
-# or the cache would skip real compute, not just compilation. Values a
-# builder collects or writes while building (query vectors, the
-# near-dup GEMM's broadcast matrix, event bounds, the components edge
-# count, time_travel's first-call table) depend only on the source
-# tables the key covers.
+# loops, graph_triangles' two measured folds, the components loop above
+# its edge budget) rebuilds per call, or the cache would skip real
+# compute, not just compilation. Values a builder collects or writes
+# while building (query vectors, the near-dup GEMM's broadcast matrix,
+# event bounds, the components edge count, time_travel's first-call
+# table) depend only on the source tables the key covers.
 _PREPARED: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
@@ -964,13 +964,11 @@ def _quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus selection ("the best 60% of TOKENS, by
-    quality"): sketch-bracketed weighted prefix — above-band docs come
-    from a literal-threshold scan, only the band rows see a cumulative
-    window. DuckDB-oracled against the direct global-prefix-sum twin."""
+    quality"): an exact weighted prefix over per-bucket windows.
+    DuckDB-oracled against a global prefix-sum window."""
     return text_analytics.token_budget_select(
         load_table(spark, sf_dir, "documents"),
         frac=text_analytics.TOKEN_BUDGET_FRAC,
-        bracket=True,
     )
 
 
@@ -1129,8 +1127,8 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     f_exact = survives exact dedup (md5-canonical); f_near = f_exact ∧
     near-dup component representative; f_quality = survives the exact
-    bottom-⌊N·p⌋ quality cut of the survivors (sketch-bracketed
-    boundary, computed ONCE at build); f_final = f_quality ∧
+    bottom-⌊N·p⌋ quality cut of the survivors
+    (``text_analytics.quality_cut``); f_final = f_quality ∧
     decontaminated. q_score is the quality score for dedup survivors
     (NULL otherwise).
 
@@ -1147,8 +1145,6 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     document."""
 
     def build(path: str) -> None:
-        import math
-
         docs = load_table(spark, sf_dir, "documents")
         exact_keep = (
             text_analytics.exact_dedup(docs)
@@ -1161,25 +1157,9 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id")
         )
         survivors = docs.join(exact_keep, "doc_id").join(nd_keep, "doc_id")
-        scored = (
-            text_analytics.doc_quality(survivors)
-            .select("doc_id", "q_score")
-            .localCheckpoint()
+        scored = text_analytics.quality_cut(
+            text_analytics.doc_quality(survivors).select("doc_id", "q_score")
         )
-        n = scored.count()  # post-checkpoint: a cached-partition count
-        k = math.floor(n * text_analytics.QUALITY_FILTER_P)
-        boundary = text_analytics.bottom_k_boundary(scored, k, n)
-        if boundary is None:
-            qkept = scored
-        else:
-            bq, bid = boundary
-            qkept = scored.filter(
-                (F.col("q_score") > F.lit(bq))
-                | (
-                    (F.col("q_score") == F.lit(bq))
-                    & (F.col("doc_id") > F.lit(bid))
-                )
-            )
         clean = (
             text_analytics.decontaminate(docs)
             .filter(~F.col("is_contaminated"))
@@ -1195,7 +1175,6 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(_flag(exact_keep, "__exact"), "doc_id", "left")
             .join(_flag(nd_keep, "__nd"), "doc_id", "left")
             .join(scored, "doc_id", "left")
-            .join(_flag(qkept.select("doc_id"), "__q"), "doc_id", "left")
             .join(_flag(clean, "__clean"), "doc_id", "left")
             .select(
                 "doc_id",
@@ -1204,9 +1183,9 @@ def _curation_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("__exact", false)
                     & F.coalesce("__nd", false)
                 ).alias("f_near"),
-                F.coalesce("__q", false).alias("f_quality"),
+                F.coalesce("keep", false).alias("f_quality"),
                 (
-                    F.coalesce("__q", false)
+                    F.coalesce("keep", false)
                     & F.coalesce("__clean", false)
                 ).alias("f_final"),
                 "q_score",
@@ -1234,14 +1213,12 @@ def _curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval-overlapping docs and the eval slice itself). Output: the
     final training corpus as (doc_id, q_score).
 
-    The quality stage is the EXACT discrete cutoff, but computed via
-    sketch-bracketed selection (``text_analytics.bottom_k_boundary``)
-    rather than an O(N) bottom-k relation: the boundary tuple comes
-    back as one row and the plan filters on LITERALS — no
-    TakeOrderedAndProject, no broadcast that grows with the corpus
-    (pinned by tests/test_plans.py). The whole ancestry runs ONCE at
-    artifact build (``_curation_artifact``); serving is a flag filter
-    over the persisted per-doc stage frame."""
+    The quality stage is the EXACT discrete cutoff, computed as a
+    running count (``text_analytics.quality_cut``) rather than an O(N)
+    bottom-k relation: no TakeOrderedAndProject, no broadcast that
+    grows with the corpus (pinned by tests/test_plans.py). The whole
+    ancestry runs ONCE at artifact build (``_curation_artifact``);
+    serving is a flag filter over the persisted per-doc stage frame."""
     return (
         _curation_artifact(spark, sf_dir)
         .filter(F.col("f_final"))
@@ -2401,12 +2378,7 @@ def _c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _qrels_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic modular relevance set ((vec_id + 3*query_id) % 9
     == 0), expressed as an EQUI-join on the residue so the probe is
-    keyed, not a cross join.
-
-    Eagerly checkpointed (r17): ir_metrics reads qrels twice (the
-    relevance-mark join and the totals rollup), and eval_delta runs
-    ir_metrics twice — the fixture join otherwise evaluated up to 4×
-    per query. Tiny frame, recomputed per invocation."""
+    keyed, not a cross join."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = workload.queries_df(spark)
     return emb.select(
@@ -2418,7 +2390,7 @@ def _qrels_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((9 - (F.col("query_id") * 3) % 9) % 9).alias("m"),
         ),
         "m",
-    ).select("query_id", "id").localCheckpoint()
+    ).select("query_id", "id")
 
 
 def _ir_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:

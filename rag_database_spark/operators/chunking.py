@@ -240,13 +240,10 @@ def chunk_pipeline(
     paras = assign_pages(
         paras, page_boundaries(docs, id_col, text_col, page_chars)
     ).withColumn("level", F.lit("paragraph"))
-    # eager localCheckpoint (r17): doc_chunks feeds the parent-id
-    # lookup AND the union, re-running the per-doc summary projection
-    # (truncation + md5) twice. Doc-grain rows, recomputed per call.
     doc_chunks = doc_level_chunks(docs, id_col, text_col).select(
         "*",
         F.lit(None).cast("long").alias("page_number"),
-    ).withColumn("level", F.lit("document")).localCheckpoint()
+    ).withColumn("level", F.lit("document"))
 
     doc_ids = doc_chunks.select(
         "doc_id",

@@ -351,16 +351,9 @@ def simhash_pairs(
             for bi in range(n_blocks)
         ]
     )
-    # eager localCheckpoint (r17): the block self-join evaluates both
-    # sides, re-running the upstream fingerprint computation twice —
-    # for the multimodal callers that is a per-payload Python decode
-    # (mapInPandas). Narrow (id, fp, block) rows, one per (row, block),
-    # recomputed per invocation.
     ex = fingerprints.select(
         "doc_id", F.col("simhash"), F.explode(blocks).alias("b")
-    ).select(
-        "doc_id", "simhash", "b.block_idx", "b.block_val"
-    ).localCheckpoint()
+    ).select("doc_id", "simhash", "b.block_idx", "b.block_val")
     a = ex.select(
         F.col("doc_id").alias("id_a"), F.col("simhash").alias("fp_a"),
         "block_idx", "block_val",
@@ -519,12 +512,7 @@ def embedding_near_dupes_lsh(
         dot, l2_norm, to_double_array,
     )
 
-    # eager localCheckpoint (r17): the bucket self-join evaluates both
-    # sides, so the sign-bit projection ran twice (same fold as
-    # similarity.knn_graph_lsh); narrow rows, recomputed per call.
-    blocks = rp_blocks(
-        corpus, dim, n_tables, n_planes, seed, id_col, vec_col
-    ).localCheckpoint()
+    blocks = rp_blocks(corpus, dim, n_tables, n_planes, seed, id_col, vec_col)
     a = blocks.select(F.col("id").alias("id_a"), "table_idx", "bucket")
     b = blocks.select(F.col("id").alias("id_b"), "table_idx", "bucket")
     cands = (
@@ -998,11 +986,7 @@ def pairs_vs_index(
     the corpus index never shuffles. Output matches the pair-set
     schema (id_a < id_b orientation, 6dp jaccard) so it appends
     directly onto the persisted pair index."""
-    # eager localCheckpoint (r17): b_sh feeds both the exploded
-    # shingle probe and the size table — the tokenize+shingle-hash
-    # projection ran twice per batch. Batch-bounded rows, recomputed
-    # per invocation.
-    b_sh = _doc_shingles(batch_docs, id_col, text_col, k).localCheckpoint()
+    b_sh = _doc_shingles(batch_docs, id_col, text_col, k)
     b_ex = b_sh.select(
         F.col("doc_id").alias("new_id"), F.explode("sh").alias("s")
     )

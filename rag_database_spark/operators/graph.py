@@ -586,11 +586,11 @@ def triangles(edges: DataFrame) -> DataFrame:
     division, identical cross-engine.
 
     Returns (node, degree, n_triangles, clustering)."""
-    # eager localCheckpoints (r17): und feeds the degree rollup AND
-    # the canonical edge list (each re-evaluating the full edge-table
-    # lineage), deg is referenced three times, and the oriented edge
-    # list o self-joins for wedges — without the folds the upstream
-    # edge derivation ran up to 5x per call. All are edge-bounded.
+    # Two eager localCheckpoints, kept on a measurement: und feeds the
+    # degree rollup and the canonical edge list, deg is read three
+    # times and o self-joins for wedges. At sf0.01 on local[4] (median
+    # of 5 warm calls, build + noop write) a call took 0.82 s and 23
+    # jobs without them, against 0.70-0.77 s and 7 build + 6 exec jobs.
     und = (
         undirected(edges)
         .filter(F.col("me") != F.col("other"))

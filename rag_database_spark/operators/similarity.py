@@ -1342,14 +1342,10 @@ def knn_graph_lsh(
 
     if n_planes is None:
         n_planes = adaptive_n_planes(corpus.count())
-    # eager localCheckpoint (r17): the self-join evaluates both sides,
-    # so the sign-bit bucket projection (n_tables × n_planes dot
-    # products per row) ran TWICE; the checkpoint is one narrow
-    # (table, bucket, id) row per (row, table), recomputed per call.
     cb = rp_blocks(
         corpus, dim, n_tables, n_planes, seed, id_col, vec_col,
         max_planes=LSH_MAX_PLANES,
-    ).localCheckpoint()
+    )
     a, b = cb.alias("a"), cb.alias("b")
     cands = (
         a.join(

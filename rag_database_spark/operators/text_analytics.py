@@ -9,7 +9,7 @@ operator, no shuffle except ``exact_dedup``'s one groupBy on the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.sources.tables import fan_out, local_frame
@@ -531,10 +531,6 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    # eager localCheckpoint (r17): base feeds the 2-gram explode, the
-    # 5-gram explode, and the final line-signal join — the tokenize +
-    # line-dedup projection otherwise evaluated 3× per run. Recomputed
-    # per invocation.
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(lines).alias("n_lines"),
@@ -542,7 +538,7 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
         chars_of(lines).alias("line_chars"),
         chars_of(dlines).alias("dline_chars"),
         toks.alias("__toks"),
-    ).withColumn("tok_chars", chars_of(F.col("__toks"))).localCheckpoint()
+    ).withColumn("tok_chars", chars_of(F.col("__toks")))
     gram_rows = lambda n: base.select(
         "doc_id", F.lit(n).alias("n"), F.explode(grams(n)).alias("g")
     )
@@ -1107,84 +1103,63 @@ def dup_spans(docs: DataFrame, n: int = DUP_SPAN_N,
 
 QUALITY_FILTER_P = 0.25  # drop the bottom quartile by composite score
 
-# sketch-bracketed exact selection: half-width of the percentile
-# bracket around p, and the matching approx_percentile accuracy
-# (error = 1/accuracy must be < band half-width for the bracket to
-# contain the true k-th row on the first attempt)
-BOUNDARY_BAND_EPS = 1e-3
-BOUNDARY_ACCURACY = 10_000
+# fixed-width q_score buckets of weighted_prefix (q_score lies in [0, 1])
+PREFIX_BUCKETS = 1024
 
 
-def bottom_k_boundary(scored: DataFrame, k: int, n: int,
-                      score_col: str = "q_score",
-                      id_col: str = "doc_id",
-                      eps: float = BOUNDARY_BAND_EPS):
-    """EXACT k-th smallest ``(score, id)`` tuple — the discrete cutoff
-    of a bottom-k drop — computed without materializing a bottom-k
-    relation, so the plan survives k = O(N).
+def weighted_prefix(scored: DataFrame, weight: Column,
+                    descending: bool) -> DataFrame:
+    """``scored`` (doc_id, q_score, ...) plus ``__prefix``, the EXACT
+    running sum of ``weight`` up to and including each row under the
+    total order (q_score, doc_id) — q_score descending when
+    ``descending`` — and ``__total``, the sum over all rows.
 
-    ``orderBy().limit(k)`` is a TakeOrderedAndProject: per-partition
-    heaps of size k merged on the driver, and any join against the
-    result ships k rows. Fine for top-10; wrong when k is a fixed
-    FRACTION of the corpus (quality filtering drops 25%). This is the
-    classic sketch-bracketed selection instead:
-
-    1. one ``approx_percentile`` pass brackets the k-th score in
-       ``[t_lo, t_hi]`` (sketch error 1/BOUNDARY_ACCURACY ≪ eps);
-    2. one aggregation counts rows strictly below the band (c_lo) and
-       rows inside it;
-    3. the k-th tuple overall is the (k - c_lo)-th inside the band —
-       a TakeOrderedAndProject over ~2·eps·N rows, then max-of-struct.
-
-    If the sketch misses (band doesn't straddle rank k), the band is
-    doubled and retried; the last resort is the full range, which
-    degenerates to the exact bottom-k and cannot miss. Total cost:
-    3 jobs per attempt over the (score, id) projection, driver traffic
-    ONE row. Returns ``(score, id)`` or None when k <= 0.
-    """
-    if k <= 0:
-        return None
-    p = k / max(n, 1)
-    attempt_eps = eps
-    for _ in range(6):
-        lo_p = max(0.0, p - attempt_eps)
-        hi_p = min(1.0, p + attempt_eps)
-        t_lo, t_hi = scored.agg(
-            F.expr(
-                f"approx_percentile({score_col}, array({lo_p}, {hi_p}),"
-                f" {BOUNDARY_ACCURACY})"
-            )
-        ).first()[0]
-        c_lo, c_band = scored.agg(
-            F.sum((F.col(score_col) < t_lo).cast("long")),
-            F.sum(F.col(score_col).between(t_lo, t_hi).cast("long")),
-        ).first()
-        j = k - (c_lo or 0)
-        if 1 <= j <= (c_band or 0):
-            band = scored.filter(F.col(score_col).between(t_lo, t_hi))
-            row = (
-                band.orderBy(score_col, id_col)
-                .limit(j)
-                .agg(F.max(F.struct(score_col, id_col)).alias("b"))
-                .first()["b"]
-            )
-            return (row[score_col], row[id_col])
-        attempt_eps *= 2.0
-        if lo_p == 0.0 and hi_p == 1.0:
-            break
-    # unreachable in practice: the full-range band contains every rank
-    row = (
-        scored.orderBy(score_col, id_col)
-        .limit(k)
-        .agg(F.max(F.struct(score_col, id_col)).alias("b"))
-        .first()["b"]
+    A global prefix sum without a single-partition window or a driver
+    round trip: rows are bucketed by floor(q_score · PREFIX_BUCKETS),
+    a monotone function of the score, so each bucket is a contiguous
+    run of the order. The running sum is a window PARTITIONED by
+    bucket, and each bucket's offset (the weight of every bucket
+    before it) is a fold over the ≤ PREFIX_BUCKETS bucket sums,
+    gathered on one row. Exactness needs only the monotonicity:
+    a crowded bucket costs one larger window task, never a row. NULL
+    scores go to bucket -1, which sorts where Spark puts NULLs (first
+    ascending, last descending)."""
+    bucket = F.floor(F.col("q_score") * PREFIX_BUCKETS)
+    keyed = scored.withColumn("__b", F.coalesce(bucket, F.lit(-1))).withColumn(
+        "__w", weight
     )
-    return (row[score_col], row[id_col])
+    order = F.desc("q_score") if descending else F.asc("q_score")
+    run = Window.partitionBy("__b").orderBy(order, "doc_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    # every bucket sum on ONE row, so the offsets are a fold over it and
+    # the input is read once for the sums (a self-join of the sums is
+    # column-pruned into two different reads of the input)
+    every = keyed.groupBy("__b").agg(F.sum("__w").alias("__bw")).agg(
+        F.collect_list(F.struct("__b", "__bw")).alias("__all"),
+        F.sum("__bw").alias("__total"),
+    )
+    b = F.col("__t.__b")
+    offsets = every.select(F.explode("__all").alias("__t"), "*").select(
+        b.alias("__b"),
+        F.aggregate(
+            "__all",
+            F.lit(0).cast("long"),
+            lambda acc, o: acc + F.when(
+                o["__b"] > b if descending else o["__b"] < b, o["__bw"]
+            ).otherwise(0),
+        ).alias("__off"),
+        "__total",
+    )
+    return (
+        keyed.withColumn("__prefix", F.sum("__w").over(run))
+        .join(F.broadcast(offsets), "__b")
+        .withColumn("__prefix", F.col("__prefix") + F.col("__off"))
+        .drop("__b", "__w", "__off")
+    )
 
 
-def quality_filter(docs: DataFrame, p: float = QUALITY_FILTER_P,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def quality_filter(docs: DataFrame, p: float = QUALITY_FILTER_P) -> DataFrame:
     """Percentile-threshold quality filtering: keep the top ``1 - p``
     of the corpus by composite quality score — the "drop the worst
     quartile" step of a training mix. The cutoff is DISCRETE: the
@@ -1196,12 +1171,12 @@ def quality_filter(docs: DataFrame, p: float = QUALITY_FILTER_P,
     One count + a bottom-k selection that Spark plans as
     TakeOrderedAndProject (per-partition heaps merged on the driver —
     no global sort) + a broadcast anti-join. k grows with the corpus;
-    the curation pipeline takes the same cutoff at scale as one
-    boundary tuple from :func:`bottom_k_boundary` instead.
+    the curation pipeline takes the same cutoff at scale through
+    :func:`quality_cut` instead.
     """
     import math
 
-    scored = doc_quality(docs, id_col, text_col).select("doc_id", "q_score")
+    scored = doc_quality(docs).select("doc_id", "q_score")
     # count the INPUT, not the scored projection: doc_quality is 1:1
     # per doc, and a bare parquet count is metadata-only while
     # scored.count() would execute the full quality scan just for N
@@ -1212,13 +1187,25 @@ def quality_filter(docs: DataFrame, p: float = QUALITY_FILTER_P,
     return scored.join(F.broadcast(bottom), "doc_id", "left_anti")
 
 
+def quality_cut(scored: DataFrame, p: float = QUALITY_FILTER_P) -> DataFrame:
+    """``quality_filter``'s discrete cutoff as a flag, one lazy plan:
+    (doc_id, q_score, keep) over ``scored`` (doc_id, q_score), where
+    ``keep`` is False for the ⌊N·p⌋ lowest rows under (q_score asc,
+    doc_id asc). A row is kept iff its running count under that order
+    exceeds ⌊N·p⌋ (``weighted_prefix`` with weight 1), so the plan
+    holds no bottom-k relation that grows with the corpus."""
+    return weighted_prefix(scored, F.lit(1), descending=False).select(
+        "doc_id",
+        "q_score",
+        (F.col("__prefix") > F.floor(F.col("__total") * p)).alias("keep"),
+    )
+
+
 TOKEN_BUDGET_FRAC = 0.6  # workload default: keep the best 60% of tokens
 
 
-def token_budget_select(docs: DataFrame, frac: float = TOKEN_BUDGET_FRAC,
-                        bracket: bool = True,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def token_budget_select(docs: DataFrame,
+                        frac: float = TOKEN_BUDGET_FRAC) -> DataFrame:
     """Token-budget corpus selection: fill a budget of
     ``floor(frac · total_tokens)`` with the highest-quality documents —
     the global selection step of assembling a training corpus ("the
@@ -1228,110 +1215,24 @@ def token_budget_select(docs: DataFrame, frac: float = TOKEN_BUDGET_FRAC,
     document is kept iff the running token sum up TO AND INCLUDING it
     fits the budget (zero-token documents ride along for free, matching
     the prefix-sum definition on both engines). The budget itself is
-    exact integer arithmetic — ``total · round(frac·1000) // 1000`` —
+    exact integer arithmetic — ``total · round(frac·1000) div 1000`` —
     because ``floor(total * 0.6)`` disagrees between binary floats and
     DuckDB's decimal literals whenever the product lands on an integer.
 
-    ``bracket=False`` is the direct twin: one global cumulative-sum
-    window — correct, but a single-partition sort at scale. The default
-    ``bracket=True`` returns the SAME rows via sketch-bracketed band
-    selection (the ``bottom_k_boundary`` discipline, weighted by
-    tokens): one ``approx_percentile`` pass brackets the crossing score
-    in ``[t_lo, t_hi]``, one aggregation weighs the region strictly
-    above the band and the band itself, and only the ~2·eps·N band rows
-    see a cumulative window (offset by the above-band weight). Docs
-    above the band are selected by a literal-threshold scan; a miss
-    re-centers the bracket by BINARY SEARCH on the doc-fraction using
-    the exactly-measured above-band weight (token mass correlates with
-    quality, so the crossing can sit far from the uniform-tokens
-    guess), degenerating to the exact window only as the last resort.
-    The strict upper straddle
-    (``budget < w_above + w_band``) keeps zero-token documents below
-    the band from slipping in when the band total exactly equals the
-    remaining budget."""
-    import math
-
-    t = F.col(text_col)
+    The running sum is :func:`weighted_prefix` (per-bucket windows
+    plus a bucket-offset table), so the plan is lazy, launches no job
+    while building, and has no single-partition window."""
+    t = F.col("text")
     scored = fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.round(quality_score(t), 6).alias("q_score"),
         token_count_ws(t).cast("long").alias("n_tokens"),
     )
-    if bracket:
-        # the refinement loop makes 3+ passes over (doc_id, q, n);
-        # materialize the 3-column projection ONCE so each pass costs
-        # a columnar scan of ~24 B/doc, not a re-tokenization of the
-        # corpus (the quality subscores tokenize the text per metric —
-        # 13.8 s -> ~2 s at sf0.01)
-        scored = scored.localCheckpoint()
     num = round(frac * 1000)
-    totals = scored.agg(
-        F.sum("n_tokens").alias("w"), F.count(F.lit(1)).alias("n")
-    ).first()
-    total = int(totals["w"] or 0)
-    budget = total * num // 1000
-    if budget >= total:
-        return scored
-    out_cols = ["doc_id", "q_score", "n_tokens"]
-    if bracket:
-        # binary search on the DOC-fraction guess: token mass
-        # correlates with quality (length is 30% of the score), so the
-        # crossing can sit far from the uniform-tokens guess 1 - frac;
-        # each miss re-centers using the exactly-measured above-band
-        # weight instead of only widening eps around a wrong center
-        p_lo, p_hi = 0.0, 1.0
-        p = max(0.0, min(1.0, 1.0 - num / 1000.0))
-        attempt_eps = BOUNDARY_BAND_EPS
-        for _ in range(12):
-            lo_p = max(0.0, p - attempt_eps)
-            hi_p = min(1.0, p + attempt_eps)
-            t_lo, t_hi = scored.agg(
-                F.expr(
-                    f"approx_percentile(q_score, array({lo_p}, {hi_p}),"
-                    f" {BOUNDARY_ACCURACY})"
-                )
-            ).first()[0]
-            w_above, w_band = scored.agg(
-                F.sum(F.when(F.col("q_score") > t_hi, F.col("n_tokens"))),
-                F.sum(
-                    F.when(
-                        F.col("q_score").between(t_lo, t_hi),
-                        F.col("n_tokens"),
-                    )
-                ),
-            ).first()
-            w_above = int(w_above or 0)
-            w_band = int(w_band or 0)
-            if w_above <= budget < w_above + w_band:
-                above = scored.filter(F.col("q_score") > F.lit(t_hi))
-                band = scored.filter(
-                    F.col("q_score").between(F.lit(t_lo), F.lit(t_hi))
-                )
-                wb = Window.orderBy(F.desc("q_score"), "doc_id")
-                band_sel = (
-                    band.withColumn("cum", F.sum("n_tokens").over(wb))
-                    .filter(F.col("cum") + F.lit(w_above) <= F.lit(budget))
-                    .select(*out_cols)
-                )
-                return above.select(*out_cols).unionByName(band_sel)
-            if w_above > budget:
-                p_lo = max(p_lo, hi_p)  # too many tokens: cut rises
-            else:
-                p_hi = min(p_hi, lo_p)  # band + above too light: cut drops
-            if p_hi <= p_lo:
-                break
-            p = (p_lo + p_hi) / 2.0
-            if p_hi - p_lo <= 4.0 * attempt_eps:
-                # interval nearly exhausted at this band width: widen so
-                # the band can cover the residual gap (sketch-error zone)
-                attempt_eps *= 2.0
-        # search exhausted (possible only when the sketch's rank error
-        # dominates): fall through to the exact global window
-    w = Window.orderBy(F.desc("q_score"), "doc_id")
     return (
-        scored.withColumn("cum", F.sum("n_tokens").over(w))
-        .filter(F.col("cum") <= F.lit(budget))
-        .select(*out_cols)
+        weighted_prefix(scored, F.col("n_tokens"), descending=True)
+        .filter(F.col("__prefix") <= F.expr(f"__total * {num} div 1000"))
+        .select("doc_id", "q_score", "n_tokens")
     )
 
 

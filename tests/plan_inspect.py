@@ -28,20 +28,35 @@ def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def physical_node_names(df) -> list[str]:
-    """Node names of the executed physical plan, walked top down; an
+def _physical_nodes(df) -> list:
+    """Nodes of the executed physical plan, walked top down; an
     adaptive plan is walked through its current physical plan."""
-    names = []
+    nodes = []
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
         if node.nodeName() == "AdaptiveSparkPlan":
             stack.append(node.executedPlan())
             continue
-        names.append(node.nodeName())
+        nodes.append(node)
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    return names
+    return nodes
+
+
+def physical_node_names(df) -> list[str]:
+    """Node names of the executed physical plan, walked top down."""
+    return [node.nodeName() for node in _physical_nodes(df)]
+
+
+def unpartitioned_windows(df) -> list[str]:
+    """``Window`` nodes of the physical plan with an empty
+    ``partitionSpec()``: each pulls its whole input into one task."""
+    return [
+        node.simpleString(25)
+        for node in _physical_nodes(df)
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty()
+    ]
 
 
 def _analyzed_leaves(df) -> list:

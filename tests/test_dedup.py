@@ -98,12 +98,11 @@ def test_rp_lsh_recall_vs_brute_force(spark):
         (r["id_a"], r["id_b"])
         for r in embedding_near_dupes(corpus, 0.98).collect()
     }
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_near_dupes_lsh(
-            corpus, 0.98, dim=16, n_tables=6, n_planes=6
-        ).collect()
-    }
+    lsh_df = dedup.embedding_near_dupes_lsh(
+        corpus, 0.98, dim=16, n_tables=6, n_planes=6
+    )
+    assert not entrymod._has_materialized_leaf(lsh_df)  # one lazy plan
+    lsh = {(r["id_a"], r["id_b"]) for r in lsh_df.collect()}
     assert brute  # the planted pairs exist
     assert lsh <= brute  # no false positives (exact verification)
     recall = len(lsh & brute) / len(brute)

@@ -98,9 +98,8 @@ def test_r10_selection_and_bpe_ops_tolerate_empty_corpus(spark):
     assert bpe.pair_stats(empty).count() == 0
     assert bpe.encode_docs(empty, encoded).count() == 0
 
-    for bracket in (True, False):
-        sel = ta.token_budget_select(empty, frac=0.6, bracket=bracket)
-        assert sel.count() == 0 and sel.schema.fields
+    sel = ta.token_budget_select(empty, frac=0.6)
+    assert sel.count() == 0 and sel.schema.fields
 
     cs = ta.contrastive_score(empty, empty.filter("lang = 'en'"))
     assert cs.count() == 0 and cs.schema.fields

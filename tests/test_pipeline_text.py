@@ -411,16 +411,12 @@ def test_quality_filter_drops_bottom_quartile(spark):
     assert max(dropped) <= min((all_scores[i], i) for i in kept_ids)
 
 
-def test_bottom_k_boundary_equals_exact_cut(spark):
-    """bottom_k_boundary is the SAME exact discrete cutoff as
-    quality_filter: the boundary tuple is the largest (q_score, doc_id)
-    the exact path drops — sketch-bracketed selection must not drift
-    by a single doc, including under q_score ties at the boundary.
-    The curation artifact filters on this tuple."""
-    import math
-
+def test_quality_cut_equals_quality_filter(spark):
+    """quality_cut, the curation artifact's lazy cutoff, keeps exactly
+    the rows quality_filter keeps — not one doc of drift, including
+    under q_score ties at the boundary and at k = 0, 1 and n."""
     from rag_database_spark.operators.text_analytics import (
-        bottom_k_boundary, doc_quality, quality_filter,
+        doc_quality, quality_cut, quality_filter,
     )
 
     # 12 distinct lengths + 8 exact repeats of one text → heavy score
@@ -431,28 +427,35 @@ def test_bottom_k_boundary_equals_exact_cut(spark):
     ] + [(100 + i, "tied tied tied identical text body here") for i in range(8)]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
     scored = doc_quality(docs).select("doc_id", "q_score")
-    scores = {r["doc_id"]: r["q_score"] for r in scored.collect()}
-    n = len(scores)
-    for p in (0.25, 0.5, 0.05):
+    # n = 20: k = 5, 10, 1, 0, 20
+    for p in (0.25, 0.5, 0.05, 0.0, 1.0):
         kept = {r["doc_id"] for r in quality_filter(docs, p=p).collect()}
-        dropped = max((scores[i], i) for i in scores if i not in kept)
-        k = math.floor(n * p)
-        assert bottom_k_boundary(scored, k, n) == dropped, f"p={p}"
+        cut = {
+            r["doc_id"]
+            for r in quality_cut(scored, p).filter("keep").collect()
+        }
+        assert cut == kept, f"p={p}"
 
 
-def test_bottom_k_boundary_edges(spark):
-    from rag_database_spark.operators.text_analytics import bottom_k_boundary
+def test_quality_cut_edges(spark):
+    from rag_database_spark.operators.text_analytics import quality_cut
 
     scored = spark.createDataFrame(
         [(i, float(i % 3)) for i in range(9)], "doc_id long, q_score double"
     )
-    assert bottom_k_boundary(scored, 0, 9) is None
-    # k = n: boundary is the global max tuple
-    assert bottom_k_boundary(scored, 9, 9) == (2.0, 8)
-    # k = 1: boundary is the global min tuple
-    assert bottom_k_boundary(scored, 1, 9) == (0.0, 0)
-    # mid-k lands inside a tie run: doc_ids 0,3,6 share score 0.0
-    assert bottom_k_boundary(scored, 2, 9) == (0.0, 3)
+
+    def dropped(p):
+        return {
+            r["doc_id"]
+            for r in quality_cut(scored, p).filter("NOT keep").collect()
+        }
+
+    assert dropped(0.0) == set()  # k = 0
+    assert dropped(1.0) == set(range(9))  # k = n
+    # k = ⌊9 · 0.12⌋ = 1: the global min tuple (0.0, 0)
+    assert dropped(0.12) == {0}
+    # k = 2 lands inside a tie run: doc_ids 0,3,6 share score 0.0
+    assert dropped(0.23) == {0, 3}
 
 
 def test_vocab_oov_hand_case(spark):

@@ -11,7 +11,9 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from plan_inspect import jobs_launched, physical_node_names, plan_of
+from plan_inspect import (
+    jobs_launched, physical_node_names, plan_of, unpartitioned_windows,
+)
 from rag_database_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -264,41 +266,30 @@ def test_quality_filter_bottom_k_is_take_ordered(spark):
 
 
 def test_curate_corpus_quality_stage_is_literal_threshold(spark):
-    """The curation composite's quality cutoff must be a literal
-    threshold filter (sketch-bracketed exact selection), NOT an O(N)
-    bottom-k: no TakeOrderedAndProject anywhere in the returned plan,
-    and no broadcast of a limit()-derived relation. The only broadcasts
-    allowed are the keyed doc_id joins Spark picks at this tiny SF."""
+    """The curation composite's quality cutoff is a running count
+    (``quality_cut``), NOT an O(N) bottom-k: no TakeOrderedAndProject
+    anywhere in the returned plan, and no broadcast of a
+    limit()-derived relation."""
     import __spark_entry__ as entrymod
 
     df = entrymod.queries()["curate_corpus"](spark, SF_DIR)
     p = plan_of(df, "simple")
     assert "TakeOrderedAndProject" not in p
     assert "GlobalLimit" not in p and "LocalLimit" not in p
-    # the boundary came back as literals: the filter references q_score
-    # against a constant, not a joined threshold column
-    assert "__thr" not in p
 
 
-def test_token_budget_bracket_window_is_band_scoped(spark):
-    """bracket=True: the only cumulative-sum Window in the plan runs
-    over the FILTERED score band (~2·eps·N rows), never the whole
-    scored projection — above-band docs are a literal-threshold scan,
-    and there is no bottom-k relation."""
+def test_token_budget_select_has_no_global_window(spark):
+    """The weighted prefix runs as windows partitioned by q_score
+    bucket: no Window pulls the per-document rows into one task, and
+    no checkpointed leaf keeps the plan out of the plan cache."""
+    import __spark_entry__ as entrymod
     from rag_database_spark.operators.text_analytics import (
         token_budget_select,
     )
 
-    df = token_budget_select(
-        load_table(spark, SF_DIR, "documents"), frac=0.6, bracket=True
-    )
-    p = plan_of(df, "simple")
-    assert "TakeOrderedAndProject" not in p
-    if "Window" in p:
-        # the window's subtree must include the band filter: a literal
-        # BETWEEN on q_score below the Window operator
-        win_subtree = p[p.index("Window"):]
-        assert "Filter" in win_subtree and "q_score" in win_subtree
+    df = token_budget_select(load_table(spark, SF_DIR, "documents"), 0.6)
+    assert unpartitioned_windows(df) == []
+    assert not entrymod._has_materialized_leaf(df)
 
 
 def test_ingest_gate_broadcasts_batch_side(spark, tmp_path):

@@ -1,7 +1,6 @@
-"""token_budget_select: bracket (sketch-banded) path vs the direct
-global-prefix-sum twin vs a brute-force python computation of the
-prefix rule — including empty docs, tie-heavy scores, and degenerate
-budgets."""
+"""token_budget_select and its weighted_prefix vs a brute-force python
+computation of the prefix rule — including empty docs, tie-heavy
+scores, crowded and empty q_score buckets, and degenerate budgets."""
 
 from __future__ import annotations
 
@@ -10,8 +9,6 @@ import random
 import pytest
 
 from rag_database_spark.operators import text_analytics as ta
-
-from plan_inspect import executed_plan
 
 
 def _corpus(rng, n, empties=True):
@@ -58,21 +55,79 @@ def _scored_rows(spark, rows):
     ]
 
 
+def _selected(df, frac):
+    return {r["doc_id"] for r in ta.token_budget_select(df, frac).collect()}
+
+
 @pytest.mark.parametrize("frac", [0.0, 0.3, 0.6, 0.9, 1.0])
-def test_bracket_equals_window_twin_and_brute(spark, frac):
+def test_matches_brute(spark, frac):
     rng = random.Random(7041 + int(frac * 10))
     rows = _corpus(rng, 80)
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got_bracket = {
-        r["doc_id"]
-        for r in ta.token_budget_select(df, frac=frac, bracket=True).collect()
-    }
-    got_window = {
-        r["doc_id"]
-        for r in ta.token_budget_select(df, frac=frac, bracket=False).collect()
-    }
-    assert got_bracket == got_window
-    assert got_bracket == _brute(_scored_rows(spark, rows), frac)
+    assert _selected(df, frac) == _brute(_scored_rows(spark, rows), frac)
+
+
+def test_crossing_inside_crowded_tie_bucket(spark):
+    """30 identical documents share one q_score, so one bucket holds
+    them all; every budget below crosses inside that bucket, and the
+    selection must still be the exact doc_id prefix of the tie run."""
+    rng = random.Random(5)
+    rows = _corpus(rng, 10, empties=False) + [
+        (100 + i, "the data and the spark of quality") for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    scored = _scored_rows(spark, rows)
+    tied = {i for i, _, _ in scored if i >= 100}
+    for frac in (0.2, 0.4, 0.6):
+        want = _brute(scored, frac)
+        assert 0 < len(want & tied) < len(tied), frac  # crossing in the run
+        assert _selected(df, frac) == want, frac
+
+
+def test_empty_buckets_between_documents(spark):
+    """Scores far apart leave empty q_score buckets between documents:
+    each bucket's offset must still count every heavier bucket."""
+    rows = [
+        (0, "!!! ### $$$"),
+        (1, "the and of the data"),
+        (2, "spark"),
+        (3, "the quick brown fox jumps over the lazy dog " * 6),
+        (4, ""),
+        (5, "?? data ??"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    scored = _scored_rows(spark, rows)
+    buckets = sorted({int(q * ta.PREFIX_BUCKETS) for _, q, _ in scored})
+    assert buckets[-1] - buckets[0] >= len(buckets)  # gaps exist
+    for frac in (0.0, 0.2, 0.5, 0.8, 1.0):
+        assert _selected(df, frac) == _brute(scored, frac), frac
+
+
+def test_weighted_prefix_is_the_exact_running_sum(spark):
+    """Every row's prefix, in both orders, over a crowded tied bucket,
+    distinct scores inside one bucket, empty buckets and a NULL score
+    (which sorts first ascending and last descending)."""
+    from pyspark.sql import functions as F
+
+    eps = 1.0 / ta.PREFIX_BUCKETS
+    rows = (
+        [(i, 0.5, i % 4) for i in range(20)]
+        + [(20 + i, 0.5 + eps * (i + 1) / 12, 3) for i in range(10)]
+        + [(40, 0.0, 5), (41, 0.999, 2), (42, 1.0, 1), (43, None, 7)]
+    )
+    df = spark.createDataFrame(rows, "doc_id long, q_score double, w long")
+    total = sum(w for _, _, w in rows)
+    for descending, order in (
+        (True, lambda r: (r[1] is None, -(r[1] or 0.0), r[0])),
+        (False, lambda r: (r[1] is not None, r[1] or 0.0, r[0])),
+    ):
+        want, cum = {}, 0
+        for doc_id, _, w in sorted(rows, key=order):
+            cum += w
+            want[doc_id] = cum
+        got = ta.weighted_prefix(df, F.col("w"), descending).collect()
+        assert {r["doc_id"]: r["__prefix"] for r in got} == want
+        assert {r["__total"] for r in got} == {total}
 
 
 def test_tie_heavy_scores(spark):
@@ -80,10 +135,7 @@ def test_tie_heavy_scores(spark):
     # one giant tie block; selection must still be the doc_id prefix
     rows = [(i, "same same same text here") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted(
-        r["doc_id"]
-        for r in ta.token_budget_select(df, frac=0.5, bracket=True).collect()
-    )
+    got = sorted(_selected(df, 0.5))
     # 40 docs x 5 tokens = 200 total, budget 100 -> exactly 20 docs,
     # lowest doc_ids first (tie-break doc_id ASC)
     assert got == list(range(20))
@@ -93,32 +145,18 @@ def test_partition_invariance(spark):
     rng = random.Random(99)
     rows = _corpus(rng, 60)
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"] for r in ta.token_budget_select(df, 0.6).collect()}
-    b = {
-        r["doc_id"]
-        for r in ta.token_budget_select(df.repartition(7), 0.6).collect()
-    }
-    assert a == b
+    assert _selected(df, 0.6) == _selected(df.repartition(7), 0.6)
 
 
-def test_bracket_recenters_under_weight_skew(spark):
-    """Token mass concentrated in high-quality (long) docs displaces
-    the crossing far from the uniform-tokens doc-fraction guess; the
-    binary-search re-centering must still land the band (the plan's
-    cumulative Window stays band-scoped — a fallback to the global
-    window twin would have no q_score filter beneath it)."""
+def test_weight_skew_matches_brute(spark):
+    """Token mass concentrated in high-quality (long) docs puts the
+    crossing far from the uniform-tokens doc fraction."""
     rows = [
         (i, " ".join(f"w{j % 7}" for j in range(i % 40 + 1)))
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sel = ta.token_budget_select(df, frac=0.5, bracket=True)
-    got = {r["doc_id"] for r in sel.collect()}
-    assert got == _brute(_scored_rows(spark, rows), 0.5)
-    plan = executed_plan(sel)
-    if "Window" in plan:
-        win_subtree = plan[plan.index("Window"):]
-        assert "q_score" in win_subtree and "Filter" in win_subtree
+    assert _selected(df, 0.5) == _brute(_scored_rows(spark, rows), 0.5)
 
 
 def test_zero_token_docs_ride_free(spark):
@@ -127,8 +165,4 @@ def test_zero_token_docs_ride_free(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     scored = _scored_rows(spark, rows)
     for frac in (0.0, 0.4, 0.7, 1.0):
-        got = {
-            r["doc_id"]
-            for r in ta.token_budget_select(df, frac=frac).collect()
-        }
-        assert got == _brute(scored, frac), frac
+        assert _selected(df, frac) == _brute(scored, frac), frac

@@ -3,13 +3,18 @@ PLANS.md — the plan-hygiene audit trail (pushdown, pruning, broadcast,
 partial aggregation, codegen spans) in one reviewable file, regenerated
 per round.
 
-Usage: python tools/dump_plans.py [entry ...]   (default: HEADLINE set)
+Usage: python tools/dump_plans.py [entry ...]
+
+With no names it rewrites the file with the HEADLINE set. Named entries
+replace only their own ``## NAME`` sections (a new name is appended);
+every other section is kept as it is.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 from pathlib import Path
 
@@ -73,7 +78,7 @@ HEADLINE = (
     # encode table; the merge loop never appears in a query plan)
     "bpe_pair_stats",
     "bpe_tokens",
-    # r10: weighted token-budget selection (band-scoped window) +
+    # r10: weighted token-budget selection (bucket-partitioned prefix) +
     # dual-LM contrastive selection (two keyed model joins)
     "token_budget_select",
     "contrastive_select",
@@ -130,30 +135,35 @@ HEADLINE = (
 )
 
 
+HEADER = (
+    "# PLANS — formatted physical plans of the headline queries\n\n"
+    f"Generated by `tools/dump_plans.py` at sf0.1 (`{SF_DIR}`). What to "
+    "look for: `PushedFilters` / `ReadSchema` on scans (pushdown + "
+    "pruning), `BroadcastHashJoin` for small sides, `partial_*` "
+    "aggregates before exchanges (map-side combine), `PartitionFilters` "
+    "on the IVF probe, and few/no `Exchange`s in the chunking plan.\n\n"
+)
+
+
 def main() -> int:
     names = sys.argv[1:] or list(HEADLINE)
+    path = REPO / "PLANS.md"
+    header, sections = HEADER, {}
+    if sys.argv[1:] and path.exists():
+        header, *parts = re.split(r"^(?=## )", path.read_text(), flags=re.M)
+        sections = {p.split("\n", 1)[0][3:]: p for p in parts}
     spark = get_spark("dump_plans")
     entrymod.prepare(spark, SF_DIR)
     qs = entrymod.queries()
-    out = [
-        "# PLANS — formatted physical plans of the headline queries",
-        "",
-        f"Generated by `tools/dump_plans.py` at sf0.1 "
-        f"(`{SF_DIR}`). What to look for: `PushedFilters` / "
-        "`ReadSchema` on scans (pushdown + pruning), "
-        "`BroadcastHashJoin` for small sides, `partial_*` aggregates "
-        "before exchanges (map-side combine), `PartitionFilters` on "
-        "the IVF probe, and few/no `Exchange`s in the chunking plan.",
-        "",
-    ]
     for name in names:
         df = qs[name](spark, SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        out.append(f"## {name}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
-    (REPO / "PLANS.md").write_text("\n".join(out) + "\n")
-    print(f"wrote PLANS.md ({len(names)} plans)")
+        plan = buf.getvalue().rstrip()
+        sections[name] = f"## {name}\n\n```\n{plan}\n```\n\n"
+    path.write_text(header + "".join(sections.values()))
+    print(f"wrote PLANS.md ({len(names)} of {len(sections)} plans)")
     return 0
 
 
