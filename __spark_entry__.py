@@ -344,12 +344,12 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Persisted IVF artifact (centroids + centroid-partitioned lists),
     built once per corpus fingerprint — the k-means fit never runs in
     the query path (pinned by tests/test_plans.py). Built with the
-    DETERMINISTIC method (clustering.kmeans_fit in the quantized
+    deterministic k-means (clustering.kmeans_fit in the quantized
     frame) and a count-derived centroid count (similarity.ivf_k_for),
     so the DuckDB oracle replays the whole index CTE-for-CTE at any
-    sf. The key names the method; the derived count needs no suffix,
-    since the embeddings fingerprint and ivf_k_for's module version
-    already cover it."""
+    sf. The key names the fit's constants; the derived count needs
+    no suffix, since the embeddings fingerprint and ivf_k_for's
+    module version already cover it."""
     return _artifact(
         spark, "ivf_index",
         _artifact_key(
@@ -370,16 +370,15 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 def _ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path: IVF coarse-quantizer top-k over the PERSISTED
     index (k-means runs at build time only; the query is a partition-
-    pruned probe of n_probe centroid lists). Det build + quantized
-    probe make every step exactly replayable in SQL
+    pruned probe of n_probe centroid lists). The deterministic build
+    and the quantized probe make every step exactly replayable in SQL
     (oracles.ann_ivf_topk_sql) — hash-certified since r13; recall vs
     brute force additionally pinned in tests/test_similarity."""
     emb = load_table(spark, sf_dir, "embeddings")
     qvecs = similarity.query_vectors(workload.queries_df(spark), emb)
     centroids, lists = _ivf_index(spark, sf_dir)
     return similarity.ivf_topk_indexed(
-        qvecs, centroids, lists, workload.HYBRID_LIMIT,
-        probe="quantized",
+        qvecs, centroids, lists, workload.HYBRID_LIMIT
     ).select(
         "query_id",
         "id",
@@ -2608,8 +2607,8 @@ def _kmeans_artifact(
 
     def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        # impl='auto': the codegen'd literal-fold assignment (the
-        # oracle-exact path) up to KMEANS_EXPR_MAX_K, the Arrow-batch
+        # the codegen'd literal-fold assignment (the oracle-exact
+        # path) up to KMEANS_EXPR_MAX_K, the Arrow-batch
         # GEMM beyond it. At driver-correctness scale (sf0.01, 500
         # rows) the derived k is KMEANS_K=8 → fold path → bit-exact vs
         # the unrolled CTEs; at bench/probe scales the GEMM path is

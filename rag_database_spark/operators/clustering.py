@@ -8,9 +8,8 @@ both are table stakes for a 100 TB training-data pipeline:
   embedding column, made **cross-engine reproducible** so a SQL oracle
   can replay it bit-for-bit (see Determinism below). This is the
   corpus-structuring primitive (topic buckets, stratification keys,
-  SemDeDup's partitioner), distinct from the MLlib KMeans used to fit
-  the IVF index (similarity.py:462 — right tool when k is large and
-  reproducibility across engines is not required).
+  SemDeDup's partitioner) and the fit behind the IVF index
+  (``similarity._ivf_fit``) and the PQ codebooks (``pq.pq_fit``).
 - ``semdedup``: cluster-scoped semantic dedup (Abbas et al. 2023,
   "SemDeDup: Data-efficient learning at web-scale through semantic
   deduplication"): pairwise cosine is computed ONLY within a cluster,
@@ -32,10 +31,10 @@ Determinism (why the oracle can match exactly):
 - Init is the k lowest-id vectors; iteration count is fixed (no
   convergence test); an emptied cluster keeps its previous centroid.
 
-Scale story: centroid state is k×dim doubles on the driver (bounded —
-this operator targets small/medium k; large-k regimes go through the
-MLlib/IVF path). Each iteration is one map over the corpus (assignment
-is a codegen'd fold, no Python) plus one k×dim-wide partial-aggregated
+Scale story: centroid state is k×dim doubles on the driver. Each
+iteration is one map over the corpus (assignment is a codegen'd fold
+up to KMEANS_EXPR_MAX_K, one numpy GEMM per Arrow batch above it)
+plus one k×dim-wide partial-aggregated
 groupBy — cost kn·d per round, the textbook Lloyd's bound, with only
 k·dim·partitions rows ever shuffled. ``semdedup`` shuffles once on
 cluster_id and joins within clusters only.
@@ -129,19 +128,15 @@ def kmeans_fit(
     iters: int = KMEANS_ITERS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic Lloyd's: returns (assignments(id, cluster_id),
     final centroids in the quantized frame). ``iters`` centroid
     updates, then one final assignment under the settled centroids.
 
-    ``impl``: 'expr' = codegen'd literal folds (cross-engine
-    bit-exact, right for oracle-checked small k), 'gemm' = Arrow-batch
-    numpy GEMM (right for SemDeDup-scale k), 'auto' = expr up to
-    KMEANS_EXPR_MAX_K."""
-    if impl not in ("auto", "expr", "gemm"):
-        raise ValueError(f"kmeans_fit: unknown impl {impl!r}")
-    use_expr = impl == "expr" or (impl == "auto" and k <= KMEANS_EXPR_MAX_K)
+    Up to KMEANS_EXPR_MAX_K the assignment is codegen'd literal folds
+    (cross-engine bit-exact, right for oracle-checked small k); above
+    it, an Arrow-batch numpy GEMM (right for SemDeDup-scale k)."""
+    use_expr = k <= KMEANS_EXPR_MAX_K
 
     def assign(frame: DataFrame, cents: list[list[float]]) -> DataFrame:
         if use_expr:
@@ -209,8 +204,9 @@ def semdedup(
     Scale: ONE shuffle on cluster_id; the pair join never leaves a
     cluster, so the quadratic term is Σ|cluster|² — choose k so the
     expected cluster size is bounded (SemDeDup's own contract; the
-    paper runs k in the tens of thousands at web scale, which is the
-    MLlib-KMeans + ``similarity.assign_centroids`` regime)."""
+    paper runs k in the tens of thousands at web scale, where
+    ``kmeans_fit`` assigns by Arrow-batch GEMM above
+    KMEANS_EXPR_MAX_K)."""
     from rag_database_spark.functions.vector import dot, l2_norm
 
     # per-row norm in the projection (r17): the per-pair cosine

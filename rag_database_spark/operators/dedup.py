@@ -8,8 +8,8 @@
 - MinHash signatures (``minhash_signatures``).
 - SimHash fingerprints (``simhash``) with Hamming-distance pairing.
 - random-hyperplane LSH bucketing for embedding-space near-dups
-  (``rp_blocks`` / ``embedding_near_dupes_lsh``) — the block producer
-  the brute-force ``similarity.embedding_near_dupes`` lacks.
+  (``rp_blocks`` / ``embedding_near_dupes_lsh``) — the path
+  ``similarity.embedding_near_dupes`` routes to above its GEMM budgets.
 
 All hashes derive from md5 (seed-prefixed), so the DuckDB oracle can
 reproduce signatures bit-for-bit: Spark ``conv(substr(md5(x),1,15),16,10)``
@@ -117,15 +117,12 @@ def shingle_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = SHINGLE_K,
-    max_df: int | None = None,
-    prefix_filter: bool | str = "auto",
     shingle_index: DataFrame | None = None,
-    direct_pair_budget: int = DIRECT_PAIR_BUDGET,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs over distinct k-token shingles.
 
     Plan: candidate pairs from an inverted-index self-join, then exact
-    Jaccard via |A|+|B|−∩. With ``prefix_filter``, candidate generation
+    Jaccard via |A|+|B|−∩. With the prefix filter, candidate generation
     indexes only each document's PREFIX under a global rarest-first
     shingle order — the PPJoin/AllPairs bound: a pair with Jaccard ≥ t
     must share a shingle among the first ⌊(1−t)·|A|⌋+1 of A's ordered
@@ -138,19 +135,15 @@ def shingle_jaccard_pairs(
     it avoids (measured 31s vs 26s at sf0.1); on realistic text — large
     vocabulary, heavy-tailed shingle dfs where Σdf² explodes — the
     prefix join touches only rare shingles and scales superlinearly
-    better. The default ``prefix_filter='auto'`` therefore measures:
-    it computes the direct join's exact candidate-row count
-    Σ df·(df−1)/2 with one cheap aggregation and flips the prefix
-    filter on only above ``direct_pair_budget``, so the Σdf² join
-    cannot detonate on a heavy-tailed corpus while the synthetic corpus
-    keeps the faster direct plan. Both paths are exact — auto-switching
-    never changes results, only the plan.
+    better. The operator therefore measures: it computes the direct
+    join's exact candidate-row count Σ df·(df−1)/2 with one cheap
+    aggregation and turns the prefix filter on only above
+    ``DIRECT_PAIR_BUDGET``, so the Σdf² join cannot detonate on a
+    heavy-tailed corpus while the synthetic corpus keeps the faster
+    direct plan. Both paths are exact — the switch never changes
+    results, only the plan.
 
-    ``max_df`` optionally drops shingles appearing in more than that
-    many docs before candidate generation (a documented approximation —
-    a pair sharing ONLY dropped shingles is missed; it stays an
-    explicit opt-in precisely because it changes results). Pass a
-    persisted ``shingle_index`` (``write_shingle_index``) to avoid
+    Pass a persisted ``shingle_index`` (``write_shingle_index``) to avoid
     re-deriving shingles for each side of the self-join."""
     if shingle_index is not None:
         ex = shingle_index
@@ -159,18 +152,7 @@ def shingle_jaccard_pairs(
         sh = _doc_shingles(docs, id_col, text_col, k)
         sizes = sh.select("doc_id", F.size("sh").alias("n"))
         ex = sh.select("doc_id", F.explode("sh").alias("s"))
-    if max_df is not None:
-        keep = (
-            ex.groupBy("s").agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("s")
-        )
-        ex = ex.join(keep, "s")
-
-    if prefix_filter == "auto":
-        prefix_filter = _estimate_direct_pairs(ex) > direct_pair_budget
-
-    if prefix_filter:
+    if _estimate_direct_pairs(ex) > DIRECT_PAIR_BUDGET:
         dfreq = ex.groupBy("s").agg(F.count("*").alias("df"))
         ordered = ex.join(dfreq, "s").withColumn(
             "pos",
@@ -890,10 +872,54 @@ def fuzzy_decontam(
     )
 
 
+def _jaccard_vs_index(
+    batch_docs: DataFrame,
+    shingle_index: DataFrame,
+    k: int,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """(new_id, doc_id, jaccard) for every (incoming doc, indexed doc)
+    pair that shares a shingle, jaccard rounded to 6dp — the probe
+    behind both index gates. The incoming batch is tiny next to the
+    corpus, so its exploded shingles are BROADCAST and the index never
+    shuffles for candidate generation (exact: any pair with
+    Jaccard > 0 shares a shingle). Corpus-side set sizes come from one
+    partial-aggregated pass over the index.
+
+    The batch side is one pass (r18, same shape as fuzzy_decontam): its
+    set SIZE rides the exploded shingle stream as a per-row column
+    instead of a second projection over the shingle subtree. n_b is
+    functionally determined by new_id, so grouping on (new_id, n_b,
+    doc_id) yields the per-pair intersection with no size join."""
+    b_ex = _doc_shingles(batch_docs, id_col, text_col, k).select(
+        F.col("doc_id").alias("new_id"),
+        F.size("sh").alias("n_b"),
+        F.explode("sh").alias("s"),
+    )
+    index_sizes = shingle_index.groupBy("doc_id").agg(
+        F.count("*").alias("n_a")
+    )
+    return (
+        shingle_index.join(F.broadcast(b_ex), "s")
+        .groupBy("new_id", "n_b", "doc_id")
+        .agg(F.count("*").alias("inter"))
+        .join(index_sizes, "doc_id")
+        .select(
+            "new_id",
+            "doc_id",
+            F.round(
+                F.col("inter")
+                / (F.col("n_a") + F.col("n_b") - F.col("inter")),
+                6,
+            ).alias("jaccard"),
+        )
+    )
+
+
 def best_jaccard_vs_index(
     batch_docs: DataFrame,
     shingle_index: DataFrame,
-    index_sizes: DataFrame | None = None,
     k: int = SHINGLE_K,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -902,54 +928,14 @@ def best_jaccard_vs_index(
     shingle-Jaccard match in the existing corpus (represented by its
     persisted ``(doc_id, s)`` shingle index) — an ingest pipeline calls
     this per batch to quarantine near-duplicates of already-accepted
-    documents before they enter the corpus.
-
-    Scale design: the incoming batch is tiny next to the corpus, so
-    its exploded shingles/sizes are BROADCAST — the index never
-    shuffles for candidate generation (exact: any pair with
-    Jaccard > 0 shares a shingle). Corpus-side set sizes come from
-    ``index_sizes`` (a (doc_id, n_a) table the gate maintains
-    alongside the index); when None they are derived by one
-    partial-aggregated pass over the index. The argmax is the same
-    struct-max rollup as ``fuzzy_decontam``, keyed on the batch id.
+    documents before they enter the corpus. Candidates come from
+    ``_jaccard_vs_index``; the argmax is the same struct-max rollup as
+    ``fuzzy_decontam``, keyed on the batch id.
 
     Output: one row per incoming document —
     (doc_id, match_id | NULL, best_jaccard).
     """
-    # single-pass batch side (r18, same shape as fuzzy_decontam): the
-    # batch's set SIZE rides the exploded shingle stream as a per-row
-    # column instead of a second projection over the shingle subtree —
-    # the r17 shape evaluated the tokenize+shingle-hash projection
-    # twice per batch (or checkpointed it). n_b is functionally
-    # determined by new_id, so grouping on (new_id, n_b) pairs yields
-    # the identical result with one batch pass and no size join; the
-    # plan stays pure-lazy.
-    b_sh = _doc_shingles(batch_docs, id_col, text_col, k)
-    b_ex = b_sh.select(
-        F.col("doc_id").alias("new_id"),
-        F.size("sh").alias("n_b"),
-        F.explode("sh").alias("s"),
-    )
-    if index_sizes is None:
-        index_sizes = shingle_index.groupBy("doc_id").agg(
-            F.count("*").alias("n_a")
-        )
-    inter = (
-        shingle_index.join(F.broadcast(b_ex), "s")
-        .groupBy("new_id", "n_b", "doc_id")
-        .agg(F.count("*").alias("inter"))
-    )
-    jac = (
-        inter.join(index_sizes, "doc_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-                6,
-            ),
-        )
-    )
+    jac = _jaccard_vs_index(batch_docs, shingle_index, k, id_col, text_col)
     best = jac.groupBy("new_id").agg(
         F.max(
             F.struct(
@@ -982,36 +968,15 @@ def pairs_vs_index(
 ) -> DataFrame:
     """ALL cross pairs (existing-corpus doc, incoming doc) with
     Jaccard ≥ threshold — the set form of ``best_jaccard_vs_index``'s
-    argmax. Same scale shape: the batch's exploded shingles broadcast,
-    the corpus index never shuffles. Output matches the pair-set
-    schema (id_a < id_b orientation, 6dp jaccard) so it appends
-    directly onto the persisted pair index."""
-    b_sh = _doc_shingles(batch_docs, id_col, text_col, k)
-    b_ex = b_sh.select(
-        F.col("doc_id").alias("new_id"), F.explode("sh").alias("s")
-    )
-    b_sz = b_sh.select(
-        F.col("doc_id").alias("new_id"), F.size("sh").alias("n_b")
-    )
-    index_sizes = shingle_index.groupBy("doc_id").agg(
-        F.count("*").alias("n_a")
-    )
-    inter = (
-        shingle_index.join(F.broadcast(b_ex), "s")
-        .groupBy("new_id", "doc_id")
-        .agg(F.count("*").alias("inter"))
-    )
+    argmax, over the same ``_jaccard_vs_index`` probe. Output matches
+    the pair-set schema (id_a < id_b orientation, 6dp jaccard) so it
+    appends directly onto the persisted pair index."""
     return (
-        inter.join(index_sizes, "doc_id")
-        .join(F.broadcast(b_sz), "new_id")
+        _jaccard_vs_index(batch_docs, shingle_index, k, id_col, text_col)
         .select(
             F.least("doc_id", "new_id").alias("id_a"),
             F.greatest("doc_id", "new_id").alias("id_b"),
-            F.round(
-                F.col("inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-                6,
-            ).alias("jaccard"),
+            "jaccard",
         )
         .filter(F.col("jaccard") >= threshold)
     )

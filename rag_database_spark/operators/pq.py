@@ -84,10 +84,10 @@ def pq_fit(
     argmin ran in), codes are int cids.
 
     Each subspace is one deterministic ``kmeans_fit`` over the slice
-    (impl='expr': K is a small format constant, the fold path is
-    always right); the final codes table is an M-way join on id —
-    build-time only, M is tiny, every leg is the same corpus scan
-    Catalyst collapses into one shuffle per leg."""
+    (with K ≤ KMEANS_EXPR_MAX_K it runs the fold path); the final
+    codes table is an M-way join on id — build-time only, M is tiny,
+    every leg is the same corpus scan Catalyst collapses into one
+    shuffle per leg."""
     spark = corpus.sparkSession
     base = corpus.select(
         F.col(id_col).alias("id"),
@@ -101,8 +101,7 @@ def pq_fit(
             F.slice(F.col("v"), start, sub).alias("subvec"),
         )
         assign, cents = kmeans_fit(
-            sub_df, k=k, iters=iters, id_col="vec_id", vec_col="subvec",
-            impl="expr",
+            sub_df, k=k, iters=iters, id_col="vec_id", vec_col="subvec"
         )
         cb_rows.extend((j, cid, c) for cid, c in enumerate(cents))
         code_frames.append(

@@ -12,12 +12,9 @@ Physical strategy (scale story):
   partitions — no shuffle until the per-query top-k rollup, which is
   bounded by |queries| × |corpus_partition| candidates after the
   partial top-k below.
-- default path (`cosine_topk_blocked`): one numpy GEMM (Q @ V.T) per
-  Arrow batch via mapInPandas with a map-side partial top-k, so the
-  shuffle carries O(k × batches) rows per query — never the corpus.
-- JVM path (`impl='jvm'`): zip_with/aggregate column exprs inside
-  codegen; right for tiny corpora where the Python worker round-trip
-  costs more than the one window exchange it avoids.
+- ``cosine_topk``: one numpy GEMM (Q @ V.T) per Arrow batch via
+  mapInPandas with a map-side partial top-k, so the shuffle carries
+  O(k × batches) rows per query — never the corpus.
 """
 
 from __future__ import annotations
@@ -68,78 +65,6 @@ def _ranked(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-    id_col: str = "id",
-    vec_col: str = "vec",
-    assume_normalized: bool = False,
-    impl: str = "gemm",
-    round_dp: int | None = None,
-) -> DataFrame:
-    """Exact top-k cosine per query → (query_id, id, score, rank).
-
-    Default ``impl='gemm'`` is the scale path: map-side numpy GEMM with a
-    per-batch partial top-k, so only O(k × batches) rows per query ever
-    shuffle (``cosine_topk_blocked``). ``impl='jvm'`` keeps scoring inside
-    whole-stage codegen — right for tiny corpora where a Python worker
-    round-trip costs more than the single window exchange it saves.
-
-    ``assume_normalized=True`` skips norm division (the reference
-    normalizes embeddings at encode time, dense_embedder.py:59-65, so
-    cosine reduces to dot).
-
-    ``round_dp`` quantizes scores to that many decimals BEFORE ranking
-    (and in the returned ``score``) so boundary ordering is
-    engine-independent — used by prefetch stages whose candidate SET is
-    compared across engines (see ``PREFETCH_ROUND_DP``).
-    """
-    if impl == "gemm":
-        return cosine_topk_blocked(
-            queries,
-            corpus,
-            k,
-            query_id_col,
-            query_vec_col,
-            id_col,
-            vec_col,
-            round_dp=round_dp,
-        )
-    # per-row norms in the projections (r18, r17 VERDICT item 6): the
-    # inline cosine() re-folded BOTH norms per (query, doc) pair — 3
-    # interpreted O(d) aggregates per pair → 1 dot per pair plus one
-    # norm per row. Same sub-expressions, same multiply order
-    # (‖q‖·‖c‖), same zero-denominator guard — bit-identical to
-    # cosine(qvec, vec).
-    from rag_database_spark.functions.vector import l2_norm
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        to_double_array(F.col(query_vec_col)).alias("qvec"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("id"), to_double_array(F.col(vec_col)).alias("vec")
-    )
-    if assume_normalized:
-        sim = dot(F.col("qvec"), F.col("vec"))
-    else:
-        q = q.withColumn("__qn", l2_norm(F.col("qvec")))
-        c = c.withColumn("__cn", l2_norm(F.col("vec")))
-        denom = F.col("__qn") * F.col("__cn")
-        sim = F.when(
-            denom > 0, dot(F.col("qvec"), F.col("vec")) / denom
-        ).otherwise(F.lit(0.0))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
-    scored = c.join(F.broadcast(q)).select(
-        "query_id", "id", sim.alias("score")
-    )
-    return _ranked(scored, k)
-
-
 def _partial_topk(Qn, ids, vecs, k: int, round_dp: int | None):
     """One Arrow batch's GEMM partial top-k: normalize the batch rows
     ``vecs``, score ``S = Qn @ Vn.T`` (``Qn``: normalized queries),
@@ -161,7 +86,7 @@ def _partial_topk(Qn, ids, vecs, k: int, round_dp: int | None):
     return qi, rows, S[qi, rows]
 
 
-def cosine_topk_blocked(
+def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
@@ -171,13 +96,21 @@ def cosine_topk_blocked(
     vec_col: str = "vec",
     round_dp: int | None = None,
 ) -> DataFrame:
-    """Arrow/numpy GEMM form of ``cosine_topk`` — one ``Q @ V.T`` per
-    Arrow batch (SURVEY §2 J11 "blocked numpy matmul" scale path). Exact:
-    the per-batch partial top-k keeps the best k by the same
-    (score DESC, id ASC) order the global window uses, so score ties at
-    the k boundary resolve identically to the unblocked computation.
-    ``round_dp`` quantizes scores before the partial AND global top-k
-    (same contract as ``cosine_topk``)."""
+    """Exact top-k cosine per query → (query_id, id, score, rank).
+
+    One ``Q @ V.T`` per Arrow batch (SURVEY §2 J11 "blocked numpy
+    matmul" scale path) with a per-batch partial top-k, so only
+    O(k × batches) rows per query ever shuffle. Exact: the partial
+    top-k keeps the best k by the same (score DESC, id ASC) order the
+    global window uses, so score ties at the k boundary resolve
+    identically to the unblocked computation.
+
+    ``round_dp`` quantizes scores to that many decimals BEFORE the
+    partial AND global top-k (and in the returned ``score``) so
+    boundary ordering is engine-independent — used by prefetch stages
+    whose candidate SET is compared across engines (see
+    ``PREFETCH_ROUND_DP``).
+    """
     import numpy as np
 
     spark = queries.sparkSession
@@ -219,8 +152,9 @@ def cosine_topk_blocked(
 
 # ceiling on rows × dim for the broadcast-GEMM exact path: 5e7 float64
 # cells ≈ 400 MB on the driver + each executor — comfortably inside one
-# 4 GB executor, far below a 100 TB corpus. Above it, auto mode routes
-# to the LSH candidate join, which never materializes the matrix.
+# 4 GB executor, far below a 100 TB corpus. Above it,
+# embedding_near_dupes routes to the LSH candidate join, which never
+# materializes the matrix.
 GEMM_MAX_CELLS = 50_000_000
 
 # ceiling on N²·d multiply-adds for the exact path. The broadcast
@@ -228,8 +162,9 @@ GEMM_MAX_CELLS = 50_000_000
 # easily (1.3M cells) but the GEMM still performs 2.6e10 flops — the
 # r7 distinct-doc probe measured exponent 1.66 there because exact
 # all-pairs COMPUTE is inherently quadratic even when output and
-# memory are linear. Above this budget auto routes to LSH, whose
-# candidate join scales with true-pair density instead of N².
+# memory are linear. Above this budget embedding_near_dupes routes to
+# LSH, whose candidate join scales with true-pair density instead of
+# N².
 #
 # MEASURED, not guessed (r13, tools/gemm_crossover.py →
 # SCALING.json "gemm_crossover"): on this box (local[32]) the exact
@@ -247,78 +182,38 @@ def embedding_near_dupes(
     threshold: float,
     id_col: str = "id",
     vec_col: str = "vec",
-    block_col: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine ≥ threshold — embedding-space
     near-duplicate detection (training-data pipeline extension).
 
-    Exact is inherently O(N²) in comparisons; ``impl='gemm'`` does them
-    as one numpy GEMM per Arrow batch against a broadcast normalized
-    matrix (~25× the per-pair JVM expression path). The broadcast bounds
-    this exact path to corpora whose matrix fits an executor (~10⁷×d);
-    the default ``impl='auto'`` routes to
-    ``dedup.embedding_near_dupes_lsh`` when either budget is exceeded —
-    rows×dim over ``GEMM_MAX_CELLS`` (broadcast memory) or N²·d over
-    ``GEMM_MAX_COMPARE`` (quadratic compute) —
-    candidate pairs from random-hyperplane buckets, exact cosine
-    verification — so the default plan never driver-collects an
-    unbounded corpus. Pass ``impl='gemm'`` to force the exact path.
-    ``block_col`` (e.g. a cluster label or LSH bucket) instead turns
-    the self-join into a per-block JVM join."""
-    if block_col is None and impl in ("auto", "gemm"):
-        if impl == "auto":
-            # one routing job: row count and vector dimension together
-            # (an empty corpus gives a null dimension → 0)
-            probe = corpus.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(F.size(to_double_array(F.col(vec_col)))).alias("d"),
-            ).first()
-            n, dim = int(probe["n"]), int(probe["d"] or 0)
-            if dim and (
-                n * dim > GEMM_MAX_CELLS
-                or n * n * dim > GEMM_MAX_COMPARE
-            ):
-                from rag_database_spark.operators.dedup import (
-                    adaptive_n_planes,
-                    embedding_near_dupes_lsh,
-                )
-
-                return embedding_near_dupes_lsh(
-                    corpus, threshold, dim,
-                    n_planes=adaptive_n_planes(n),
-                    id_col=id_col, vec_col=vec_col,
-                )
-        return _near_dupes_gemm(corpus, threshold, id_col, vec_col)
-    # per-row norms computed pre-join (r17): each row appears in many
-    # pairs, and the per-pair cosine re-folded both norms per pair.
-    # Same subtree, same multiply order — cos_sim is bit-identical.
-    from rag_database_spark.functions.vector import dot, l2_norm
-
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        to_double_array(F.col(vec_col)).alias("vec_a"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
-    ).withColumn("n_a", l2_norm(F.col("vec_a")))
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        to_double_array(F.col(vec_col)).alias("vec_b"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
-    ).withColumn("n_b", l2_norm(F.col("vec_b")))
-    join_cond = F.col("id_a") < F.col("id_b")
-    pairs = a.join(b, on=(["blk"] if block_col else []) or None, how="inner") if block_col else a.crossJoin(b)
-    denom = F.col("n_a") * F.col("n_b")
-    return (
-        pairs.filter(join_cond)
-        .select(
-            "id_a",
-            "id_b",
-            F.when(
-                denom > 0, dot(F.col("vec_a"), F.col("vec_b")) / denom
-            ).otherwise(F.lit(0.0)).alias("cos_sim"),
+    Exact is inherently O(N²) in comparisons; ``_near_dupes_gemm`` does
+    them as one numpy GEMM per Arrow batch against a broadcast
+    normalized matrix. The broadcast bounds that exact path to corpora
+    whose matrix fits an executor (~10⁷×d), so a corpus over either
+    budget — rows×dim over ``GEMM_MAX_CELLS`` (broadcast memory) or
+    N²·d over ``GEMM_MAX_COMPARE`` (quadratic compute) — routes to
+    ``dedup.embedding_near_dupes_lsh``: candidate pairs from
+    random-hyperplane buckets, exact cosine verification. The plan
+    therefore never driver-collects an unbounded corpus."""
+    # one routing job: row count and vector dimension together (an
+    # empty corpus gives a null dimension → 0)
+    probe = corpus.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.size(to_double_array(F.col(vec_col)))).alias("d"),
+    ).first()
+    n, dim = int(probe["n"]), int(probe["d"] or 0)
+    if dim and (n * dim > GEMM_MAX_CELLS or n * n * dim > GEMM_MAX_COMPARE):
+        from rag_database_spark.operators.dedup import (
+            adaptive_n_planes,
+            embedding_near_dupes_lsh,
         )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+
+        return embedding_near_dupes_lsh(
+            corpus, threshold, dim,
+            n_planes=adaptive_n_planes(n),
+            id_col=id_col, vec_col=vec_col,
+        )
+    return _near_dupes_gemm(corpus, threshold, id_col, vec_col)
 
 
 def avg_pool_patches(patches: Column) -> Column:
@@ -408,7 +303,7 @@ def maxsim_scores_pruned(
 
     Both stages run in ONE ``mapInPandas`` over (page id, pooled vector,
     patches): per Arrow batch, the pooled-cosine GEMM and its partial
-    top-``fetch_k`` (``_partial_topk``, the ``cosine_topk_blocked``
+    top-``fetch_k`` (``_partial_topk``, the ``cosine_topk``
     kernel), then MaxSim for those rows only; the global window keeps
     the ``fetch_k`` best prefetch scores per query and returns their
     MaxSim score. The page table is scanned once. The trade: every
@@ -517,10 +412,8 @@ def ivf_k_for(n: int, target: int = IVF_TARGET_LIST) -> int:
 def _ivf_fit(
     corpus: DataFrame,
     n_centroids: int,
-    seed: int,
     id_col: str,
     vec_col: str,
-    method: str = "det",
 ) -> tuple[DataFrame, DataFrame]:
     """IVF index BUILD — k-means over the corpus, every vector assigned
     to its nearest centroid. Returns (centroids(centroid_id, cvec,
@@ -528,59 +421,28 @@ def _ivf_fit(
     multi-pass clustering lives ONLY here — the query path consumes
     the returned/persisted tables.
 
-    ``method='det'`` (default): deterministic Lloyd's over the
-    QUANTIZED integer frame (``clustering.kmeans_fit`` — the exact
-    cross-engine machinery behind embed_kmeans), centroids stored in
-    that frame with ``frame_scale = KMEANS_SCALE``. This is the build
-    the DuckDB oracle can replay CTE-for-CTE, upgrading ann_ivf_topk
-    from a rows-only check to full hash certification.
-    ``method='mllib'``: seeded MLlib k-means on raw vectors
-    (``frame_scale = 1``) — kept for float-native builds; its
-    centroids are NOT cross-engine replayable."""
-    spark = corpus.sparkSession
-    if method == "det":
-        from rag_database_spark.operators import clustering
+    Deterministic Lloyd's over the QUANTIZED integer frame
+    (``clustering.kmeans_fit`` — the exact cross-engine machinery
+    behind embed_kmeans), centroids stored in that frame with
+    ``frame_scale = KMEANS_SCALE``. The DuckDB oracle replays this
+    build CTE-for-CTE, so ann_ivf_topk is fully hash-certified."""
+    from rag_database_spark.operators import clustering
 
-        assign, cents = clustering.kmeans_fit(
-            corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
-        )
-        centroids = local_frame(
-            spark,
-            [(i, c, clustering.KMEANS_SCALE) for i, c in enumerate(cents)],
-            "centroid_id int, cvec array<double>, frame_scale int",
-        )
-        lists = (
-            corpus.select(
-                F.col(id_col).alias("id"),
-                to_double_array(F.col(vec_col)).alias("vec"),
-            )
-            .join(assign, "id")
-            .select(F.col("cluster_id").alias("centroid_id"), "id", "vec")
-        )
-        return centroids, lists
-    if method != "mllib":
-        raise ValueError(f"_ivf_fit: unknown method {method!r}")
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(
-        F.col(id_col).alias("id"),
-        to_double_array(F.col(vec_col)).alias("vec"),
-    )
-    ml_df = c.withColumn("features", array_to_vector("vec"))
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(
-        ml_df
+    assign, cents = clustering.kmeans_fit(
+        corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
     )
     centroids = local_frame(
-        spark,
-        [
-            (i, [float(x) for x in ctr], 1)
-            for i, ctr in enumerate(model.clusterCenters())
-        ],
+        corpus.sparkSession,
+        [(i, c, clustering.KMEANS_SCALE) for i, c in enumerate(cents)],
         "centroid_id int, cvec array<double>, frame_scale int",
     )
-    lists = model.transform(ml_df).select(
-        F.col("prediction").alias("centroid_id"), "id", "vec"
+    lists = (
+        corpus.select(
+            F.col(id_col).alias("id"),
+            to_double_array(F.col(vec_col)).alias("vec"),
+        )
+        .join(assign, "id")
+        .select(F.col("cluster_id").alias("centroid_id"), "id", "vec")
     )
     return centroids, lists
 
@@ -589,10 +451,8 @@ def write_ivf_index(
     corpus: DataFrame,
     path: str,
     n_centroids: int | None = None,
-    seed: int = 42,
     id_col: str = "id",
     vec_col: str = "vec",
-    method: str = "det",
 ) -> None:
     """Persist the IVF artifact like ``bm25.write_index`` persists
     postings (reference analog: Qdrant's persisted HNSW collections,
@@ -620,9 +480,7 @@ def write_ivf_index(
             spark, [], "centroid_id int, id long, vec array<double>"
         ).write.mode("overwrite").parquet(f"{path}/lists")
         return
-    centroids, lists = _ivf_fit(
-        corpus, n_centroids, seed, id_col, vec_col, method
-    )
+    centroids, lists = _ivf_fit(corpus, n_centroids, id_col, vec_col)
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
     (
         lists.write.mode("overwrite")
@@ -645,10 +503,10 @@ def assign_centroids(
     id_col: str = "id",
     vec_col: str = "vec",
 ) -> DataFrame:
-    """Nearest-centroid assignment under FROZEN centroids — the same
-    Euclidean argmin (ties → lowest centroid_id) MLlib's KMeans
-    transform applies at fit time, so appended rows land in exactly
-    the list a rebuild-with-these-centroids would put them. Centroids
+    """Nearest-centroid assignment under FROZEN centroids — the
+    Euclidean argmin (ties → lowest centroid_id) of a k-means
+    assignment step, so appended rows land in the list a
+    rebuild-with-these-centroids would put them. Centroids
     broadcast (tiny by construction); one numpy distance GEMM per
     Arrow batch; the vectors never shuffle."""
     import numpy as np
@@ -704,48 +562,33 @@ def append_ivf_index(
     trade-off (centroids drift from the true means as the corpus
     grows) is the standard serving-index compromise, fixed by a
     periodic offline ``write_ivf_index`` rebuild."""
+    from rag_database_spark.operators.clustering import (
+        quantize_embeddings_int,
+    )
+
     spark = new_vectors.sparkSession
     centroids = spark.read.parquet(f"{path}/centroids")
-    scale = _ivf_frame_scale(centroids)
     nv = new_vectors.select(
         F.col(id_col).alias("id"),
         to_double_array(F.col(vec_col)).alias("vec"),
     )
-    if scale != 1:
-        # det-built index: centroids live in the quantized frame, so
-        # the incoming vectors are quantized for the assignment GEMM
-        # (argmin matches the build up to float-noise near quantized
-        # cluster boundaries) while the stored list row keeps the RAW
-        # vector for the cosine rescore.
-        assigned = assign_centroids(
-            nv.withColumn(
-                "qx",
-                F.transform(
-                    F.col("vec"), lambda v: F.round(v * F.lit(float(scale)), 0)
-                ),
-            ),
-            centroids,
-            id_col="id",
-            vec_col="qx",
-        ).select("centroid_id", "id")
-        out = assigned.join(nv, "id").select("centroid_id", "id", "vec")
-    else:
-        out = assign_centroids(nv, centroids, id_col="id", vec_col="vec")
+    # the centroids live in the quantized frame, so the incoming
+    # vectors are quantized for the assignment GEMM (argmin matches the
+    # build up to float-noise near quantized cluster boundaries) while
+    # the stored list row keeps the RAW vector for the cosine rescore
+    assigned = assign_centroids(
+        nv.withColumn("qx", quantize_embeddings_int(F.col("vec"))),
+        centroids,
+        id_col="id",
+        vec_col="qx",
+    ).select("centroid_id", "id")
     (
-        out.write.mode("append")
+        assigned.join(nv, "id")
+        .select("centroid_id", "id", "vec")
+        .write.mode("append")
         .partitionBy("centroid_id")
         .parquet(f"{path}/lists")
     )
-
-
-def _ivf_frame_scale(centroids: DataFrame) -> int:
-    """The frame the centroids live in: ``frame_scale`` when the
-    artifact carries it (det builds = KMEANS_SCALE, mllib = 1), else 1
-    for pre-frame_scale artifacts."""
-    if "frame_scale" not in centroids.columns:
-        return 1
-    row = centroids.select("frame_scale").first()
-    return 1 if row is None else int(row["frame_scale"])
 
 
 def _ivf_probe_quantized(
@@ -801,59 +644,29 @@ def ivf_topk_indexed(
     n_probe: int = 4,
     query_id_col: str = "query_id",
     query_vec_col: str = "qvec",
-    probe: str = "cosine",
 ) -> DataFrame:
     """IVF QUERY path over a built index — no clustering, no corpus
     pass:
 
     1. The centroid table (tiny: n_centroids rows) is collected and the
-       ``n_probe`` nearest centroids per query chosen.
+       ``n_probe`` nearest centroids per query chosen: squared
+       Euclidean distance in the QUANTIZED frame via the same literal
+       fold the build assigned with (``_ivf_probe_quantized``, ties →
+       lowest centroid_id) — the metric the DuckDB twin replays
+       term-for-term, so the probe is exactly hash-certifiable.
     2. The probed centroid ids become a static ``isin`` filter on the
        lists scan — with ``write_ivf_index``'s partitionBy layout that
        is partition pruning (only probed directories are read; pinned
        by plan test).
     3. Exact cosine over the ≤ queries × probe-list candidates, ranked.
 
-    ``probe='cosine'``: normalized-dot probe driver-side in numpy —
-    the float-native serving path. ``probe='quantized'``: squared
-    Euclidean distance in the QUANTIZED frame via the same literal
-    fold the det build assigned with (``clustering._sq_dist_to``,
-    ties → lowest centroid_id) — the metric the DuckDB twin replays
-    term-for-term, so a det-built index + quantized probe is exactly
-    hash-certifiable. Requires a det-built (frame_scale > 1) index.
-
     Approximate exactly as the reference's ANN leg is: a true neighbor
     assigned to an unprobed centroid is missed; recall vs brute force
     is governed by n_probe (unit-pinned)."""
-    import numpy as np
-
     spark = queries.sparkSession
-    if probe == "quantized":
-        probes = _ivf_probe_quantized(
-            queries, centroids, n_probe, query_id_col, query_vec_col
-        )
-    elif probe != "cosine":
-        raise ValueError(f"ivf_topk_indexed: unknown probe {probe!r}")
-    else:
-        q_rows = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            to_double_array(F.col(query_vec_col)).alias("qvec"),
-        ).collect()
-        if not q_rows:
-            return local_frame(
-                spark, [], "query_id long, id long, score double, rank int"
-            )
-        cent_rows = centroids.collect()
-        cids = np.array([r["centroid_id"] for r in cent_rows])
-        C = np.array([r["cvec"] for r in cent_rows], dtype=np.float64)
-        cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-        probes = []
-        for r in q_rows:
-            qv = np.asarray(r["qvec"], dtype=np.float64)
-            qv = qv / max(np.linalg.norm(qv), 1e-30)
-            order = np.argsort(-(cn @ qv))[:n_probe]
-            for j in order:
-                probes.append((r["query_id"], int(cids[j])))
+    probes = _ivf_probe_quantized(
+        queries, centroids, n_probe, query_id_col, query_vec_col
+    )
     if not probes:
         return local_frame(
             spark, [], "query_id long, id long, score double, rank int"
@@ -1129,7 +942,6 @@ def matryoshka_topk(
     query_vec_col: str = "qvec",
     id_col: str = "id",
     vec_col: str = "vec",
-    prefix_col: str | None = None,
 ) -> DataFrame:
     """Dimension-cascade top-k (Matryoshka / adaptive retrieval,
     Kusupati et al. 2022): shortlist on a PREFIX of the embedding,
@@ -1142,13 +954,11 @@ def matryoshka_topk(
     - stage 2: exact full-dim cosine for shortlist rows only, 6dp
       final score, rank by (score DESC, id).
 
-    Scale story: stage 1 is the only corpus-wide scan, and it touches
-    ``prefix_dims/dim`` of the vector bytes — materialize the prefix
-    as its OWN column (pass ``prefix_col``) and parquet column pruning
-    makes that literal: the full vector column is read only for the
-    O(queries x shortlist) stage-2 rows, which arrive as a broadcast
-    semi-join against the corpus (the corpus never shuffles in either
-    stage). With MRL-trained embeddings the prefix IS a trained
+    Scale story: stage 1 is the only corpus-wide pass, and its GEMM
+    scores ``prefix_dims/dim`` of each vector; the full-dim cosine runs
+    only for the O(queries x shortlist) stage-2 rows, which arrive as a
+    broadcast join against the corpus (the corpus never shuffles in
+    either stage). With MRL-trained embeddings the prefix IS a trained
     sub-embedding; with generic embeddings the cascade still bounds
     recall loss via the over-fetch (unit-pinned vs brute force)."""
     q = queries.select(
@@ -1162,13 +972,7 @@ def matryoshka_topk(
     qpre = q.select(
         "query_id", F.slice("qvec", 1, prefix_dims).alias("qvec")
     )
-    if prefix_col is not None:
-        cpre = corpus.select(
-            F.col(id_col).alias("id"),
-            to_double_array(F.col(prefix_col)).alias("vec"),
-        )
-    else:
-        cpre = c.select("id", F.slice("vec", 1, prefix_dims).alias("vec"))
+    cpre = c.select("id", F.slice("vec", 1, prefix_dims).alias("vec"))
     short = cosine_topk(
         qpre, cpre, k * shortlist_mult,
         id_col="id", vec_col="vec", round_dp=PREFETCH_ROUND_DP,
@@ -1259,10 +1063,10 @@ def knn_graph(
     amplifies any flipped edge through its unrolled power iteration).
 
     Scale: identical to batch top-k search with |queries| = |corpus| —
-    N·|corpus| GEMM work under the blocked path; at index scale the
+    N·|corpus| GEMM work in ``cosine_topk``; at index scale the
     same graph comes from ``knn_graph_lsh`` (bucketed candidates) or
     ``ivf_topk_indexed`` per partition-pruned probe (approximate
-    edges), which is the documented trade. Because the blocked path
+    edges), which is the documented trade. Because ``cosine_topk``
     COLLECTS the query side — here the whole corpus — to the driver,
     the exact path refuses corpora past the broadcast-GEMM cell
     budget instead of silently OOMing the driver."""

@@ -5165,8 +5165,8 @@ def ann_ivf_topk_sql(
     dim: int = 64,
     scale: int | None = None,
 ) -> str:
-    """Exact twin of the DETERMINISTIC IVF path (``similarity._ivf_fit
-    method='det'`` + ``ivf_topk_indexed probe='quantized'``): the
+    """Exact twin of the IVF path (``similarity._ivf_fit`` +
+    ``ivf_topk_indexed``'s quantized probe): the
     shared unrolled Lloyd's CTEs rebuild the engine's persisted index
     bit-for-bit (same quantized frame, same count-derived centroid
     count via the kk CTE with IVF geometry), the probe picks each
@@ -5174,9 +5174,8 @@ def ann_ivf_topk_sql(
     squared-distance term chain (ties → lowest cid), and candidates
     are exactly the probed lists (``af`` = the engine's partitioned
     list assignment) rescored by 6dp cosine with the (score DESC, id)
-    rank discipline every dense entry uses. This upgrades ann_ivf_topk
-    from the rows-only check the MLlib build forced (float centroids
-    no SQL engine can replay) to full hash certification."""
+    rank discipline every dense entry uses, so ann_ivf_topk is fully
+    hash-certified."""
     from rag_database_spark.operators.clustering import (
         KMEANS_ITERS, KMEANS_SCALE,
     )

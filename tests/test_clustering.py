@@ -18,6 +18,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from plan_inspect import physical_node_names
 from rag_database_spark.operators import clustering
 from rag_database_spark.operators import text_analytics as ta
 
@@ -94,31 +95,22 @@ def test_kmeans_k_larger_than_n(spark):
     assert len(cents) == 2
 
 
-def test_kmeans_gemm_impl_matches_expr(spark, rand_vecs):
-    # the scale path (Arrow-batch GEMM argmin) must agree with the
-    # oracle path (literal folds) away from float near-ties — which is
-    # everywhere, on real data
+def test_kmeans_gemm_impl_matches_expr(spark, rand_vecs, monkeypatch):
+    # the scale path (Arrow-batch GEMM argmin, k > KMEANS_EXPR_MAX_K)
+    # must agree with the oracle path (literal folds) away from float
+    # near-ties — which is everywhere, on real data
     df = _emb_df(spark, rand_vecs)
-    a = sorted(
-        clustering.kmeans_fit(df, k=4, iters=3, impl="expr")[0]
-        .collect()
-    )
-    b = sorted(
-        clustering.kmeans_fit(df, k=4, iters=3, impl="gemm")[0]
-        .collect()
-    )
-    assert a == b
+    a = sorted(clustering.kmeans_fit(df, k=4, iters=3)[0].collect())
+    monkeypatch.setattr(clustering, "KMEANS_EXPR_MAX_K", 3)
+    gemm = clustering.kmeans_fit(df, k=4, iters=3)[0]
+    assert "MapInPandas" in physical_node_names(gemm)
+    assert sorted(gemm.collect()) == a
 
 
 def test_kmeans_k_for_contract():
     assert clustering.kmeans_k_for(500) == clustering.KMEANS_K
     assert clustering.kmeans_k_for(64_000) == 1000
     assert clustering.kmeans_k_for(64_001) == 1001
-
-
-def test_kmeans_rejects_unknown_impl(spark, rand_vecs):
-    with pytest.raises(ValueError, match="impl"):
-        clustering.kmeans_fit(_emb_df(spark, rand_vecs), impl="fast")
 
 
 def test_kmeans_empty_input(spark):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from plan_inspect import jobs_launched
+from plan_inspect import jobs_launched, physical_node_names
 from rag_database_spark.operators import dedup
 from rag_database_spark.operators.similarity import embedding_near_dupes
 
@@ -128,26 +128,17 @@ def test_direct_pair_estimate_hand_case(spark, docs):
     assert dedup._estimate_direct_pairs(ex) == 16
 
 
-def test_auto_dispatch_flips_prefix_above_budget(spark, docs):
-    # budget 0 → auto must take the prefix-filter path; results are
-    # exact either way, so the output must match the direct plan
-    direct = sorted(
-        map(
-            tuple,
-            dedup.shingle_jaccard_pairs(
-                docs, 0.5, prefix_filter=False
-            ).collect(),
-        )
-    )
-    auto_prefix = sorted(
-        map(
-            tuple,
-            dedup.shingle_jaccard_pairs(
-                docs, 0.5, direct_pair_budget=0
-            ).collect(),
-        )
-    )
-    assert direct == auto_prefix and direct
+def test_auto_dispatch_flips_prefix_above_budget(spark, docs, monkeypatch):
+    # the selection reads DIRECT_PAIR_BUDGET at call time: the direct
+    # self-join has no Window, the prefix filter ranks each document's
+    # shingles in one, so a Window appears only above the budget
+    def windows():
+        df = dedup.shingle_jaccard_pairs(docs, 0.5)
+        return physical_node_names(df).count("Window")
+
+    assert windows() == 0
+    monkeypatch.setattr(dedup, "DIRECT_PAIR_BUDGET", 0)
+    assert windows() > 0
 
 
 def test_embedding_near_dup_auto_routes_to_lsh(spark, monkeypatch):
@@ -176,17 +167,14 @@ def test_embedding_near_dup_auto_routes_to_lsh(spark, monkeypatch):
     assert got  # LSH path found the planted near-dups
 
 
-def test_prefix_filter_is_exact(spark, docs):
+def test_prefix_filter_is_exact(spark, docs, monkeypatch):
     base = sorted(
         map(tuple, dedup.shingle_jaccard_pairs(docs, 0.5).collect())
     )
+    # budget 0 → the prefix-filter path; results are exact either way
+    monkeypatch.setattr(dedup, "DIRECT_PAIR_BUDGET", 0)
     pf = sorted(
-        map(
-            tuple,
-            dedup.shingle_jaccard_pairs(
-                docs, 0.5, prefix_filter=True
-            ).collect(),
-        )
+        map(tuple, dedup.shingle_jaccard_pairs(docs, 0.5).collect())
     )
     assert base == pf and base  # identical, non-empty
 

@@ -192,7 +192,7 @@ def test_r13_ivf_tolerates_degenerate_input(spark, tmp_path):
 
     empty_q = spark.createDataFrame([], "query_id long, qvec array<double>")
     out = similarity.ivf_topk_indexed(
-        empty_q, centroids, lists, 3, probe="quantized"
+        empty_q, centroids, lists, 3
     )
     assert out.count() == 0
     assert out.columns == ["query_id", "id", "score", "rank"]
@@ -205,7 +205,7 @@ def test_r13_ivf_tolerates_degenerate_input(spark, tmp_path):
         [], "centroid_id int, cvec array<double>, frame_scale int"
     )
     assert similarity.ivf_topk_indexed(
-        q, empty_cent, lists, 3, probe="quantized"
+        q, empty_cent, lists, 3
     ).count() == 0
 
     # ivf_k_for(0) stays at the floor; write over an empty corpus is

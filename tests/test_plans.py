@@ -266,14 +266,19 @@ def test_quality_filter_bottom_k_is_take_ordered(spark):
 
 
 def test_curate_corpus_quality_stage_is_literal_threshold(spark):
-    """The curation composite's quality cutoff is a running count
-    (``quality_cut``), NOT an O(N) bottom-k: no TakeOrderedAndProject
-    anywhere in the returned plan, and no broadcast of a
-    limit()-derived relation."""
-    import __spark_entry__ as entrymod
+    """The curation artifact's quality cutoff (``quality_cut`` over the
+    scored documents) is a running count, NOT an O(N) bottom-k: no
+    TakeOrderedAndProject anywhere in its plan, and no broadcast of a
+    limit()-derived relation. The served ``curate_corpus`` plan is a
+    scan of the persisted artifact, so the cut is checked directly."""
+    from rag_database_spark.operators.text_analytics import (
+        doc_quality, quality_cut,
+    )
 
-    df = entrymod.queries()["curate_corpus"](spark, SF_DIR)
-    p = plan_of(df, "simple")
+    scored = doc_quality(load_table(spark, SF_DIR, "documents")).select(
+        "doc_id", "q_score"
+    )
+    p = plan_of(quality_cut(scored), "simple")
     assert "TakeOrderedAndProject" not in p
     assert "GlobalLimit" not in p and "LocalLimit" not in p
 
@@ -482,8 +487,7 @@ def test_shuffle_export_single_shard_exchange(spark):
 def test_matryoshka_rescore_side_broadcasts(spark):
     """Stage 2 touches the corpus through broadcast joins only (the
     shortlist and the query vectors broadcast; the corpus never
-    shuffles), and with a materialized prefix column stage 1's scan
-    prunes the full-vector column away."""
+    shuffles)."""
     from pyspark.sql import functions as F2
 
     from rag_database_spark.operators.similarity import matryoshka_topk
@@ -529,41 +533,6 @@ def test_rag_context_pack_token_join_reads_two_columns(spark):
     docs = load_table(spark, SF_DIR, "documents")
     p = plan_of(pack_context(results, docs))
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in p
-
-
-def test_matryoshka_prefix_col_scan_prunes_full_vector(spark, tmp_path):
-    """The 100 TB claim behind prefix_col: with the prefix
-    materialized as its own column, stage 1's parquet scan reads ONLY
-    (id, prefix) — the full vector column appears in no scan that
-    feeds the shortlist window."""
-    from pyspark.sql import functions as F2
-
-    from rag_database_spark.operators.similarity import matryoshka_topk
-
-    emb = load_table(spark, SF_DIR, "embeddings").select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("vec"),
-        F.slice(F.col("embedding"), 1, 16).alias("vec16"),
-    )
-    path = str(tmp_path / "emb_mrl")
-    emb.write.parquet(path)
-    corpus = spark.read.parquet(path)
-    queries = spark.createDataFrame(
-        [(1, [float(i) for i in range(64)])],
-        "query_id long, qvec array<double>",
-    )
-    p = plan_of(
-        matryoshka_topk(queries, corpus, 5, prefix_col="vec16")
-    )
-    # one scan reads (id, vec16) for the shortlist, a second reads
-    # (id, vec) only for the rescore join — no scan reads both vector
-    # columns
-    assert "ReadSchema: struct<id:bigint,vec16:array<float>>" in p \
-        or "ReadSchema: struct<id:bigint,vec16:array<double>>" in p
-    assert "vec:array" in p  # the rescore side still reads the full vec
-    for line in p.splitlines():
-        if "ReadSchema" in line:
-            assert not ("vec16" in line and "vec:array" in line), line
 
 
 def test_leakage_split_is_shuffle_free_projection(spark):

@@ -42,7 +42,7 @@ def test_pq_codes_are_per_slice_kmeans_assignments(spark):
             F.slice("vec", j * 4 + 1, 4).alias("subvec"),
         )
         assign, cents = kmeans_fit(
-            sub, k=4, id_col="vec_id", vec_col="subvec", impl="expr"
+            sub, k=4, id_col="vec_id", vec_col="subvec"
         )
         exp = {r["id"]: r["cluster_id"] for r in assign.collect()}
         for vid, cs in got.items():

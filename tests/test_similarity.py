@@ -1,4 +1,4 @@
-"""Exact cosine top-k (J11): GEMM default vs JVM path equality,
+"""Exact cosine top-k (J11): GEMM vs a numpy brute force,
 deterministic tie-breaks at the k boundary, MaxSim (J12/M6) vs a plain
 numpy loop, and near-dup pair detection."""
 
@@ -50,28 +50,36 @@ def queries(spark):
     )
 
 
-def test_gemm_matches_jvm(spark, corpus, queries):
-    gemm = cosine_topk(queries, corpus, 5).collect()
-    jvm = cosine_topk(queries, corpus, 5, impl="jvm").collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    g = {key(r): (r["id"], r["score"]) for r in gemm}
-    j = {key(r): (r["id"], r["score"]) for r in jvm}
-    assert set(g) == set(j) and len(g) == 15
-    for k in g:
-        assert g[k][0] == j[k][0]
-        assert g[k][1] == pytest.approx(j[k][1], rel=1e-9)
+def test_gemm_matches_numpy_brute_force(spark, corpus, queries):
+    g = {
+        (r["query_id"], r["rank"]): (r["id"], r["score"])
+        for r in cosine_topk(queries, corpus, 5).collect()
+    }
+    rows = corpus.collect()
+    ids = [r["id"] for r in rows]
+    V = np.array([r["vec"] for r in rows])
+    exp = {}
+    for r in queries.collect():
+        q = np.array(r["qvec"])
+        cos = V @ q / (np.linalg.norm(V, axis=1) * np.linalg.norm(q))
+        ranked = sorted(zip(ids, cos), key=lambda t: (-t[1], t[0]))[:5]
+        for rank, (i, c) in enumerate(ranked, 1):
+            exp[(r["query_id"], rank)] = (i, float(c))
+    assert set(g) == set(exp) and len(g) == 15
+    for k in exp:
+        assert g[k][0] == exp[k][0]
+        assert g[k][1] == pytest.approx(exp[k][1], rel=1e-9)
 
 
 def test_tie_break_prefers_smaller_id(spark):
-    # duplicate vectors ⇒ exactly tied scores; id ASC must win in BOTH paths
+    # duplicate vectors ⇒ exactly tied scores; id ASC must win
     v = [1.0, 0.0]
     corpus = spark.createDataFrame(
         [(9, v), (2, v), (5, v), (1, [0.0, 1.0])], "id long, vec array<double>"
     )
     queries = spark.createDataFrame([(0, v)], "query_id long, qvec array<double>")
-    for impl in ("gemm", "jvm"):
-        rows = cosine_topk(queries, corpus, 2, impl=impl).orderBy("rank").collect()
-        assert [r["id"] for r in rows] == [2, 5], impl
+    rows = cosine_topk(queries, corpus, 2).orderBy("rank").collect()
+    assert [r["id"] for r in rows] == [2, 5]
 
 
 def test_maxsim_matches_numpy_loop(spark):
@@ -182,7 +190,7 @@ def test_ivf_recall_vs_brute_force(spark):
     )
 
     exact = cosine_topk(queries, corpus, 10).collect()
-    centroids, lists = _ivf_fit(corpus, 8, 42, "id", "vec")
+    centroids, lists = _ivf_fit(corpus, 8, "id", "vec")
     approx = ivf_topk_indexed(
         queries, centroids, lists, 10, n_probe=3
     ).collect()
@@ -195,12 +203,11 @@ def test_ivf_recall_vs_brute_force(spark):
 
 def test_ivf_persisted_index_matches_inline_fit(spark, tmp_path):
     """write_ivf_index → ivf_topk_indexed returns exactly what an
-    in-memory ``_ivf_fit`` → ivf_topk_indexed computes (same seed ⇒
-    same centroids ⇒ same probes ⇒ same candidates), and the query
-    path never touches KMeans — refitting per query batch is the scale
-    bug the split removes."""
-    from pyspark.ml.clustering import KMeans
-
+    in-memory ``_ivf_fit`` → ivf_topk_indexed computes (deterministic
+    fit ⇒ same centroids ⇒ same probes ⇒ same candidates), and the
+    query path never runs k-means — refitting per query batch is the
+    scale bug the split removes."""
+    from rag_database_spark.operators import clustering
     from rag_database_spark.operators.similarity import (
         _ivf_fit,
         ivf_topk_indexed,
@@ -222,7 +229,7 @@ def test_ivf_persisted_index_matches_inline_fit(spark, tmp_path):
     )
 
     inline = ivf_topk_indexed(
-        queries, *_ivf_fit(corpus, 8, 42, "id", "vec"), 10, n_probe=3
+        queries, *_ivf_fit(corpus, 8, "id", "vec"), 10, n_probe=3
     )
     inline_rows = {(r["query_id"], r["id"], round(r["score"], 9))
                    for r in inline.collect()}
@@ -231,17 +238,17 @@ def test_ivf_persisted_index_matches_inline_fit(spark, tmp_path):
     write_ivf_index(corpus, path, n_centroids=8)
     centroids, lists = read_ivf_index(spark, path)
 
-    def boom(self, df):  # pragma: no cover - failure path
-        raise AssertionError("KMeans.fit ran in the IVF query path")
+    def boom(*a, **k):  # pragma: no cover - failure path
+        raise AssertionError("kmeans_fit ran in the IVF query path")
 
-    orig_fit = KMeans.fit
-    KMeans.fit = boom
+    orig_fit = clustering.kmeans_fit
+    clustering.kmeans_fit = boom
     try:
         indexed = ivf_topk_indexed(queries, centroids, lists, 10, n_probe=3)
         got = {(r["query_id"], r["id"], round(r["score"], 9))
                for r in indexed.collect()}
     finally:
-        KMeans.fit = orig_fit
+        clustering.kmeans_fit = orig_fit
     assert got == inline_rows
 
 
@@ -469,7 +476,7 @@ def test_ivf_det_quantized_probe_serves_exact_member(spark):
         "query_id long, qvec array<double>",
     )
     got = ivf_topk_indexed(
-        queries, centroids, lists, 5, n_probe=2, probe="quantized"
+        queries, centroids, lists, 5, n_probe=2
     ).collect()
     rank1 = {r["query_id"]: r["id"] for r in got if r["rank"] == 1}
     assert rank1 == {qi: qi for qi in range(5)}
@@ -510,28 +517,6 @@ def test_matryoshka_recall_and_self_serve(spark):
     for qi in range(4):
         assert top1[qi]["id"] == qi
         assert top1[qi]["score"] == 1.0
-
-
-def test_matryoshka_prefix_col_matches_inline_slice(spark):
-    """A materialized prefix column (the column-pruned 100 TB layout)
-    returns exactly what inline slicing computes."""
-    from pyspark.sql import functions as F
-
-    from rag_database_spark.operators.similarity import matryoshka_topk
-
-    rng = np.random.default_rng(23)
-    rows = [(i, rng.normal(size=24).tolist()) for i in range(80)]
-    corpus = spark.createDataFrame(rows, "id long, vec array<double>")
-    with_prefix = corpus.withColumn("vec16", F.slice("vec", 1, 16))
-    queries = spark.createDataFrame(
-        [(0, rows[3][1]), (1, rows[40][1])],
-        "query_id long, qvec array<double>",
-    )
-    inline = matryoshka_topk(queries, corpus, 5).collect()
-    pruned = matryoshka_topk(
-        queries, with_prefix, 5, prefix_col="vec16"
-    ).collect()
-    assert sorted(map(tuple, inline)) == sorted(map(tuple, pruned))
 
 
 def test_ir_metrics_hand_case(spark):

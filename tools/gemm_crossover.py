@@ -9,7 +9,7 @@ letter rotation so replicas are NOT near-dups) give a size ladder at
 constant dim=64 and realistic pair density. At each n both paths run
 the SAME query (all pairs cosine >= COSINE_DUP_THRESHOLD):
 
-- exact: ``embedding_near_dupes(impl='gemm')`` — one numpy GEMM per
+- exact: ``similarity._near_dupes_gemm`` — one numpy GEMM per
   Arrow batch against the broadcast normalized matrix; compute is
   n²·d multiply-adds by construction.
 - approximate: ``dedup.embedding_near_dupes_lsh`` with adaptive
@@ -52,8 +52,6 @@ def _time(df) -> float:
 
 
 def main() -> dict:
-    from pyspark.sql import functions as F
-
     from rag_database_spark.operators import dedup, similarity
 
     sf1_dir = build(distinct=True)
@@ -67,9 +65,8 @@ def main() -> dict:
     for n in SIZES:
         emb = emb_all.limit(n).persist()
         emb.count()  # materialize once so both paths read the same cache
-        gemm = similarity.embedding_near_dupes(
-            emb, THRESHOLD, id_col="vec_id", vec_col="embedding",
-            impl="gemm",
+        gemm = similarity._near_dupes_gemm(
+            emb, THRESHOLD, "vec_id", "embedding"
         )
         lsh = dedup.embedding_near_dupes_lsh(
             emb, THRESHOLD, dim=DIM, id_col="vec_id", vec_col="embedding",
