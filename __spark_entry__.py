@@ -260,8 +260,8 @@ def _graph_key(sf_dir: str, constants: str = "") -> str:
 
 def _bm25_index(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(postings, doclens, stats) of the persisted BM25 index."""
+) -> tuple[DataFrame, tuple[int, float | None]]:
+    """(postings, (n_docs, avgdl)) of the persisted BM25 index."""
     return _artifact(
         spark, "bm25_index",
         _artifact_key(sf_dir, "", bm25_ops, text_fns, with_entry=False),
@@ -269,7 +269,7 @@ def _bm25_index(
             load_table(spark, sf_dir, "documents"), d
         ),
         lambda d: (
-            *bm25_ops.read_index(spark, d), bm25_ops.read_stats(spark, d)
+            spark.read.parquet(f"{d}/postings"), bm25_ops.read_stats(d)
         ),
         done="stats",
     )
@@ -916,8 +916,9 @@ DOC_KEYWORDS_K = 3
 def _doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document tf-idf keyword extraction served from the
     persisted BM25 postings and stats artifact (no re-tokenization)."""
-    postings, _, stats = _bm25_index(spark, sf_dir)
-    return bm25_ops.tfidf_keywords(postings, stats, DOC_KEYWORDS_K)
+    return bm25_ops.tfidf_keywords(
+        *_bm25_index(spark, sf_dir), DOC_KEYWORDS_K
+    )
 
 
 INGEST_BATCH_MOD = 10  # incoming batch = doc_id % 10 == 0
@@ -1550,8 +1551,7 @@ def _rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bm25_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/A5: index-level stats from the persisted tables."""
-    postings, _, stats = _bm25_index(spark, sf_dir)
-    return lifecycle.bm25_index_stats(postings, stats)
+    return lifecycle.bm25_index_stats(*_bm25_index(spark, sf_dir))
 
 
 def _events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1938,10 +1938,9 @@ def _enhanced_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     +0.5 boost, J4 priority merge, top-k."""
     return qa.enhanced_search(
         workload.queries_df(spark),
-        load_table(spark, sf_dir, "documents"),
         load_table(spark, sf_dir, "embeddings"),
+        _bm25_index(spark, sf_dir),
         limit=workload.HYBRID_LIMIT,
-        index=_bm25_index(spark, sf_dir),
     )
 
 

@@ -117,8 +117,8 @@ def _assign_gemm(xq: DataFrame, centroids: list[list[float]]) -> DataFrame:
         [(j, c) for j, c in enumerate(centroids)],
         "centroid_id int, cvec array<double>",
     )
-    return assign_centroids(xq, cdf, id_col="id", vec_col="x").select(
-        "id", F.col("vec").alias("x"), F.col("centroid_id").alias("cid")
+    return assign_centroids(xq, cdf, vec_col="x").select(
+        "id", "x", F.col("centroid_id").alias("cid")
     )
 
 

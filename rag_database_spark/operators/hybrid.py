@@ -3,7 +3,8 @@
 
 Pipeline (SURVEY §3.1 Spark re-expression):
 
-    BM25 leg    : query terms → persisted postings/stats → score → rank (W1)
+    BM25 leg    : query terms ⋈ persisted postings (with doc length),
+                  corpus stats as literals → score → rank (W1)
     dense leg   : query vectors → exact cosine top-k (J11) → rank
     colpali leg : MaxSim page top-k → page→chunk propagation (J2/J3) → rank
     fusion      : ``fusion.rrf_fuse`` — weighted RRF k=60 (A1) → top-k (T2)
@@ -27,14 +28,15 @@ from rag_database_spark.operators.fusion import propagate_page_scores_batch
 def bm25_leg(
     queries: DataFrame,
     postings: DataFrame,
-    doclens: DataFrame,
-    stats: DataFrame,
+    stats: tuple[int, float | None],
     fetch: int,
 ) -> DataFrame:
     """A3 + W1 + T4: top-``fetch`` BM25 documents per query over a
-    persisted index (``bm25.read_index`` + ``bm25.read_stats``), so the
-    corpus is not re-tokenized per query batch (S7)."""
-    scored = bm25_ops.score_queries(queries, postings, doclens, stats)
+    persisted index, so the corpus is not re-tokenized per query batch
+    (S7). ``postings`` carry each document's length and ``stats`` is
+    the ``bm25.read_stats`` pair, so the leg is one broadcast of the
+    query terms and one query_id shuffle."""
+    scored = bm25_ops.score_queries(queries, postings, stats)
     return bm25_ops.topk(scored, fetch).select(
         "query_id",
         F.col("doc_id").alias("id"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_database_spark.functions.text import tokenize
+from rag_database_spark.operators.bm25 import stat_literals
 
 
 def delete_by_ids(
@@ -216,25 +217,25 @@ def model_rerank(
     )
 
 
-def bm25_index_stats(postings: DataFrame, stats: DataFrame) -> DataFrame:
+def bm25_index_stats(
+    postings: DataFrame, stats: tuple[int, float | None]
+) -> DataFrame:
     """A4 (bm25_store.py:326-334): corpus size, average doc length,
     vocabulary size, postings count. ``approx_vocabulary`` shows the
     approx_count_distinct upgrade SURVEY §2 notes for 100 TB.
 
-    ``stats`` is the index's 1-row (n_docs, avgdl) frame
+    ``stats`` is the index's ``(n_docs, avgdl)`` pair
     (``bm25.read_stats``): avgdl is the exact integer length sum
     divided ONCE in IEEE double — bit-deterministic across engines,
     unlike round(avg(...), 6) whose pre-rounding accumulation order
-    differs by ulps."""
-    p = postings.agg(
+    differs by ulps. Both are literals on the one postings aggregate."""
+    n_docs, avgdl = stat_literals(stats)
+    return postings.agg(
+        n_docs.alias("n_docs"),
+        avgdl.alias("avg_doc_len"),
         F.countDistinct("term").alias("vocabulary_size"),
         F.count("*").alias("n_postings"),
         F.sum("tf").alias("total_tokens"),
-    )
-    d = stats.select("n_docs", F.col("avgdl").alias("avg_doc_len"))
-    return d.crossJoin(p).select(
-        "n_docs", "avg_doc_len", "vocabulary_size", "n_postings",
-        "total_tokens",
     )
 
 

@@ -418,27 +418,19 @@ def precision_search_terms(queries: DataFrame,
 
 def enhanced_search(
     queries: DataFrame,
-    documents: DataFrame,
     embeddings: DataFrame,
+    index: tuple[DataFrame, tuple[int, float | None]],
     limit: int = 10,
-    index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Q2 (enhanced_hybrid_search.py:236-367, engine subset): base
     hybrid with 2× over-fetch → precision BM25 fallback (+0.5 score
     boost, 5 results) → J4 priority merge (precision first, first-seen
     id wins) → top-k.
 
-    ``index`` is a persisted BM25 index's (postings, doclens, stats);
-    without one the tables are built in memory from ``documents``.
+    ``index`` is a persisted BM25 index's postings and its
+    ``bm25.read_stats`` pair.
 
     Output: (query_id, id, final_score, source, rank)."""
-    if index is None:
-        doclens = bm25_ops.build_doclens(documents)
-        index = (
-            bm25_ops.build_postings(documents),
-            doclens,
-            bm25_ops.corpus_stats(doclens),
-        )
     fetch = FETCH_MULTIPLIER * 2 * limit
     base = rrf_fuse(
         {

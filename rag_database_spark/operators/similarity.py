@@ -500,7 +500,6 @@ def read_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
 def assign_centroids(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "id",
     vec_col: str = "vec",
 ) -> DataFrame:
     """Nearest-centroid assignment under FROZEN centroids — the
@@ -508,9 +507,13 @@ def assign_centroids(
     assignment step, so appended rows land in the list a
     rebuild-with-these-centroids would put them. Centroids
     broadcast (tiny by construction); one numpy distance GEMM per
-    Arrow batch; the vectors never shuffle."""
+    Arrow batch; the vectors never shuffle.
+
+    Returns ``centroid_id`` followed by every column of ``vectors``
+    (``vec_col`` as array<double>), so a caller that assigns on a
+    derived column keeps its other columns without a join back."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = vectors.sparkSession
     ctr = sorted(
@@ -520,9 +523,9 @@ def assign_centroids(
     C = np.array([c[1] for c in ctr])  # (k, d)
     bc = spark.sparkContext.broadcast((ids, C))
 
-    c = vectors.select(
-        F.col(id_col).alias("id"),
-        to_double_array(F.col(vec_col)).alias("vec"),
+    c = vectors.withColumn(vec_col, to_double_array(F.col(vec_col)))
+    schema = StructType(
+        [StructField("centroid_id", IntegerType())] + c.schema.fields
     )
 
     def batches(it):
@@ -531,21 +534,15 @@ def assign_centroids(
         for pdf in it:
             if pdf.empty:
                 continue
-            V = np.array(pdf["vec"].tolist())  # (n, d)
+            V = np.array(pdf[vec_col].tolist())  # (n, d)
             # argmin ||v-c||² = argmin (|c|² - 2 v·c); |v|² is constant
             d2 = c_sq[None, :] - 2.0 * (V @ M.T)
             nearest = cids[np.argmin(d2, axis=1)]
-            yield pd.DataFrame(
-                {
-                    "centroid_id": nearest.astype("int32"),
-                    "id": pdf["id"],
-                    "vec": pdf["vec"],
-                }
-            )
+            yield pdf.assign(centroid_id=nearest.astype("int32"))[
+                schema.names
+            ]
 
-    return c.mapInPandas(
-        batches, schema="centroid_id int, id long, vec array<double>"
-    )
+    return c.mapInPandas(batches, schema=schema)
 
 
 def append_ivf_index(
@@ -569,21 +566,20 @@ def append_ivf_index(
     spark = new_vectors.sparkSession
     centroids = spark.read.parquet(f"{path}/centroids")
     nv = new_vectors.select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).cast("long").alias("id"),
         to_double_array(F.col(vec_col)).alias("vec"),
     )
     # the centroids live in the quantized frame, so the incoming
     # vectors are quantized for the assignment GEMM (argmin matches the
     # build up to float-noise near quantized cluster boundaries) while
-    # the stored list row keeps the RAW vector for the cosine rescore
-    assigned = assign_centroids(
-        nv.withColumn("qx", quantize_embeddings_int(F.col("vec"))),
-        centroids,
-        id_col="id",
-        vec_col="qx",
-    ).select("centroid_id", "id")
+    # the stored list row keeps the RAW vector, which rides through the
+    # same Arrow pass: the batch is read once, with no join back on id
     (
-        assigned.join(nv, "id")
+        assign_centroids(
+            nv.withColumn("qx", quantize_embeddings_int(F.col("vec"))),
+            centroids,
+            vec_col="qx",
+        )
         .select("centroid_id", "id", "vec")
         .write.mode("append")
         .partitionBy("centroid_id")

@@ -29,6 +29,15 @@ from pyspark.sql import SparkSession
 from rag_database_spark import pyworker
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g: a heap larger
+    than the machine is never collected before the kernel kills the
+    JVM. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(MAX_DRIVER_MEM_MB, phys_mb // 2)}m"
 
 
 def get_spark(
@@ -59,7 +68,10 @@ def get_spark(
         # and convert at the source (sources.tables.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # The generated-class cache defaults to 100 entries; a workload
         # running 60+ distinct queries interleaved (bench, a real query
         # server) evicts constantly and pays seconds of Janino

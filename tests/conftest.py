@@ -17,9 +17,9 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-# get_spark's 48g driver default lets the heap outgrow a small host: on
-# 4 vCPUs / 16 GB the JVM passed 14.8 GB halfway through the suite and
-# the kernel killed it. 4g is perfbench's ceiling too (perfbench/run.py).
+# The suite's hand-built frames need little heap, and get_spark's
+# default (half the host's memory) leaves less room for the Python
+# workers beside it. 4g is perfbench's ceiling too (perfbench/run.py).
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 

@@ -11,6 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from plan_inspect import jobs_launched
 from rag_database_spark.functions.text import STOPWORDS
 from rag_database_spark.operators import bm25 as bm25_ops
 
@@ -66,14 +67,20 @@ def _expected_scores():
     return exp
 
 
+def _index(spark, docs, path):
+    """(postings, stats) of a ``write_index`` run over ``docs``."""
+    bm25_ops.write_index(docs, str(path))
+    return bm25_ops.read_index(spark, str(path))[0], bm25_ops.read_stats(
+        str(path)
+    )
+
+
 @pytest.fixture(scope="module")
-def scored(spark):
+def scored(spark, tmp_path_factory):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
-    postings = bm25_ops.build_postings(docs)
-    doclens = bm25_ops.build_doclens(docs)
-    stats = bm25_ops.corpus_stats(doclens)
-    rows = bm25_ops.score_queries(queries, postings, doclens, stats).collect()
+    postings, stats = _index(spark, docs, tmp_path_factory.mktemp("bm25"))
+    rows = bm25_ops.score_queries(queries, postings, stats).collect()
     return {(r["query_id"], r["doc_id"]): r["score"] for r in rows}
 
 
@@ -84,15 +91,34 @@ def test_bm25_matches_hand_computation(scored):
         assert scored[key] == pytest.approx(val, rel=1e-12), key
 
 
-def test_empty_doc_counts_toward_stats(spark):
+def test_empty_doc_counts_toward_stats(spark, tmp_path):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    doclens = bm25_ops.build_doclens(docs)
-    stats = bm25_ops.corpus_stats(doclens).first()
-    assert stats["n_docs"] == 5
+    postings, (n_docs, avgdl) = _index(spark, docs, tmp_path / "idx")
+    assert n_docs == 5
     # doc 4 tokenizes to nothing but still contributes dl=0 to avgdl
-    assert stats["avgdl"] == pytest.approx(
-        sum(len(_tokenize(t)) for _, t in DOCS) / 5
+    assert avgdl == sum(len(_tokenize(t)) for _, t in DOCS) / 5
+    # every posting carries its document's token count
+    assert {(r["doc_id"], r["dl"]) for r in postings.collect()} == {
+        (d, len(_tokenize(t))) for d, t in DOCS if _tokenize(t)
+    }
+
+
+def test_read_stats_launches_no_job(spark, tmp_path):
+    """The corpus stats reach the plan as literals read on the driver:
+    reading them, and building a scoring plan over them, runs no Spark
+    job."""
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    path = str(tmp_path / "idx")
+    bm25_ops.write_index(docs, path)
+    queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
+    postings = bm25_ops.read_index(spark, path)[0]
+    n_jobs = jobs_launched(
+        spark, "bm25-read-stats",
+        lambda: bm25_ops.score_queries(
+            queries, postings, bm25_ops.read_stats(path)
+        ),
     )
+    assert n_jobs == 0
 
 
 def test_topk_tie_break_is_id_ascending(spark):
@@ -104,52 +130,57 @@ def test_topk_tie_break_is_id_ascending(spark):
     assert [(r["doc_id"], r["rank"]) for r in rows] == [(5, 1), (3, 2)]
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_append_index_equals_full_rebuild(spark, tmp_path):
-    """Incremental append of the delta's postings/doclens/stats must
-    yield the identical index (and identical query scores) as a
-    rebuild."""
+    """An index written once and appended twice must equal one
+    ``write_index`` over the union: the same postings (``dl``
+    included), doclens and stats, the stats equal to the pair computed
+    from ``build_doclens``, and identical query scores."""
     corpus = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-    part1 = corpus.filter(F.col("doc_id") % 3 != 0)
-    part2 = corpus.filter(F.col("doc_id") % 3 == 0)
+    parts = [corpus.filter(F.col("doc_id") % 3 == r) for r in range(3)]
 
-    inc, full = tmp_path / "inc", tmp_path / "full"
-    bm25_ops.write_index(part1, str(inc))
-    bm25_ops.append_index(part2, str(inc))
-    bm25_ops.write_index(corpus, str(full))
+    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
+    bm25_ops.write_index(parts[0], inc)
+    bm25_ops.append_index(parts[1], inc)
+    bm25_ops.append_index(parts[2], inc)
+    bm25_ops.write_index(corpus, full)
+
+    for got, want in zip(
+        bm25_ops.read_index(spark, inc), bm25_ops.read_index(spark, full)
+    ):
+        assert _rows(got) == _rows(want)
+    lens = [r["dl"] for r in bm25_ops.build_doclens(corpus).collect()]
+    assert bm25_ops.read_stats(inc) == bm25_ops.read_stats(full) == (
+        len(lens), float(sum(lens)) / float(len(lens))
+    )
 
     from rag_database_spark.workload import queries_df
 
-    assert bm25_ops.read_stats(spark, str(inc)).collect() == (
-        bm25_ops.corpus_stats(bm25_ops.build_doclens(corpus)).collect()
-    )
-    for path in (inc, full):
-        postings, doclens = bm25_ops.read_index(spark, str(path))
-        stats = bm25_ops.read_stats(spark, str(path))
+    def scores(path):
+        postings = bm25_ops.read_index(spark, path)[0]
         scored = bm25_ops.score_queries(
-            queries_df(spark), postings, doclens, stats
+            queries_df(spark), postings, bm25_ops.read_stats(path)
         )
-        yield_rows = sorted(
+        # per-doc sums may add their terms in another order: 9 decimals
+        return sorted(
             (r["query_id"], r["doc_id"], round(r["score"], 9))
             for r in scored.collect()
         )
-        if path is inc:
-            inc_rows = yield_rows
-    assert inc_rows == yield_rows and inc_rows
+
+    inc_rows = scores(inc)
+    assert inc_rows and inc_rows == scores(full)
 
 
-def test_empty_index_stats_match_in_memory(spark, tmp_path):
-    """An index written from no documents reads back the stats of an
-    empty in-memory doclens (n_docs 0, avgdl NULL) and scores no rows,
-    instead of failing on 0 / 0."""
+def test_empty_index_stats(spark, tmp_path):
+    """An index written from no documents reads back (0, None) and
+    scores no rows, instead of failing on 0 / 0."""
     docs = spark.createDataFrame([], "doc_id long, text string")
-    path = str(tmp_path / "empty")
-    bm25_ops.write_index(docs, path)
-    stats = bm25_ops.read_stats(spark, path)
-    assert stats.collect() == (
-        bm25_ops.corpus_stats(bm25_ops.build_doclens(docs)).collect()
-    )
+    postings, stats = _index(spark, docs, tmp_path / "empty")
+    assert stats == (0, None)
     queries = spark.createDataFrame(QUERIES, "query_id long, query_text string")
-    postings, doclens = bm25_ops.read_index(spark, path)
-    assert bm25_ops.score_queries(queries, postings, doclens, stats).count() == 0
+    assert bm25_ops.score_queries(queries, postings, stats).count() == 0

@@ -86,7 +86,7 @@ def test_propagation_page_match_and_doc_fallback(spark):
     assert set(got) == {(1, "c1"), (1, "c2"), (2, "c3")}
 
 
-def test_hybrid_absent_leg_contributes_zero(spark):
+def test_hybrid_absent_leg_contributes_zero(spark, tmp_path):
     """A query whose BM25 leg matches nothing still fuses: missing
     methods contribute 0 (the reference's defaultdict semantics)."""
     from rag_database_spark.operators import bm25 as bm25_ops
@@ -104,12 +104,11 @@ def test_hybrid_absent_leg_contributes_zero(spark):
         [(1, "zzzz qqqq missing terms", 3)],  # zero BM25 matches
         "query_id long, query_text string, query_vec_id long",
     )
-    postings = bm25_ops.build_postings(docs)
-    doclens = bm25_ops.build_doclens(docs)
+    path = str(tmp_path / "bm25")
+    bm25_ops.write_index(docs, path)
+    postings = bm25_ops.read_index(spark, path)[0]
     legs = {
-        "bm25": bm25_leg(
-            queries, postings, doclens, bm25_ops.corpus_stats(doclens), 15
-        ),
+        "bm25": bm25_leg(queries, postings, bm25_ops.read_stats(path), 15),
         "dense": dense_leg(queries, emb, 15),
     }
     rows = rrf_fuse(legs, limit=5).collect()

@@ -139,3 +139,36 @@ def test_append_ivf_index_assigns_like_kmeans(spark, tmp_path):
     )
     top = similarity.ivf_topk_indexed(q, centroids, lists, 3).collect()
     assert top[0]["id"] == batch_rows[0][0]
+
+
+def test_append_ivf_index_reads_batch_once(spark, tmp_path, monkeypatch):
+    """The appended lists come from one Arrow pass that assigns on the
+    quantized vector and carries the raw one through: the written plan
+    reads the batch once, with no join back on id and no shuffle."""
+    import numpy as np
+
+    from plan_inspect import physical_node_names
+    from rag_database_spark.operators import similarity
+
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.normal(size=8).tolist()) for i in range(40)]
+    path = str(tmp_path / "ivf")
+    similarity.write_ivf_index(
+        spark.createDataFrame(rows[:30], "id long, vec array<double>"),
+        path, n_centroids=4,
+    )
+    batch = spark.createDataFrame(rows[30:], "id long, vec array<double>")
+    frame_cls, written = type(batch), []
+    write = frame_cls.write
+    monkeypatch.setattr(
+        frame_cls, "write",
+        property(lambda df: written.append(df) or write.fget(df)),
+    )
+    similarity.append_ivf_index(batch, path)
+    monkeypatch.undo()
+    names = physical_node_names(written[-1])
+    assert not [n for n in names if "Join" in n or "Exchange" in n], names
+    assert sum("Scan" in n for n in names) == 1, names
+    lists = similarity.read_ivf_index(spark, path)[1]
+    got = {r["id"]: list(r["vec"]) for r in lists.filter("id >= 30").collect()}
+    assert got == {i: v for i, v in rows[30:]}

@@ -61,7 +61,7 @@ def test_quality_scan_stays_in_codegen(spark):
     assert "WholeStageCodegen" in plan_of(df, "codegen")
 
 
-def test_bm25_query_semijoin_before_vocab_agg(spark):
+def test_bm25_query_semijoin_before_vocab_agg(spark, tmp_path):
     """The BM25 leg must semi-join postings to the broadcast query
     terms BEFORE any corpus-wide aggregation (the round-1 scale fix):
     the scoring plan carries a broadcast join, and the scan of the
@@ -70,10 +70,12 @@ def test_bm25_query_semijoin_before_vocab_agg(spark):
     from rag_database_spark.workload import queries_df
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    postings = bm25_ops.build_postings(docs)
-    doclens = bm25_ops.build_doclens(docs)
+    path = str(tmp_path / "bm25")
+    bm25_ops.write_index(docs, path)
     scored = bm25_ops.score_queries(
-        queries_df(spark), postings, doclens, bm25_ops.corpus_stats(doclens)
+        queries_df(spark),
+        bm25_ops.read_index(spark, path)[0],
+        bm25_ops.read_stats(path),
     )
     assert "BroadcastHashJoin" in plan_of(scored, "simple")
 
@@ -588,16 +590,28 @@ def test_split_leakage_audit_joins_are_keyed(spark):
     assert "NestedLoop" not in p and "CartesianProduct" not in p, p
 
 
+def _broadcasts_and_shuffles(p: str) -> tuple[int, int]:
+    """(BroadcastExchange, shuffle Exchange) counts of a simple plan."""
+    return (
+        len(re.findall(r"\bBroadcastExchange ", p)),
+        len(re.findall(r"(?<![A-Za-z])Exchange ", p)),
+    )
+
+
 def test_bm25_topk_exchange_ceiling(spark):
-    """The BM25 leg shuffles once: the matched stream is hash
+    """The BM25 leg broadcasts once and shuffles once: the query terms
+    are broadcast to the postings, which carry each document's length,
+    and the corpus stats are plan literals, so no doclens join and no
+    nested-loop stats join remain. The matched stream is hash
     partitioned on query_id, and df, the (query_id, doc_id) rollup and
     the top-k window all run inside that partitioning. A df window
     keyed on term alone would bring back its own exchange."""
     import __spark_entry__ as entrymod
 
     p = plan_of(entrymod.queries()["bm25_topk"](spark, SF_DIR), "simple")
-    shuffles = re.findall(r"(?<![A-Za-z])Exchange ", p)
-    assert len(shuffles) <= 1, p
+    broadcasts, shuffles = _broadcasts_and_shuffles(p)
+    assert broadcasts <= 1 and shuffles <= 1, p
+    assert "BroadcastNestedLoopJoin" not in p, p
     term_windows = re.findall(r"\bWindow \[.*\], \[term#\d+L?\]", p)
     assert not term_windows, p
 
@@ -606,14 +620,34 @@ def test_hybrid_rrf3_single_union_exchange_ceiling(spark):
     """The three legs meet in ONE Union feeding the single RRF groupBy,
     and the whole three-leg plan stays at or under 5 shuffle exchanges
     (the BM25 leg's one, the dense and ColPali legs' own, none for
-    the fusion) — a duplicated leg or a second fusion would show up as
+    the fusion) and 2 broadcasts (the BM25 query terms and the ColPali
+    doc side) — a duplicated leg or a second fusion would show up as
     extra Unions or Exchanges."""
     import __spark_entry__ as entrymod
 
     p = plan_of(entrymod.queries()["hybrid_rrf3"](spark, SF_DIR), "simple")
     assert len(re.findall(r"\bUnion\b", p)) == 1, p
-    shuffles = re.findall(r"(?<![A-Za-z])Exchange ", p)
-    assert len(shuffles) <= 5, p
+    broadcasts, shuffles = _broadcasts_and_shuffles(p)
+    assert shuffles <= 5, p
+    assert broadcasts <= 2, p
+    assert "BroadcastNestedLoopJoin" not in p, p
+
+
+@pytest.mark.parametrize("name, ceiling", [("bm25_topk", 3), ("hybrid_rrf3", 8)])
+def test_bm25_entries_warm_job_ceiling(spark, name, ceiling):
+    """A warm call's Spark jobs: under AQE every shuffle and every
+    broadcast is its own job, so the BM25 leg's one broadcast and one
+    shuffle (no doclens or stats broadcast) keep bm25_topk at 3 jobs
+    and hybrid_rrf3 at 8."""
+    import __spark_entry__ as entrymod
+
+    def run():
+        df = entrymod.queries()[name](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+
+    run()  # builds the index and the cached plan
+    n_jobs = jobs_launched(spark, f"warm-{name}", run)
+    assert n_jobs <= ceiling, n_jobs
 
 
 def test_maxsim_topk_single_arrow_pass_no_join(spark):

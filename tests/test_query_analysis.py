@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from rag_database_spark.operators import bm25 as bm25_ops
 from rag_database_spark.operators import query_analysis as qa
 
 
@@ -64,7 +65,7 @@ def test_precision_search_terms(spark):
     assert rows[0]["search_term"] == "table 7"
 
 
-def test_enhanced_search_precision_first(spark):
+def test_enhanced_search_precision_first(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "table 9 shows revenue numbers"), (2, "unrelated words entirely"),
          (3, "more table content here table")],
@@ -78,7 +79,10 @@ def test_enhanced_search_precision_first(spark):
         [(1, "value in table 9", 1)],
         "query_id long, query_text string, query_vec_id long",
     )
-    out = qa.enhanced_search(queries, docs, emb, limit=5).collect()
+    path = str(tmp_path / "bm25")
+    bm25_ops.write_index(docs, path)
+    index = (bm25_ops.read_index(spark, path)[0], bm25_ops.read_stats(path))
+    out = qa.enhanced_search(queries, emb, index, limit=5).collect()
     by_rank = sorted(out, key=lambda r: r["rank"])
     # precision fallback results rank first and carry the +0.5 boost
     assert by_rank[0]["source"] == "precision"

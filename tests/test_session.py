@@ -1,6 +1,7 @@
 """The session's Python daemon (``rag_database_spark.pyworker``): its
 zipimporter guard skips re-reading an unchanged archive and re-reads a
-rewritten one, and the session's workers start from it."""
+rewritten one, and the session's workers start from it. The driver
+heap's default fits the host."""
 
 from __future__ import annotations
 
@@ -57,3 +58,14 @@ def test_workers_start_from_the_engine_daemon(spark):
 
     rows = spark.range(1).mapInPandas(guard_module, "module string").collect()
     assert [r.module for r in rows] == [pyworker.__name__]
+
+
+def test_default_driver_memory_is_half_the_host_at_most_48g(monkeypatch):
+    from rag_database_spark import session
+
+    sizes = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    sizes["SC_PHYS_PAGES"] = 16 * 2**30 // 4096  # a 16 GB host
+    assert session.default_driver_memory() == "8192m"
+    sizes["SC_PHYS_PAGES"] = 512 * 2**30 // 4096  # a 512 GB host
+    assert session.default_driver_memory() == "49152m"
